@@ -153,6 +153,25 @@ def wait_for_in_band(spark) -> tuple[dict, int]:
     return p, tries
 
 
+def blocks_decoded(segments, term_stats, n_docs, avgdl, query, k,
+                   conjunctive, df_map) -> tuple[int, int]:
+    """(blocks decoded, blocks total) summed over the shard trailers of
+    one top-k WAND pass (index/wand.py kernel output contract)."""
+    from searchengine_spark.index import wand
+    from searchengine_spark.operators.search import lemmatize_query
+
+    terms = wand._resolve_terms(
+        term_stats, n_docs, lemmatize_query(query), 0.95, df_map
+    )
+    if not terms:
+        return 0, 0
+    rows = wand._wand_frame(
+        segments, terms, n_docs, avgdl, k, conjunctive
+    ).filter("is_trailer").collect()
+    return (sum(r["n_blocks_decoded"] for r in rows),
+            sum(r["n_blocks"] for r in rows))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -324,19 +343,17 @@ def main() -> None:
 
     # ---- pruning effectiveness: block-max WAND observability ---------------
     # blocks actually decompressed vs total across the reference set's
-    # disjunctive + conjunctive shapes (index/wand.py wand_shard_metrics)
+    # disjunctive + conjunctive shapes (index/wand.py trailer counters)
     # — the measurable effect of essential-list + aligned block-max
     # pruning and lazy block lookup
     dec = tot = 0
     for qid, qtext, site, offset, limit, mode, conj in QUERIES:
         if mode != "bm25" or site is not None:
             continue
-        mrows = wand.search_packed_metrics(
-            spark, segments, term_stats, n_docs, avgdl, qtext,
-            k=offset + limit, conjunctive=conj, df_map=df_map,
-        ).collect()
-        dec += sum(r["n_blocks_decoded"] for r in mrows)
-        tot += sum(r["n_blocks"] for r in mrows)
+        d, t = blocks_decoded(segments, term_stats, n_docs, avgdl, qtext,
+                              offset + limit, conj, df_map)
+        dec += d
+        tot += t
     blocks_decoded_pct = round(100.0 * dec / tot, 2) if tot else 0.0
 
     # ---- warm-server latency: the serving tier (service.py) ---------------
@@ -488,12 +505,8 @@ def main() -> None:
                 conjunctive=zconj, df_map=zdfm,
             ).collect()
         )
-        zrows = wand.search_packed_metrics(
-            spark, zseg, zidx.term_stats, zn, zavgdl, zq, k=10,
-            conjunctive=zconj, df_map=zdfm,
-        ).collect()
-        d = sum(r["n_blocks_decoded"] for r in zrows)
-        t = sum(r["n_blocks"] for r in zrows)
+        d, t = blocks_decoded(zseg, zidx.term_stats, zn, zavgdl, zq, 10,
+                              zconj, zdfm)
         zipf_pcts[zname] = round(100.0 * d / t, 2) if t else 0.0
         if in_headline:
             zdec += d

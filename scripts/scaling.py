@@ -201,8 +201,19 @@ def main() -> None:
     }
     print(json.dumps(out))
     if args.out:
-        with open(args.out, "w") as f:
-            json.dump(out, f, indent=2)
+        write_merged(args.out, out)
+
+
+def write_merged(path: str, out: dict) -> None:
+    """Write this run's keys into the JSON file at `path`, keeping every
+    other key already there (earlier measurements, methodology notes)."""
+    merged = {}
+    if os.path.exists(path):
+        with open(path, encoding="utf-8") as f:
+            merged = json.load(f)
+    merged.update(out)
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(merged, f, indent=2)
 
 
 if __name__ == "__main__":

@@ -38,26 +38,42 @@ from pyspark.sql import functions as F
 
 from ..operators.postings import IndexTables
 from ..schemas import BUILD_MANIFEST_SCHEMA as MANIFEST_SCHEMA
-from .segments import n_shards_for
+from .segments import enrich_postings, n_shards_for, pack_segments_frame
 
 
 def manifest_path(base: str) -> str:
     return f"{base}/build_manifest"
 
 
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence via the Hadoop FileSystem API — correct on ANY
-    filesystem an index base can live on (local, file:, hdfs://,
-    s3a://). An os.path probe silently reports "missing" for every
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for `path` through the Hadoop FileSystem API
+    — correct on ANY filesystem an index base can live on (local,
+    file:, hdfs://, s3a://). os.path/open() silently miss every
     URI-style base, which turns layer-presence gates (e.g. "does this
-    index carry a positional layer?") into silent no-ops exactly where
-    clusters run. (index/refresh.py's two-rename snapshot swap remains
-    deliberately local-FS: it is the documented local stand-in for the
-    Iceberg MERGE/snapshot path, see refresh.py module docstring.)"""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    index carry a positional layer?") and marker files into silent
+    no-ops exactly where clusters run. (index/refresh.py's two-rename
+    snapshot swap remains deliberately local-FS: it is the documented
+    local stand-in for the Iceberg MERGE/snapshot path, see refresh.py
+    module docstring.)"""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def fs_exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def fs_touch(spark: SparkSession, path: str) -> None:
+    """Create (or truncate) an empty marker file at `path`."""
+    fs, hpath = _hadoop_fs(spark, path)
+    fs.create(hpath, True).close()
+
+
+def fs_delete(spark: SparkSession, path: str) -> bool:
+    """Delete the file at `path`; False when there was none."""
+    fs, hpath = _hadoop_fs(spark, path)
+    return bool(fs.delete(hpath, False))
 
 
 def read_manifest(spark: SparkSession, base: str) -> DataFrame:
@@ -75,9 +91,7 @@ def read_manifest(spark: SparkSession, base: str) -> DataFrame:
     report "no manifest" for every URI-style base and defeat the
     shard-mapping guard exactly where clusters run."""
     path = manifest_path(base)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     if not fs.exists(hpath) or not any(
         st.getPath().getName().endswith(".parquet")
         for st in fs.listStatus(hpath)
@@ -162,13 +176,6 @@ def build_packed_resumable(
         n_groups = 8
     done = completed_groups(spark, base, "pack_segments")
 
-    # shard derives from doc_id alone — computed BEFORE the joins so the
-    # per-group filter prunes the postings scan and each group job joins
-    # only its 1/n_groups slice
-    sharded = index.postings.withColumn(
-        "shard", F.pmod(F.hash("doc_id"), F.lit(n_shards)).cast("int")
-    )
-
     # partition-overwrite so a crashed group's partial partitions are
     # replaced, not duplicated, on retry; session value restored after
     # the build (a later partitioned write elsewhere in the session
@@ -179,8 +186,8 @@ def build_packed_resumable(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         _run_groups(
-            spark, base, sharded, index, n_docs, avgdl, n_shards,
-            n_groups, run_id, done, fail_after_group,
+            spark, base, index, n_docs, avgdl, n_shards, n_groups, run_id,
+            done, fail_after_group,
         )
     finally:
         spark.conf.set(
@@ -191,23 +198,20 @@ def build_packed_resumable(
 
 
 def _run_groups(
-    spark, base, sharded, index, n_docs, avgdl, n_shards, n_groups,
-    run_id, done, fail_after_group,
+    spark, base, index, n_docs, avgdl, n_shards, n_groups, run_id, done,
+    fail_after_group,
 ) -> None:
-    from .segments import INDEX_SEGMENTS_SCHEMA, _pack_group
-
+    """Each pending group is build_segments' own enrich + bulk pack,
+    filtered to the group's shards (shard derives from doc_id alone, so
+    the filter prunes the postings scan to a 1/n_groups slice)."""
+    enriched, avgtl = enrich_postings(index, n_docs, n_shards)
     for g in range(n_groups):
         if g in done:
             continue
         t0 = time.time()
-        grp = (
-            sharded.filter(F.pmod(F.col("shard"), F.lit(n_groups)) == g)
-            .join(index.doc_stats.select("doc_id", "doclen"), "doc_id")
-            .join(index.term_stats.select("term", "df"), "term")
-        )
-        segs = grp.groupBy("term", "shard").applyInPandas(
-            lambda pdf: _pack_group(pdf, n_docs, avgdl, run_id),
-            schema=INDEX_SEGMENTS_SCHEMA,
+        segs = pack_segments_frame(
+            enriched.filter(F.pmod(F.col("shard"), F.lit(n_groups)) == g),
+            n_docs, avgdl, run_id, avgtl,
         )
         (
             segs.repartition("shard")

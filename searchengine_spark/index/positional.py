@@ -486,37 +486,33 @@ def phrase_search_packed_terms(
     )
 
 
+PHRASE_KERNEL_SCHEMA = (
+    "doc_id long, phrase_tf long, is_trailer boolean, n_matched long"
+)
+
+
 def _phrase_topk_count_kernel(
     pdf: pd.DataFrame, phrase: list[str], block: int, k: int,
     excluded: np.ndarray | None,
 ) -> pd.DataFrame:
     """_phrase_kernel PLUS the shard's pre-pagination match count in
-    the SAME pass (the wand_shard_topk_count shape lifted to phrase
-    retrieval): the shard's top-k rows by (phrase_tf desc, doc_id asc)
-    followed by one count sentinel (doc_id = -1, phrase_tf = shard
-    match count — unambiguous, real doc_ids are ≥ 0 and real matches
-    have phrase_tf ≥ 1 while an empty shard's sentinel carries 0).
-    `excluded` (sorted int64 tombstone deny-list) is applied before
-    counting, replacing the service's post-kernel isin filter."""
+    the SAME pass: the shard's top-k rows by (phrase_tf desc, doc_id
+    asc) followed by the trailer row of index/wand's kernel contract,
+    whose n_matched carries the shard match count. `excluded` (sorted
+    int64 tombstone deny-list) is applied before counting, replacing
+    the service's post-kernel isin filter."""
+    from .wand import _member_mask, with_trailer
+
     res = _phrase_kernel(pdf, phrase, block)
     ids = res["doc_id"].to_numpy(dtype=np.int64)
     tfs = res["phrase_tf"].to_numpy(dtype=np.int64)
-    if excluded is not None and len(ids):
-        keep = np.searchsorted(excluded, ids)
-        keep_c = np.minimum(keep, len(excluded) - 1)
-        hit = (keep < len(excluded)) & (excluded[keep_c] == ids)
-        ids, tfs = ids[~hit], tfs[~hit]
-    n = len(ids)
+    if excluded is not None:
+        keep = ~_member_mask(ids, excluded)
+        ids, tfs = ids[keep], tfs[keep]
     sel = np.lexsort((ids, -tfs))[:k]
-    return pd.DataFrame(
-        {
-            "doc_id": np.concatenate(
-                (ids[sel], np.array([-1], dtype=np.int64))
-            ),
-            "phrase_tf": np.concatenate(
-                (tfs[sel], np.array([n], dtype=np.int64))
-            ),
-        }
+    return with_trailer(
+        {"doc_id": ids[sel], "phrase_tf": tfs[sel]},
+        {"n_matched": len(ids)},
     )
 
 
@@ -529,29 +525,36 @@ def phrase_search_packed_topk_count(
     block: int = BLOCK,
 ) -> DataFrame:
     """Fused phrase top-k + match count in ONE kernel pass per shard:
-    ≤ shards·(k+1) rows of (doc_id, phrase_tf) leave the executors —
-    the shard's top-k page candidates plus a doc_id = -1 count
-    sentinel each. The caller merges driver-side: global top-k by
-    (phrase_tf desc, doc_id asc) over the non-sentinel rows, match
-    total = Σ sentinel phrase_tf. Replaces the two-action serve shape
-    (count(), then orderBy().limit()) that executed the phrase kernel
-    twice per request."""
+    ≤ shards·(k+1) rows of PHRASE_KERNEL_SCHEMA leave the executors —
+    each shard's top-k page candidates plus its trailer row. The
+    caller merges driver-side with merge_phrase_rows. Replaces the
+    two-action serve shape (count(), then orderBy().limit()) that
+    executed the phrase kernel twice per request."""
+    from .wand import _deny_list, _shard_frame
+
     if k < 0:
         raise ValueError(f"k must be >= 0 (got {k})")
     if not phrase:
-        return spark.createDataFrame([], "doc_id long, phrase_tf long")
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids else None
-    )
-    uniq = sorted(set(phrase))
-    segs = pos_segments.filter(F.col("term").isin(uniq))
-    return segs.groupBy("shard").applyInPandas(
-        lambda pdf: _phrase_topk_count_kernel(
+        return spark.createDataFrame([], PHRASE_KERNEL_SCHEMA)
+    exc = _deny_list(excluded_doc_ids)
+    return _shard_frame(
+        pos_segments, sorted(set(phrase)),
+        lambda pdf, _: _phrase_topk_count_kernel(
             pdf, list(phrase), block, k, exc
         ),
-        schema="doc_id long, phrase_tf long",
+        PHRASE_KERNEL_SCHEMA,
     )
+
+
+def merge_phrase_rows(rows, k: int) -> tuple[list[tuple[int, int]], int]:
+    """Driver-side merge of phrase_search_packed_topk_count rows →
+    (global top-k [(doc_id, phrase_tf)] by (phrase_tf desc, doc_id
+    asc), Σ trailer n_matched)."""
+    page = sorted(
+        ((r["doc_id"], r["phrase_tf"]) for r in rows if not r["is_trailer"]),
+        key=lambda t: (-t[1], t[0]),
+    )[:k]
+    return page, int(sum(r["n_matched"] for r in rows if r["is_trailer"]))
 
 
 def phrase_search_packed(

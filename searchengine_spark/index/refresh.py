@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..operators.postings import IndexTables, write_index
 from ..schemas import INDEX_SEGMENTS_SCHEMA
+from .manifest import fs_touch
 from .segments import _pack_group, unpack_segment
 
 UNPACKED_SCHEMA = (
@@ -352,7 +353,7 @@ def _recover_pos(base: str, action: str) -> str:
                 # serve_meta semi-join instead of the fused one-pass
                 # kernel until the next repack/rebuild replaces the
                 # tree (an underscore file — parquet readers skip it).
-                open(os.path.join(pos_path, "_STALE"), "w").close()
+                fs_touch(SparkSession.active(), f"{pos_path}/_STALE")
     elif os.path.exists(old):
         # crashed inside the possegs swap after tmp→path: new tree is
         # live, the set-aside old one just needs dropping

@@ -394,7 +394,8 @@ def build_segments(
     title_len: DataFrame | None = None,
     avgtl: float | None = None,
 ) -> DataFrame:
-    """postings + stats → packed index_segments DataFrame.
+    """postings + stats → packed index_segments DataFrame: the enrich
+    step (enrich_postings) + the bulk pack (pack_segments_frame).
 
     The per-field TF layer (BM25F serving) is derived from
     doc_stats.title by default (same analyzer as the body), or from
@@ -405,6 +406,25 @@ def build_segments(
     if n_shards is None:
         par = index.postings.sparkSession.sparkContext.defaultParallelism
         n_shards = n_shards_for(n_docs, min_parallelism=par)
+    enriched, avgtl = enrich_postings(
+        index, n_docs, n_shards, title_tf, title_len, avgtl
+    )
+    return pack_segments_frame(enriched, n_docs, avgdl, run_id, avgtl)
+
+
+def enrich_postings(
+    index: IndexTables,
+    n_docs: int,
+    n_shards: int,
+    title_tf: DataFrame | None = None,
+    title_len: DataFrame | None = None,
+    avgtl: float | None = None,
+) -> tuple[DataFrame, float]:
+    """The pack's input: postings → (term, shard, doc_id, tf, doclen,
+    df, ttf, tlen) rows for pack_segments_frame, plus the corpus avg
+    title length. Shared by build_segments and the resumable
+    per-group build (index/manifest.py), which packs it one shard
+    group at a time."""
     # In-row fast path: a materialize_index-built index already carries
     # the field layer (postings.ttf from the single extraction pass,
     # doc_stats.tlen from the doclen aggregation) — the title data then
@@ -458,7 +478,7 @@ def build_segments(
     enriched = enriched.withColumn(
         "shard", F.pmod(F.hash("doc_id"), F.lit(n_shards)).cast("int")
     )
-    return pack_segments_frame(enriched, n_docs, avgdl, run_id, avgtl)
+    return enriched, avgtl
 
 
 def write_segments(segments: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -37,6 +37,35 @@ valid lower bound on the final k-th best total: every doc's total ≥
 its single-term score there), zero when it has < k postings. Exact
 float64 scoring from packed (tf, doclen) integers keeps scores
 bit-comparable with the relational path and the oracle.
+
+Kernel output contract — every packed read (WAND, boolean, phrase)
+runs ONE kernel call per shard (_shard_frame) that emits the shard's
+hit rows plus ONE trailer row (is_trailer = True). Hit rows carry
+doc_id, score, n_hit (query terms present) and site_id (the collapse
+kernels' site, else 0), with zeros in the trailer columns; the trailer
+carries the shard's counters in dedicated columns, never as a sentinel
+value of a hit column:
+
+  n_matched         pre-top-k match count — filled when the driver
+                    asked for a count (wand_shard count=True), else 0
+  n_postings        Σ postings across this shard's query terms
+  n_blocks          Σ compressed blocks across those terms
+  n_blocks_decoded  blocks actually decompressed — the rest were
+                    skipped by block-max pruning / lazy lookup
+  n_candidates      docs entering the probe phase (multi-term
+                    conjunctive: driving-list survivors after the
+                    filters; otherwise the union of docs in θ-surviving
+                    blocks, after the filters)
+  n_scored          docs fully scored (conjunctive: the intersection,
+                    i.e. the match count; otherwise == n_candidates,
+                    which under pruning is LESS than the match count)
+  theta             the θ lower bound used for block pruning (0.0 when
+                    pruning is off)
+
+The driver merge ranks hit rows (score desc, doc_id asc) and sums the
+trailers' n_matched (_merge, or _ranked for lazy DataFrame results);
+service.explain sums the other counters. The phrase kernel
+(index/positional.py) fills n_matched only.
 """
 
 from __future__ import annotations
@@ -97,10 +126,13 @@ def _resolve_fweights(mode: str, field_weights: dict | None):
         raise ValueError(f"field weights must be > 0 (got {fw})")
     return (wb, wt)
 
-TOPK_OUT_SCHEMA = "doc_id long, score double, n_hit int"
-# collapse (per-site diversification) variants carry each kept row's
-# site id so the global merge can re-apply the cap without a lookup
-COLLAPSE_TOPK_SCHEMA = TOPK_OUT_SCHEMA + ", site_id long"
+# every kernel's applyInPandas output (module docstring: hit rows +
+# one trailer row per shard)
+KERNEL_SCHEMA = (
+    "doc_id long, score double, n_hit int, site_id long, "
+    "is_trailer boolean, n_matched long, n_postings long, n_blocks long, "
+    "n_blocks_decoded long, n_candidates long, n_scored long, theta double"
+)
 
 # Per-field TF layer columns (packed BM25F). Only the mode="bm25f"
 # kernel ever reads these; every other packed query projects them out
@@ -119,8 +151,8 @@ FIELD_LAYER_COLS = (
 
 def term_pruned_segments(segments, terms, mode: str = "bm25"):
     """Term-pruned segment scan projected to the columns `mode`'s
-    kernels read — the shared entry for every packed query path
-    (search / fused / metrics / count / facets / boolean / prefix).
+    kernels read — the scan of the shared sharded driver (_shard_frame)
+    every packed query path runs on.
     Both the `In(term, …)` filter and the column pruning reach the
     parquet scan (Catalyst pushes them through the groupBy exchange)."""
     seg = segments.filter(F.col("term").isin(list(terms)))
@@ -449,6 +481,22 @@ def _setdiff_sorted(cand: np.ndarray, excluded: np.ndarray) -> np.ndarray:
     return cand[~_member_mask(cand, excluded)]
 
 
+_NO_IDS = np.empty(0, dtype=np.int64)
+
+
+def _filter(
+    cand: np.ndarray, allowed: np.ndarray | None,
+    excluded: np.ndarray | None,
+) -> np.ndarray:
+    """cand ∩ allowed \\ excluded (site filter, tombstone deny-list);
+    either side may be None."""
+    if allowed is not None:
+        cand = _intersect_sorted(cand, allowed)
+    if excluded is not None:
+        cand = _setdiff_sorted(cand, excluded)
+    return cand
+
+
 SEED_BLOCKS = 4  # max blocks decoded to seed θ (bounded seed cost)
 
 
@@ -620,11 +668,8 @@ def _theta_seed_after(
         shortest.block_ids(int(b))
         for b in np.argsort(-shortest.block_max)[:SEED_BLOCKS]
     ]
-    ids = np.unique(np.concatenate(pool)) if pool else np.empty(0, np.int64)
-    if allowed is not None and len(ids):
-        ids = _intersect_sorted(ids, allowed)
-    if excluded is not None and len(ids):
-        ids = _setdiff_sorted(ids, excluded)
+    ids = np.unique(np.concatenate(pool)) if pool else _NO_IDS
+    ids = _filter(ids, allowed, excluded)
     if len(ids) == 0:
         return 0.0
     totals = np.zeros(len(ids), dtype=np.float64)
@@ -770,40 +815,40 @@ def _disjunctive_candidates(
     return np.unique(np.concatenate(survivors))
 
 
-def _topk_frame(cand, scores, n_hit, k: int) -> pd.DataFrame:
-    n = len(cand)
-    if n > k:
-        # O(n) selection of the k-th score, keep ALL ties at the
-        # boundary, then resolve them by the global total order
-        # (score desc, doc_id asc) — dropping an arbitrary tied doc
-        # here would break rank-identity after the cross-shard merge
-        kth = np.partition(scores, n - k)[n - k]
-        keep = scores >= kth
-        cand, scores, n_hit = cand[keep], scores[keep], n_hit[keep]
-        order = np.lexsort((cand, -scores))[:k]
-        cand, scores, n_hit = cand[order], scores[order], n_hit[order]
-    return pd.DataFrame(
-        {"doc_id": cand.astype(np.int64), "score": scores,
-         "n_hit": n_hit.astype(np.int32)}
-    )
+def _conjunction(
+    lists: list[_TermList], allowed: np.ndarray | None,
+    excluded: np.ndarray | None,
+) -> tuple[np.ndarray, int]:
+    """Rarest-first intersection cascade (R1, reference
+    ApiService.java:205-220): drive with the shortest list (fully
+    decoded), probe the rest lazily; the filters are the cheapest
+    predicates and apply first. Sorts `lists` in place (callers score
+    in that order) → (matches, driving candidates after the filters)."""
+    lists.sort(key=lambda t: t.n)
+    cand = _filter(lists[0].decode_all()[0], allowed, excluded)
+    n_cand = len(cand)
+    for t in lists[1:]:
+        if len(cand) == 0:
+            break
+        cand = cand[t.lookup(cand)[1]]
+    return cand, n_cand
 
 
-def _empty_topk(k: int) -> pd.DataFrame:
-    return _topk_frame(
-        np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64), k
-    )
-
-
-def _collapse_frame(
-    cand: np.ndarray, scores: np.ndarray, n_hit: np.ndarray,
-    collapse: tuple[int, np.ndarray, np.ndarray], k: int,
+def _select(
+    cand: np.ndarray, scores: np.ndarray, n_hit: np.ndarray, k: int,
+    collapse: tuple[int, np.ndarray, np.ndarray] | None = None,
     consumed: tuple[np.ndarray, np.ndarray] | None = None,
-) -> pd.DataFrame:
-    """Shard-local per-site collapse, then top-(k·n): rank all scored
-    candidates (score desc, doc_id asc), keep at most n per site, cut
-    to k·n rows, and RETURN each row's site_id so the global merge can
-    re-apply the cap without a lookup.
+) -> dict:
+    """Shard-local cut → the hit columns of the kernel output.
 
+    Plain: top-k by (score desc, doc_id asc). O(n) selection of the
+    k-th score keeps ALL ties at the boundary, then resolves them by
+    the global total order — dropping an arbitrary tied doc here would
+    break rank-identity after the cross-shard merge.
+
+    Collapse (per-site diversification): rank all scored candidates,
+    keep at most n per site, cut to k·n rows, and return each row's
+    site_id so the driver merge can re-apply the cap without a lookup.
     Why k·n rows is enough for an EXACT global collapse: take doc d in
     the global post-collapse top-k. (a) d survives the shard-local cap
     — the same-site docs above d in this shard are a subset of those
@@ -821,43 +866,67 @@ def _collapse_frame(
     under the same argument — every site contributing rows above d
     still contributes ≤ its remaining cap ≤ n of them, and a site with
     remaining budget ≥ 1 still has its post-cursor best survive."""
-    n_cap = collapse[0]
-    order = np.lexsort((cand, -scores))
-    cand, scores, n_hit = cand[order], scores[order], n_hit[order]
-    sites = _site_of(cand, collapse[1], collapse[2])
-    keep = _site_cap_mask(sites, n_cap, consumed)
-    cut = min(int(keep.sum()), k * n_cap)
-    sel = np.flatnonzero(keep)[:cut]
-    return pd.DataFrame(
-        {"doc_id": cand[sel].astype(np.int64), "score": scores[sel],
-         "n_hit": n_hit[sel].astype(np.int32),
-         "site_id": sites[sel].astype(np.int64)}
-    )
-
-
-def _finalize(
-    cand: np.ndarray, scores: np.ndarray, n_hit: np.ndarray, k: int,
-    collapse: tuple[int, np.ndarray, np.ndarray] | None,
-    consumed: tuple[np.ndarray, np.ndarray] | None = None,
-) -> pd.DataFrame:
-    """Shared kernel exit: plain top-k, or collapse-aware top-(k·n)
-    with site ids (schema differs — call sites pass the matching
-    applyInPandas schema)."""
     if collapse is None:
-        return _topk_frame(cand, scores, n_hit, k)
-    return _collapse_frame(cand, scores, n_hit, collapse, k, consumed)
+        n = len(cand)
+        if n > k:
+            keep = (
+                scores >= np.partition(scores, n - k)[n - k] if k
+                else np.zeros(n, dtype=bool)
+            )
+            cand, scores, n_hit = cand[keep], scores[keep], n_hit[keep]
+            order = np.lexsort((cand, -scores))[:k]
+            cand, scores, n_hit = cand[order], scores[order], n_hit[order]
+        sites = np.zeros(len(cand), dtype=np.int64)
+    else:
+        n_cap, map_ids, map_sites = collapse
+        order = np.lexsort((cand, -scores))
+        cand, scores, n_hit = cand[order], scores[order], n_hit[order]
+        sites = _site_of(cand, map_ids, map_sites)
+        sel = np.flatnonzero(_site_cap_mask(sites, n_cap, consumed))
+        sel = sel[: k * n_cap]
+        cand, scores, n_hit, sites = (
+            cand[sel], scores[sel], n_hit[sel], sites[sel]
+        )
+    return {
+        "doc_id": cand.astype(np.int64),
+        "score": scores.astype(np.float64),
+        "n_hit": n_hit.astype(np.int32),
+        "site_id": sites.astype(np.int64),
+    }
 
 
-def _empty_finalize(
-    k: int, collapse: tuple[int, np.ndarray, np.ndarray] | None
-) -> pd.DataFrame:
-    return _finalize(
-        np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64), k,
-        collapse,
-    )
+def with_trailer(hits: dict, trailer: dict) -> pd.DataFrame:
+    """Hit columns (equal-length arrays) + ONE trailer row → a kernel's
+    applyInPandas output (module docstring: the trailer contract). Hit
+    rows carry zeros in the trailer columns, the trailer zeros in the
+    hit columns."""
+    m = len(hits["doc_id"])
+    cols = {c: np.append(v, np.zeros(1, v.dtype)) for c, v in hits.items()}
+    cols["is_trailer"] = np.arange(m + 1) == m
+    for c, v in trailer.items():
+        col = np.zeros(m + 1, np.float64 if isinstance(v, float) else np.int64)
+        col[m] = v
+        cols[c] = col
+    return pd.DataFrame(cols)
 
 
-def wand_shard_topk(
+def _trailer(
+    lists: list[_TermList], n_matched: int = 0, n_candidates: int = 0,
+    n_scored: int = 0, theta: float = 0.0,
+) -> dict:
+    """The shard's trailer counters (module docstring)."""
+    return {
+        "n_matched": n_matched,
+        "n_postings": sum(t.n for t in lists),
+        "n_blocks": sum(len(t.block_last) for t in lists),
+        "n_blocks_decoded": sum(t.n_decoded for t in lists),
+        "n_candidates": n_candidates,
+        "n_scored": n_scored,
+        "theta": float(theta),
+    }
+
+
+def wand_shard(
     pdf: pd.DataFrame, n_docs: int, avgdl: float, k: int, conjunctive: bool,
     n_terms: int, mode: str = "bm25", allowed: np.ndarray | None = None,
     excluded: np.ndarray | None = None,
@@ -866,503 +935,134 @@ def wand_shard_topk(
     after: tuple[float, int] | None = None,
     fweights: tuple[float, float] | None = None,
     consumed: tuple[np.ndarray, np.ndarray] | None = None,
+    count: bool = False,
 ) -> pd.DataFrame:
-    """One shard's segments (all query terms) → shard-local top-k.
+    """THE shard kernel: one shard's segments (all query terms) → its
+    top-k hit rows plus one trailer row (KERNEL_SCHEMA).
+
+    `count`: the driver needs the shard's pre-top-k match count in the
+    trailer (the reference response carries the ranked page AND the
+    total, ApiService.java:104-146). Without it, multi-term
+    conjunctions run the intersection cascade and everything else
+    (disjunctions, single-term bm25 — AND ≡ OR there) runs the
+    θ-seeded block-max-pruned path. With it, a multi-term disjunction
+    needs the full posting union, so pruning buys nothing and the
+    union is scored exhaustively; only a SINGLE live list keeps the
+    pruned top-k, its count being the list length adjusted by filter
+    lookups (no full decode). Either way pruning is sound (never drops
+    a true top-k doc), so both routes rank identically. The count is
+    taken before the cursor filter (every page reports the same total)
+    and stays UNCOLLAPSED (the "about N results" number — an exact
+    post-collapse count would need per-site counts from every shard,
+    an unbounded result set by design).
 
     `after` = (score, doc_id): cursor pagination (search_after) — only
     rows strictly after the cursor in the total order (score desc,
-    doc_id asc) are returned; the disjunctive θ is seeded by
-    _theta_seed_after (exact sample totals, after-filtered — the plain
-    single-term-score seed is unsound under a cursor, see there).
-    WITH collapse, a cursor additionally needs `consumed` — the
-    per-site counts of rows already served by earlier pages (the
-    stateful collapse walk's state; (sorted site_ids, counts) arrays)
-    — per-site caps become the remaining budgets and the θ-seed caps
-    its exact-totals sample the same way; after × collapse WITHOUT
-    consumed stays rejected.
+    doc_id asc) are returned; θ is seeded by _theta_seed_after (exact
+    sample totals, after-filtered — the single-term-score seed is
+    unsound under a cursor, see there). WITH collapse, a cursor also
+    needs `consumed` — the per-site counts of rows already served by
+    earlier pages ((sorted site_ids, counts) arrays); caps become the
+    remaining budgets and the θ-seed caps its sample the same way.
+
     mode="legacy" scores sum(tf)/max(tf) (reference A3) — block-max
     pruning is disabled there (the block annotations bound BM25, not
     tf ratios); candidates are scored exhaustively.
 
     `collapse` = (n, map_ids, map_sites): per-site result
-    diversification (host collapsing — at most n results per site,
-    the Lucene grouping / search-engine "omitted similar results"
-    semantics). map_ids/map_sites are THIS shard's doc→site_id map
-    (sorted by doc id), cogrouped in by doc-space shard exactly like
-    the site filter's member list. The kernel then returns the
-    post-cap top-(k·n) rows WITH site ids (see _collapse_frame for
-    the exactness argument) and θ is seeded collapse-aware (see
-    _theta_seed). Output schema switches to COLLAPSE_TOPK_SCHEMA.
+    diversification (host collapsing — at most n results per site).
+    map_ids/map_sites are THIS shard's doc→site_id map (sorted by doc
+    id), cogrouped in by doc-space shard like the site filter's member
+    list. Hit rows become the post-cap top-(k·n) with site ids
+    (_select) and θ is seeded collapse-aware (_theta_seed).
 
-    `allowed` (sorted unique int64, or None): doc-level filter — this
-    shard's members of the site being searched (reference site filter,
+    `allowed` (sorted unique int64, or None): this shard's members of
+    the site being searched (reference site filter,
     ApiService.java:88-98). Candidates are intersected with it BEFORE
-    scoring; corpus statistics stay global (filtered retrieval must not
-    change term weights — same contract as the relational path).
+    scoring; corpus statistics stay global.
 
-    `excluded` (sorted unique int64, or None): doc-level deny-list —
-    tombstoned docs whose postings still sit in the packed segments
-    until the next compaction (reference analog: the reindex path's
-    delete-old-postings step, IndexingService.java:152, served without
-    a rebuild). Subtracted from candidates before scoring; θ may only
-    be seeded by servable docs (see _theta_seed)."""
+    `excluded` (sorted unique int64, or None): tombstoned docs whose
+    postings still sit in the packed segments until the next
+    compaction (reference analog: IndexingService.java:152, served
+    without a rebuild). Subtracted from candidates before scoring; θ
+    may only be seeded by servable docs (see _theta_seed)."""
     if after is not None and collapse is not None and consumed is None:
         raise ValueError(
             "search_after with collapse needs `consumed` — the "
             "per-site served counts of earlier pages (an exact "
             "collapsed cursor is stateful)"
         )
-    if allowed is not None and len(allowed) == 0:
-        return _empty_finalize(k, collapse)
-    lists = [
+    lists = [] if allowed is not None and len(allowed) == 0 else [
         _TermList(rows, n_docs, avgdl, mode,
                   boost=boosts.get(t, 1.0) if boosts else 1.0,
                   fweights=fweights)
         for t, rows in pdf.groupby("term", sort=False)
     ]
-    if not lists:
-        return _empty_finalize(k, collapse)
-
-    if conjunctive and len(lists) < n_terms:
-        # a query term has no postings in this shard ⇒ no doc here
-        # can match all terms (shards partition the doc space)
-        return _empty_finalize(k, collapse)
-    # single-term bm25: AND ≡ OR, so take the block-max-pruned path
-    # below instead of the intersection cascade's full driving-list
-    # decode — θ-seed + block bounds skip provably non-competitive
-    # blocks of the one list (rank-identical: pruning is sound)
-    if conjunctive and not (mode in PRUNABLE_MODES and len(lists) == 1):
-        # rarest-first intersection cascade (R1): drive with the
-        # shortest list (fully decoded), probe the rest lazily; the
-        # site filter is the cheapest predicate — apply it first
-        lists.sort(key=lambda t: t.n)
-        cand = lists[0].decode_all()[0]
-        if allowed is not None:
-            cand = _intersect_sorted(cand, allowed)
-        if excluded is not None:
-            cand = _setdiff_sorted(cand, excluded)
-        for t in lists[1:]:
-            if len(cand) == 0:
-                break
-            _, present = t.lookup(cand)
-            cand = cand[present]
-        if len(cand) == 0:
-            return _empty_finalize(k, collapse)
-        scores = np.zeros(len(cand), dtype=np.float64)
-        maxs = np.zeros(len(cand), dtype=np.float64)
-        for t in lists:
-            sc, _ = t.lookup(cand)
-            scores += sc
-            np.maximum(maxs, sc, out=maxs)
-        if mode == "legacy":
-            scores = scores / maxs  # sum(rank)/max(rank), A3
-        n_hit = np.full(len(cand), len(lists), dtype=np.int64)
-        if after is not None:
-            keep = _after_mask(scores, cand, after)
-            cand, scores, n_hit = cand[keep], scores[keep], n_hit[keep]
-        return _finalize(cand, scores, n_hit, k, collapse, consumed)
-
-    # disjunctive: essential-list cut + aligned block-max pruning
-    # (_disjunctive_candidates), then exact scoring of survivors
-    # (legacy mode: no sound block bound for sum/max → no pruning)
-    shortest = min(lists, key=lambda t: t.n)
-    k_seed = k if collapse is None else k * collapse[0]
-    if mode not in PRUNABLE_MODES:
-        theta = 0.0
-    elif after is not None:
-        theta = _theta_seed_after(lists, shortest, k, after,
-                                  allowed, excluded, collapse, consumed)
-    else:
-        theta = _theta_seed(shortest, k_seed, allowed, excluded, collapse)
-    cand = _disjunctive_candidates(lists, theta)
-    if len(cand) == 0:
-        return _empty_finalize(k, collapse)
-    if allowed is not None:
-        cand = _intersect_sorted(cand, allowed)
-    if excluded is not None:
-        cand = _setdiff_sorted(cand, excluded)
-    if len(cand) == 0:
-        return _empty_finalize(k, collapse)
-    scores = np.zeros(len(cand), dtype=np.float64)
-    maxs = np.zeros(len(cand), dtype=np.float64)
-    n_hit = np.zeros(len(cand), dtype=np.int64)
-    for t in lists:
-        sc, present = t.lookup(cand)
-        scores += sc
-        np.maximum(maxs, sc, out=maxs)
-        n_hit += present.astype(np.int64)
-    if mode == "legacy":
-        scores = np.divide(scores, maxs, out=np.zeros_like(scores),
-                           where=maxs > 0)
-    if after is not None:
-        keep = _after_mask(scores, cand, after)
-        cand, scores, n_hit = cand[keep], scores[keep], n_hit[keep]
-    return _finalize(cand, scores, n_hit, k, collapse, consumed)
-
-
-FUSED_OUT_SCHEMA = "doc_id long, score double, n_hit int, n_matched long"
-FUSED_COLLAPSE_SCHEMA = FUSED_OUT_SCHEMA + ", site_id long"
-
-
-def wand_shard_topk_count(
-    pdf: pd.DataFrame, n_docs: int, avgdl: float, k: int,
-    conjunctive: bool, n_terms: int, mode: str = "bm25",
-    allowed: np.ndarray | None = None,
-    excluded: np.ndarray | None = None,
-    collapse: tuple[int, np.ndarray, np.ndarray] | None = None,
-    boosts: dict | None = None,
-    fweights: tuple[float, float] | None = None,
-    after: tuple[float, int] | None = None,
-    consumed: tuple[np.ndarray, np.ndarray] | None = None,
-) -> pd.DataFrame:
-    """wand_shard_topk PLUS the shard's pre-top-k match count in the
-    SAME pass (the reference response carries both the ranked page and
-    the total count, ApiService.java:104-146; running them as two
-    kernels intersects every posting list twice per request). Emits
-    the shard top-k rows (n_matched=0) plus ONE sentinel row
-    (n_hit=-1, n_matched=shard match count — n_hit is ≥1 on every
-    real hit, so -1 is unambiguous).
-
-    `collapse`: per-site diversification, same contract as
-    wand_shard_topk — rows become the post-cap top-(k·n) with site
-    ids (FUSED_COLLAPSE_SCHEMA). The match count stays UNCOLLAPSED
-    (the pre-diversification total, the "about N results" number —
-    an exact post-collapse count would need per-site match counts
-    from every shard, an unbounded result set by design).
-
-    `after` (+ `consumed` when collapsed — wand_shard_topk documents
-    the pairing): cursor pagination in the SAME fused pass. The match
-    count stays CURSOR-INDEPENDENT (counted before the after-filter,
-    the same total every page reports); only the returned top-k rows
-    are after-filtered and remaining-cap collapsed.
-
-    Multi-term disjunctive counting needs the full posting union, so
-    block-max pruning buys nothing there: survivors are scored
-    exhaustively. SINGLE-list queries are the exception — the count is
-    the list length (adjusted by filter lookups), no decode at all, and
-    the top-k goes through the θ-pruned path. Rank-identity holds by
-    construction — pruning is sound (never drops a true top-k doc), so
-    pruned and exhaustive top-k agree; `tests/test_packed_spark.py`
-    asserts the fused path against the two-kernel one on the full
-    reference query set."""
-
-    if after is not None and collapse is not None and consumed is None:
-        raise ValueError(
-            "search_after with collapse needs `consumed` — the "
-            "per-site served counts of earlier pages (an exact "
-            "collapsed cursor is stateful)"
-        )
-
-    def with_count(frame: pd.DataFrame, n: int) -> pd.DataFrame:
-        frame = frame.copy()
-        frame["n_matched"] = np.int64(0)
-        sent = {
-            "doc_id": np.array([0], np.int64),
-            "score": np.array([0.0]),
-            "n_hit": np.array([-1], np.int32),
-            "n_matched": np.array([n], np.int64),
-        }
-        if collapse is not None:
-            sent["site_id"] = np.array([0], np.int64)
-        return pd.concat(
-            [frame, pd.DataFrame(sent)], ignore_index=True
-        )
-
-    if allowed is not None and len(allowed) == 0:
-        return with_count(_empty_finalize(k, collapse), 0)
-    lists = [
-        _TermList(rows, n_docs, avgdl, mode,
-                  boost=boosts.get(t, 1.0) if boosts else 1.0,
-                  fweights=fweights)
-        for t, rows in pdf.groupby("term", sort=False)
-    ]
-    if not lists:
-        return with_count(_empty_finalize(k, collapse), 0)
-
-    if conjunctive and len(lists) < n_terms:
-        return with_count(_empty_finalize(k, collapse), 0)
-    # single-list bm25 (single-term query, or a disjunction with one
-    # term present here): the match count needs NO full decode — it's
-    # the list length adjusted by filter lookups (which decode only
-    # the blocks filter ids fall in) — and the top-k takes the
-    # block-max-pruned path
     live = [t for t in lists if t.n > 0]
-    if mode in PRUNABLE_MODES and len(live) == 1 and (
-        not conjunctive or len(lists) == 1
-    ):
-        t = live[0]
-        if allowed is not None:
-            base = (
-                _setdiff_sorted(allowed, excluded)
-                if excluded is not None else allowed
+    prunable = mode in PRUNABLE_MODES
+    if count:
+        single = prunable and len(live) == 1 and (
+            not conjunctive or len(lists) == 1
+        )
+        scored, seed = live, single
+    else:
+        single = prunable and len(lists) == 1
+        scored, seed = lists, prunable
+    cand, n_cand, n_matched, theta = _NO_IDS, 0, 0, 0.0
+    if not lists or (conjunctive and len(lists) < n_terms):
+        # a query term has no postings in this shard ⇒ no doc here can
+        # match all terms (shards partition the doc space)
+        scored = []
+    elif conjunctive and not single:
+        cand, n_cand = _conjunction(lists, allowed, excluded)
+        scored, n_matched = lists, len(cand)
+    else:
+        # essential-list cut + aligned block-max pruning
+        # (_disjunctive_candidates) below θ, then exact scoring
+        if seed:
+            shortest = min(scored, key=lambda t: t.n)
+            theta = (
+                _theta_seed(shortest,
+                            k if collapse is None else k * collapse[0],
+                            allowed, excluded, collapse)
+                if after is None else
+                _theta_seed_after(scored, shortest, k, after, allowed,
+                                  excluded, collapse, consumed)
             )
-            _, present = t.lookup(base)
-            n_match = int(present.sum())
-        elif excluded is not None:
-            _, present = t.lookup(excluded)
-            n_match = t.n - int(present.sum())
-        else:
-            n_match = t.n
-        k_seed = k if collapse is None else k * collapse[0]
-        if after is not None:
-            # the plain seed is unsound under a cursor (high scores
-            # may sit BEFORE it) — use the exact-totals after seed
-            theta = _theta_seed_after([t], t, k, after, allowed,
-                                      excluded, collapse, consumed)
-        else:
-            theta = _theta_seed(t, k_seed, allowed, excluded, collapse)
-        cand = _disjunctive_candidates([t], theta)
-        if allowed is not None:
-            cand = _intersect_sorted(cand, allowed)
-        if excluded is not None:
-            cand = _setdiff_sorted(cand, excluded)
-        scores, present = t.lookup(cand)
-        n_hit = present.astype(np.int64)
-        if after is not None:
-            keep = _after_mask(scores, cand, after)
-            cand, scores, n_hit = cand[keep], scores[keep], n_hit[keep]
-        return with_count(
-            _finalize(cand, scores, n_hit, k, collapse, consumed),
-            n_match,
+        cand = _filter(
+            _disjunctive_candidates(scored, theta), allowed, excluded
         )
-
-    if conjunctive:
-        lists.sort(key=lambda t: t.n)
-        cand = lists[0].decode_all()[0]
-        if allowed is not None:
-            cand = _intersect_sorted(cand, allowed)
-        if excluded is not None:
-            cand = _setdiff_sorted(cand, excluded)
-        for t in lists[1:]:
-            if len(cand) == 0:
-                break
-            _, present = t.lookup(cand)
-            cand = cand[present]
-        if len(cand) == 0:
-            return with_count(_empty_finalize(k, collapse), 0)
-        scores = np.zeros(len(cand), dtype=np.float64)
-        maxs = np.zeros(len(cand), dtype=np.float64)
-        for t in lists:
-            sc, _ = t.lookup(cand)
-            scores += sc
-            np.maximum(maxs, sc, out=maxs)
-        if mode == "legacy":
-            scores = scores / maxs
-        n_hit = np.full(len(cand), len(lists), dtype=np.int64)
-        n_match = len(cand)  # count BEFORE the cursor filter
-        if after is not None:
-            keep = _after_mask(scores, cand, after)
-            cand, scores, n_hit = cand[keep], scores[keep], n_hit[keep]
-        return with_count(
-            _finalize(cand, scores, n_hit, k, collapse, consumed), n_match
-        )
-
-    nonempty = [t for t in lists if t.n > 0]
-    if not nonempty:
-        return with_count(_empty_finalize(k, collapse), 0)
-    cand = np.unique(np.concatenate([t.decode_all()[0] for t in nonempty]))
-    if allowed is not None:
-        cand = _intersect_sorted(cand, allowed)
-    if excluded is not None:
-        cand = _setdiff_sorted(cand, excluded)
-    if len(cand) == 0:
-        return with_count(_empty_finalize(k, collapse), 0)
+        n_cand = len(cand)
+        if count and single:  # the list length, adjusted by filters
+            t = live[0]
+            if allowed is not None:
+                n_matched = int(
+                    t.lookup(_filter(allowed, None, excluded))[1].sum()
+                )
+            elif excluded is not None:
+                n_matched = t.n - int(t.lookup(excluded)[1].sum())
+            else:
+                n_matched = t.n
+        else:  # counting: θ = 0, so cand is the whole filtered union
+            n_matched = n_cand
     scores = np.zeros(len(cand), dtype=np.float64)
     maxs = np.zeros(len(cand), dtype=np.float64)
     n_hit = np.zeros(len(cand), dtype=np.int64)
-    for t in nonempty:
+    for t in scored:
         sc, present = t.lookup(cand)
         scores += sc
         np.maximum(maxs, sc, out=maxs)
-        n_hit += present.astype(np.int64)
-    if mode == "legacy":
+        n_hit += present
+    if mode == "legacy":  # sum(rank)/max(rank), A3
         scores = np.divide(scores, maxs, out=np.zeros_like(scores),
                            where=maxs > 0)
-    n_match = len(cand)  # count BEFORE the cursor filter
+    n_scored = len(cand)
     if after is not None:
         keep = _after_mask(scores, cand, after)
         cand, scores, n_hit = cand[keep], scores[keep], n_hit[keep]
-    return with_count(
-        _finalize(cand, scores, n_hit, k, collapse, consumed), n_match
-    )
-
-
-METRICS_OUT_SCHEMA = (
-    "shard int, n_terms_present int, n_postings long, n_blocks long, "
-    "n_blocks_decoded long, n_candidates long, n_scored long, theta double"
-)
-
-
-def wand_shard_metrics(
-    pdf: pd.DataFrame, n_docs: int, avgdl: float, k: int,
-    conjunctive: bool, n_terms: int, mode: str = "bm25",
-    allowed: np.ndarray | None = None,
-    excluded: np.ndarray | None = None,
-    boosts: dict | None = None,
-    fweights: tuple[float, float] | None = None,
-) -> pd.DataFrame:
-    """One shard's PRUNING-EFFECTIVENESS counters for a query — the
-    observability face of the block-max WAND kernel (per-partition
-    metrics are a north-rule requirement for the build; this is the
-    query-side analog). Replays wand_shard_topk's exact candidate
-    logic but emits ONE row of counters instead of the top-k:
-
-      n_postings        Σ postings across this shard's query terms
-      n_blocks          Σ compressed blocks across those terms
-      n_blocks_decoded  blocks actually decompressed — the rest were
-                        skipped by block-max pruning / lazy lookup
-      n_candidates      docs entering the probe phase (multi-term
-                        conjunctive: driving-list survivors after
-                        site/tombstone filters; disjunctive and
-                        single-term bm25: union of docs in θ-surviving
-                        blocks, post filters)
-      n_scored          docs fully scored (multi-term conjunctive: the
-                        final intersection — equals the served match
-                        count; disjunctive/single-term: ==
-                        n_candidates, which under pruning is LESS than
-                        the served count — pruning's whole point)
-      theta             the θ lower bound used for block pruning
-                        (0.0 when pruning is off: multi-term
-                        conjunctive / legacy)
-
-    Decision-for-decision parity with wand_shard_topk is pinned by
-    tests (conjunctive n_scored == the fused kernel's match count;
-    disjunctive n_blocks_decoded == n_blocks when θ seeds 0)."""
-    shard = int(pdf["shard"].iloc[0]) if len(pdf) else -1
-
-    def row(lists, n_cand, n_scored, theta):
-        return pd.DataFrame({
-            "shard": np.array([shard], np.int32),
-            "n_terms_present": np.array([len(lists)], np.int32),
-            "n_postings": np.array([sum(t.n for t in lists)], np.int64),
-            "n_blocks": np.array(
-                [sum(len(t.block_last) for t in lists)], np.int64
-            ),
-            "n_blocks_decoded": np.array(
-                [sum(t.n_decoded for t in lists)], np.int64
-            ),
-            "n_candidates": np.array([n_cand], np.int64),
-            "n_scored": np.array([n_scored], np.int64),
-            "theta": np.array([theta], np.float64),
-        })
-
-    if allowed is not None and len(allowed) == 0:
-        return row([], 0, 0, 0.0)
-    lists = [
-        _TermList(rows, n_docs, avgdl, mode,
-                  boost=boosts.get(t, 1.0) if boosts else 1.0,
-                  fweights=fweights)
-        for t, rows in pdf.groupby("term", sort=False)
-    ]
-    if not lists:
-        return row([], 0, 0, 0.0)
-
-    if conjunctive and len(lists) < n_terms:
-        return row(lists, 0, 0, 0.0)
-    # single-term bm25 routes through the block-max-pruned path below
-    # (mirrors wand_shard_topk / wand_shard_topk_count routing so the
-    # decode counters replay the serving kernels' decisions)
-    if conjunctive and not (mode in PRUNABLE_MODES and len(lists) == 1):
-        lists.sort(key=lambda t: t.n)
-        cand = lists[0].decode_all()[0]
-        if allowed is not None:
-            cand = _intersect_sorted(cand, allowed)
-        if excluded is not None:
-            cand = _setdiff_sorted(cand, excluded)
-        n_cand = len(cand)
-        for t in lists[1:]:
-            if len(cand) == 0:
-                break
-            _, present = t.lookup(cand)
-            cand = cand[present]
-        for t in lists:  # scoring pass decodes nothing new beyond lookup
-            t.lookup(cand)
-        return row(lists, n_cand, len(cand), 0.0)
-
-    shortest = min(lists, key=lambda t: t.n)
-    theta = (
-        _theta_seed(shortest, k, allowed, excluded)
-        if mode in PRUNABLE_MODES else 0.0
-    )
-    cand = _disjunctive_candidates(lists, theta)
-    if allowed is not None:
-        cand = _intersect_sorted(cand, allowed)
-    if excluded is not None:
-        cand = _setdiff_sorted(cand, excluded)
-    for t in lists:
-        t.lookup(cand)
-    return row(lists, len(cand), len(cand), theta)
-
-
-def search_packed_metrics(
-    spark,
-    segments: DataFrame,
-    term_stats: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    query: str,
-    k: int = 20,
-    conjunctive: bool = True,
-    max_rel_freq: float = 0.95,
-    df_map: dict | None = None,
-    mode: str = "bm25",
-    site: str | None = None,
-    doc_stats: DataFrame | None = None,
-    n_shards: int | None = None,
-    excluded_doc_ids: list[int] | None = None,
-    boosts: dict | None = None,
-    field_weights: dict | None = None,
-) -> DataFrame:
-    """Per-shard pruning/decode counters for a query (see
-    wand_shard_metrics) → DataFrame(METRICS_OUT_SCHEMA), one row per
-    shard holding any query-term postings. Same plan shape as
-    search_packed — term-pruned scan, one kernel per shard — so the
-    counters describe exactly the work the serving path would do."""
-    fweights = _resolve_fweights(mode, field_weights)
-    lemmas = lemmatize_query(query)
-    terms = (
-        _resolve_terms(term_stats, n_docs, lemmas, max_rel_freq, df_map)
-        if lemmas else []
-    )
-    if not terms:
-        from ..operators.search import empty_df
-
-        return empty_df(spark, METRICS_OUT_SCHEMA)
-    n_terms = len(terms)
-    seg = term_pruned_segments(segments, terms, mode)
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids else None
-    )
-    if site is None:
-        return seg.groupBy("shard").applyInPandas(
-            lambda pdf: wand_shard_metrics(pdf, n_docs, avgdl, k,
-                                           conjunctive, n_terms, mode,
-                                           excluded=exc, boosts=boosts,
-                                           fweights=fweights),
-            schema=METRICS_OUT_SCHEMA,
-        )
-    if doc_stats is None:
-        raise ValueError(
-            "site filter on the packed path needs doc_stats (doc_id, site)"
-        )
-    if n_shards is None:
-        n_shards = int(segments.agg(F.max("shard")).collect()[0][0]) + 1
-    members = _site_members(doc_stats, site, n_shards)
-
-    def _kernel(seg_pdf: pd.DataFrame, mem_pdf: pd.DataFrame):
-        allowed = np.sort(
-            mem_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-        )
-        return wand_shard_metrics(seg_pdf, n_docs, avgdl, k, conjunctive,
-                                  n_terms, mode, allowed=allowed,
-                                  excluded=exc, boosts=boosts,
-                                  fweights=fweights)
-
-    return (
-        seg.groupby("shard")
-        .cogroup(members.groupby("shard"))
-        .applyInPandas(_kernel, schema=METRICS_OUT_SCHEMA)
+    return with_trailer(
+        _select(cand, scores, n_hit, k, collapse, consumed),
+        _trailer(lists, n_matched if count else 0, n_cand, n_scored, theta),
     )
 
 
@@ -1371,7 +1071,10 @@ def _resolve_terms(
     df_map: dict | None,
 ) -> list[str]:
     """F4 pruning + absent-term drop — shared by every packed entry
-    point (reference ApiService.java:121-126,222-236)."""
+    point (reference ApiService.java:121-126,222-236: lemmas not found
+    in the dictionary simply vanish from the query)."""
+    if not lemmas:
+        return []
     if df_map is not None:
         stats = {t: df_map[t] for t in lemmas if t in df_map}
     else:
@@ -1398,12 +1101,12 @@ def _site_members(doc_stats, site: str, n_shards: int):
 def site_map_frame(doc_stats, n_shards: int):
     """(shard, doc_id, site_id) — the doc→site map keyed to the
     segments' doc-space hash shards, the cogroup side of the collapse
-    (host-diversification) kernels. site_id = xxhash64(site): the
-    kernel only needs site EQUALITY, not the string, so a 64-bit hash
-    keeps the shuffled map at 16 bytes/doc (collision odds at 10^12
-    docs ≈ 10^-5 per Birthday bound — two sites colliding would merely
-    over-collapse one result page; acceptable for diversification,
-    never for filtering).
+    (host-diversification) and facet kernels. site_id =
+    xxhash64(site): the kernel only needs site EQUALITY, not the
+    string, so a 64-bit hash keeps the shuffled map at 16 bytes/doc
+    (collision odds at 10^12 docs ≈ 10^-5 per Birthday bound — two
+    sites colliding would merely over-collapse one result page;
+    acceptable for diversification, never for filtering).
 
     Scale note: this frame is INDEX STATE, not per-query data — a warm
     server (service.search collapse path) builds it once per index
@@ -1418,32 +1121,180 @@ def site_map_frame(doc_stats, n_shards: int):
     )
 
 
-def _merge_collapsed(
-    rows, n_cap: int, k: int, offset: int, conjunctive: bool, n_terms: int,
-    consumed: dict | None = None,
-) -> list:
-    """Driver-side exact global merge of the shards' post-cap
-    top-(k·n) rows (COLLAPSE/FUSED_COLLAPSE schema): re-rank by
-    (score desc, doc_id asc), re-apply the per-site cap over the
-    merged order, slice [offset, offset+k). Input is ≤ shards·k·n
-    rows by kernel construction — bounded however large the corpus.
-    `consumed` (collapse-aware cursor): site_id → rows served by
-    earlier pages; seeds the per-site counters so caps continue the
-    stateful walk."""
-    hits = [r for r in rows if r["n_hit"] != -1]
-    if conjunctive:
-        hits = [r for r in hits if r["n_hit"] == n_terms]
+# --- the sharded driver -----------------------------------------------------
+
+
+def _shard_frame(
+    segments: DataFrame, terms: list[str], kernel, schema: str,
+    mode: str = "bm25", side: DataFrame | None = None,
+) -> DataFrame:
+    """The one packed-read plan: term-pruned segment scan → optional
+    cogroup with a per-shard side frame (site members, or the doc→site
+    map) → ONE applyInPandas kernel call per shard. `kernel(seg_pdf,
+    side_pdf)` gets side_pdf=None without a side. The corpus never
+    moves; only the side frame's rows shuffle."""
+    seg = term_pruned_segments(segments, terms, mode)
+    if side is None:
+        return seg.groupBy("shard").applyInPandas(
+            lambda pdf: kernel(pdf, None), schema=schema
+        )
+    return (
+        seg.groupby("shard").cogroup(side.groupby("shard"))
+        .applyInPandas(kernel, schema=schema)
+    )
+
+
+def _n_shards(segments: DataFrame, n_shards: int | None) -> int:
+    """The manifest's n_shards when given, else inferred from the
+    UNFILTERED segment frame (max shard id + 1 — exact whenever every
+    shard holds ≥1 segment, i.e. any non-toy corpus)."""
+    if n_shards is not None:
+        return n_shards
+    return int(segments.agg(F.max("shard")).collect()[0][0]) + 1
+
+
+def _site_side(segments, site, doc_stats, n_shards):
+    """Cogroup side of a site-filtered read (None without `site`)."""
+    if site is None:
+        return None
+    if doc_stats is None:
+        raise ValueError(
+            "site filter on the packed path needs doc_stats (doc_id, site)"
+        )
+    return _site_members(doc_stats, site, _n_shards(segments, n_shards))
+
+
+def _deny_list(excluded_doc_ids) -> np.ndarray | None:
+    if not excluded_doc_ids:
+        return None
+    return np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
+
+
+def _allowed_of(side_pdf: pd.DataFrame | None) -> np.ndarray | None:
+    if side_pdf is None:
+        return None
+    return np.sort(side_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True))
+
+
+def _site_map_of(side_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    ids = side_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
+    sids = side_pdf["site_id"].to_numpy(dtype=np.int64, copy=True)
+    order = np.argsort(ids)
+    return ids[order], sids[order]
+
+
+def _wand_frame(
+    segments: DataFrame, terms: list[str], n_docs: int, avgdl: float,
+    k: int, conjunctive: bool, mode: str = "bm25",
+    site: str | None = None, doc_stats: DataFrame | None = None,
+    n_shards: int | None = None, excluded_doc_ids=None,
+    collapse_n: int | None = None, site_map: DataFrame | None = None,
+    boosts: dict | None = None, after: tuple[float, int] | None = None,
+    fweights: tuple[float, float] | None = None,
+    consumed: tuple[np.ndarray, np.ndarray] | None = None,
+    count: bool = False,
+) -> DataFrame:
+    """Per-shard wand_shard output (KERNEL_SCHEMA) for resolved
+    `terms` — every WAND read (ranked page, count, cursor, collapse,
+    explain, prefix) is this one plan."""
+    exc = _deny_list(excluded_doc_ids)
+    n_terms = len(terms)
+    if collapse_n is not None:
+        side = site_map if site_map is not None else site_map_frame(
+            doc_stats, _n_shards(segments, n_shards)
+        )
+    else:
+        side = _site_side(segments, site, doc_stats, n_shards)
+
+    def kernel(seg_pdf: pd.DataFrame, side_pdf: pd.DataFrame | None):
+        filters = (
+            {"allowed": _allowed_of(side_pdf)} if collapse_n is None
+            else {"collapse": (collapse_n, *_site_map_of(side_pdf))}
+        )
+        return wand_shard(
+            seg_pdf, n_docs, avgdl, k, conjunctive, n_terms, mode,
+            excluded=exc, boosts=boosts, after=after, fweights=fweights,
+            consumed=consumed, count=count, **filters,
+        )
+
+    return _shard_frame(segments, terms, kernel, KERNEL_SCHEMA, mode, side)
+
+
+def _merge(
+    rows, k: int, offset: int = 0, n_terms: int | None = None,
+    collapse_n: int | None = None, consumed: dict | None = None,
+) -> tuple[list, int]:
+    """Driver-side merge of the shards' kernel rows → (the [offset,
+    offset+k) page of hit rows ranked (score desc, doc_id asc), Σ
+    trailer n_matched). `n_terms` keeps only rows matching all terms
+    (conjunctive). `collapse_n` re-applies the per-site cap over the
+    merged order; `consumed` (site_id → rows served by earlier pages)
+    seeds the per-site counters so caps continue the stateful cursor
+    walk. Input is ≤ shards·(offset+k)[·n] rows by kernel
+    construction — bounded however large the corpus."""
+    hits = [
+        r for r in rows
+        if not r["is_trailer"] and (n_terms is None or r["n_hit"] == n_terms)
+    ]
+    count = sum(r["n_matched"] for r in rows if r["is_trailer"])
     hits.sort(key=lambda r: (-r["score"], r["doc_id"]))
-    per_site: dict = dict(consumed) if consumed else {}
-    kept = []
-    for r in hits:
-        c = per_site.get(r["site_id"], 0)
-        if c < n_cap:
-            per_site[r["site_id"]] = c + 1
-            kept.append(r)
-            if len(kept) >= offset + k:
-                break
-    return kept[offset:offset + k]
+    if collapse_n is not None:
+        per_site = dict(consumed or {})
+        kept = []
+        for r in hits:
+            c = per_site.get(r["site_id"], 0)
+            if c < collapse_n:
+                per_site[r["site_id"]] = c + 1
+                kept.append(r)
+                if len(kept) >= offset + k:
+                    break
+        hits = kept
+    return hits[offset:offset + k], int(count)
+
+
+def _ranked(
+    spark, per_shard: DataFrame, k: int, offset: int = 0,
+    n_terms: int | None = None,
+) -> DataFrame:
+    """The lazy twin of _merge: hit rows → global
+    TakeOrderedAndProject of the top (offset+k), the offset rows
+    sliced driver-side (reference list-slice semantics, same bounded
+    behaviour as the relational path's MAX_OFFSET)."""
+    from ..operators.search import empty_df
+
+    out = per_shard.filter(~F.col("is_trailer"))
+    if n_terms is not None:
+        out = out.filter(F.col("n_hit") == n_terms)
+    out = (
+        out.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(offset + k)
+    )
+    if not offset:
+        return out
+    sliced = out.collect()[offset:]
+    if not sliced:
+        return empty_df(spark, "doc_id long, score double")
+    return spark.createDataFrame(sliced, out.schema)
+
+
+def _check_page_args(k: int, offset: int, mode: str, boosts) -> None:
+    from ..operators.search import MAX_OFFSET
+
+    if k < 0 or offset < 0:
+        raise ValueError(
+            f"k and offset must be >= 0 (got k={k}, offset={offset})"
+        )
+    if offset > MAX_OFFSET:
+        raise ValueError(f"offset {offset} > MAX_OFFSET {MAX_OFFSET}")
+    if boosts and (
+        mode not in PRUNABLE_MODES
+        or any(w <= 0 for w in boosts.values())
+    ):
+        raise ValueError(
+            f"boosts need bm25/bm25f mode and weights > 0 "
+            f"(mode={mode}, {boosts})"
+        )
 
 
 def search_packed_fused(
@@ -1471,13 +1322,12 @@ def search_packed_fused(
     after: tuple[float, int] | None = None,
     after_sites: dict | None = None,
     return_sites: bool = False,
+    _count: bool = True,
 ) -> tuple[list[tuple[int, float]], int]:
     """ONE kernel pass per shard serving BOTH the ranked page and the
     pre-pagination match count → ([(doc_id, score)] already
     offset-sliced and globally ranked, n_matched). This is the warm
-    server's hot path (service.search): the two-kernel formulation
-    (match_count_packed + search_packed) decoded and intersected every
-    posting list twice per request.
+    server's hot path (service.search).
 
     `lemmas`: pre-analyzed query lemmas — skips `lemmatize_query`
     (callers whose terms are machine-selected lemmas already, e.g.
@@ -1490,36 +1340,23 @@ def search_packed_fused(
     `doc_stats` when omitted) cogroups into the kernel by doc-space
     shard; each shard returns its post-cap top-((offset+k)·n) rows
     with site ids and the driver merge re-applies the cap globally —
-    exact (see _collapse_frame) with both per-task and driver memory
-    bounded by k·n. Mutually exclusive with `site`: a single-site
-    query diversified per site is a plain LIMIT n, and search engines
+    exact (see _select) with both per-task and driver memory bounded
+    by k·n. Mutually exclusive with `site`: a single-site query
+    diversified per site is a plain LIMIT n, and search engines
     disable host collapsing under site: scoping — pass one or the
-    other. The match count stays UNCOLLAPSED (the "about N results"
-    number; an exact post-collapse count needs per-site counts from
-    every shard — unbounded by design).
+    other. The match count stays UNCOLLAPSED.
 
-    Plan shape: term-pruned segment scan → one applyInPandas kernel
-    per shard → driver merge of ≤ n_shards·(offset+k+1) rows (the +1
-    is each shard's count sentinel; ·collapse_n under collapse). The
-    global sort happens driver-side over that bounded set — same rank
-    order (score desc, doc_id asc) as search_packed's
-    TakeOrderedAndProject."""
-    from ..operators.search import MAX_OFFSET
+    `after` (+ `after_sites`, the per-site served counts of earlier
+    pages, when collapsed): cursor pagination in the same pass; the
+    count stays cursor-independent. `return_sites` (collapse only)
+    adds each hit's site_id. `_count=False` (the service's cached
+    cursor count) skips the count and returns None for it.
 
-    if k < 0 or offset < 0:
-        raise ValueError(
-            f"k and offset must be >= 0 (got k={k}, offset={offset})"
-        )
-    if offset > MAX_OFFSET:
-        raise ValueError(f"offset {offset} > MAX_OFFSET {MAX_OFFSET}")
-    if boosts and (
-        mode not in PRUNABLE_MODES
-        or any(w <= 0 for w in boosts.values())
-    ):
-        raise ValueError(
-            f"boosts need bm25/bm25f mode and weights > 0 "
-            f"(mode={mode}, {boosts})"
-        )
+    Plan shape: _wand_frame (term-pruned segment scan → one
+    applyInPandas kernel per shard) → _merge of ≤ n_shards·(offset+k+1)
+    rows (·collapse_n under collapse) — same rank order (score desc,
+    doc_id asc) as search_packed's TakeOrderedAndProject."""
+    _check_page_args(k, offset, mode, boosts)
     if collapse_n is not None:
         if collapse_n < 1:
             raise ValueError(f"collapse_n must be >= 1 (got {collapse_n})")
@@ -1532,19 +1369,14 @@ def search_packed_fused(
             raise ValueError(
                 "collapse needs site_map (site_map_frame) or doc_stats"
             )
-    if after is not None:
-        # fused cursors are COLLAPSE cursors: the plain-cursor serving
-        # path is search_packed(after=…) + the per-generation count
-        # cache (service.py); the fused pass exists here because a
-        # collapsed cursor page needs count + capped page together
-        if collapse_n is None or after_sites is None:
-            raise ValueError(
-                "fused search_after needs collapse_n AND after_sites "
-                "(the per-site served counts of earlier pages — "
-                "pass {} for a page-1 cursor replay)"
-            )
-        if offset:
-            raise ValueError("search_after replaces offset")
+    if after is not None and offset:
+        raise ValueError("search_after replaces offset")
+    if after is not None and collapse_n is not None and after_sites is None:
+        raise ValueError(
+            "search_after with collapse needs after_sites (the per-site "
+            "served counts of earlier pages — pass {} for a page-1 "
+            "cursor replay)"
+        )
     if after_sites is not None and (after is None or collapse_n is None):
         raise ValueError("after_sites needs after and collapse_n")
     if return_sites and collapse_n is None:
@@ -1552,109 +1384,32 @@ def search_packed_fused(
     fweights = _resolve_fweights(mode, field_weights)
     if lemmas is None:
         lemmas = lemmatize_query(query)
-    if not lemmas:
-        return [], 0
     terms = _resolve_terms(term_stats, n_docs, lemmas, max_rel_freq, df_map)
     if not terms:
-        return [], 0
-    n_terms = len(terms)
-    k_eff = offset + k
-
-    seg = term_pruned_segments(segments, terms, mode)
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids else None
+        return [], (0 if _count else None)
+    consumed = None
+    if after_sites is not None:
+        keys = sorted(after_sites)
+        consumed = (
+            np.array(keys, dtype=np.int64),
+            np.array([int(after_sites[s]) for s in keys], dtype=np.int64),
+        )
+    rows = _wand_frame(
+        segments, terms, n_docs, avgdl, offset + k, conjunctive, mode,
+        site=site, doc_stats=doc_stats, n_shards=n_shards,
+        excluded_doc_ids=excluded_doc_ids, collapse_n=collapse_n,
+        site_map=site_map, boosts=boosts, after=after, fweights=fweights,
+        consumed=consumed, count=_count,
+    ).collect()
+    hits, count = _merge(
+        rows, k, offset, len(terms) if conjunctive else None, collapse_n,
+        after_sites,
     )
-    if collapse_n is not None:
-        if site_map is None:
-            if n_shards is None:
-                n_shards = int(
-                    segments.agg(F.max("shard")).collect()[0][0]
-                ) + 1
-            site_map = site_map_frame(doc_stats, n_shards)
-
-        consumed = None
-        if after_sites is not None:
-            c_ids = np.array(sorted(after_sites), dtype=np.int64)
-            c_counts = np.array(
-                [int(after_sites[i]) for i in sorted(after_sites)],
-                dtype=np.int64,
-            )
-            consumed = (c_ids, c_counts)
-
-        def _ckernel(seg_pdf: pd.DataFrame, map_pdf: pd.DataFrame):
-            ids = map_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-            sids = map_pdf["site_id"].to_numpy(dtype=np.int64, copy=True)
-            order = np.argsort(ids)
-            return wand_shard_topk_count(
-                seg_pdf, n_docs, avgdl, k_eff, conjunctive, n_terms, mode,
-                excluded=exc,
-                collapse=(collapse_n, ids[order], sids[order]),
-                boosts=boosts, fweights=fweights,
-                after=after, consumed=consumed,
-            )
-
-        per_shard = (
-            seg.groupby("shard")
-            .cogroup(site_map.groupby("shard"))
-            .applyInPandas(_ckernel, schema=FUSED_COLLAPSE_SCHEMA)
-        )
-        rows = per_shard.collect()
-        count = sum(r["n_matched"] for r in rows if r["n_hit"] == -1)
-        kept = _merge_collapsed(
-            rows, collapse_n, k, offset, conjunctive, n_terms,
-            consumed=after_sites,
-        )
-        if return_sites:
-            return (
-                [(r["doc_id"], r["score"], r["site_id"]) for r in kept],
-                int(count),
-            )
-        return [(r["doc_id"], r["score"]) for r in kept], int(count)
-    if site is None:
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: wand_shard_topk_count(pdf, n_docs, avgdl, k_eff,
-                                              conjunctive, n_terms, mode,
-                                              excluded=exc, boosts=boosts,
-                                              fweights=fweights),
-            schema=FUSED_OUT_SCHEMA,
-        )
+    if return_sites:
+        page = [(r["doc_id"], r["score"], r["site_id"]) for r in hits]
     else:
-        if doc_stats is None:
-            raise ValueError(
-                "site filter on the packed path needs doc_stats "
-                "(doc_id, site)"
-            )
-        if n_shards is None:
-            n_shards = int(
-                segments.agg(F.max("shard")).collect()[0][0]
-            ) + 1
-        members = _site_members(doc_stats, site, n_shards)
-
-        def _kernel(seg_pdf: pd.DataFrame, mem_pdf: pd.DataFrame):
-            allowed = np.sort(
-                mem_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-            )
-            return wand_shard_topk_count(seg_pdf, n_docs, avgdl, k_eff,
-                                         conjunctive, n_terms, mode,
-                                         allowed=allowed, excluded=exc,
-                                         boosts=boosts, fweights=fweights)
-
-        per_shard = (
-            seg.groupby("shard")
-            .cogroup(members.groupby("shard"))
-            .applyInPandas(_kernel, schema=FUSED_OUT_SCHEMA)
-        )
-    rows = per_shard.collect()
-    count = sum(r["n_matched"] for r in rows if r["n_hit"] == -1)
-    hits = [r for r in rows if r["n_hit"] != -1]
-    if conjunctive:
-        hits = [r for r in hits if r["n_hit"] == n_terms]
-    hits.sort(key=lambda r: (-r["score"], r["doc_id"]))
-    return (
-        [(r["doc_id"], r["score"]) for r in hits[offset:k_eff]],
-        int(count),
-    )
+        page = [(r["doc_id"], r["score"]) for r in hits]
+    return page, (count if _count else None)
 
 
 def search_packed(
@@ -1733,22 +1488,9 @@ def search_packed(
     by corpus size — a corpus-sized filter belongs in `site`/members
     form instead).
     """
-    from ..operators.search import MAX_OFFSET, empty_df
+    from ..operators.search import empty_df
 
-    if k < 0 or offset < 0:
-        raise ValueError(
-            f"k and offset must be >= 0 (got k={k}, offset={offset})"
-        )
-    if offset > MAX_OFFSET:
-        raise ValueError(f"offset {offset} > MAX_OFFSET {MAX_OFFSET}")
-    if boosts and (
-        mode not in PRUNABLE_MODES
-        or any(w <= 0 for w in boosts.values())
-    ):
-        raise ValueError(
-            f"boosts need bm25/bm25f mode and weights > 0 "
-            f"(mode={mode}, {boosts})"
-        )
+    _check_page_args(k, offset, mode, boosts)
     if after is not None and (offset or collapse_n is not None):
         raise ValueError(
             "search_after replaces offset and cannot combine with collapse"
@@ -1766,130 +1508,19 @@ def search_packed(
         if not hits:
             return empty_df(spark, "doc_id long, score double")
         return spark.createDataFrame(hits, "doc_id long, score double")
-    lemmas = lemmatize_query(query)
-    if not lemmas:
-        return empty_df(spark, "doc_id long, score double")
-    # F4 pruning + absent-term drop — same contract as the relational
-    # path and the oracle (reference: ApiService.java:121-126,222-236 —
-    # lemmas not found in the dictionary simply vanish from the query)
-    terms = _resolve_terms(term_stats, n_docs, lemmas, max_rel_freq, df_map)
+    terms = _resolve_terms(
+        term_stats, n_docs, lemmatize_query(query), max_rel_freq, df_map
+    )
     if not terms:
         return empty_df(spark, "doc_id long, score double")
-    n_terms = len(terms)
-    k_eff = offset + k
-
-    seg = term_pruned_segments(segments, terms, mode)
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids else None
+    per_shard = _wand_frame(
+        segments, terms, n_docs, avgdl, offset + k, conjunctive, mode,
+        site=site, doc_stats=doc_stats, n_shards=n_shards,
+        excluded_doc_ids=excluded_doc_ids, boosts=boosts, after=after,
+        fweights=fweights,
     )
-    if site is None:
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: wand_shard_topk(pdf, n_docs, avgdl, k_eff,
-                                        conjunctive, n_terms, mode,
-                                        excluded=exc, boosts=boosts,
-                                        after=after, fweights=fweights),
-            schema=TOPK_OUT_SCHEMA,
-        )
-    else:
-        if doc_stats is None:
-            raise ValueError(
-                "site filter on the packed path needs doc_stats "
-                "(doc_id, site)"
-            )
-        if n_shards is None:
-            # infer from the UNFILTERED segment frame (max shard id +1
-            # — exact whenever every shard holds ≥1 segment, i.e. any
-            # non-toy corpus); pass the manifest's n_shards when exact
-            # metadata is at hand
-            n_shards = int(
-                segments.agg(F.max("shard")).collect()[0][0]
-            ) + 1
-        members = _site_members(doc_stats, site, n_shards)
-
-        def _kernel(seg_pdf: pd.DataFrame, mem_pdf: pd.DataFrame):
-            allowed = np.sort(
-                mem_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-            )
-            return wand_shard_topk(seg_pdf, n_docs, avgdl, k_eff,
-                                   conjunctive, n_terms, mode,
-                                   allowed=allowed, excluded=exc,
-                                   boosts=boosts, after=after,
-                                   fweights=fweights)
-
-        per_shard = (
-            seg.groupby("shard")
-            .cogroup(members.groupby("shard"))
-            .applyInPandas(_kernel, schema=TOPK_OUT_SCHEMA)
-        )
-    out = per_shard
-    if conjunctive:
-        out = out.filter(F.col("n_hit") == n_terms)
-    out = (
-        out.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k_eff)
-    )
-    if offset:
-        # driver-side slice of the top (offset+k) rows — reference list
-        # slice semantics, identical to the relational path
-        sliced = out.collect()[offset:]
-        return (
-            spark.createDataFrame(sliced, out.schema)
-            if sliced
-            else empty_df(spark, "doc_id long, score double")
-        )
-    return out
-
-
-def search_packed_with_snippets(
-    spark,
-    segments: DataFrame,
-    term_stats: DataFrame,
-    doc_stats: DataFrame,
-    docs_text: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    query: str,
-    k: int = 20,
-    offset: int = 0,
-    site: str | None = None,
-    conjunctive: bool = True,
-    mode: str = "bm25",
-    radius: int = 3,
-    snippet_mode: str = "word",
-    df_map: dict | None = None,
-    n_shards: int | None = None,
-    excluded_doc_ids: list[int] | None = None,
-) -> DataFrame:
-    """The reference's full search response served from the PACKED
-    index (ApiService.java:82-146 + SnippetMapper): top-k +
-    (url, snippet) per hit → DataFrame(url, doc_id, score, snippet).
-
-    `docs_text` is any frame with (doc_id, text). The ≤ k winners are
-    broadcast into both enrichment joins, so neither the corpus text
-    scan nor doc_stats ever shuffles; the snippet UDF runs on ≤ k rows.
-    snippet_mode: "word" (oracle-checked default) or "charwalk"
-    (reference char-walk parity — functions/textproc.py)."""
-    from ..functions.udfs import snippet_udf
-
-    winners = search_packed(
-        spark, segments, term_stats, n_docs, avgdl, query, k=k,
-        conjunctive=conjunctive, mode=mode, site=site, offset=offset,
-        df_map=df_map, doc_stats=doc_stats, n_shards=n_shards,
-        excluded_doc_ids=excluded_doc_ids,
-    )
-    snip = snippet_udf(lemmatize_query(query), radius, mode=snippet_mode)
-    enriched = (
-        docs_text.select("doc_id", "text")
-        .join(F.broadcast(winners), "doc_id")
-        .select("doc_id", "score", snip(F.col("text")).alias("snippet"))
-    )
-    return (
-        doc_stats.select("doc_id", "url")
-        .join(F.broadcast(enriched), "doc_id")
-        .select("url", "doc_id", "score", "snippet")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _ranked(
+        spark, per_shard, k, offset, len(terms) if conjunctive else None
     )
 
 
@@ -1908,83 +1539,17 @@ def match_count_packed(
     excluded_doc_ids: list[int] | None = None,
 ) -> int:
     """A5 on the packed path (reference ApiService.java:104-113): the
-    total match count before pagination. Each shard counts its own
-    intersection (conjunctive) or posting union (disjunctive) — ids
-    only, no scoring, no sort — and the driver sums n_shards scalars.
-    `excluded_doc_ids`: tombstoned-but-not-compacted docs, dropped
-    from the count (same deny-list as search_packed)."""
-    lemmas = lemmatize_query(query)
-    if not lemmas:
-        return 0
-    terms = _resolve_terms(term_stats, n_docs, lemmas, max_rel_freq, df_map)
-    if not terms:
-        return 0
-    n_terms = len(terms)
-
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids else None
-    )
-
-    def _count(pdf: pd.DataFrame, allowed: np.ndarray | None) -> pd.DataFrame:
-        if allowed is not None and len(allowed) == 0:
-            return pd.DataFrame({"n_matched": [0]})
-        lists = [
-            _TermList(rows, n_docs, 1.0)
-            for _, rows in pdf.groupby("term", sort=False)
-        ]
-        if not lists:
-            return pd.DataFrame({"n_matched": [0]})
-        if conjunctive:
-            if len(lists) < n_terms:
-                return pd.DataFrame({"n_matched": [0]})
-            lists.sort(key=lambda t: t.n)
-            cand = lists[0].decode_all()[0]
-            if allowed is not None:
-                cand = _intersect_sorted(cand, allowed)
-            if exc is not None:
-                cand = _setdiff_sorted(cand, exc)
-            for t in lists[1:]:
-                if len(cand) == 0:
-                    break
-                _, present = t.lookup(cand)
-                cand = cand[present]
-        else:
-            cand = np.unique(
-                np.concatenate([t.decode_all()[0] for t in lists])
-            )
-            if allowed is not None:
-                cand = _intersect_sorted(cand, allowed)
-            if exc is not None:
-                cand = _setdiff_sorted(cand, exc)
-        return pd.DataFrame({"n_matched": [len(cand)]})
-
-    seg = term_pruned_segments(segments, terms)
-    if site is None:
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: _count(pdf, None), schema="n_matched long"
-        )
-    else:
-        if doc_stats is None:
-            raise ValueError("site filter needs doc_stats (doc_id, site)")
-        if n_shards is None:
-            n_shards = int(
-                segments.agg(F.max("shard")).collect()[0][0]
-            ) + 1
-        members = _site_members(doc_stats, site, n_shards)
-        per_shard = (
-            seg.groupby("shard")
-            .cogroup(members.groupby("shard"))
-            .applyInPandas(
-                lambda s, m: _count(
-                    s,
-                    np.sort(m["doc_id"].to_numpy(dtype=np.int64, copy=True)),
-                ),
-                schema="n_matched long",
-            )
-        )
-    row = per_shard.agg(F.sum("n_matched")).collect()[0][0]
-    return int(row or 0)
+    total match count before pagination — the trailers' n_matched of
+    one counting pass with an empty page (k=0). `excluded_doc_ids`:
+    tombstoned-but-not-compacted docs, dropped from the count (same
+    deny-list as search_packed)."""
+    # avgdl only shapes scores, and a k=0 page ranks nothing
+    return search_packed_fused(
+        spark, segments, term_stats, n_docs, 1.0, query, k=0,
+        conjunctive=conjunctive, max_rel_freq=max_rel_freq, df_map=df_map,
+        site=site, doc_stats=doc_stats, n_shards=n_shards,
+        excluded_doc_ids=excluded_doc_ids,
+    )[1]
 
 
 def facet_counts_packed(
@@ -2009,90 +1574,57 @@ def facet_counts_packed(
     limited to `top`.
 
     Distributed shape (the part that must survive 100 TB): each
-    shard's kernel computes its own match set (ids only — same
-    intersection/union as match_count_packed, no scoring, no sort)
-    and reduces it to (site_id, partial count) rows via the cogrouped
-    doc→site map — at most sites-per-shard rows leave a task, never
-    doc ids. A tiny groupBy(site_id) shuffle sums the partials
-    (map-side combine applies), the site dimension joins the names
-    back, and TakeOrderedAndProject keeps the top facets. The corpus
-    itself never moves.
+    shard's kernel computes its own match set (ids only — the same
+    intersection cascade / posting union the WAND kernel counts, no
+    scoring, no sort) and reduces it to (site_id, partial count) rows
+    via the cogrouped doc→site map — at most sites-per-shard rows
+    leave a task, never doc ids. A tiny groupBy(site_id) shuffle sums
+    the partials (map-side combine applies), the site dimension joins
+    the names back, and TakeOrderedAndProject keeps the top facets.
+    The corpus itself never moves.
 
     `site_map` / `site_dim`: pass the warm server's cached frames
     (site_map_frame + its distinct (site_id, site) dim) to skip the
     per-query derivation; both derive from `doc_stats` when omitted.
     `excluded_doc_ids`: tombstone deny-list, same as search_packed."""
-    out_schema = "site string, n long"
     from ..operators.search import empty_df
 
-    lemmas = lemmatize_query(query)
-    if not lemmas:
-        return empty_df(spark, out_schema)
-    terms = _resolve_terms(term_stats, n_docs, lemmas, max_rel_freq, df_map)
+    terms = _resolve_terms(
+        term_stats, n_docs, lemmatize_query(query), max_rel_freq, df_map
+    )
     if not terms:
-        return empty_df(spark, out_schema)
+        return empty_df(spark, "site string, n long")
     n_terms = len(terms)
-
-    if n_shards is None:
-        n_shards = int(segments.agg(F.max("shard")).collect()[0][0]) + 1
     if site_map is None:
-        site_map = site_map_frame(doc_stats, n_shards)
+        site_map = site_map_frame(doc_stats, _n_shards(segments, n_shards))
     if site_dim is None:
         site_dim = doc_stats.select(
             F.xxhash64("site").alias("site_id"), "site"
         ).distinct()
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids else None
-    )
+    exc = _deny_list(excluded_doc_ids)
 
-    def _kernel(pdf: pd.DataFrame, map_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"site_id": np.empty(0, np.int64), "n": np.empty(0, np.int64)}
-        )
+    def kernel(pdf: pd.DataFrame, map_pdf: pd.DataFrame) -> pd.DataFrame:
         lists = [
             _TermList(rows, n_docs, 1.0)
             for _, rows in pdf.groupby("term", sort=False)
         ]
-        if not lists:
-            return empty
-        if conjunctive:
-            if len(lists) < n_terms:
-                return empty
-            lists.sort(key=lambda t: t.n)
-            cand = lists[0].decode_all()[0]
-            if exc is not None:
-                cand = _setdiff_sorted(cand, exc)
-            for t in lists[1:]:
-                if len(cand) == 0:
-                    break
-                _, present = t.lookup(cand)
-                cand = cand[present]
+        if not lists or (conjunctive and len(lists) < n_terms):
+            cand = _NO_IDS
+        elif conjunctive:
+            cand = _conjunction(lists, None, exc)[0]
         else:
-            cand = np.unique(
-                np.concatenate([t.decode_all()[0] for t in lists])
-            )
-            if exc is not None:
-                cand = _setdiff_sorted(cand, exc)
-        if len(cand) == 0:
-            return empty
-        ids = map_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-        sids = map_pdf["site_id"].to_numpy(dtype=np.int64, copy=True)
-        order = np.argsort(ids)
-        sites = _site_of(cand, ids[order], sids[order])
-        uniq, counts = np.unique(sites, return_counts=True)
+            cand = _filter(_disjunctive_candidates(lists, 0.0), None, exc)
+        uniq, counts = np.unique(
+            _site_of(cand, *_site_map_of(map_pdf)), return_counts=True
+        )
         return pd.DataFrame(
-            {"site_id": uniq, "n": counts.astype(np.int64)}
+            {"site_id": uniq.astype(np.int64), "n": counts.astype(np.int64)}
         )
 
-    seg = term_pruned_segments(segments, terms)
-    partials = (
-        seg.groupby("shard")
-        .cogroup(site_map.groupby("shard"))
-        .applyInPandas(_kernel, schema="site_id long, n long")
-    )
     return (
-        partials.groupBy("site_id")
+        _shard_frame(segments, terms, kernel, "site_id long, n long",
+                     side=site_map)
+        .groupBy("site_id")
         .agg(F.sum("n").alias("n"))
         .join(site_dim, "site_id")
         .select("site", "n")

@@ -342,14 +342,10 @@ def _is_pure_disjunction(ast: Node) -> bool:
 
 
 def _bool_eval(
-    pdf: pd.DataFrame,
-    ast: Node,
-    n_docs: int,
-    avgdl: float,
-    allowed: np.ndarray | None,
+    lists: dict, ast: Node, allowed: np.ndarray | None,
     excluded: np.ndarray | None,
-):
-    """Shared per-shard evaluation -> (cand, scores, n_hit).
+) -> np.ndarray:
+    """One shard's match set for the AST (sorted doc ids).
 
     Set algebra over the lazy _TermList API: AND drives from the
     smallest positive child and probes remaining TERM children via
@@ -360,16 +356,8 @@ def _bool_eval(
     global); ``excluded`` is the tombstone deny-list (both sorted
     unique int64)."""
     from ..index.wand import (
-        _intersect_sorted,
-        _setdiff_sorted,
-        _TermList,
+        _NO_IDS, _filter, _intersect_sorted, _setdiff_sorted,
     )
-
-    lists = {
-        term: _TermList(rows, n_docs, avgdl)
-        for term, rows in pdf.groupby("term", sort=False)
-    }
-    empty = np.empty(0, dtype=np.int64)
 
     def est(n: Node) -> int:
         """Cheap upper-ish bound used only to order AND children."""
@@ -387,9 +375,9 @@ def _bool_eval(
         kind = n[0]
         if kind == "term":
             t = lists.get(n[1]) if n[1] is not None else None
-            return t.decode_all()[0] if t is not None else empty
+            return t.decode_all()[0] if t is not None else _NO_IDS
         if kind == "or":
-            acc = empty
+            acc = _NO_IDS
             for c in n[1]:
                 acc = np.union1d(acc, eval_set(c))
             return acc
@@ -405,7 +393,7 @@ def _bool_eval(
                 if c[0] == "term":
                     t = lists.get(c[1]) if c[1] is not None else None
                     if t is None:
-                        return empty
+                        return _NO_IDS
                     _, present = t.lookup(cand)
                     cand = cand[present]
                 else:
@@ -417,25 +405,10 @@ def _bool_eval(
             return cand
         raise ValueError("NOT outside AND survived parser validation")
 
-    cand = eval_set(ast)
-    if allowed is not None and len(cand):
-        cand = _intersect_sorted(cand, allowed)
-    if excluded is not None and len(cand):
-        cand = _setdiff_sorted(cand, excluded)
-    scoring = positive_terms(ast)
-    scores = np.zeros(len(cand), dtype=np.float64)
-    n_hit = np.zeros(len(cand), dtype=np.int64)
-    for t in scoring:
-        tl = lists.get(t)
-        if tl is None:
-            continue
-        sc, present = tl.lookup(cand)
-        scores += sc
-        n_hit += present.astype(np.int64)
-    return cand, scores, n_hit
+    return _filter(eval_set(ast), allowed, excluded)
 
 
-def bool_shard_topk(
+def bool_shard(
     pdf: pd.DataFrame,
     ast: Node,
     n_docs: int,
@@ -443,14 +416,18 @@ def bool_shard_topk(
     k: int,
     allowed: np.ndarray | None = None,
     excluded: np.ndarray | None = None,
+    count: bool = False,
 ) -> pd.DataFrame:
-    """One shard's segments (all leaf terms) -> shard-local top-k of
-    docs matching the AST, scored over the positive terms (see
-    _bool_eval for the set-algebra and filter semantics)."""
-    from ..index.wand import _empty_topk, _topk_frame, wand_shard_topk
+    """One shard's segments (all leaf terms) -> the shard-local top-k
+    of docs matching the AST, scored over the positive terms, plus the
+    trailer row of index/wand's kernel contract (n_matched filled when
+    ``count``: the boolean evaluation materializes the full match set
+    anyway, so the count is free). See _bool_eval for the set algebra
+    and filter semantics."""
+    from ..index.wand import (
+        _select, _TermList, _trailer, wand_shard, with_trailer,
+    )
 
-    if allowed is not None and len(allowed) == 0:
-        return _empty_topk(k)
     # pure disjunction of terms (or a single term) IS the WAND
     # disjunctive query — route it through the block-max-pruned kernel
     # instead of decoding every list wholesale for the union
@@ -458,59 +435,64 @@ def bool_shard_topk(
     # sum over present terms)
     if _is_pure_disjunction(ast):
         n_terms = 1 if ast[0] == "term" else len(ast[1])
-        return wand_shard_topk(
+        return wand_shard(
             pdf, n_docs, avgdl, k, conjunctive=False, n_terms=n_terms,
-            allowed=allowed, excluded=excluded,
+            allowed=allowed, excluded=excluded, count=count,
         )
-    cand, scores, n_hit = _bool_eval(
-        pdf, ast, n_docs, avgdl, allowed, excluded
+    lists = {} if allowed is not None and len(allowed) == 0 else {
+        term: _TermList(rows, n_docs, avgdl)
+        for term, rows in pdf.groupby("term", sort=False)
+    }
+    cand = _bool_eval(lists, ast, allowed, excluded)
+    scores = np.zeros(len(cand), dtype=np.float64)
+    n_hit = np.zeros(len(cand), dtype=np.int64)
+    for t in positive_terms(ast):
+        tl = lists.get(t)
+        if tl is None:
+            continue
+        sc, present = tl.lookup(cand)
+        scores += sc
+        n_hit += present
+    return with_trailer(
+        _select(cand, scores, n_hit, k),
+        _trailer(list(lists.values()), len(cand) if count else 0,
+                 len(cand), len(cand)),
     )
-    if len(cand) == 0:
-        return _empty_topk(k)
-    return _topk_frame(cand, scores, n_hit, k)
 
 
-def bool_shard_topk_count(
-    pdf: pd.DataFrame,
-    ast: Node,
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    allowed: np.ndarray | None = None,
-    excluded: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Fused shard kernel: top-k rows PLUS a count sentinel row
-    (n_hit = -1, n_matched = this shard's pre-pagination match count)
-    in ONE pass — the boolean evaluation materializes the full
-    candidate set anyway, so the count is free (same serving-path
-    contract as index/wand.wand_shard_topk_count)."""
-    from ..index.wand import _empty_topk, _topk_frame, wand_shard_topk_count
-
-    def with_count(frame: pd.DataFrame, n: int) -> pd.DataFrame:
-        sent = pd.DataFrame(
-            {
-                "doc_id": np.array([0], np.int64),
-                "score": np.array([0.0]),
-                "n_hit": np.array([-1], np.int32),
-                "n_matched": np.array([n], np.int64),
-            }
-        )
-        return pd.concat([frame, sent], ignore_index=True)
-
-    if allowed is not None and len(allowed) == 0:
-        return with_count(_empty_topk(k), 0)
-    if _is_pure_disjunction(ast):
-        n_terms = 1 if ast[0] == "term" else len(ast[1])
-        return wand_shard_topk_count(
-            pdf, n_docs, avgdl, k, conjunctive=False, n_terms=n_terms,
-            allowed=allowed, excluded=excluded,
-        )
-    cand, scores, n_hit = _bool_eval(
-        pdf, ast, n_docs, avgdl, allowed, excluded
+def _bool_frame(
+    segments: DataFrame, n_docs: int, avgdl: float, query: str | Node,
+    k: int, offset: int, lemmatize: bool, excluded_doc_ids, site,
+    doc_stats, n_shards, count: bool,
+) -> DataFrame | None:
+    """Per-shard bool_shard output (top offset+k) over the shared
+    sharded driver (index/wand._shard_frame); None when no leaf term
+    survives analysis."""
+    from ..index.wand import (
+        KERNEL_SCHEMA, _allowed_of, _deny_list, _shard_frame, _site_side,
     )
-    if len(cand) == 0:
-        return with_count(_empty_topk(k), 0)
-    return with_count(_topk_frame(cand, scores, n_hit, k), len(cand))
+
+    if k < 0 or offset < 0:
+        raise ValueError(
+            f"k and offset must be >= 0 (got k={k}, offset={offset})"
+        )
+    ast = parse_bool_query(query) if isinstance(query, str) else query
+    if lemmatize:
+        ast = normalize(lemmatize_ast(ast))
+    leaves = leaf_terms(ast)
+    if not leaves:
+        return None
+    exc = _deny_list(excluded_doc_ids)
+    return _shard_frame(
+        segments, leaves,
+        lambda seg_pdf, mem_pdf: bool_shard(
+            seg_pdf, ast, n_docs, avgdl, offset + k,
+            allowed=_allowed_of(mem_pdf),
+            excluded=exc, count=count,
+        ),
+        KERNEL_SCHEMA,
+        side=_site_side(segments, site, doc_stats, n_shards),
+    )
 
 
 def bool_search_packed(
@@ -537,72 +519,15 @@ def bool_search_packed(
     are cogrouped into each shard's kernel (only the member list
     moves — the corpus never shuffles); corpus statistics stay
     global, same contract as every filtered-retrieval path."""
-    from ..index.wand import (
-        TOPK_OUT_SCHEMA, _site_members, term_pruned_segments,
-    )
+    from ..index.wand import _ranked
 
-    if k < 0 or offset < 0:
-        raise ValueError(
-            f"k and offset must be >= 0 (got k={k}, offset={offset})"
-        )
-    ast = parse_bool_query(query) if isinstance(query, str) else query
-    if lemmatize:
-        ast = normalize(lemmatize_ast(ast))
-    leaves = leaf_terms(ast)
-    if not leaves:
+    per_shard = _bool_frame(
+        segments, n_docs, avgdl, query, k, offset, lemmatize,
+        excluded_doc_ids, site, doc_stats, n_shards, count=False,
+    )
+    if per_shard is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids
-        else None
-    )
-    k_eff = offset + k
-    seg = term_pruned_segments(segments, leaves)
-    if site is None:
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: bool_shard_topk(
-                pdf, ast, n_docs, avgdl, k_eff, excluded=exc
-            ),
-            schema=TOPK_OUT_SCHEMA,
-        )
-    else:
-        if doc_stats is None:
-            raise ValueError(
-                "site filter on the packed boolean path needs "
-                "doc_stats (doc_id, site)"
-            )
-        if n_shards is None:
-            n_shards = int(
-                segments.agg(F.max("shard")).collect()[0][0]
-            ) + 1
-        members = _site_members(doc_stats, site, n_shards)
-
-        def _kernel(seg_pdf: pd.DataFrame, mem_pdf: pd.DataFrame):
-            allowed = np.sort(
-                mem_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-            )
-            return bool_shard_topk(
-                seg_pdf, ast, n_docs, avgdl, k_eff,
-                allowed=allowed, excluded=exc,
-            )
-
-        per_shard = (
-            seg.groupby("shard")
-            .cogroup(members.groupby("shard"))
-            .applyInPandas(_kernel, schema=TOPK_OUT_SCHEMA)
-        )
-    out = (
-        per_shard.orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k_eff)
-        .select("doc_id", "score")
-    )
-    if offset:
-        rows = out.collect()[offset:k_eff]
-        return spark.createDataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in rows],
-            "doc_id long, score double",
-        )
-    return out
+    return _ranked(spark, per_shard, k, offset)
 
 
 def bool_search_packed_fused(
@@ -623,65 +548,13 @@ def bool_search_packed_fused(
     pre-pagination match count -> ([(doc_id, score)] offset-sliced and
     globally ranked, n_matched) — the warm server's boolean hot path,
     same contract as index/wand.search_packed_fused."""
-    from ..index.wand import (
-        FUSED_OUT_SCHEMA, _site_members, term_pruned_segments,
-    )
+    from ..index.wand import _merge
 
-    if k < 0 or offset < 0:
-        raise ValueError(
-            f"k and offset must be >= 0 (got k={k}, offset={offset})"
-        )
-    ast = parse_bool_query(query) if isinstance(query, str) else query
-    if lemmatize:
-        ast = normalize(lemmatize_ast(ast))
-    leaves = leaf_terms(ast)
-    if not leaves:
+    per_shard = _bool_frame(
+        segments, n_docs, avgdl, query, k, offset, lemmatize,
+        excluded_doc_ids, site, doc_stats, n_shards, count=True,
+    )
+    if per_shard is None:
         return [], 0
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids
-        else None
-    )
-    k_eff = offset + k
-    seg = term_pruned_segments(segments, leaves)
-    if site is None:
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: bool_shard_topk_count(
-                pdf, ast, n_docs, avgdl, k_eff, excluded=exc
-            ),
-            schema=FUSED_OUT_SCHEMA,
-        )
-    else:
-        if doc_stats is None:
-            raise ValueError(
-                "site filter on the packed boolean path needs "
-                "doc_stats (doc_id, site)"
-            )
-        if n_shards is None:
-            n_shards = int(
-                segments.agg(F.max("shard")).collect()[0][0]
-            ) + 1
-        members = _site_members(doc_stats, site, n_shards)
-
-        def _kernel(seg_pdf: pd.DataFrame, mem_pdf: pd.DataFrame):
-            allowed = np.sort(
-                mem_pdf["doc_id"].to_numpy(dtype=np.int64, copy=True)
-            )
-            return bool_shard_topk_count(
-                seg_pdf, ast, n_docs, avgdl, k_eff,
-                allowed=allowed, excluded=exc,
-            )
-
-        per_shard = (
-            seg.groupby("shard")
-            .cogroup(members.groupby("shard"))
-            .applyInPandas(_kernel, schema=FUSED_OUT_SCHEMA)
-        )
-    rows = per_shard.collect()
-    count = sum(r["n_matched"] for r in rows if r["n_hit"] == -1)
-    hits = [r for r in rows if r["n_hit"] != -1]
-    hits.sort(key=lambda r: (-r["score"], r["doc_id"]))
-    return (
-        [(r["doc_id"], r["score"]) for r in hits[offset:k_eff]],
-        int(count),
-    )
+    hits, count = _merge(per_shard.collect(), k, offset)
+    return [(r["doc_id"], r["score"]) for r in hits], count

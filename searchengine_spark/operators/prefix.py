@@ -61,34 +61,15 @@ def prefix_search_packed(
     expansion, then the disjunctive block-max WAND kernel over the
     expanded terms (one applyInPandas per doc-space shard, global
     TakeOrderedAndProject — index/wand.search_packed's plan shape)."""
-    import numpy as np
-
-    from ..index.wand import (
-        TOPK_OUT_SCHEMA, term_pruned_segments, wand_shard_topk,
-    )
+    from ..index.wand import _ranked, _wand_frame
 
     terms = expand_prefix(term_stats, prefix, max_expansions)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    exc = (
-        np.unique(np.asarray(excluded_doc_ids, dtype=np.int64))
-        if excluded_doc_ids
-        else None
-    )
-    n_terms = len(terms)
-    seg = term_pruned_segments(segments, terms)
-    per_shard = seg.groupBy("shard").applyInPandas(
-        lambda pdf: wand_shard_topk(
-            pdf, n_docs, avgdl, k, conjunctive=False, n_terms=n_terms,
-            excluded=exc,
-        ),
-        schema=TOPK_OUT_SCHEMA,
-    )
-    return (
-        per_shard.orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _ranked(spark, _wand_frame(
+        segments, terms, n_docs, avgdl, k, conjunctive=False,
+        excluded_doc_ids=excluded_doc_ids,
+    ), k)
 
 
 def prefix_search(

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .index.refresh import _doc_meta_resolved, recover
 from .index.segments import write_delta_run, write_tombstones
-from .index.wand import search_packed_fused, search_packed_metrics
+from .index.wand import search_packed_fused
 from .operators.postings import prepare_docs_counts, read_index
 from .operators.search import corpus_constants
 
@@ -323,8 +323,9 @@ class SearchService:
 
         ONE kernel pass per request (search_packed_fused): each
         shard's WAND kernel returns its top page AND its match count
-        in the same applyInPandas call — the two-kernel formulation
-        decoded and intersected every posting list twice.
+        in the same applyInPandas call. Cursor pages (`after`) read
+        the cursor-independent count from a per-generation cache and
+        ask the kernel for it only on a miss.
 
         `blend=w` reranks by `bm25 + w·authority` (authority = static
         PageRank relative to uniform mass — see `_blend_hits`) over an
@@ -421,88 +422,57 @@ class SearchService:
             )
             boosts = {**syn_boosts, **(boosts or {})}
         k_fetch = limit if blend is None else oversample * (offset + limit)
+        # the match count is cursor-INDEPENDENT (same total for every
+        # page of one query), so it is cached per (query, site,
+        # conjunctive) and index generation (_open_segments clears the
+        # cache on any write): a cursor page asks the kernel for it
+        # only on a miss. Only counts over the verbatim query seed it —
+        # corrections/synonyms rewrite q_lemmas (a cursor page cannot
+        # combine with them) and a collapse count is diversity-capped
+        ckey = (query, site, conjunctive)
+        count = (
+            self._match_count_cache.get(ckey)
+            if after is not None and collapse is None else None
+        )
+        hits, fused_count = search_packed_fused(
+            self.spark, self.segments, self.term_stats, self.n_docs,
+            self.avgdl, query, lemmas=q_lemmas, k=k_fetch,
+            offset=offset if blend is None else 0, site=site,
+            mode=mode, conjunctive=conjunctive, df_map=self.df_map,
+            doc_stats=self.serve_meta, n_shards=self.n_shards,
+            excluded_doc_ids=self.tombstoned,
+            collapse_n=collapse,
+            site_map=(
+                self._get_site_map() if collapse is not None else None
+            ),
+            boosts=boosts, field_weights=field_weights,
+            after=(
+                (float(after[0]), int(after[1]))
+                if after is not None else None
+            ),
+            after_sites=after_sites,
+            return_sites=collapse is not None,
+            _count=count is None,
+        )
+        if count is None:
+            count = fused_count
         site_counts = None
-        if after is not None and collapse is None:
-            # cursor page (search_after, item 31): the ranked page
-            # comes from the cursor-aware WAND kernel; the count is
-            # cursor-INDEPENDENT (same total as page 1), so deep pages
-            # pay one top-k kernel + one count kernel — only page-1
-            # requests get the fused single-pass
-            from .index.wand import match_count_packed, search_packed
-
-            cur = (float(after[0]), int(after[1]))
-            rows = search_packed(
-                self.spark, self.segments, self.term_stats, self.n_docs,
-                self.avgdl, query, k=limit, site=site, mode=mode,
-                conjunctive=conjunctive, df_map=self.df_map,
-                doc_stats=self.serve_meta, n_shards=self.n_shards,
-                excluded_doc_ids=self.tombstoned, boosts=boosts,
-                after=cur, field_weights=field_weights,
-            ).collect()
-            hits = [(r["doc_id"], r["score"]) for r in rows]
-            # the match count is cursor-INDEPENDENT (same total for
-            # every page of one query), so it is cached per
-            # (query, site, conjunctive) and index generation
-            # (_open_segments clears the cache on any write) — a
-            # page-walk pays the count kernel once, page >= 2 runs
-            # one kernel (VERDICT r4 #6)
-            ckey = (query, site, conjunctive)
-            count = self._match_count_cache.get(ckey)
-            if count is None:
-                count = match_count_packed(
-                    self.spark, self.segments, self.term_stats,
-                    self.n_docs, query, conjunctive=conjunctive,
-                    site=site, df_map=self.df_map,
-                    doc_stats=self.serve_meta, n_shards=self.n_shards,
-                    excluded_doc_ids=self.tombstoned,
+        if collapse is not None:
+            # cumulative per-site served counts — the client passes
+            # these back (with the last row's cursor) to page the
+            # collapsed ranking exactly (VERDICT r4 #8)
+            site_counts = dict(after_sites or {})
+            for _, _, sid in hits:
+                site_counts[int(sid)] = site_counts.get(int(sid), 0) + 1
+            hits = [(d, sc) for d, sc, _ in hits]
+        elif not corrections and not synonyms and (
+            ckey not in self._match_count_cache
+        ):
+            if len(self._match_count_cache) >= self._CACHE_MAX:
+                self._match_count_cache.pop(
+                    next(iter(self._match_count_cache))
                 )
-                if len(self._match_count_cache) >= self._CACHE_MAX:
-                    self._match_count_cache.pop(
-                        next(iter(self._match_count_cache))
-                    )
-                self._match_count_cache[ckey] = count
-        else:
-            hits, count = search_packed_fused(
-                self.spark, self.segments, self.term_stats, self.n_docs,
-                self.avgdl, query, lemmas=q_lemmas, k=k_fetch,
-                offset=offset if blend is None else 0, site=site,
-                mode=mode, conjunctive=conjunctive, df_map=self.df_map,
-                doc_stats=self.serve_meta, n_shards=self.n_shards,
-                excluded_doc_ids=self.tombstoned,
-                collapse_n=collapse,
-                site_map=(
-                    self._get_site_map() if collapse is not None else None
-                ),
-                boosts=boosts, field_weights=field_weights,
-                after=(
-                    (float(after[0]), int(after[1]))
-                    if after is not None else None
-                ),
-                after_sites=after_sites,
-                return_sites=collapse is not None,
-            )
-            if collapse is not None:
-                # cumulative per-site served counts — the client passes
-                # these back (with the last row's cursor) to page the
-                # collapsed ranking exactly (VERDICT r4 #8)
-                site_counts = dict(after_sites or {})
-                for _, _, sid in hits:
-                    site_counts[int(sid)] = site_counts.get(int(sid), 0) + 1
-                hits = [(d, sc) for d, sc, _ in hits]
-            # seed the cursor-count cache from the fused page-1 count
-            # so a page-walk's page >= 2 runs ONE kernel (top-k only).
-            # Only when the fused count is provably the same number the
-            # cursor path would compute: corrections/synonyms rewrite
-            # q_lemmas (the cursor count re-derives lemmas from the raw
-            # query) and a collapse count is diversity-capped
-            if not corrections and not synonyms and collapse is None:
-                ckey = (query, site, conjunctive)
-                if ckey not in self._match_count_cache:
-                    if len(self._match_count_cache) >= self._CACHE_MAX:
-                        self._match_count_cache.pop(
-                            next(iter(self._match_count_cache))
-                        )
-                    self._match_count_cache[ckey] = count
+            self._match_count_cache[ckey] = count
         parts = None
         if blend is not None:
             reranked = self._blend_hits(hits, blend)[offset:offset + limit]
@@ -652,18 +622,20 @@ class SearchService:
         mode: str = "bm25",
         field_weights: dict | None = None,
     ) -> dict:
-        """Query-execution observability: what the WAND kernels would
-        do for this request — resolved terms (post stop-filter and
-        high-DF pruning) with their document frequencies, and the
-        pruning counters summed over shards (index/wand.py
-        wand_shard_metrics): postings touched, compressed blocks total
-        vs actually decoded (the gap is block-max pruning + lazy
+        """Query-execution observability: what the WAND kernels do for
+        this request — resolved terms (post stop-filter and high-DF
+        pruning) with their document frequencies, and the trailer
+        counters (index/wand.py module docstring) of one top-k kernel
+        pass summed over shards: postings touched, compressed blocks
+        total vs actually decoded (the gap is block-max pruning + lazy
         lookup skips), candidate/scored doc counts, and the largest
         per-shard θ bound. The per-partition metrics the north rule
         requires for the BUILD (index/manifest.py), extended to the
-        query side. 'term^w' boost syntax is honored — explain
-        describes the same boosted kernels search would run."""
-        from .index.wand import _resolve_terms
+        query side. 'term^w' boost syntax is honored — explain runs the
+        same boosted kernels search would run."""
+        from .index.wand import (
+            _resolve_fweights, _resolve_terms, _wand_frame,
+        )
         from .operators.search import lemmatize_query, parse_boosted_query
 
         boosts = None
@@ -675,6 +647,7 @@ class SearchService:
                 # instead of a ValueError inside the executor pandas
                 # UDF (opaque PythonException)
                 raise ValueError("term^w boosts need bm25/bm25f mode")
+        fweights = _resolve_fweights(mode, field_weights)
         lemmas = lemmatize_query(query)
         terms = _resolve_terms(
             self.term_stats, self.n_docs, lemmas, 0.95, self.df_map
@@ -695,13 +668,12 @@ class SearchService:
         }
         if not terms:
             return out
-        rows = search_packed_metrics(
-            self.spark, self.segments, self.term_stats, self.n_docs,
-            self.avgdl, query, k=limit, conjunctive=conjunctive,
-            mode=mode, site=site, df_map=self.df_map, boosts=boosts,
-            doc_stats=self.serve_meta, n_shards=self.n_shards,
-            excluded_doc_ids=self.tombstoned, field_weights=field_weights,
-        ).collect()
+        rows = _wand_frame(
+            self.segments, terms, self.n_docs, self.avgdl, limit,
+            conjunctive, mode, site=site, doc_stats=self.serve_meta,
+            n_shards=self.n_shards, excluded_doc_ids=self.tombstoned,
+            boosts=boosts, fweights=fweights,
+        ).filter("is_trailer").collect()
         out["shards"] = len(rows)
         for f in ("n_postings", "n_blocks", "n_blocks_decoded",
                   "n_candidates", "n_scored"):
@@ -731,6 +703,7 @@ class SearchService:
         refresh_positional() to appear."""
         from .functions.textproc import tokenize_lemmatize
         from .index.positional import (
+            merge_phrase_rows,
             phrase_search_packed_terms,
             phrase_search_packed_topk_count,
         )
@@ -741,27 +714,24 @@ class SearchService:
         self._ensure_positional()
         if not getattr(self, "_pos_stale", False):
             # hot path: ONE kernel pass per shard returns the shard's
-            # top-k rows AND a count sentinel (doc_id = -1) — the
-            # fused wand_shard_topk_count shape for phrase retrieval.
-            # Exact because an in-sync possegs references only
-            # servable-or-tombstoned docs, and tombstones are
-            # deny-listed inside the kernel; the stale snapshot a
-            # crash-recovery discard can leave (_STALE marker) routes
-            # through the exact semi-join path below instead.
-            merged = phrase_search_packed_topk_count(
-                self.spark, self.pos_segments, phr, limit,
-                excluded_doc_ids=self.tombstoned or None,
-            ).collect()
-            count = sum(
-                r["phrase_tf"] for r in merged if r["doc_id"] == -1
+            # top-k rows AND its match count (the trailer row of the
+            # shared kernel contract). Exact because an in-sync possegs
+            # references only servable-or-tombstoned docs, and
+            # tombstones are deny-listed inside the kernel; the stale
+            # snapshot a crash-recovery discard can leave (_STALE
+            # marker) routes through the exact semi-join path below
+            # instead.
+            page, count = merge_phrase_rows(
+                phrase_search_packed_topk_count(
+                    self.spark, self.pos_segments, phr, limit,
+                    excluded_doc_ids=self.tombstoned or None,
+                ).collect(),
+                limit,
             )
-            page = sorted(
-                ((r["doc_id"], r["phrase_tf"]) for r in merged
-                 if r["doc_id"] != -1),
-                key=lambda t: (-t[1], t[0]),
-            )[:limit]
+            if not page:
+                return {"result": True, "count": count, "data": []}
             top = self.spark.createDataFrame(
-                page or [(-1, 0)], "doc_id long, phrase_tf long"
+                page, "doc_id long, phrase_tf long"
             )
         else:
             hits = phrase_search_packed_terms(
@@ -1014,12 +984,9 @@ class SearchService:
         # a rebuild is by construction in sync with the corpus — drop
         # any crash-recovery staleness marker the overwrite may have
         # preserved (dynamic partitionOverwriteMode keeps root files)
-        import os
+        from .index.manifest import fs_delete
 
-        try:
-            os.remove(os.path.join(self.base, "possegs", "_STALE"))
-        except OSError:
-            pass
+        fs_delete(self.spark, f"{self.base}/possegs/_STALE")
         self._pos_stale = False
 
     # -- /api/statistics -----------------------------------------------------

@@ -97,9 +97,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from searchengine_spark.index.segments import _pack_group, build_segments
-from searchengine_spark.index.wand import _TermList, search_packed, wand_shard_topk
+from searchengine_spark.index.wand import _TermList, search_packed
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
+
+from .kernels import wand_shard_topk
 from searchengine_spark.operators.fielded import FIELD_B_BODY, FIELD_B_TITLE
 
 

@@ -14,7 +14,9 @@ from searchengine_spark.index.segments import (
     build_segments,
     write_segments,
 )
-from searchengine_spark.index.wand import search_packed, wand_shard_topk
+from searchengine_spark.index.wand import search_packed
+
+from .kernels import wand_shard_topk
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
 
@@ -188,17 +190,17 @@ def test_boosted_packed_equals_relational(
 
 
 def test_metrics_kernel_boost_scales_theta():
-    """wand_shard_metrics honors boosts: a single-term query's θ-seed
+    """The kernel trailer honors boosts: a single-term query's θ-seed
     scales linearly with the boost (scores AND block maxima scale), so
     explain() describes the boosted kernels search actually runs."""
-    from searchengine_spark.index.wand import wand_shard_metrics
+    from searchengine_spark.index.wand import wand_shard
 
     rng = np.random.RandomState(9)
     g = _mk_group(rng, "t0", 400, 400)
     pdf = _pack_group(g, 400, 80.0, 0)
-    base = wand_shard_metrics(pdf, 400, 80.0, 5, False, 1)
-    boosted = wand_shard_metrics(pdf, 400, 80.0, 5, False, 1,
-                                 boosts={"t0": 3.0})
+    base = wand_shard(pdf, 400, 80.0, 5, False, 1)
+    boosted = wand_shard(pdf, 400, 80.0, 5, False, 1, boosts={"t0": 3.0})
+    base, boosted = base[base["is_trailer"]], boosted[boosted["is_trailer"]]
     t0, t1 = float(base["theta"].iloc[0]), float(boosted["theta"].iloc[0])
     assert t0 > 0
     assert t1 == pytest.approx(3.0 * t0, rel=1e-12)

@@ -24,11 +24,12 @@ from searchengine_spark.index.wand import (
     search_packed,
     search_packed_fused,
     site_map_frame,
-    wand_shard_topk,
 )
 from searchengine_spark.index.segments import build_segments, write_segments
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
+
+from .kernels import wand_shard_topk
 
 # ---------------------------------------------------------------------------
 # kernel-level (no Spark session — fast)

@@ -146,20 +146,19 @@ def test_merge_runs_spark(spark, index, segments, constants):
     assert merged.select("run_id").distinct().collect()[0][0] == 1
 
 
-def test_packed_full_response_and_match_count(spark, index, segments, constants):
-    """The complete reference response (top-k + url + snippet) and the
-    pre-pagination match count, both served from the packed index and
-    equal to the relational path."""
-    from searchengine_spark.index.wand import (
-        match_count_packed,
-        search_packed_with_snippets,
-    )
+def test_packed_full_response_and_match_count(
+    spark, index, segments, constants, tmp_path_factory
+):
+    """The complete reference response (top-k + url + snippet), served
+    by the warm service over the packed index, and the pre-pagination
+    match count, both equal to the relational path."""
+    from searchengine_spark.index.wand import match_count_packed
     from searchengine_spark.operators.postings import prepare_docs
     from searchengine_spark.operators.search import (
         match_count,
         search_with_snippets,
     )
-
+    from searchengine_spark.service import SearchService
     from searchengine_spark.sources.corpus import corpus_df
 
     n, avgdl = constants
@@ -167,10 +166,16 @@ def test_packed_full_response_and_match_count(spark, index, segments, constants)
         "doc_id", "text"
     )
     q = "быстрый поиск"
-    got = search_packed_with_snippets(
-        spark, segments, index.term_stats, index.doc_stats, docs_text,
-        n, avgdl, q, k=10,
-    ).collect()
+    base = str(tmp_path_factory.mktemp("snipsvc") / "index")
+    P.write_index(index, f"{base}/idx")
+    write_segments(
+        build_segments(index, n, avgdl, n_shards=4), f"{base}/segments"
+    )
+    svc = SearchService(spark, base, docs_text=docs_text)
+    try:
+        got = svc.search(q, limit=10, snippets=True)["data"]
+    finally:
+        svc.close()
     want = search_with_snippets(
         spark, index, docs_text, q, k=10, constants=constants
     ).collect()
@@ -178,7 +183,7 @@ def test_packed_full_response_and_match_count(spark, index, segments, constants)
         (r["doc_id"], r["url"], r["snippet"]) for r in want
     ]
     for g, w in zip(got, want):
-        assert g["score"] == pytest.approx(w["score"], rel=1e-9)
+        assert g["relevance"] == pytest.approx(w["score"], rel=1e-9)
 
     # match counts: packed ≡ relational, with and without site filter
     assert match_count_packed(
@@ -205,9 +210,10 @@ def test_fused_count_topk_equals_two_kernel(
     mode, conj,
 ):
     """The one-pass count+topk kernel (search_packed_fused — the warm
-    server's hot path) is result-identical to the two-kernel
-    formulation (search_packed + match_count_packed) on the FULL
-    reference query set."""
+    server's hot path) is result-identical to the top-k route
+    (search_packed) and to the k=0 count (match_count_packed) on the
+    FULL reference query set; conjunctive counts also equal the
+    relational match_count."""
     from searchengine_spark.index.wand import (
         match_count_packed,
         search_packed_fused,
@@ -231,3 +237,7 @@ def test_fused_count_topk_equals_two_kernel(
         spark, segments, index.term_stats, n, query, conjunctive=conj,
         site=site, doc_stats=index.doc_stats, n_shards=4,
     )
+    if conj and mode == "bm25":
+        assert count == S.match_count(
+            spark, index, query, site=site, constants=constants
+        )

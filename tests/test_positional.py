@@ -284,11 +284,12 @@ def test_unpack_repack_positional_roundtrip(spark, prepared, pos_segments):
 def test_fused_topk_count_kernel(spark, prepared, pos_segments, k,
                                  n_excluded):
     """phrase_search_packed_topk_count (the one-pass serve kernel) vs
-    the plain phrase frame: Σ sentinel counts = the exact match total
-    after the deny-list, the non-sentinel rows are a superset of the
-    global top-k (each shard contributes ITS top-k), and the
-    driver-side merge reproduces the global page exactly."""
+    the plain phrase frame: Σ trailer n_matched = the exact match total
+    after the deny-list, the hit rows are a superset of the global
+    top-k (each shard contributes ITS top-k), and the driver-side
+    merge reproduces the global page exactly."""
     from searchengine_spark.index.positional import (
+        merge_phrase_rows,
         phrase_search_packed_topk_count,
     )
 
@@ -304,18 +305,48 @@ def test_fused_topk_count_kernel(spark, prepared, pos_segments, k,
         spark, pos_segments, phrase, k,
         excluded_doc_ids=excluded or None,
     ).collect()
-    sentinels = [r for r in rows if r["doc_id"] == -1]
-    got_count = sum(r["phrase_tf"] for r in sentinels)
+    trailers = [r for r in rows if r["is_trailer"]]
+    assert 1 <= len(trailers) <= N_SHARDS  # one per shard with the terms
+    got_count = sum(r["n_matched"] for r in trailers)
     assert got_count == len(want)
     # ≤ (k+1) rows per shard reach the driver
     assert len(rows) <= N_SHARDS * (k + 1)
     page = sorted(
-        ((r["doc_id"], r["phrase_tf"]) for r in rows if r["doc_id"] != -1),
+        ((r["doc_id"], r["phrase_tf"]) for r in rows if not r["is_trailer"]),
         key=lambda t: (-t[1], t[0]),
     )[:k]
     want_page = sorted(
         want.items(), key=lambda t: (-t[1], t[0])
     )[:k]
     assert page == want_page
+    assert merge_phrase_rows(rows, k) == (want_page, len(want))
     # excluded docs never appear
     assert not set(excluded) & {d for d, _ in page}
+
+
+def test_fused_count_rides_trailer_not_doc_id(spark, tmp_path):
+    """xxhash64 doc ids span all of int64, -1 included: a real match
+    with doc_id -1 must be served as a hit and counted once — the
+    count travels in the trailer's own column, not a doc_id value."""
+    from searchengine_spark.index.positional import (
+        merge_phrase_rows,
+        phrase_search_packed_topk_count,
+    )
+
+    prepared = spark.createDataFrame(
+        [(-1, ["a", "b", "c"]), (5, ["a", "b"]),
+         (7, ["x", "a", "b", "a", "b"]), (9, ["b", "a"])],
+        "doc_id long, lemmas array<string>",
+    )
+    path = str(tmp_path / "possegs")
+    write_positional_segments(build_positional_segments(prepared, 2), path)
+    segs = spark.read.parquet(path)
+    rows = phrase_search_packed_topk_count(spark, segs, ["a", "b"], 10)
+    assert merge_phrase_rows(rows.collect(), 10) == (
+        [(7, 2), (-1, 1), (5, 1)], 3
+    )
+    # a deny-listed -1 disappears from page and count alike
+    rows = phrase_search_packed_topk_count(
+        spark, segs, ["a", "b"], 10, excluded_doc_ids=[-1]
+    )
+    assert merge_phrase_rows(rows.collect(), 10) == ([(7, 2), (5, 1)], 2)

@@ -524,3 +524,30 @@ def test_recover_marks_discarded_possegs_stale(spark, tmp_path):
         assert svc3.phrase("быстрый поиск", limit=10) == base_phrase
     finally:
         svc3.close()
+
+
+def test_refresh_positional_clears_stale_marker_on_uri_base(spark, tmp_path):
+    """The _STALE marker goes through the Hadoop FileSystem API, so a
+    URI-style base (file://, and likewise hdfs:// or s3a://) clears it
+    on refresh_positional — os.remove on such a base silently missed
+    the marker and left phrase counts on the slow path for good."""
+    from searchengine_spark.index.manifest import fs_exists, fs_touch
+    from searchengine_spark.service import SearchService
+
+    b = str(tmp_path / "b")
+    _mini_index(spark, b, delta=False)
+    uri = f"file://{b}"
+    docs_text = prepare_docs(corpus_df(spark, 60), use_html=True).select(
+        "doc_id", "text"
+    )
+    svc = SearchService(spark, uri, docs_text=docs_text)
+    try:
+        svc._ensure_positional()
+        marker = f"{uri}/possegs/_STALE"
+        fs_touch(spark, marker)
+        assert fs_exists(spark, marker)
+        svc.refresh_positional()
+        assert not fs_exists(spark, marker)
+        assert svc._pos_stale is False
+    finally:
+        svc.close()

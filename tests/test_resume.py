@@ -108,3 +108,77 @@ def test_read_manifest_resolves_uri_paths(spark, index, tmp_path):
     assert plain.count() == via_uri.count() > 0
     # and a genuinely absent URI base still reads as empty, not an error
     assert read_manifest(spark, f"file:{tmp_path}/nope").count() == 0
+
+
+def _all_columns(df):
+    """Every segment column (binary streams as hex, arrays as tuples)
+    — byte-level equality, field layer and avgtl included."""
+    def canon(v):
+        if isinstance(v, (bytes, bytearray)):
+            return bytes(v).hex()
+        if isinstance(v, list):
+            return tuple(v)
+        return v
+
+    cols = df.columns
+    return sorted(
+        tuple(canon(r[c]) for c in cols) for r in df.select(*cols).collect()
+    )
+
+
+def test_resumable_equals_build_segments_materialized(spark, tmp_path):
+    """Production layout: a materialize_index index carries doclen and
+    the title field in-row. The resumable build must pack it with the
+    same enrich step and bulk pack as build_segments — the same
+    segment rows, byte for byte, including the BM25F field layer and
+    a non-zero avgtl."""
+    from searchengine_spark.operators.postings import materialize_index
+
+    idx = materialize_index(
+        spark, corpus_df(spark, N_DOCS), str(tmp_path / "idx"),
+        use_html=True,
+    )
+    assert "doclen" in idx.postings.columns  # the in-row layout
+    n, avgdl = corpus_constants(idx.doc_stats)
+    segs = build_packed_resumable(
+        spark, idx, str(tmp_path / "build"), n, avgdl,
+        n_shards=N_SHARDS, n_groups=N_GROUPS,
+    )
+    oneshot = build_segments(idx, n, avgdl, n_shards=N_SHARDS)
+    assert sorted(segs.columns) == sorted(oneshot.columns)
+    assert _all_columns(segs) == _all_columns(oneshot.select(*segs.columns))
+    avgtl = {r["avgtl"] for r in segs.select("avgtl").distinct().collect()}
+    assert len(avgtl) == 1 and avgtl.pop() > 0.0
+
+
+def test_cli_build_query_compact_query(tmp_path):
+    """The documented spark-submit chain, each step in its own
+    process: build_index.py --synthetic (materialized index, resumable
+    pack) → query.py → compact.py → query.py, the two queries
+    answering identically."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g",
+               PYTHONPATH=repo)
+    out = str(tmp_path / "cli")
+
+    def run(script, *args):
+        proc = subprocess.run(
+            [sys.executable, os.path.join(repo, "scripts", script), *args],
+            env=env, capture_output=True, text=True, timeout=900,
+        )
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        return proc.stdout
+
+    run("build_index.py", "--synthetic", "200", "--output", out,
+        "--n-groups", "2", "--n-shards", "2")
+    query = ("query.py", "--index", out, "--query", "быстрый поиск",
+             "--disjunctive", "--k", "5")
+    before = run(*query).splitlines()
+    run("compact.py", "--index", out)
+    after = run(*query).splitlines()
+    assert before[-1].startswith("-- 5 results")
+    assert before[:-1] == after[:-1]

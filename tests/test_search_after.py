@@ -10,7 +10,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from searchengine_spark.index.segments import _pack_group, build_segments, write_segments
-from searchengine_spark.index.wand import search_packed, wand_shard_topk
+from searchengine_spark.index.wand import search_packed
+
+from .kernels import wand_shard_topk
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
 
@@ -212,8 +214,9 @@ def test_service_search_after(spark, tmp_path_factory, monkeypatch):
     the full ranking; count stays the page-1 total; invalid combos
     rejected; and (VERDICT r4 #6) the cursor-independent count is
     cached per (query, site, conjunctive) — seeded by the fused page-1
-    pass, so NO cursor page ever runs the count kernel."""
-    import searchengine_spark.index.wand as wand_mod
+    pass, so NO cursor page after it asks the kernel for a count, and
+    a cursor page with a cold cache makes ONE kernel pass for both."""
+    import searchengine_spark.service as service_mod
     from searchengine_spark.operators.postings import (
         build_index, prepare_docs, write_index,
     )
@@ -231,14 +234,14 @@ def test_service_search_after(spark, tmp_path_factory, monkeypatch):
         spark, base,
         docs_text=prepare_docs(docs, use_html=True).select("doc_id", "text"),
     )
-    calls = {"n": 0}
-    real_count = wand_mod.match_count_packed
+    calls = []  # one entry per kernel pass: did it count?
+    real_fused = service_mod.search_packed_fused
 
     def counting(*a, **k):
-        calls["n"] += 1
-        return real_count(*a, **k)
+        calls.append(k.get("_count", True))
+        return real_fused(*a, **k)
 
-    monkeypatch.setattr(wand_mod, "match_count_packed", counting)
+    monkeypatch.setattr(service_mod, "search_packed_fused", counting)
     try:
         full = svc.search("быстрый поиск", conjunctive=False, limit=10)
         p1 = full["data"][:5]
@@ -249,18 +252,23 @@ def test_service_search_after(spark, tmp_path_factory, monkeypatch):
             d["doc_id"] for d in full["data"][5:10]
         ]
         assert p2["count"] == full["count"]
-        # two-page walk ran ZERO count kernels after page 1: the fused
+        # two-page walk counted ZERO times after page 1: the fused
         # page-1 pass seeded the cache, the cursor page read it
-        assert calls["n"] == 0, calls
+        assert calls == [True, False], calls
         # a cursor page for a query whose page 1 was never fetched
-        # pays the count kernel ONCE, later pages of it read the cache
+        # makes ONE kernel pass that also counts; later pages of it
+        # read the cache
         pA = svc.search("поиск", conjunctive=False, limit=3,
                         after=cursor)
+        assert calls[2:] == [True], calls
         pB = svc.search("поиск", conjunctive=False, limit=3,
                         after=(pA["data"][-1]["relevance"],
                                pA["data"][-1]["doc_id"]))
-        assert calls["n"] == 1, calls
+        assert calls[2:] == [True, False], calls
         assert pB["count"] == pA["count"]
+        assert pA["count"] == svc.search(
+            "поиск", conjunctive=False, limit=3
+        )["count"]
         for bad in (
             dict(offset=5), dict(blend=1.0), dict(collapse=1),
             dict(correct=True),

@@ -14,7 +14,8 @@ from searchengine_spark.index.segments import (
     bm25_scores_np,
     unpack_segment,
 )
-from searchengine_spark.index.wand import wand_shard_topk
+
+from .kernels import wand_shard_topk
 
 # ---------------------------------------------------------------------------
 # kernel-level property tests (no Spark session needed — fast)

@@ -496,7 +496,7 @@ def test_search_bm25f_mode(spark, served):
 
 def test_phrase_fused_equals_semijoin_path(spark, served):
     """The fused one-pass phrase serve path (per-shard top-k + count
-    sentinel, index/positional.py:phrase_search_packed_topk_count)
+    trailer, index/positional.py:phrase_search_packed_topk_count)
     must produce the identical response — count AND page — to the
     exact two-action semi-join path it replaces (which stays wired for
     the stale-possegs recovery state), including under tombstones."""

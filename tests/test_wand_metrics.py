@@ -1,7 +1,7 @@
-"""Query-side pruning metrics (index/wand.py wand_shard_metrics /
-search_packed_metrics, service.explain): decision-for-decision parity
-with the serving kernels, decode-counter soundness, and actual pruning
-on a skew-crafted shard.
+"""Query-side pruning metrics (the trailer counters of index/wand.py
+wand_shard, service.explain): agreement between the top-k and the
+counting routes, decode-counter soundness, and actual pruning on a
+skew-crafted shard.
 
 The north rule requires per-partition token/posting/byte metrics for
 the BUILD (index/manifest.py); these are the query-side analog —
@@ -15,11 +15,9 @@ import pandas as pd
 import pytest
 
 from searchengine_spark.index.segments import BLOCK, _pack_group
-from searchengine_spark.index.wand import (
-    wand_shard_metrics,
-    wand_shard_topk,
-    wand_shard_topk_count,
-)
+from searchengine_spark.index.wand import wand_shard
+
+from .kernels import wand_shard_topk
 
 # ---------------------------------------------------------------------------
 # kernel-level (no Spark session — fast)
@@ -58,12 +56,16 @@ def shard():
 
 
 def _metrics_row(pdf, k, conjunctive, n_terms=3, **kw):
-    out = wand_shard_metrics(
+    """The trailer row of one shard kernel call (top-k route unless
+    count=True is passed)."""
+    out = wand_shard(
         pdf, n_docs=5000, avgdl=100.0, k=k, conjunctive=conjunctive,
         n_terms=n_terms, **kw,
     )
-    assert len(out) == 1
-    return out.iloc[0]
+    trailer = out[out["is_trailer"]]
+    assert len(trailer) == 1
+    assert (out["is_trailer"].to_numpy() == (out.index == len(out) - 1)).all()
+    return trailer.iloc[0]
 
 
 def test_counters_sound_conjunctive(shard):
@@ -75,12 +77,11 @@ def test_counters_sound_conjunctive(shard):
     assert m["n_blocks"] == n_blocks
     assert 0 < m["n_blocks_decoded"] <= n_blocks
     assert m["theta"] == 0.0  # conjunctive path never prunes by θ
-    # n_scored == the fused kernel's pre-top-k match count
-    fused = wand_shard_topk_count(
-        pdf, n_docs=5000, avgdl=100.0, k=10, conjunctive=True, n_terms=3
-    )
-    count = int(fused.loc[fused["n_hit"] == -1, "n_matched"].iloc[0])
-    assert m["n_scored"] == count
+    assert m["n_matched"] == 0  # no count asked for
+    # n_scored == the counting route's pre-top-k match count
+    count = _metrics_row(pdf, k=10, conjunctive=True, count=True)
+    assert m["n_scored"] == count["n_matched"]
+    assert count["n_scored"] == count["n_matched"]
     # candidates = the driving (shortest) list
     assert m["n_candidates"] == min(len(g) for g in groups)
 
@@ -95,12 +96,10 @@ def test_counters_sound_disjunctive_no_prune(shard):
     union = len({d for g in groups for d in g["doc_id"]})
     assert m["n_candidates"] == union
     assert m["n_scored"] == union
-    # and equals the fused kernel's disjunctive match count
-    fused = wand_shard_topk_count(
-        pdf, n_docs=5000, avgdl=100.0, k=5000, conjunctive=False, n_terms=3
-    )
-    count = int(fused.loc[fused["n_hit"] == -1, "n_matched"].iloc[0])
-    assert m["n_scored"] == count
+    # and equals the counting route's disjunctive match count
+    count = _metrics_row(pdf, k=5000, conjunctive=False, count=True)
+    assert m["n_scored"] == count["n_matched"]
+    assert count["n_blocks_decoded"] == count["n_blocks"]
 
 
 def test_pruning_actually_skips_blocks():
@@ -130,6 +129,15 @@ def test_pruning_actually_skips_blocks():
     # smaller k ⇒ tighter θ ⇒ never decodes MORE
     m20 = _metrics_row(pdf, k=20, conjunctive=False, n_terms=2)
     assert m["n_blocks_decoded"] <= m20["n_blocks_decoded"]
+    # the counting route scores the whole union: pruning decodes less
+    exhaustive = _metrics_row(pdf, k=5, conjunctive=False, n_terms=2,
+                              count=True)
+    assert exhaustive["theta"] == 0.0
+    assert exhaustive["n_blocks_decoded"] == exhaustive["n_blocks"]
+    assert m["n_blocks_decoded"] < exhaustive["n_blocks_decoded"]
+    assert exhaustive["n_matched"] == len(
+        set(long_low["doc_id"]) | set(short_hi["doc_id"])
+    )
 
 
 def test_missing_term_shard_zero_work(shard):
@@ -157,7 +165,7 @@ def test_site_filter_and_tombstones(shard):
 
 
 # ---------------------------------------------------------------------------
-# Spark-level: search_packed_metrics + service.explain
+# Spark-level: service.explain
 # ---------------------------------------------------------------------------
 
 
