@@ -26,7 +26,11 @@ stringifies a float).
 
 Scale shape: every search is the packed WAND path (index/wand.py) —
 term-pruned segment scan, per-shard kernels, ≤ shards·(offset+k) row
-merge; statistics is one aggregation over cached doc/term stats; an
+merge. Every read endpoint then assembles its page the same way
+(`_items`): ONE filtered collect of the ranked page's ≤k ids from the
+cached serving meta (`_lookup` — no join, no re-sort; items keep the
+kernel merge's order), plus one more over docs_text when snippets are
+rendered. statistics is one aggregation over cached doc/term stats; an
 indexPage lands a delta run (append-only) and invalidates only the
 segment cache. At cluster scale the same object runs on a driver
 serving a Spark Connect or Thrift endpoint.
@@ -98,6 +102,9 @@ class SearchService:
         # uses it so min-of-N latency measures the kernels, not hits)
         self._cache_responses = cache_responses
         self._response_cache: dict = {}
+        # positional runs: read (or built) on the first phrase request
+        self.pos_segments: DataFrame | None = None
+        self._pos_stale = False
         self._open_segments()
         # optional query-independent authority table
         # (linkgraph.write_static_rank) enabling blended ranking; the
@@ -478,49 +485,22 @@ class SearchService:
             reranked = self._blend_hits(hits, blend)[offset:offset + limit]
             hits = [(d, b) for d, b, _, _ in reranked]
             parts = {d: (s, a) for d, _, s, a in reranked}
-        if not hits:
-            out = {"result": True, "count": count, "data": []}
-            if corrections:
-                out["corrected"] = corrections
-            if site_counts is not None:
-                out["site_counts"] = site_counts
-            return out
-        winners = self.spark.createDataFrame(
-            [(int(d), float(s)) for d, s in hits],
-            "doc_id long, score double",
-        )
+        data = self._items(hits)
         if snippets:
             from .functions.udfs import snippet_udf
 
             snip = snippet_udf(q_lemmas, 3, mode=self.snippet_mode)
-            winners = (
-                self.docs_text.select("doc_id", "text")
-                .join(F.broadcast(winners), "doc_id")
-                .select("doc_id", "score", snip(F.col("text")).alias("snippet"))
+            texts = self._lookup(
+                self.docs_text, [d["doc_id"] for d in data],
+                snip(F.col("text")).alias("snippet"),
             )
-        rows = (
-            self.serve_meta.select("doc_id", "url", "title")
-            .join(F.broadcast(winners), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .collect()
-        )
-        data = []
-        for r in rows:
-            url = r["url"]
-            slash = url.find("/", url.find("://") + 3)
-            item = {
-                "site": url[:slash] if slash != -1 else url,
-                "uri": url[slash:] if slash != -1 else "/",
-                "url": url,
-                "doc_id": r["doc_id"],
-                "title": r["title"],
-                "relevance": r["score"],
-            }
-            if snippets:
-                item["snippet"] = r["snippet"]
-            if parts is not None:
-                item["bm25"], item["authority"] = parts[r["doc_id"]]
-            data.append(item)
+            for item in data:
+                # a page landed by index_page has no docs_text row
+                row = texts.get(item["doc_id"])
+                item["snippet"] = row["snippet"] if row else ""
+        if parts is not None:
+            for item in data:
+                item["bm25"], item["authority"] = parts[item["doc_id"]]
         out = {"result": True, "count": count, "data": data}
         if corrections:
             out["corrected"] = corrections
@@ -575,8 +555,8 @@ class SearchService:
         top-K' cannot be recovered — the standard two-stage trade,
         bounded by `oversample`. Docs absent from the rank table
         (e.g. a page landed by `index_page` after the graph build)
-        get authority 0. The rank table never collects: the ≤K'
-        candidate ids broadcast INTO it and only matches return.
+        get authority 0. The rank table never collects: only the ≤K'
+        candidates' rows come back (`_lookup`).
 
         Returns (doc_id, blended, bm25, authority) sorted
         (blended desc, doc_id asc)."""
@@ -587,27 +567,13 @@ class SearchService:
                 "blend needs a static-rank table at <base>/staticrank "
                 "(operators/linkgraph.write_static_rank)"
             )
-        if not hits:
-            return []
-        cand = self.spark.createDataFrame(
-            [(int(d),) for d, _ in hits], "doc_id long"
-        )
-        ranks = {
-            r["doc_id"]: r["rank"]
-            for r in self.static_rank.join(
-                F.broadcast(cand), "doc_id"
-            ).collect()
-        }
+        ranks = self._lookup(self.static_rank, [d for d, _ in hits], "rank")
         unit = PR_SCALE / self._rank_n
-        out = [
-            (
-                int(d),
-                float(s) + w * (ranks.get(int(d), 0) / unit),
-                float(s),
-                ranks.get(int(d), 0) / unit,
-            )
-            for d, s in hits
-        ]
+        out = []
+        for d, s in hits:
+            row = ranks.get(int(d))
+            a = (row["rank"] if row else 0) / unit
+            out.append((int(d), float(s) + w * a, float(s), a))
         out.sort(key=lambda t: (-t[1], t[0]))
         return out
 
@@ -712,7 +678,7 @@ class SearchService:
         if not phr:
             return {"result": True, "count": 0, "data": []}
         self._ensure_positional()
-        if not getattr(self, "_pos_stale", False):
+        if not self._pos_stale:
             # hot path: ONE kernel pass per shard returns the shard's
             # top-k rows AND its match count (the trailer row of the
             # shared kernel contract). Exact because an in-sync possegs
@@ -728,11 +694,6 @@ class SearchService:
                 ).collect(),
                 limit,
             )
-            if not page:
-                return {"result": True, "count": count, "data": []}
-            top = self.spark.createDataFrame(
-                page, "doc_id long, phrase_tf long"
-            )
         else:
             hits = phrase_search_packed_terms(
                 self.spark, self.pos_segments, phr
@@ -746,30 +707,13 @@ class SearchService:
                 self.serve_meta.select("doc_id"), "doc_id", "left_semi"
             )
             count = hits.count()
-            top = hits.orderBy(
-                F.desc("phrase_tf"), F.asc("doc_id")
-            ).limit(limit)
-        rows = sorted(
-            self.serve_meta.select("doc_id", "url", "title")
-            .join(F.broadcast(top), "doc_id")
-            .collect(),
-            key=lambda r: (-r["phrase_tf"], r["doc_id"]),
-        )
-        data = []
-        for r in rows:
-            url = r["url"]
-            slash = url.find("/", url.find("://") + 3)
-            data.append(
-                {
-                    "site": url[:slash] if slash != -1 else url,
-                    "uri": url[slash:] if slash != -1 else "/",
-                    "url": url,
-                    "doc_id": r["doc_id"],
-                    "title": r["title"],
-                    "phrase_tf": r["phrase_tf"],
-                }
-            )
-        return {"result": True, "count": count, "data": data}
+            page = [
+                (r["doc_id"], r["phrase_tf"])
+                for r in hits.orderBy(F.desc("phrase_tf"), F.asc("doc_id"))
+                .limit(limit).collect()
+            ]
+        return {"result": True, "count": count,
+                "data": self._items(page, "phrase_tf")}
 
     # -- /api/boolean (beyond-reference) ---------------------------------------
 
@@ -798,41 +742,7 @@ class SearchService:
             offset=offset, doc_stats=self.serve_meta,
             n_shards=self.n_shards,
         )
-        return {"result": True, "count": count,
-                "data": self._meta_items(hits)}
-
-    def _meta_items(self, hits: list[tuple[int, float]]) -> list[dict]:
-        """(doc_id, score) winners → SearchItem dicts: broadcast the
-        ≤k winners into the distributed serving meta (url/title
-        resolve through doc-level last-wins incl. delta runs), rank
-        (score desc, doc_id asc)."""
-        if not hits:
-            return []
-        winners = self.spark.createDataFrame(
-            [(int(d), float(s)) for d, s in hits],
-            "doc_id long, score double",
-        )
-        rows = (
-            self.serve_meta.select("doc_id", "url", "title")
-            .join(F.broadcast(winners), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .collect()
-        )
-        data = []
-        for r in rows:
-            url = r["url"]
-            slash = url.find("/", url.find("://") + 3)
-            data.append(
-                {
-                    "site": url[:slash] if slash != -1 else url,
-                    "uri": url[slash:] if slash != -1 else "/",
-                    "url": url,
-                    "doc_id": r["doc_id"],
-                    "title": r["title"],
-                    "relevance": r["score"],
-                }
-            )
-        return data
+        return {"result": True, "count": count, "data": self._items(hits)}
 
     # -- /api/prefix (beyond-reference) ----------------------------------------
 
@@ -849,10 +759,9 @@ class SearchService:
             self.avgdl, pfx, k=limit, max_expansions=max_expansions,
             excluded_doc_ids=self.tombstoned,
         ).collect()
-        items = self._meta_items(
+        return {"result": True, "data": self._items(
             [(r["doc_id"], r["score"]) for r in hits]
-        )
-        return {"result": True, "data": items}
+        )}
 
     # -- /api/suggest (beyond-reference) ---------------------------------------
 
@@ -891,27 +800,19 @@ class SearchService:
         from collections import Counter
 
         from .functions import textproc
-        from .functions.urlnorm import canonical_url
         from .operators.mlt import select_mlt_terms
 
         if self.docs_text is None:
             raise ValueError(
                 "more_like_this needs docs_text (doc_id, text) at open"
             )
-        doc_id = int(
-            self.spark.createDataFrame([(url,)], "url string")
-            .select(F.xxhash64(canonical_url(F.col("url"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        if not self.serve_meta.filter(F.col("doc_id") == doc_id).count():
+        doc_id = self._url_doc_id(url)
+        if not self._lookup(self.serve_meta, [doc_id]):
             return {"result": False, "error": "url not in index"}
-        rows = (
-            self.docs_text.filter(F.col("doc_id") == doc_id)
-            .select("text").collect()
-        )
-        if not rows or rows[0]["text"] is None:
+        row = self._lookup(self.docs_text, [doc_id], "text").get(doc_id)
+        if row is None or row["text"] is None:
             return {"result": False, "error": "document text unavailable"}
-        counts = Counter(textproc.tokenize_lemmatize(rows[0]["text"]))
+        counts = Counter(textproc.tokenize_lemmatize(row["text"]))
         terms = select_mlt_terms(
             dict(counts), self.df_map, self.n_docs, max_terms
         )
@@ -926,21 +827,21 @@ class SearchService:
             excluded_doc_ids=excluded,
         )
         return {"result": True, "count": count, "terms": terms,
-                "data": self._meta_items(hits)}
+                "data": self._items(hits)}
 
     def refresh_positional(self) -> None:
-        """Rebuild the positional snapshot from docs_text (e.g. after
-        index_page calls) and swap the cache."""
+        """Rebuild the positional snapshot from the docs_text rows of
+        the docs the index serves now (e.g. after index_page calls) and
+        swap the cache."""
         self._response_cache.clear()
-        old = getattr(self, "pos_segments", None)
-        if old is not None:
-            old.unpersist()
+        if self.pos_segments is not None:
+            self.pos_segments.unpersist()
         self.pos_segments = None
         self._build_positional()
         self._ensure_positional()
 
     def _ensure_positional(self) -> None:
-        if getattr(self, "pos_segments", None) is not None:
+        if self.pos_segments is not None:
             return
         from pyspark.errors import AnalysisException
 
@@ -974,16 +875,19 @@ class SearchService:
                 "phrase search needs docs_text at open (to build the "
                 "positional runs) or a prebuilt <base>/possegs"
             )
-        prepared = self.docs_text.select(
-            "doc_id", tokenize_lemmatize_udf("text").alias("lemmas")
-        )
+        # only docs the index serves get positional runs: a docs_text
+        # row with no living doc would otherwise count in phrase()
+        # without an item to serve
+        prepared = self.docs_text.join(
+            self.serve_meta.select("doc_id"), "doc_id", "left_semi"
+        ).select("doc_id", tokenize_lemmatize_udf("text").alias("lemmas"))
         write_positional_segments(
             build_positional_segments(prepared, self.n_shards),
             f"{self.base}/possegs",
         )
-        # a rebuild is by construction in sync with the corpus — drop
-        # any crash-recovery staleness marker the overwrite may have
-        # preserved (dynamic partitionOverwriteMode keeps root files)
+        # the rebuild is in sync with the served doc set by construction
+        # — drop any crash-recovery staleness marker the overwrite may
+        # have preserved (dynamic partitionOverwriteMode keeps root files)
         from .index.manifest import fs_delete
 
         fs_delete(self.spark, f"{self.base}/possegs/_STALE")
@@ -1077,9 +981,8 @@ class SearchService:
                 f"{self.base}/possegs",
                 mode="append",
             )
-            old_pos = getattr(self, "pos_segments", None)
-            if old_pos is not None:  # cached snapshot is stale
-                old_pos.unpersist()
+            if self.pos_segments is not None:  # cached snapshot is stale
+                self.pos_segments.unpersist()
                 self.pos_segments = None
         self._open_segments()  # delta appended → segment cache is stale
         # the hot dictionary must learn the delta's terms or they prune
@@ -1109,13 +1012,7 @@ class SearchService:
         from the deny-list the packed kernels take: the doc vanishes
         from hits AND match counts in the same call. Unknown urls
         no-op with result=False."""
-        from .functions.urlnorm import canonical_url
-
-        doc_id = int(
-            self.spark.createDataFrame([(url,)], "url string")
-            .select(F.xxhash64(canonical_url(F.col("url"))).alias("d"))
-            .collect()[0]["d"]
-        )
+        doc_id = self._url_doc_id(url)
         run_id = self._next_run_id()
         n = write_tombstones(self.spark, [doc_id], self.base, run_id)
         if not n:
@@ -1154,7 +1051,7 @@ class SearchService:
     def _get_site_dim(self):
         """(site_id, site) dimension for facet responses — cached per
         index generation alongside the site map."""
-        if getattr(self, "_site_dim_df", None) is None:
+        if self._site_dim_df is None:
             self._site_dim_df = (
                 self.serve_meta.select(
                     F.xxhash64("site").alias("site_id"), "site"
@@ -1171,7 +1068,7 @@ class SearchService:
         |corpus| rows per request."""
         from .index.wand import site_map_frame
 
-        if getattr(self, "_site_map_df", None) is None:
+        if self._site_map_df is None:
             self._site_map_df = (
                 site_map_frame(self.serve_meta, self.n_shards)
                 .repartition(self.n_shards, "shard")
@@ -1192,7 +1089,7 @@ class SearchService:
         cache here is the local[N] stand-in."""
         from .operators.fuzzy import deletion_key_index
 
-        if getattr(self, "_fuzzy_keys_df", None) is None:
+        if self._fuzzy_keys_df is None:
             dict_df = self.term_stats.select("term", "df")
             if self._delta_terms:
                 # delta-learned terms (df=1 until compaction refreshes
@@ -1214,21 +1111,7 @@ class SearchService:
         # responses before swapping the serving state
         self._response_cache.clear()
         self._match_count_cache: dict = {}
-        old_keys = getattr(self, "_fuzzy_keys_df", None)
-        if old_keys is not None:
-            old_keys.unpersist()
-        self._fuzzy_keys_df = None
-        old_map = getattr(self, "_site_map_df", None)
-        if old_map is not None:
-            old_map.unpersist()
-        self._site_map_df = None
-        old_dim = getattr(self, "_site_dim_df", None)
-        if old_dim is not None:
-            old_dim.unpersist()
-        self._site_dim_df = None
-        old = getattr(self, "segments", None)
-        if old is not None:
-            old.unpersist()
+        self._drop_generation()
         self.segments = self.spark.read.parquet(
             f"{self.base}/segments"
         ).cache()
@@ -1236,9 +1119,6 @@ class SearchService:
         # serving meta = doc-level last-wins across base doc_stats AND
         # delta meta runs (minus tombstones) — a delta-landed doc must
         # resolve its url/site before any compaction runs
-        old_meta = getattr(self, "serve_meta", None)
-        if old_meta is not None:
-            old_meta.unpersist()
         resolved = _doc_meta_resolved(self.spark, self.base)
         self.serve_meta = (
             resolved.filter(~F.col("deleted"))
@@ -1276,10 +1156,68 @@ class SearchService:
         top = self.segments.agg(F.max("run_id")).collect()[0][0]
         return int(top or 0) + 1
 
+    def _lookup(self, frame: DataFrame, ids: list, *cols) -> dict:
+        """{doc_id: Row(doc_id, *cols)} for ≤k ids of a doc_id-keyed
+        frame: one filtered collect — no join, no sort (callers keep
+        their own ranked order), and no Spark job at all for no ids."""
+        if not ids:
+            return {}
+        return {
+            r["doc_id"]: r
+            for r in frame.filter(F.col("doc_id").isin([int(d) for d in ids]))
+            .select("doc_id", *cols).collect()
+        }
+
+    def _items(self, hits: list, value: str = "relevance") -> list[dict]:
+        """Ranked (doc_id, value) hits → SearchItem dicts in hit order.
+        url/title resolve through serve_meta (doc-level last-wins incl.
+        delta runs); a hit it does not serve drops."""
+        meta = self._lookup(
+            self.serve_meta, [d for d, _ in hits], "url", "title"
+        )
+        data = []
+        for d, v in hits:
+            r = meta.get(int(d))
+            if r is None:
+                continue
+            url = r["url"]
+            slash = url.find("/", url.find("://") + 3)
+            data.append({
+                "site": url[:slash] if slash != -1 else url,
+                "uri": url[slash:] if slash != -1 else "/",
+                "url": url,
+                "doc_id": int(d),
+                "title": r["title"],
+                value: v,
+            })
+        return data
+
+    def _url_doc_id(self, url: str) -> int:
+        """The index identity of a url: xxhash64 of its canonical form
+        (operators/postings.prepare_docs_counts' doc_id rule)."""
+        from .functions.urlnorm import canonical_url
+
+        return int(
+            self.spark.createDataFrame([(url,)], "url string")
+            .select(F.xxhash64(canonical_url(F.col("url"))).alias("d"))
+            .collect()[0]["d"]
+        )
+
+    # frames cached per index generation: _open_segments drops and
+    # rebuilds them on every write, close() drops them for good
+    _GENERATION = ("segments", "serve_meta", "_fuzzy_keys_df",
+                   "_site_map_df", "_site_dim_df")
+
+    def _drop_generation(self) -> None:
+        for name in self._GENERATION:
+            df = getattr(self, name, None)
+            if df is not None:
+                df.unpersist()
+            setattr(self, name, None)
+
     def close(self) -> None:
-        for df in (self.segments, self.doc_stats, self.term_stats,
-                   self.serve_meta, self.static_rank,
-                   getattr(self, "_fuzzy_keys_df", None),
-                   getattr(self, "pos_segments", None)):
+        self._drop_generation()
+        for df in (self.doc_stats, self.term_stats, self.static_rank,
+                   self.pos_segments):
             if df is not None:
                 df.unpersist()

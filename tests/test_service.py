@@ -511,3 +511,113 @@ def test_phrase_fused_equals_semijoin_path(spark, served):
         finally:
             svc._pos_stale = False
         assert got == want, q
+
+
+def test_snippets_keep_delta_landed_page(spark, served):
+    """A page landed by index_page has no docs_text row: a snippets
+    request still serves it (empty snippet, make_snippet(None)'s
+    value), so `data` agrees with `count`."""
+    svc, _, _ = served
+    q = "дельтасниппетслово"  # OOV → identity lemma
+    resp = svc.index_page(
+        "https://site1.example/delta-snippet", text=f"страница {q} тут"
+    )
+    got = svc.search(q, snippets=True)
+    assert got["count"] == 1
+    assert [(d["doc_id"], d["snippet"]) for d in got["data"]] == [
+        (resp["doc_id"], "")
+    ]
+
+
+@pytest.fixture(scope="module")
+def small_index(spark, tmp_path_factory):
+    """A 40-doc index of its own: services over it can be opened and
+    closed without touching the module `served` state."""
+    base = str(tmp_path_factory.mktemp("svc_small") / "index")
+    docs = corpus_df(spark, 40)
+    idx = build_index(docs, use_html=True)
+    write_index(idx, f"{base}/idx")
+    n, avgdl = corpus_constants(idx.doc_stats)
+    write_segments(
+        build_segments(idx, n, avgdl, n_shards=2), f"{base}/segments"
+    )
+    # docs_text materialized, the serving shape SearchService documents
+    prepare_docs(docs, use_html=True).select("doc_id", "text").write.parquet(
+        f"{base}/docs_text"
+    )
+    return base, spark.read.parquet(f"{base}/docs_text")
+
+
+def _group_jobs(spark, group: str) -> int:
+    """Spark jobs attributed to a job group so far. statusTracker is
+    fed by the listener bus asynchronously, so drain the bus first."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_assembly_job_budget(spark, small_index, monkeypatch):
+    """A warm page-1 search runs at most ONE Spark job beyond its kernel
+    call (the page's url/title lookup), two with snippets (plus the
+    docs_text lookup): response assembly must not grow joins, re-sorts
+    or winner frames again. Jobs are counted per request job group, as
+    the benchmark's tracer counts them."""
+    import searchengine_spark.service as service
+
+    base, docs_text = small_index
+    svc = SearchService(spark, base, docs_text=docs_text)
+    sc = spark.sparkContext
+    fused = service.search_packed_fused
+    kernel_jobs = []
+
+    def traced(*a, **k):
+        j0 = _group_jobs(spark, group)
+        out = fused(*a, **k)
+        kernel_jobs.append(_group_jobs(spark, group) - j0)
+        return out
+
+    monkeypatch.setattr(service, "search_packed_fused", traced)
+    try:
+        for i, (snippets, budget) in enumerate(((False, 1), (True, 2))):
+            group = f"assembly-budget-{i}"
+            sc.setJobGroup(group, "search assembly job budget")
+            try:
+                resp = svc.search("быстрый поиск", snippets=snippets,
+                                  conjunctive=False)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert resp["data"]
+            assert len(kernel_jobs) == i + 1
+            assert _group_jobs(spark, group) - kernel_jobs[-1] <= budget
+    finally:
+        svc.close()
+
+
+def test_phrase_count_only_counts_served_docs(spark, small_index):
+    """The positional layer a service builds holds only docs the index
+    serves: a docs_text row with no indexed doc must not count in
+    phrase() without an item to serve."""
+    base, docs_text = small_index
+    extra = spark.createDataFrame(
+        [(-12345, "запредельноредкое сочетаниеслов")],
+        "doc_id long, text string",
+    )
+    svc = SearchService(spark, base, docs_text=docs_text.unionByName(extra))
+    try:
+        resp = svc.phrase("запредельноредкое сочетаниеслов")
+        assert svc._pos_stale is False
+        assert resp["count"] == len(resp["data"]) == 0
+    finally:
+        svc.close()
+
+
+def test_close_unpersists_generation_caches(spark, small_index):
+    """close() drops every per-generation frame _open_segments would,
+    the lazily built site map and site dim included."""
+    base, docs_text = small_index
+    svc = SearchService(spark, base, docs_text=docs_text)
+    site_map, site_dim = svc._get_site_map(), svc._get_site_dim()
+    assert site_map.is_cached and site_dim.is_cached
+    svc.close()
+    assert not site_map.is_cached
+    assert not site_dim.is_cached
