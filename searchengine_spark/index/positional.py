@@ -34,6 +34,8 @@ groupBy(shard) that cogroups those runs.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +44,7 @@ from pyspark.sql import types as T
 
 from ..functions import textproc
 from . import varbyte as vb
-from .segments import BLOCK
+from .segments import BLOCK, ReadSizes
 
 POSITIONAL_SEGMENTS_SCHEMA = T.StructType(
     [
@@ -523,27 +525,39 @@ def phrase_search_packed_topk_count(
     k: int,
     excluded_doc_ids: list[int] | None = None,
     block: int = BLOCK,
-) -> DataFrame:
-    """Fused phrase top-k + match count in ONE kernel pass per shard:
-    ≤ shards·(k+1) rows of PHRASE_KERNEL_SCHEMA leave the executors —
-    each shard's top-k page candidates plus its trailer row. The
-    caller merges driver-side with merge_phrase_rows. Replaces the
-    two-action serve shape (count(), then orderBy().limit()) that
-    executed the phrase kernel twice per request."""
-    from .wand import _deny_list, _shard_frame
+    sizes: ReadSizes | None = None,
+) -> SimpleNamespace:
+    """Fused phrase top-k + match count in ONE kernel pass per shard →
+    a deferred read whose collect() returns ≤ shards·(k+1) rows of
+    PHRASE_KERNEL_SCHEMA — each shard's top-k page candidates plus its
+    trailer row. The caller merges with merge_phrase_rows. Replaces
+    the two-action serve shape (count(), then orderBy().limit()) that
+    executed the phrase kernel twice per request.
+
+    Plan shape: index/wand._shard_rows over the phrase's distinct
+    terms, on the driver when the input bound from `sizes` (the warm
+    server's segments.ReadSizes, at the positional layout) is ≤
+    segments.DRIVER_READ_BYTES_MAX, else — also without `sizes` — as
+    one applyInPandas task per shard. `spark` is unused; it keeps the
+    call shape perfbench/tracing.py wraps."""
+    from .wand import _deny_list, _shard_rows
 
     if k < 0:
         raise ValueError(f"k must be >= 0 (got {k})")
     if not phrase:
-        return spark.createDataFrame([], PHRASE_KERNEL_SCHEMA)
+        return SimpleNamespace(collect=list)
+    terms = sorted(set(phrase))
     exc = _deny_list(excluded_doc_ids)
-    return _shard_frame(
-        pos_segments, sorted(set(phrase)),
+    nbytes = None if sizes is None else sizes.input_bytes(
+        terms, positional=True
+    )
+    return SimpleNamespace(collect=lambda: _shard_rows(
+        pos_segments, terms,
         lambda pdf, _: _phrase_topk_count_kernel(
             pdf, list(phrase), block, k, exc
         ),
-        PHRASE_KERNEL_SCHEMA,
-    )
+        PHRASE_KERNEL_SCHEMA, nbytes=nbytes,
+    )[0])
 
 
 def merge_phrase_rows(rows, k: int) -> tuple[list[tuple[int, int]], int]:

@@ -28,6 +28,8 @@ prune query scans to the touched terms.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -40,6 +42,84 @@ from . import varbyte as vb
 
 BLOCK = 128
 DEFAULT_DOCS_PER_SHARD = 65536
+
+# --- sizing a query kernel's input -------------------------------------------
+# Upper bounds on the Arrow bytes (values, the 4-byte per-row offsets of
+# variable-width columns, validity bits) that the rows a query kernel
+# receives hold, per posting, position and row of the packed layouts.
+# ReadSizes.input_bytes applies them.
+
+# a varbyte value (a uint64) takes at most ceil(64/7) bytes
+VARBYTE_MAX_BYTES = 10
+# a TF posting (INDEX_SEGMENTS_SCHEMA): its five varbyte streams (doc
+# id gap, tf, doclen, title tf, title length) at their widest, plus the
+# metadata of a whole block (a posting may open one): last doc id, max
+# score and the two field maxima at 8 bytes, five stream offsets at 4,
+# and those nine values' validity bits
+SEGMENT_POSTING_BYTES_MAX = 5 * VARBYTE_MAX_BYTES + 4 * 8 + 5 * 4 + 2
+# a positional posting (index/positional.POSITIONAL_SEGMENTS_SCHEMA):
+# doc id gap and count at their widest, plus a whole block's last doc
+# id and position offset and their validity bits
+POS_POSTING_BYTES_MAX = 2 * VARBYTE_MAX_BYTES + 2 * 8 + 1
+# a position: one varbyte gap
+POS_POSITION_BYTES_MAX = VARBYTE_MAX_BYTES
+# a segment row besides its term's UTF-8 bytes: the fixed-width columns
+# (shard, run_id, n_docs at 4; df, avgtl at 8), one offset for each of
+# the 15 variable-width columns and a validity bit per column. A
+# positional row's columns are a subset. Every row holds ≥ 1 posting,
+# so charging this to each posting bounds the rows.
+ROW_BYTES_MAX = 3 * 4 + 2 * 8 + 15 * 4 + 3
+# a side-frame row: a site member (shard int, doc_id long) or a
+# doc→site map row (plus site_id long), and its validity bits
+SIDE_ROW_BYTES_MAX = 4 + 8 + 8 + 1
+# The largest input bound a collected read runs its kernels for on the
+# driver (index/wand._shard_rows); a larger read keeps the
+# applyInPandas plan. scripts/executor_crossover.py, 4-core host,
+# local[2], 4 shards, a disjunctive top-20 + count read over webtext
+# indexes of 2k-120k docs (bounds 0.4-155 MB), two runs: driver
+# 70-135 ms up to a 12 MB bound, where the applyInPandas plan takes
+# 270-440 ms; at 63 MB 408/459 ms against 525/809 ms; at 113 MB
+# 556/782 ms against 765/800 ms — even in one run. The cutoff is the
+# largest bound the driver won clearly in both runs.
+DRIVER_READ_BYTES_MAX = 64 << 20
+
+
+@dataclass
+class ReadSizes:
+    """Per-term sizes of a served index, from which a collected read's
+    kernel input is bounded without a Spark job (index/wand._shard_rows).
+
+    postings / positions: term → its postings / positions over EVERY
+    run, base and delta. (The F4 pruning dictionary is not enough: a
+    delta page of a known term adds postings without raising its df.)
+    side_rows: rows of the doc frame a site-member or doc→site side
+    frame is drawn from."""
+
+    postings: dict
+    positions: dict
+    side_rows: int = 0
+
+    def input_bytes(
+        self, terms, positional: bool = False, side: bool = False
+    ) -> int:
+        """Upper bound on the bytes the kernels of a read over `terms`
+        receive: its segment rows — the TF layout, or with `positional`
+        the positional one — plus, with `side`, the side frame."""
+        n = SIDE_ROW_BYTES_MAX * self.side_rows if side else 0
+        for t in set(terms):
+            p = self.postings.get(t, 0)
+            n += p * (ROW_BYTES_MAX + len(t.encode()))
+            if positional:
+                n += (p * POS_POSTING_BYTES_MAX
+                      + self.positions.get(t, 0) * POS_POSITION_BYTES_MAX)
+            else:
+                n += p * SEGMENT_POSTING_BYTES_MAX
+        return n
+
+    def add_posting(self, term: str, tf: int) -> None:
+        """A delta page's posting of `term`, with `tf` positions."""
+        self.postings[term] = self.postings.get(term, 0) + 1
+        self.positions[term] = self.positions.get(term, 0) + tf
 
 
 def n_shards_for(

@@ -66,6 +66,28 @@ The driver merge ranks hit rows (score desc, doc_id asc) and sums the
 trailers' n_matched (_merge, or _ranked for lazy DataFrame results);
 service.explain sums the other counters. The phrase kernel
 (index/positional.py) fills n_matched only.
+
+Two executors run the same kernels. The lazy DataFrame APIs
+(search_packed, bool_search_packed, prefix_search_packed,
+facet_counts_packed, phrase_search_packed_terms) always build the
+distributed plan, _shard_frame: term-pruned scan → groupBy(shard)
+(or a cogroup with the side frame) → applyInPandas. The collected
+reads (search_packed_fused and everything on it — count, cursor,
+collapse, boosts, bm25f, more-like-this — bool_search_packed_fused,
+phrase_search_packed_topk_count and service.explain) go through
+_shard_rows, which runs the kernels on the DRIVER when an upper bound
+on their input bytes is ≤ segments.DRIVER_READ_BYTES_MAX, a cutoff
+measured against the applyInPandas plan. The bound comes from
+statistics the caller already holds (a segments.ReadSizes: postings
+and positions per term over every run, and the rows a side frame is
+drawn from), with no Spark job. Above it, or for a caller without
+sizes, the read keeps the distributed plan. The driver executor
+replaces a Python-worker task per shard (a fixed cost, whatever the
+input — see _shard_rows) by one JVM-only Arrow collect per frame; both
+executors see the same rows per shard and return the same rows, so
+responses, counts and rankings do not depend on the side a read took.
+Driver kernels of concurrent requests share this process: kernels keep
+no mutable module-level state.
 """
 
 from __future__ import annotations
@@ -84,6 +106,8 @@ from ..operators.search import lemmatize_query
 from . import varbyte as vb
 from .segments import (
     BLOCK,
+    DRIVER_READ_BYTES_MAX,
+    ReadSizes,
     _field_norm_np,
     bm25_scores_np,
     unpack_segment,
@@ -481,7 +505,10 @@ def _setdiff_sorted(cand: np.ndarray, excluded: np.ndarray) -> np.ndarray:
     return cand[~_member_mask(cand, excluded)]
 
 
+# shared by every kernel — read-only, since driver-run kernels of
+# concurrent requests share this module's state
 _NO_IDS = np.empty(0, dtype=np.int64)
+_NO_IDS.setflags(write=False)
 
 
 def _filter(
@@ -1144,6 +1171,51 @@ def _shard_frame(
     )
 
 
+def _shard_rows(
+    segments: DataFrame, terms: list[str], kernel, schema: str,
+    mode: str = "bm25", side: DataFrame | None = None,
+    nbytes: int | None = None,
+) -> tuple[list, str]:
+    """_shard_frame for a caller that collects its kernel rows →
+    (rows, executor). Both executors run the same scan and the same
+    kernel with the same cogroup semantics:
+
+      "spark"   _shard_frame(...).collect() — one applyInPandas task
+                per shard in the Python workers.
+      "driver"  the term-pruned scan and the side frame each collected
+                with one Arrow toPandas() (a JVM-only job, no Python
+                worker), then `kernel` called in-process per shard:
+                every shard with segment rows or side rows, as the
+                cogroup does; a shard without side rows gets an EMPTY
+                side frame (None means "no side").
+
+    The driver runs the read when `nbytes`, an upper bound on the bytes
+    the kernels would receive (segments.ReadSizes.input_bytes), is ≤
+    segments.DRIVER_READ_BYTES_MAX; without a bound, or above it, Spark
+    does. A Python worker task's fixed cost (125-200 ms per 1-row task
+    with a reused worker, against 2-5 ms for the same JVM collect, on a
+    4-core host at local[2]) dwarfs a small read's decode and score; a
+    large read keeps its rows off the driver and its shards' decode in
+    parallel tasks."""
+    if nbytes is None or nbytes > DRIVER_READ_BYTES_MAX:
+        plan = _shard_frame(segments, terms, kernel, schema, mode, side)
+        return plan.collect(), "spark"
+    seg = term_pruned_segments(segments, terms, mode).toPandas()
+    segs = {s: g.reset_index(drop=True) for s, g in seg.groupby("shard")}
+    if side is None:
+        outs = [kernel(g, None) for g in segs.values()]
+    else:
+        side_pdf = side.toPandas()
+        sides = {
+            s: g.reset_index(drop=True) for s, g in side_pdf.groupby("shard")
+        }
+        outs = [
+            kernel(segs.get(s, seg.iloc[:0]), sides.get(s, side_pdf.iloc[:0]))
+            for s in sorted(segs.keys() | sides.keys())
+        ]
+    return [r for out in outs for r in out.to_dict("records")], "driver"
+
+
 def _n_shards(segments: DataFrame, n_shards: int | None) -> int:
     """The manifest's n_shards when given, else inferred from the
     UNFILTERED segment frame (max shard id + 1 — exact whenever every
@@ -1183,7 +1255,7 @@ def _site_map_of(side_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return ids[order], sids[order]
 
 
-def _wand_frame(
+def _wand_kernel(
     segments: DataFrame, terms: list[str], n_docs: int, avgdl: float,
     k: int, conjunctive: bool, mode: str = "bm25",
     site: str | None = None, doc_stats: DataFrame | None = None,
@@ -1193,10 +1265,11 @@ def _wand_frame(
     fweights: tuple[float, float] | None = None,
     consumed: tuple[np.ndarray, np.ndarray] | None = None,
     count: bool = False,
-) -> DataFrame:
-    """Per-shard wand_shard output (KERNEL_SCHEMA) for resolved
+):
+    """(kernel, side) of the per-shard wand_shard read for resolved
     `terms` — every WAND read (ranked page, count, cursor, collapse,
-    explain, prefix) is this one plan."""
+    explain, prefix) runs this kernel, lazily (_wand_frame) or
+    collected (_wand_rows)."""
     exc = _deny_list(excluded_doc_ids)
     n_terms = len(terms)
     if collapse_n is not None:
@@ -1217,7 +1290,39 @@ def _wand_frame(
             consumed=consumed, count=count, **filters,
         )
 
+    return kernel, side
+
+
+def _wand_frame(
+    segments: DataFrame, terms: list[str], n_docs: int, avgdl: float,
+    k: int, conjunctive: bool, mode: str = "bm25", **kw,
+) -> DataFrame:
+    """Per-shard wand_shard output (KERNEL_SCHEMA) as a lazy frame
+    (_wand_kernel's keywords)."""
+    kernel, side = _wand_kernel(
+        segments, terms, n_docs, avgdl, k, conjunctive, mode, **kw
+    )
     return _shard_frame(segments, terms, kernel, KERNEL_SCHEMA, mode, side)
+
+
+def _wand_rows(
+    segments: DataFrame, terms: list[str], sizes: ReadSizes | None,
+    n_docs: int, avgdl: float, k: int, conjunctive: bool,
+    mode: str = "bm25", **kw,
+) -> tuple[list, str, int | None]:
+    """Per-shard wand_shard output rows (_wand_kernel's keywords) →
+    (rows, executor, the input bound the executor rule compared — None
+    without `sizes`)."""
+    kernel, side = _wand_kernel(
+        segments, terms, n_docs, avgdl, k, conjunctive, mode, **kw
+    )
+    nbytes = None if sizes is None else sizes.input_bytes(
+        terms, side=side is not None
+    )
+    rows, executor = _shard_rows(
+        segments, terms, kernel, KERNEL_SCHEMA, mode, side, nbytes
+    )
+    return rows, executor, nbytes
 
 
 def _merge(
@@ -1322,6 +1427,7 @@ def search_packed_fused(
     after: tuple[float, int] | None = None,
     after_sites: dict | None = None,
     return_sites: bool = False,
+    sizes: ReadSizes | None = None,
     _count: bool = True,
 ) -> tuple[list[tuple[int, float]], int]:
     """ONE kernel pass per shard serving BOTH the ranked page and the
@@ -1350,12 +1456,19 @@ def search_packed_fused(
     pages, when collapsed): cursor pagination in the same pass; the
     count stays cursor-independent. `return_sites` (collapse only)
     adds each hit's site_id. `_count=False` (the service's cached
-    cursor count) skips the count and returns None for it.
+    cursor count) skips the count and returns None for it. `sizes`
+    (segments.ReadSizes, the warm server's) bounds the read's kernel
+    input for the executor rule.
 
-    Plan shape: _wand_frame (term-pruned segment scan → one
-    applyInPandas kernel per shard) → _merge of ≤ n_shards·(offset+k+1)
-    rows (·collapse_n under collapse) — same rank order (score desc,
-    doc_id asc) as search_packed's TakeOrderedAndProject."""
+    Plan shape: _wand_rows — the term-pruned segment scan (plus the
+    site members or the doc→site map) and one wand_shard call per
+    shard, run on the driver when the input bound from `sizes` is ≤
+    segments.DRIVER_READ_BYTES_MAX (one JVM-only Spark job per
+    collected frame, no Python worker), else — also without `sizes` —
+    as the applyInPandas plan (_shard_frame); then _merge of
+    ≤ n_shards·(offset+k+1) rows (·collapse_n under collapse), same
+    rank order (score desc, doc_id asc) as search_packed's
+    TakeOrderedAndProject."""
     _check_page_args(k, offset, mode, boosts)
     if collapse_n is not None:
         if collapse_n < 1:
@@ -1394,13 +1507,13 @@ def search_packed_fused(
             np.array(keys, dtype=np.int64),
             np.array([int(after_sites[s]) for s in keys], dtype=np.int64),
         )
-    rows = _wand_frame(
-        segments, terms, n_docs, avgdl, offset + k, conjunctive, mode,
+    rows, _, _ = _wand_rows(
+        segments, terms, sizes, n_docs, avgdl, offset + k, conjunctive, mode,
         site=site, doc_stats=doc_stats, n_shards=n_shards,
         excluded_doc_ids=excluded_doc_ids, collapse_n=collapse_n,
         site_map=site_map, boosts=boosts, after=after, fweights=fweights,
         consumed=consumed, count=_count,
-    ).collect()
+    )
     hits, count = _merge(
         rows, k, offset, len(terms) if conjunctive else None, collapse_n,
         after_sites,
@@ -1537,18 +1650,19 @@ def match_count_packed(
     doc_stats: DataFrame | None = None,
     n_shards: int | None = None,
     excluded_doc_ids: list[int] | None = None,
+    sizes: ReadSizes | None = None,
 ) -> int:
     """A5 on the packed path (reference ApiService.java:104-113): the
     total match count before pagination — the trailers' n_matched of
     one counting pass with an empty page (k=0). `excluded_doc_ids`:
     tombstoned-but-not-compacted docs, dropped from the count (same
-    deny-list as search_packed)."""
+    deny-list as search_packed); `sizes` as in search_packed_fused."""
     # avgdl only shapes scores, and a k=0 page ranks nothing
     return search_packed_fused(
         spark, segments, term_stats, n_docs, 1.0, query, k=0,
         conjunctive=conjunctive, max_rel_freq=max_rel_freq, df_map=df_map,
         site=site, doc_stats=doc_stats, n_shards=n_shards,
-        excluded_doc_ids=excluded_doc_ids,
+        excluded_doc_ids=excluded_doc_ids, sizes=sizes,
     )[1]
 
 

@@ -41,12 +41,17 @@ survivors are scored exactly. Per-shard top-k, tiny global merge.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .search import bm25_term_score, lemmatize_query
+
+if TYPE_CHECKING:
+    from ..index.segments import ReadSizes
 
 # AST: ("term", str | None) | ("and", [node]) | ("or", [node])
 #    | ("not", node). A None term matches nothing (a leaf whose
@@ -460,17 +465,15 @@ def bool_shard(
     )
 
 
-def _bool_frame(
+def _bool_kernel(
     segments: DataFrame, n_docs: int, avgdl: float, query: str | Node,
     k: int, offset: int, lemmatize: bool, excluded_doc_ids, site,
     doc_stats, n_shards, count: bool,
-) -> DataFrame | None:
-    """Per-shard bool_shard output (top offset+k) over the shared
-    sharded driver (index/wand._shard_frame); None when no leaf term
-    survives analysis."""
-    from ..index.wand import (
-        KERNEL_SCHEMA, _allowed_of, _deny_list, _shard_frame, _site_side,
-    )
+):
+    """(leaf terms, kernel, side) of the per-shard bool_shard read (top
+    offset+k) for index/wand's shared drivers (_shard_frame,
+    _shard_rows); None when no leaf term survives analysis."""
+    from ..index.wand import _allowed_of, _deny_list, _site_side
 
     if k < 0 or offset < 0:
         raise ValueError(
@@ -483,15 +486,14 @@ def _bool_frame(
     if not leaves:
         return None
     exc = _deny_list(excluded_doc_ids)
-    return _shard_frame(
-        segments, leaves,
+    return (
+        leaves,
         lambda seg_pdf, mem_pdf: bool_shard(
             seg_pdf, ast, n_docs, avgdl, offset + k,
             allowed=_allowed_of(mem_pdf),
             excluded=exc, count=count,
         ),
-        KERNEL_SCHEMA,
-        side=_site_side(segments, site, doc_stats, n_shards),
+        _site_side(segments, site, doc_stats, n_shards),
     )
 
 
@@ -519,14 +521,18 @@ def bool_search_packed(
     are cogrouped into each shard's kernel (only the member list
     moves — the corpus never shuffles); corpus statistics stay
     global, same contract as every filtered-retrieval path."""
-    from ..index.wand import _ranked
+    from ..index.wand import KERNEL_SCHEMA, _ranked, _shard_frame
 
-    per_shard = _bool_frame(
+    plan = _bool_kernel(
         segments, n_docs, avgdl, query, k, offset, lemmatize,
         excluded_doc_ids, site, doc_stats, n_shards, count=False,
     )
-    if per_shard is None:
+    if plan is None:
         return spark.createDataFrame([], "doc_id long, score double")
+    leaves, kernel, side = plan
+    per_shard = _shard_frame(
+        segments, leaves, kernel, KERNEL_SCHEMA, side=side
+    )
     return _ranked(spark, per_shard, k, offset)
 
 
@@ -543,18 +549,32 @@ def bool_search_packed_fused(
     offset: int = 0,
     doc_stats: DataFrame | None = None,
     n_shards: int | None = None,
+    sizes: ReadSizes | None = None,
 ) -> tuple[list[tuple[int, float]], int]:
     """ONE kernel pass per shard serving BOTH the ranked page and the
     pre-pagination match count -> ([(doc_id, score)] offset-sliced and
     globally ranked, n_matched) — the warm server's boolean hot path,
-    same contract as index/wand.search_packed_fused."""
-    from ..index.wand import _merge
+    same contract as index/wand.search_packed_fused.
 
-    per_shard = _bool_frame(
+    Plan shape: index/wand._shard_rows over the leaf terms (plus the
+    site members with ``site``), on the driver when the input bound
+    from ``sizes`` (index/segments.ReadSizes, the warm server's) is ≤
+    segments.DRIVER_READ_BYTES_MAX, else — also without ``sizes`` — as
+    the applyInPandas plan; then index/wand._merge."""
+    from ..index.wand import KERNEL_SCHEMA, _merge, _shard_rows
+
+    plan = _bool_kernel(
         segments, n_docs, avgdl, query, k, offset, lemmatize,
         excluded_doc_ids, site, doc_stats, n_shards, count=True,
     )
-    if per_shard is None:
+    if plan is None:
         return [], 0
-    hits, count = _merge(per_shard.collect(), k, offset)
+    leaves, kernel, side = plan
+    nbytes = None if sizes is None else sizes.input_bytes(
+        leaves, side=side is not None
+    )
+    rows, _ = _shard_rows(
+        segments, leaves, kernel, KERNEL_SCHEMA, side=side, nbytes=nbytes
+    )
+    hits, count = _merge(rows, k, offset)
     return [(r["doc_id"], r["score"]) for r in hits], count

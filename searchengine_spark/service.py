@@ -26,7 +26,12 @@ stringifies a float).
 
 Scale shape: every search is the packed WAND path (index/wand.py) —
 term-pruned segment scan, per-shard kernels, ≤ shards·(offset+k) row
-merge. Every read endpoint then assembles its page the same way
+merge. search, boolean, phrase and explain bound each read's kernel
+input from the service's per-term sizes (`read_sizes`) and run its
+kernels on the driver when the bound is ≤
+index/segments.DRIVER_READ_BYTES_MAX, else in Spark's Python workers
+(index/wand._shard_rows). Every read endpoint then assembles its page
+the same way
 (`_items`): ONE filtered collect of the ranked page's ≤k ids from the
 cached serving meta (`_lookup` — no join, no re-sort; items keep the
 kernel merge's order), plus one more over docs_text when snippets are
@@ -44,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .index.refresh import _doc_meta_resolved, recover
-from .index.segments import write_delta_run, write_tombstones
+from .index.segments import ReadSizes, write_delta_run, write_tombstones
 from .index.wand import search_packed_fused
 from .operators.postings import prepare_docs_counts, read_index
 from .operators.search import corpus_constants
@@ -86,10 +91,16 @@ class SearchService:
         self.doc_stats = self.index.doc_stats.cache()
         self.term_stats = self.index.term_stats.cache()
         self.n_docs, self.avgdl = corpus_constants(self.doc_stats)
-        # hot dictionary: one collect at open, every query served from it
-        self.df_map = {
-            r["term"]: r["df"] for r in self.term_stats.collect()
-        }
+        # hot dictionary: one collect at open, every query served from
+        # it; the same rows seed the per-term sizes that bound a read's
+        # kernel input (index/wand._shard_rows) — index_page adds each
+        # delta posting to them, side_rows follows serve_meta
+        terms = self.term_stats.collect()
+        self.df_map = {r["term"]: r["df"] for r in terms}
+        self.read_sizes = ReadSizes(
+            postings=dict(self.df_map),
+            positions={r["term"]: r["cf"] for r in terms},
+        )
         # sorted dictionary keys for complete() — built lazily,
         # dropped whenever df_map learns terms
         self._sorted_terms: list | None = None
@@ -330,9 +341,11 @@ class SearchService:
 
         ONE kernel pass per request (search_packed_fused): each
         shard's WAND kernel returns its top page AND its match count
-        in the same applyInPandas call. Cursor pages (`after`) read
-        the cursor-independent count from a per-generation cache and
-        ask the kernel for it only on a miss.
+        in the same call, on whichever executor index/wand._shard_rows
+        picks. Snippets render in-process from the page's docs_text
+        rows. Cursor pages (`after`) read the cursor-independent count
+        from a per-generation cache and ask the kernel for it only on a
+        miss.
 
         `blend=w` reranks by `bm25 + w·authority` (authority = static
         PageRank relative to uniform mass — see `_blend_hits`) over an
@@ -446,6 +459,7 @@ class SearchService:
             self.avgdl, query, lemmas=q_lemmas, k=k_fetch,
             offset=offset if blend is None else 0, site=site,
             mode=mode, conjunctive=conjunctive, df_map=self.df_map,
+            sizes=self.read_sizes,
             doc_stats=self.serve_meta, n_shards=self.n_shards,
             excluded_doc_ids=self.tombstoned,
             collapse_n=collapse,
@@ -487,17 +501,22 @@ class SearchService:
             parts = {d: (s, a) for d, _, s, a in reranked}
         data = self._items(hits)
         if snippets:
-            from .functions.udfs import snippet_udf
+            # ≤limit texts render in-process with the textproc
+            # functions snippet_udf wraps — no Python-worker job
+            from .functions import textproc
 
-            snip = snippet_udf(q_lemmas, 3, mode=self.snippet_mode)
+            snip = (
+                textproc.make_snippet_charwalk
+                if self.snippet_mode == "charwalk"
+                else textproc.make_snippet
+            )
             texts = self._lookup(
-                self.docs_text, [d["doc_id"] for d in data],
-                snip(F.col("text")).alias("snippet"),
+                self.docs_text, [d["doc_id"] for d in data], "text"
             )
             for item in data:
                 # a page landed by index_page has no docs_text row
                 row = texts.get(item["doc_id"])
-                item["snippet"] = row["snippet"] if row else ""
+                item["snippet"] = snip(row["text"], q_lemmas, 3) if row else ""
         if parts is not None:
             for item in data:
                 item["bm25"], item["authority"] = parts[item["doc_id"]]
@@ -598,10 +617,13 @@ class SearchService:
         per-shard θ bound. The per-partition metrics the north rule
         requires for the BUILD (index/manifest.py), extended to the
         query side. 'term^w' boost syntax is honored — explain runs the
-        same boosted kernels search would run."""
-        from .index.wand import (
-            _resolve_fweights, _resolve_terms, _wand_frame,
-        )
+        same boosted kernels search would run.
+
+        `executor` says where the kernels ran — "driver" or "spark"
+        (None: no term survived, nothing ran) — and `input_bytes_bound`
+        the bound the rule compared with
+        index/segments.DRIVER_READ_BYTES_MAX (index/wand._shard_rows)."""
+        from .index.wand import _resolve_fweights, _resolve_terms, _wand_rows
         from .operators.search import lemmatize_query, parse_boosted_query
 
         boosts = None
@@ -631,15 +653,18 @@ class SearchService:
             "n_candidates": 0,
             "n_scored": 0,
             "theta_max": 0.0,
+            "executor": None,
+            "input_bytes_bound": 0,
         }
         if not terms:
             return out
-        rows = _wand_frame(
-            self.segments, terms, self.n_docs, self.avgdl, limit,
-            conjunctive, mode, site=site, doc_stats=self.serve_meta,
+        rows, out["executor"], out["input_bytes_bound"] = _wand_rows(
+            self.segments, terms, self.read_sizes, self.n_docs, self.avgdl,
+            limit, conjunctive, mode, site=site, doc_stats=self.serve_meta,
             n_shards=self.n_shards, excluded_doc_ids=self.tombstoned,
             boosts=boosts, fweights=fweights,
-        ).filter("is_trailer").collect()
+        )
+        rows = [r for r in rows if r["is_trailer"]]
         out["shards"] = len(rows)
         for f in ("n_postings", "n_blocks", "n_blocks_decoded",
                   "n_candidates", "n_scored"):
@@ -691,6 +716,7 @@ class SearchService:
                 phrase_search_packed_topk_count(
                     self.spark, self.pos_segments, phr, limit,
                     excluded_doc_ids=self.tombstoned or None,
+                    sizes=self.read_sizes,
                 ).collect(),
                 limit,
             )
@@ -740,7 +766,7 @@ class SearchService:
             self.spark, self.segments, self.n_docs, self.avgdl, query,
             k=limit, excluded_doc_ids=self.tombstoned, site=site,
             offset=offset, doc_stats=self.serve_meta,
-            n_shards=self.n_shards,
+            n_shards=self.n_shards, sizes=self.read_sizes,
         )
         return {"result": True, "count": count, "data": self._items(hits)}
 
@@ -823,6 +849,7 @@ class SearchService:
             self.spark, self.segments, self.term_stats, self.n_docs,
             self.avgdl, query=" ".join(terms), lemmas=terms, k=limit,
             conjunctive=False, df_map=self.df_map,
+            sizes=self.read_sizes,
             doc_stats=self.serve_meta, n_shards=self.n_shards,
             excluded_doc_ids=excluded,
         )
@@ -988,13 +1015,13 @@ class SearchService:
         # the hot dictionary must learn the delta's terms or they prune
         # as absent; unseen terms get df=1, mirroring the delta run's
         # stats approximation (segments.delta_segments fillna) — exact
-        # df arrives with the next compaction's stats refresh
+        # df arrives with the next compaction's stats refresh. Every
+        # posting of the page, known term or not, grows read_sizes.
         from .operators.postings import explode_term_counts
 
-        for r in (
-            explode_term_counts(prepared).select("term").distinct().collect()
-        ):
+        for r in explode_term_counts(prepared).select("term", "tf").collect():
             t = r["term"]
+            self.read_sizes.add_posting(t, r["tf"])
             if t not in self.df_map:
                 self._delta_terms.add(t)
                 self.df_map[t] = 1
@@ -1125,7 +1152,7 @@ class SearchService:
             .select("doc_id", "url", "site", "title")
             .cache()
         )
-        self.serve_meta.count()
+        self.read_sizes.side_rows = self.serve_meta.count()
         # deny-list: tombstoned docs whose postings are still packed
         # (deletes since the last compaction — bounded by compaction
         # cadence, not corpus size; compaction drops them from the
