@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from ..operators.postings import IndexTables, write_index
 from ..schemas import INDEX_SEGMENTS_SCHEMA
 from .manifest import fs_touch
-from .segments import _pack_group, unpack_segment
+from .segments import unpack_segment
 
 UNPACKED_SCHEMA = (
     "term string, shard int, doc_id long, tf long, doclen long, run_id int"
@@ -63,12 +63,26 @@ def _opt_title(df: DataFrame):
     return col.cast("string").alias("title")
 
 
+def read_pinned(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet tree at `path` as the files listed now: a later
+    append under `path` does not change what this frame (or a cache of
+    it) reads, and its cache entry is its own (service.Generation)."""
+    # the listing read carries basePath so that no cached plain read of
+    # `path` substitutes for it: inputFiles() reads the cache-substituted
+    # plan, which lists no files
+    first = spark.read.option("basePath", path).parquet(path)
+    return (
+        spark.read.schema(first.schema).option("basePath", path)
+        .parquet(*first.inputFiles())
+    )
+
+
 def _doc_meta_resolved(spark: SparkSession, base: str) -> DataFrame:
     """(doc_id, url, site, title, mrun, deleted): doc-level last-wins
     meta resolution across base doc_stats (run 0) and
-    idx/doc_meta_runs. Ties at the same run resolve deleted-wins;
-    duplicate meta rows (at-least-once replay of a delta batch)
-    collapse here too."""
+    idx/doc_meta_runs, the appended runs pinned to the files listed
+    now. Ties at the same run resolve deleted-wins; duplicate meta rows
+    (at-least-once replay of a delta batch) collapse here too."""
     base_meta = spark.read.parquet(f"{base}/idx/doc_stats")
     meta = base_meta.select(
         "doc_id", "url", "site", _opt_title(base_meta),
@@ -79,7 +93,7 @@ def _doc_meta_resolved(spark: SparkSession, base: str) -> DataFrame:
     # delta doc from the repack and then delete their meta for good)
     delta_path = f"{base}/idx/doc_meta_runs"
     if os.path.isdir(delta_path):
-        raw = spark.read.parquet(delta_path)
+        raw = read_pinned(spark, delta_path)
         deltas = raw.select(
             "doc_id", "url", "site", _opt_title(raw),
             F.col("run_id").alias("mrun"), "deleted",

@@ -35,26 +35,137 @@ the same way
 (`_items`): ONE filtered collect of the ranked page's ≤k ids from the
 cached serving meta (`_lookup` — no join, no re-sort; items keep the
 kernel merge's order), plus one more over docs_text when snippets are
-rendered. statistics is one aggregation over cached doc/term stats; an
-indexPage lands a delta run (append-only) and invalidates only the
-segment cache. At cluster scale the same object runs on a driver
+rendered. statistics is one aggregation over cached doc/term stats.
+
+Every request reads ONE immutable `Generation` — the cached frames,
+deny-list, dictionary and response caches of one index state — and an
+indexPage/delete lands its files, opens the next generation and
+publishes it with one reference assignment, so a read never sees a
+half-written state. At cluster scale the same object runs on a driver
 serving a Spark Connect or Thrift endpoint.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
+import threading
+import weakref
+from collections import ChainMap, OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .index.refresh import _doc_meta_resolved, recover
+from .index.refresh import _doc_meta_resolved, read_pinned, recover
 from .index.segments import ReadSizes, write_delta_run, write_tombstones
 from .index.wand import search_packed_fused
 from .operators.postings import prepare_docs_counts, read_index
 from .operators.search import corpus_constants
 
 _DELTA_EPOCH = dt.datetime(2024, 1, 1)
+
+
+def _unpersist(frames: dict) -> None:
+    for df in frames.values():
+        df.unpersist()
+
+
+def _fresh(factory):
+    """A per-generation field: a new `factory()` in every generation."""
+    return dataclasses.field(default_factory=factory, init=False)
+
+
+def _fork(m: ChainMap) -> ChainMap:
+    """`m` over the same base layer with a private copy of its small
+    delta layer — what a write may grow without touching the
+    published generation."""
+    return ChainMap(dict(m.maps[0]), *m.maps[1:])
+
+
+@dataclasses.dataclass(frozen=True, eq=False)
+class Generation:
+    """One index state as served: every value a write changes.
+
+    Publication: a write lands its files, builds the next Generation
+    completely and publishes it with ONE assignment (`svc._gen = nxt`).
+    A request reads `svc._gen` once and passes that snapshot down, so
+    it never sees a mix of two states. Readers take no lock; writers
+    are SINGLE (index_page / delete_page / refresh_positional must not
+    overlap each other — the same rule as refresh_and_repack).
+
+    File pinning: `segments`, the delta meta runs under `serve_meta`
+    and the positional frame — every tree a write appends to — read
+    the files listed when the generation opened
+    (index/refresh.read_pinned). A plain read of a directory is
+    refreshed by Spark on every append under it (`recacheByPath`), so
+    an in-flight reader of the old generation would see the new rows,
+    and two generations' caches of one path would share one cache
+    entry. An OVERWRITE is not covered: a pinned frame over replaced
+    files reads nothing (see refresh_positional).
+
+    Retirement: `retire` unpersists the frames this generation owns
+    once the last request holding it drops it (CPython frees it with
+    its last reference); `evolve` hands frames that a write left
+    unchanged to the next generation, which then owns them.
+
+    `df_map` and the `read_sizes` maps are ChainMap(delta, base): a
+    write copies only the delta layer. Lazily built values (site map,
+    site dim, fuzzy keys, positional frame, sorted terms) live in
+    `lazy` slots, each built at most once per generation."""
+
+    segments: DataFrame
+    serve_meta: DataFrame
+    # tombstoned docs whose postings are still packed (None: none)
+    tombstoned: list | None
+    n_shards: int
+    df_map: ChainMap
+    read_sizes: ReadSizes
+    # the run id the next write lands as
+    next_run_id: int
+    # response / cursor-count caches of this state (see _cached)
+    responses: OrderedDict = _fresh(OrderedDict)
+    counts: OrderedDict = _fresh(OrderedDict)
+    _slots: dict = _fresh(dict)
+    # the cached frames `retire` unpersists
+    _frames: dict = _fresh(dict)
+    _lock: threading.Lock = _fresh(threading.Lock)
+    retire: weakref.finalize = dataclasses.field(init=False, repr=False)
+
+    def __post_init__(self):
+        self._frames.update(segments=self.segments, serve_meta=self.serve_meta)
+        retire = weakref.finalize(self, _unpersist, self._frames)
+        retire.atexit = False
+        object.__setattr__(self, "retire", retire)
+
+    def lazy(self, name: str, build):
+        """Slot `name`: `build()`'s value, built at most once, under
+        this generation's lock. A DataFrame value is cached and
+        materialized, and owned by the generation."""
+        if name not in self._slots:
+            with self._lock:
+                if name not in self._slots:
+                    v = build()
+                    if isinstance(v, DataFrame):
+                        self._frames[name] = v.cache()
+                        v.count()
+                    self._slots[name] = v
+        return self._slots[name]
+
+    def evolve(self, keep: tuple = (), **changes) -> Generation:
+        """The next generation: this one with `changes`, empty response
+        caches, and the lazy slots in `keep` (the write left their
+        inputs unchanged). Frames both share become the next one's."""
+        nxt = dataclasses.replace(self, **changes)
+        for name in keep:
+            if name in self._slots:
+                nxt._slots[name] = self._slots[name]
+                if name in self._frames:
+                    nxt._frames[name] = self._frames[name]
+        # a snapshot: a reader may still add a lazy frame to this one
+        for name, df in list(self._frames.items()):
+            if nxt._frames.get(name) is df:
+                del self._frames[name]
+        return nxt
 
 
 class SearchService:
@@ -94,36 +205,53 @@ class SearchService:
         # hot dictionary: one collect at open, every query served from
         # it; the same rows seed the per-term sizes that bound a read's
         # kernel input (index/wand._shard_rows) — index_page adds each
-        # delta posting to them, side_rows follows serve_meta
+        # delta posting to them, side_rows follows serve_meta. Delta
+        # runs only ever add to the front layer of each ChainMap.
         terms = self.term_stats.collect()
-        self.df_map = {r["term"]: r["df"] for r in terms}
-        self.read_sizes = ReadSizes(
-            postings=dict(self.df_map),
-            positions={r["term"]: r["cf"] for r in terms},
-        )
-        # sorted dictionary keys for complete() — built lazily,
-        # dropped whenever df_map learns terms
-        self._sorted_terms: list | None = None
-        # terms df_map learned from delta runs (disjoint from the base
-        # term_stats by construction) — the fuzzy key table unions
-        # them in so suggest/correct see what search sees
-        self._delta_terms: set[str] = set()
+        dfs = {r["term"]: r["df"] for r in terms}
         # bounded response cache for the read endpoints (see _cached);
         # cache_responses=False serves every request uncached (bench
         # uses it so min-of-N latency measures the kernels, not hits)
         self._cache_responses = cache_responses
-        self._response_cache: dict = {}
-        # positional runs: read (or built) on the first phrase request
-        self.pos_segments: DataFrame | None = None
-        self._pos_stale = False
-        self._open_segments()
+        segments, top_run, top_shard = self._open_segments()
+        serve_meta, tombstoned, side_rows, top_mrun = self._open_meta()
+        # shard mapping: the build manifest is authoritative (checked
+        # on resume — index/manifest.py); fall back to the observed
+        # max shard id for indexes built without one
+        from .index.manifest import read_manifest
+
+        rec = (
+            read_manifest(self.spark, self.base)
+            .filter(F.col("stage") == "pack_segments")
+            .select("n_shards").distinct().collect()
+        )
+        cfs = {r["term"]: r["cf"] for r in terms}
+        self._gen = Generation(
+            segments, serve_meta, tombstoned,
+            int(rec[0]["n_shards"]) if len(rec) == 1 else top_shard + 1,
+            ChainMap({}, dfs),
+            ReadSizes(ChainMap({}, dfs), ChainMap({}, cfs), side_rows),
+            # past every run on disk, tombstone runs included: a write
+            # must never tie an earlier one (a re-index tied with its
+            # delete resolves deleted-wins)
+            max(top_run, top_mrun) + 1,
+        )
         # optional query-independent authority table
-        # (linkgraph.write_static_rank) enabling blended ranking; the
-        # frame stays DISTRIBUTED (|corpus| rows — only the ≤K'
-        # candidates of a blend request ever reach the driver)
-        self.static_rank: DataFrame | None = None
-        self._rank_n = 0
+        # (linkgraph.write_static_rank) enabling blended ranking, with
+        # its row count: (frame, n) or None. The frame stays
+        # DISTRIBUTED (|corpus| rows — only the ≤K' candidates of a
+        # blend request ever reach the driver)
+        self.static_rank: tuple[DataFrame, int] | None = None
         self.reload_static_rank()
+
+    @property
+    def segments(self) -> DataFrame:
+        """The served generation's packed segments."""
+        return self._gen.segments
+
+    @property
+    def _response_cache(self) -> OrderedDict:
+        return self._gen.responses
 
     # -- response cache ------------------------------------------------------
 
@@ -131,25 +259,27 @@ class SearchService:
 
     def _cached(self, key: tuple, compute):
         """Serve repeated identical read requests from memory — the
-        front-tier result cache every production engine runs. ANY
-        index mutation clears it wholesale (`_open_segments`, which
-        index_page/delete_page funnel through; `refresh_positional`;
-        `reload_static_rank`) — correctness by invalidation, not by
-        TTL, so a request after a write always recomputes. Bounded
-        FIFO (oldest-inserted evicted at _CACHE_MAX); entries are
-        deep-copied in AND out so callers cannot mutate cached
-        state."""
+        front-tier result cache every production engine runs.
+        `compute(g)` answers from the generation `g` this call read
+        once, and the answer is cached IN `g`: a write publishes a new
+        generation with empty caches, so a request after a write always
+        recomputes, and a request that began before it can only fill
+        the retired generation's cache — correctness by generation, not
+        by TTL. Bounded FIFO (oldest-inserted evicted at _CACHE_MAX);
+        entries are deep-copied in AND out so callers cannot mutate
+        cached state."""
         import copy
 
+        g = self._gen
         if not self._cache_responses:
-            return compute()
-        hit = self._response_cache.get(key)
+            return compute(g)
+        hit = g.responses.get(key)
         if hit is not None:
             return copy.deepcopy(hit)
-        out = compute()
-        if len(self._response_cache) >= self._CACHE_MAX:
-            self._response_cache.pop(next(iter(self._response_cache)))
-        self._response_cache[key] = copy.deepcopy(out)
+        out = compute(g)
+        if len(g.responses) >= self._CACHE_MAX:
+            g.responses.popitem(last=False)
+        g.responses[key] = copy.deepcopy(out)
         return out
 
     # public read endpoints: thin caching wrappers over the *_uncached
@@ -184,8 +314,8 @@ class SearchService:
              oversample if blend is not None else None, correct, collapse,
              syn_key, synonym_weight if synonyms else None,
              tuple(after) if after else None, as_key, fw_key),
-            lambda: self._search_uncached(
-                query, site=site, offset=offset, limit=limit,
+            lambda g: self._search_uncached(
+                g, query, site=site, offset=offset, limit=limit,
                 snippets=snippets, mode=mode, conjunctive=conjunctive,
                 blend=blend, oversample=oversample, correct=correct,
                 collapse=collapse, synonyms=synonyms,
@@ -198,8 +328,8 @@ class SearchService:
                conjunctive: bool = True) -> dict:
         return self._cached(
             ("facets", query, top, conjunctive),
-            lambda: self._facets_uncached(
-                query, top=top, conjunctive=conjunctive),
+            lambda g: self._facets_uncached(
+                g, query, top=top, conjunctive=conjunctive),
         )
 
     def complete(self, prefix: str, topn: int = 10) -> dict:
@@ -207,20 +337,17 @@ class SearchService:
         ranked (df desc, term asc) — the same bounded-expansion rule as
         prefix retrieval (operators/prefix.expand_prefix), served
         driver-side from the hot term dictionary via one bisect over a
-        lazily-built sorted key list (no Spark job; rebuilt when
-        index_page teaches the dictionary new delta terms). At cluster
-        scale the dictionary is a term-sorted table and this is a
-        row-group-pruned range scan. → {result, completions:
+        sorted key list built once per generation (no Spark job). At
+        cluster scale the dictionary is a term-sorted table and this is
+        a row-group-pruned range scan. → {result, completions:
         [{term, df}, …]}."""
         if not prefix:
             return {"result": True, "completions": []}
 
-        def _compute():
+        def _compute(g):
             import bisect
 
-            terms = self._sorted_terms
-            if terms is None:
-                terms = self._sorted_terms = sorted(self.df_map)
+            terms = g.lazy("terms", lambda: sorted(g.df_map))
             lo = bisect.bisect_left(terms, prefix)
             # the prefix range ends where the prefix stops matching
             if ord(prefix[-1]) < 0x10FFFF:
@@ -234,7 +361,7 @@ class SearchService:
                     len(terms),
                 )
             hits = sorted(
-                ((t, self.df_map[t]) for t in terms[lo:hi]),
+                ((t, g.df_map[t]) for t in terms[lo:hi]),
                 key=lambda td: (-td[1], td[0]),
             )[:topn]
             return {
@@ -249,42 +376,42 @@ class SearchService:
     def phrase(self, query: str, limit: int = 20) -> dict:
         return self._cached(
             ("phrase", query, limit),
-            lambda: self._phrase_uncached(query, limit=limit),
+            lambda g: self._phrase_uncached(g, query, limit=limit),
         )
 
     def boolean(self, query: str, limit: int = 20,
                 site: str | None = None, offset: int = 0) -> dict:
         return self._cached(
             ("boolean", query, limit, site, offset),
-            lambda: self._boolean_uncached(
-                query, limit=limit, site=site, offset=offset),
+            lambda g: self._boolean_uncached(
+                g, query, limit=limit, site=site, offset=offset),
         )
 
     def prefix(self, pfx: str, limit: int = 20,
                max_expansions: int = 50) -> dict:
         return self._cached(
             ("prefix", pfx, limit, max_expansions),
-            lambda: self._prefix_uncached(
-                pfx, limit=limit, max_expansions=max_expansions),
+            lambda g: self._prefix_uncached(
+                g, pfx, limit=limit, max_expansions=max_expansions),
         )
 
     def suggest(self, word: str, topn: int = 10) -> list[dict]:
         return self._cached(
             ("suggest", word, topn),
-            lambda: self._suggest_uncached(word, topn=topn),
+            lambda g: self._suggest_uncached(g, word, topn=topn),
         )
 
     def more_like_this(self, url: str, limit: int = 20,
                        max_terms: int = 25) -> dict:
         return self._cached(
             ("mlt", url, limit, max_terms),
-            lambda: self._mlt_uncached(url, limit=limit,
-                                       max_terms=max_terms),
+            lambda g: self._mlt_uncached(g, url, limit=limit,
+                                         max_terms=max_terms),
         )
 
     def statistics(self) -> dict:
         return self._cached(
-            ("statistics",), lambda: self._statistics_uncached()
+            ("statistics",), self._statistics_uncached
         )
 
     def reload_static_rank(self) -> None:
@@ -292,30 +419,37 @@ class SearchService:
         rebuild (`linkgraph.build_static_rank` over the refreshed
         corpus — the graph is corpus-derived, so rank refresh is a
         batch job, not a per-page delta); blended requests serve the
-        new table immediately. Absent table → blend requests raise."""
+        new table immediately. Absent table → blend requests raise.
+
+        The new table is built, then published with one assignment; a
+        blend request meanwhile serves the old reference (uncached: a
+        same-path cache entry is shared, so the old one goes first)."""
         from .index.manifest import fs_exists
 
-        self._response_cache.clear()
         if self.static_rank is not None:
-            self.static_rank.unpersist()
-        self.static_rank = None
-        self._rank_n = 0
+            self.static_rank[0].unpersist()
+        rank = None
         if fs_exists(self.spark, f"{self.base}/staticrank"):
-            self.static_rank = self.spark.read.parquet(
-                f"{self.base}/staticrank"
-            ).cache()
-            self._rank_n = self.static_rank.count()
-            if self._rank_n == 0:
-                # an empty table is as unservable as an absent one —
-                # treat it the same so blend raises the clear error
-                # instead of dividing by zero in _blend_hits
-                self.static_rank.unpersist()
-                self.static_rank = None
+            df = self.spark.read.parquet(f"{self.base}/staticrank").cache()
+            n = df.count()
+            # an empty table is as unservable as an absent one — treat
+            # it the same so blend raises the clear error instead of
+            # dividing by zero in _blend_hits
+            if n:
+                rank = (df, n)
+            else:
+                df.unpersist()
+        self.static_rank = rank
+        # blended responses cached before the swap are stale: publish
+        # the same state with empty caches
+        g = self._gen
+        self._gen = g.evolve(keep=tuple(g._slots))
 
     # -- /api/search ---------------------------------------------------------
 
     def _search_uncached(
         self,
+        g: Generation,
         query: str,
         site: str | None = None,
         offset: int = 0,
@@ -344,8 +478,8 @@ class SearchService:
         in the same call, on whichever executor index/wand._shard_rows
         picks. Snippets render in-process from the page's docs_text
         rows. Cursor pages (`after`) read the cursor-independent count
-        from a per-generation cache and ask the kernel for it only on a
-        miss.
+        from the generation's count cache and ask the kernel for it
+        only on a miss.
 
         `blend=w` reranks by `bm25 + w·authority` (authority = static
         PageRank relative to uniform mass — see `_blend_hits`) over an
@@ -367,7 +501,7 @@ class SearchService:
         `collapse=n` (host collapsing, beyond-reference): at most n
         results per site in the ranked list — the "omitted similar
         results" semantics. Served by the collapse-aware WAND kernel
-        over a per-index-generation cached doc→site map (see
+        over the generation's cached doc→site map (see
         index.wand.site_map_frame); the response `count` stays the
         UNCOLLAPSED match total. Mutually exclusive with `site`
         (enforced in the kernel entry) and with `blend` (rerank after
@@ -423,7 +557,7 @@ class SearchService:
         q_lemmas = lemmatize_query(query)
         corrections: dict[str, str] = {}
         if correct:
-            q_lemmas, corrections = self._correct_lemmas(q_lemmas)
+            q_lemmas, corrections = self._correct_lemmas(g, q_lemmas)
         if synonyms:
             # OR-expansion-with-discount (operators.search
             # .expand_synonyms): synonym lemmas join the query at
@@ -444,28 +578,25 @@ class SearchService:
         k_fetch = limit if blend is None else oversample * (offset + limit)
         # the match count is cursor-INDEPENDENT (same total for every
         # page of one query), so it is cached per (query, site,
-        # conjunctive) and index generation (_open_segments clears the
-        # cache on any write): a cursor page asks the kernel for it
-        # only on a miss. Only counts over the verbatim query seed it —
+        # conjunctive) in the generation: a cursor page asks the
+        # kernel for it only on a miss. Only counts over the verbatim query seed it —
         # corrections/synonyms rewrite q_lemmas (a cursor page cannot
         # combine with them) and a collapse count is diversity-capped
         ckey = (query, site, conjunctive)
         count = (
-            self._match_count_cache.get(ckey)
+            g.counts.get(ckey)
             if after is not None and collapse is None else None
         )
         hits, fused_count = search_packed_fused(
-            self.spark, self.segments, self.term_stats, self.n_docs,
+            self.spark, g.segments, self.term_stats, self.n_docs,
             self.avgdl, query, lemmas=q_lemmas, k=k_fetch,
             offset=offset if blend is None else 0, site=site,
-            mode=mode, conjunctive=conjunctive, df_map=self.df_map,
-            sizes=self.read_sizes,
-            doc_stats=self.serve_meta, n_shards=self.n_shards,
-            excluded_doc_ids=self.tombstoned,
+            mode=mode, conjunctive=conjunctive, df_map=g.df_map,
+            sizes=g.read_sizes,
+            doc_stats=g.serve_meta, n_shards=g.n_shards,
+            excluded_doc_ids=g.tombstoned,
             collapse_n=collapse,
-            site_map=(
-                self._get_site_map() if collapse is not None else None
-            ),
+            site_map=self._site_map(g) if collapse is not None else None,
             boosts=boosts, field_weights=field_weights,
             after=(
                 (float(after[0]), int(after[1]))
@@ -487,19 +618,17 @@ class SearchService:
                 site_counts[int(sid)] = site_counts.get(int(sid), 0) + 1
             hits = [(d, sc) for d, sc, _ in hits]
         elif not corrections and not synonyms and (
-            ckey not in self._match_count_cache
+            ckey not in g.counts
         ):
-            if len(self._match_count_cache) >= self._CACHE_MAX:
-                self._match_count_cache.pop(
-                    next(iter(self._match_count_cache))
-                )
-            self._match_count_cache[ckey] = count
+            if len(g.counts) >= self._CACHE_MAX:
+                g.counts.popitem(last=False)
+            g.counts[ckey] = count
         parts = None
         if blend is not None:
             reranked = self._blend_hits(hits, blend)[offset:offset + limit]
             hits = [(d, b) for d, b, _, _ in reranked]
             parts = {d: (s, a) for d, _, s, a in reranked}
-        data = self._items(hits)
+        data = self._items(g, hits)
         if snippets:
             # ≤limit texts render in-process with the textproc
             # functions snippet_udf wraps — no Python-worker job
@@ -528,7 +657,7 @@ class SearchService:
         return out
 
     def _correct_lemmas(
-        self, lemmas: list[str]
+        self, g: Generation, lemmas: list[str]
     ) -> tuple[list[str], dict[str, str]]:
         """Replace dictionary-absent lemmas by their best
         edit-distance-1 term (SymSpell keyed lookup, ranked df desc /
@@ -539,7 +668,7 @@ class SearchService:
         already-present term."""
         from .operators.fuzzy import suggest_terms_multi
 
-        unknown = [t for t in dict.fromkeys(lemmas) if t not in self.df_map]
+        unknown = [t for t in dict.fromkeys(lemmas) if t not in g.df_map]
         corrections: dict[str, str] = {}
         if unknown:
             # ONE keyed lookup job for the whole query (VERDICT r4):
@@ -549,13 +678,13 @@ class SearchService:
                 r["word"]: r["term"]
                 for r in suggest_terms_multi(
                     self.term_stats, unknown, topn=1,
-                    key_index=self._get_fuzzy_keys(),
+                    key_index=self._fuzzy_keys(g),
                 ).collect()
             }
             corrections = {t: best[t] for t in unknown if t in best}
         fixed: dict[str, None] = {}
         for t in lemmas:
-            if t in self.df_map:
+            if t in g.df_map:
                 fixed.setdefault(t)
             elif t in corrections:
                 fixed.setdefault(corrections[t])
@@ -581,13 +710,14 @@ class SearchService:
         (blended desc, doc_id asc)."""
         from .operators.linkgraph import PR_SCALE
 
-        if self.static_rank is None:
+        rank = self.static_rank
+        if rank is None:
             raise ValueError(
                 "blend needs a static-rank table at <base>/staticrank "
                 "(operators/linkgraph.write_static_rank)"
             )
-        ranks = self._lookup(self.static_rank, [d for d, _ in hits], "rank")
-        unit = PR_SCALE / self._rank_n
+        ranks = self._lookup(rank[0], [d for d, _ in hits], "rank")
+        unit = PR_SCALE / rank[1]
         out = []
         for d, s in hits:
             row = ranks.get(int(d))
@@ -635,16 +765,17 @@ class SearchService:
                 # instead of a ValueError inside the executor pandas
                 # UDF (opaque PythonException)
                 raise ValueError("term^w boosts need bm25/bm25f mode")
+        g = self._gen
         fweights = _resolve_fweights(mode, field_weights)
         lemmas = lemmatize_query(query)
         terms = _resolve_terms(
-            self.term_stats, self.n_docs, lemmas, 0.95, self.df_map
+            self.term_stats, self.n_docs, lemmas, 0.95, g.df_map
         )
         out = {
             "result": True,
             "query": query,
             "lemmas": lemmas,
-            "terms": [{"term": t, "df": self.df_map[t]} for t in terms],
+            "terms": [{"term": t, "df": g.df_map[t]} for t in terms],
             "shards": 0,
             "n_postings": 0,
             "n_blocks": 0,
@@ -659,9 +790,9 @@ class SearchService:
         if not terms:
             return out
         rows, out["executor"], out["input_bytes_bound"] = _wand_rows(
-            self.segments, terms, self.read_sizes, self.n_docs, self.avgdl,
-            limit, conjunctive, mode, site=site, doc_stats=self.serve_meta,
-            n_shards=self.n_shards, excluded_doc_ids=self.tombstoned,
+            g.segments, terms, g.read_sizes, self.n_docs, self.avgdl,
+            limit, conjunctive, mode, site=site, doc_stats=g.serve_meta,
+            n_shards=g.n_shards, excluded_doc_ids=g.tombstoned,
             boosts=boosts, fweights=fweights,
         )
         rows = [r for r in rows if r["is_trailer"]]
@@ -677,7 +808,8 @@ class SearchService:
 
     # -- /api/phrase (beyond-reference) --------------------------------------
 
-    def _phrase_uncached(self, query: str, limit: int = 20) -> dict:
+    def _phrase_uncached(self, g: Generation, query: str,
+                         limit: int = 20) -> dict:
         """Exact-sequence ("quoted") retrieval over the positional
         packed runs (index/positional.py): {result, count, data:
         [{site, uri, url, doc_id, phrase_tf}]}, ranked (phrase_tf
@@ -702,8 +834,8 @@ class SearchService:
         phr = tokenize_lemmatize(query)
         if not phr:
             return {"result": True, "count": 0, "data": []}
-        self._ensure_positional()
-        if not self._pos_stale:
+        pos_segments, stale = self._positional(g)
+        if not stale:
             # hot path: ONE kernel pass per shard returns the shard's
             # top-k rows AND its match count (the trailer row of the
             # shared kernel contract). Exact because an in-sync possegs
@@ -714,23 +846,23 @@ class SearchService:
             # instead.
             page, count = merge_phrase_rows(
                 phrase_search_packed_topk_count(
-                    self.spark, self.pos_segments, phr, limit,
-                    excluded_doc_ids=self.tombstoned or None,
-                    sizes=self.read_sizes,
+                    self.spark, pos_segments, phr, limit,
+                    excluded_doc_ids=g.tombstoned or None,
+                    sizes=g.read_sizes,
                 ).collect(),
                 limit,
             )
         else:
             hits = phrase_search_packed_terms(
-                self.spark, self.pos_segments, phr
+                self.spark, pos_segments, phr
             )
-            if self.tombstoned:
-                hits = hits.filter(~F.col("doc_id").isin(self.tombstoned))
+            if g.tombstoned:
+                hits = hits.filter(~F.col("doc_id").isin(g.tombstoned))
             # count only SERVABLE docs (semi-join the living meta): a
             # stale possegs snapshot — possible after a crash-recovery
             # discard — may still hold rows for docs compaction removed
             hits = hits.join(
-                self.serve_meta.select("doc_id"), "doc_id", "left_semi"
+                g.serve_meta.select("doc_id"), "doc_id", "left_semi"
             )
             count = hits.count()
             page = [
@@ -739,12 +871,13 @@ class SearchService:
                 .limit(limit).collect()
             ]
         return {"result": True, "count": count,
-                "data": self._items(page, "phrase_tf")}
+                "data": self._items(g, page, "phrase_tf")}
 
     # -- /api/boolean (beyond-reference) ---------------------------------------
 
     def _boolean_uncached(
         self,
+        g: Generation,
         query: str,
         limit: int = 20,
         site: str | None = None,
@@ -763,17 +896,17 @@ class SearchService:
         from .operators.boolquery import bool_search_packed_fused
 
         hits, count = bool_search_packed_fused(
-            self.spark, self.segments, self.n_docs, self.avgdl, query,
-            k=limit, excluded_doc_ids=self.tombstoned, site=site,
-            offset=offset, doc_stats=self.serve_meta,
-            n_shards=self.n_shards, sizes=self.read_sizes,
+            self.spark, g.segments, self.n_docs, self.avgdl, query,
+            k=limit, excluded_doc_ids=g.tombstoned, site=site,
+            offset=offset, doc_stats=g.serve_meta,
+            n_shards=g.n_shards, sizes=g.read_sizes,
         )
-        return {"result": True, "count": count, "data": self._items(hits)}
+        return {"result": True, "count": count, "data": self._items(g, hits)}
 
     # -- /api/prefix (beyond-reference) ----------------------------------------
 
-    def _prefix_uncached(self, pfx: str, limit: int = 20,
-               max_expansions: int = 50) -> dict:
+    def _prefix_uncached(self, g: Generation, pfx: str, limit: int = 20,
+                         max_expansions: int = 50) -> dict:
         """Wildcard retrieval (``spar*``): bounded dictionary
         expansion ranked (df desc, term) then disjunctive block-max
         WAND over the expanded terms (operators/prefix.py). Deletes
@@ -781,17 +914,18 @@ class SearchService:
         from .operators.prefix import prefix_search_packed
 
         hits = prefix_search_packed(
-            self.spark, self.segments, self.term_stats, self.n_docs,
+            self.spark, g.segments, self.term_stats, self.n_docs,
             self.avgdl, pfx, k=limit, max_expansions=max_expansions,
-            excluded_doc_ids=self.tombstoned,
+            excluded_doc_ids=g.tombstoned,
         ).collect()
         return {"result": True, "data": self._items(
-            [(r["doc_id"], r["score"]) for r in hits]
+            g, [(r["doc_id"], r["score"]) for r in hits]
         )}
 
     # -- /api/suggest (beyond-reference) ---------------------------------------
 
-    def _suggest_uncached(self, word: str, topn: int = 10) -> list[dict]:
+    def _suggest_uncached(self, g: Generation, word: str,
+                          topn: int = 10) -> list[dict]:
         """Did-you-mean: dictionary terms within edit distance 1 of
         ``word`` (operators/fuzzy.py SymSpell keys), ranked
         (df desc, term asc). Served from the cached key table over the
@@ -804,13 +938,13 @@ class SearchService:
             {"term": r["term"], "df": r["df"]}
             for r in suggest_terms(
                 self.term_stats, word, topn=topn,
-                key_index=self._get_fuzzy_keys(),
+                key_index=self._fuzzy_keys(g),
             ).collect()
         ]
 
     # -- /api/moreLikeThis (beyond-reference) ----------------------------------
 
-    def _mlt_uncached(self, url: str, limit: int = 20,
+    def _mlt_uncached(self, g: Generation, url: str, limit: int = 20,
                       max_terms: int = 25) -> dict:
         """Documents similar to ``url`` (operators/mlt.py): the page's
         top tf·idf terms become a disjunctive BM25 query over the
@@ -833,64 +967,68 @@ class SearchService:
                 "more_like_this needs docs_text (doc_id, text) at open"
             )
         doc_id = self._url_doc_id(url)
-        if not self._lookup(self.serve_meta, [doc_id]):
+        if not self._lookup(g.serve_meta, [doc_id]):
             return {"result": False, "error": "url not in index"}
         row = self._lookup(self.docs_text, [doc_id], "text").get(doc_id)
         if row is None or row["text"] is None:
             return {"result": False, "error": "document text unavailable"}
         counts = Counter(textproc.tokenize_lemmatize(row["text"]))
         terms = select_mlt_terms(
-            dict(counts), self.df_map, self.n_docs, max_terms
+            dict(counts), g.df_map, self.n_docs, max_terms
         )
         if not terms:
             return {"result": True, "count": 0, "terms": [], "data": []}
-        excluded = list(self.tombstoned or []) + [doc_id]
+        excluded = list(g.tombstoned or []) + [doc_id]
         hits, count = search_packed_fused(
-            self.spark, self.segments, self.term_stats, self.n_docs,
+            self.spark, g.segments, self.term_stats, self.n_docs,
             self.avgdl, query=" ".join(terms), lemmas=terms, k=limit,
-            conjunctive=False, df_map=self.df_map,
-            sizes=self.read_sizes,
-            doc_stats=self.serve_meta, n_shards=self.n_shards,
+            conjunctive=False, df_map=g.df_map,
+            sizes=g.read_sizes,
+            doc_stats=g.serve_meta, n_shards=g.n_shards,
             excluded_doc_ids=excluded,
         )
         return {"result": True, "count": count, "terms": terms,
-                "data": self._items(hits)}
+                "data": self._items(g, hits)}
 
     def refresh_positional(self) -> None:
         """Rebuild the positional snapshot from the docs_text rows of
         the docs the index serves now (e.g. after index_page calls) and
-        swap the cache."""
-        self._response_cache.clear()
-        if self.pos_segments is not None:
-            self.pos_segments.unpersist()
-        self.pos_segments = None
-        self._build_positional()
-        self._ensure_positional()
+        publish a generation that reads it.
 
-    def _ensure_positional(self) -> None:
-        if self.pos_segments is not None:
-            return
-        from pyspark.errors import AnalysisException
+        READER EXCLUSION: the rebuild overwrites <base>/possegs in
+        place, and a pinned frame over replaced files reads no rows, so
+        a phrase request overlapping this call may answer empty — pause
+        phrase reads across it, as across refresh_and_repack's swap.
+        The publish itself is still one assignment."""
+        g = self._gen
+        self._build_positional(g)
+        nxt = g.evolve(keep=("site_map", "site_dim", "fuzzy", "terms"))
+        self._positional(nxt)
+        self._gen = nxt
 
+    def _positional(self, g: Generation) -> tuple[DataFrame, bool]:
+        """(positional runs, stale) of `g`: <base>/possegs, read — or
+        built from docs_text if absent — on the generation's first
+        phrase request."""
         from .index.manifest import fs_exists
 
-        try:
-            df = self.spark.read.parquet(f"{self.base}/possegs")
-        except AnalysisException:
-            self._build_positional()
-            df = self.spark.read.parquet(f"{self.base}/possegs")
-        # a crash-recovery discard (refresh._recover_pos) marks a kept
-        # pre-compaction snapshot: its rows may reference docs the main
-        # index no longer serves, so phrase counts must go through the
-        # exact serve_meta semi-join instead of the fused kernel until
-        # a repack/rebuild replaces the tree (which drops the marker)
-        self._pos_stale = fs_exists(
-            self.spark, f"{self.base}/possegs/_STALE"
-        )
-        self.pos_segments = df.cache()
-        self.pos_segments.count()
+        def read():
+            if not fs_exists(self.spark, f"{self.base}/possegs"):
+                self._build_positional(g)
+            return read_pinned(self.spark, f"{self.base}/possegs")
 
-    def _build_positional(self) -> None:
+        return g.lazy("possegs", read), g.lazy(
+            # a crash-recovery discard (refresh._recover_pos) marks a
+            # kept pre-compaction snapshot: its rows may reference docs
+            # the main index no longer serves, so phrase counts must go
+            # through the exact serve_meta semi-join instead of the
+            # fused kernel until a repack/rebuild replaces the tree
+            # (which drops the marker)
+            "pos_stale",
+            lambda: fs_exists(self.spark, f"{self.base}/possegs/_STALE"),
+        )
+
+    def _build_positional(self, g: Generation) -> None:
         from .functions.udfs import tokenize_lemmatize_udf
         from .index.positional import (
             build_positional_segments,
@@ -906,10 +1044,10 @@ class SearchService:
         # row with no living doc would otherwise count in phrase()
         # without an item to serve
         prepared = self.docs_text.join(
-            self.serve_meta.select("doc_id"), "doc_id", "left_semi"
+            g.serve_meta.select("doc_id"), "doc_id", "left_semi"
         ).select("doc_id", tokenize_lemmatize_udf("text").alias("lemmas"))
         write_positional_segments(
-            build_positional_segments(prepared, self.n_shards),
+            build_positional_segments(prepared, g.n_shards),
             f"{self.base}/possegs",
         )
         # the rebuild is in sync with the served doc set by construction
@@ -918,11 +1056,10 @@ class SearchService:
         from .index.manifest import fs_delete
 
         fs_delete(self.spark, f"{self.base}/possegs/_STALE")
-        self._pos_stale = False
 
     # -- /api/statistics -----------------------------------------------------
 
-    def _statistics_uncached(self) -> dict:
+    def _statistics_uncached(self, g: Generation) -> dict:
         """StatisticsResponse dict: corpus-wide totals + per-site page
         and lemma counts (StatisticsServiceImpl.java:29-78 — pages =
         countBySite, lemmas = per-site distinct lemma count)."""
@@ -950,7 +1087,7 @@ class SearchService:
                 "total": {
                     "sites": len(detailed),
                     "pages": self.n_docs,
-                    "lemmas": len(self.df_map),
+                    "lemmas": len(g.df_map),
                     "indexing": False,
                 },
                 "detailed": detailed,
@@ -978,11 +1115,12 @@ class SearchService:
             " lang string",
         )
         prepared = prepare_docs_counts(row_df, use_html=True)
-        run_id = self._next_run_id()
+        g = self._gen
+        run_id = g.next_run_id
         write_delta_run(
             self.spark, prepared, self.base, self.term_stats,
             n_docs=self.n_docs, avgdl=self.avgdl,
-            n_shards=self.n_shards, run_id=run_id,
+            n_shards=g.n_shards, run_id=run_id,
         )
         # positional lifecycle parity: if this index carries positional
         # runs, land the page's positional DELTA run under the same
@@ -1003,15 +1141,11 @@ class SearchService:
             )
             write_positional_segments(
                 build_positional_segments(
-                    pos_prepared, self.n_shards, run_id=run_id
+                    pos_prepared, g.n_shards, run_id=run_id
                 ),
                 f"{self.base}/possegs",
                 mode="append",
             )
-            if self.pos_segments is not None:  # cached snapshot is stale
-                self.pos_segments.unpersist()
-                self.pos_segments = None
-        self._open_segments()  # delta appended → segment cache is stale
         # the hot dictionary must learn the delta's terms or they prune
         # as absent; unseen terms get df=1, mirroring the delta run's
         # stats approximation (segments.delta_segments fillna) — exact
@@ -1019,14 +1153,23 @@ class SearchService:
         # posting of the page, known term or not, grows read_sizes.
         from .operators.postings import explode_term_counts
 
+        df_map = _fork(g.df_map)
+        sizes = ReadSizes(_fork(g.read_sizes.postings),
+                          _fork(g.read_sizes.positions))
         for r in explode_term_counts(prepared).select("term", "tf").collect():
-            t = r["term"]
-            self.read_sizes.add_posting(t, r["tf"])
-            if t not in self.df_map:
-                self._delta_terms.add(t)
-                self.df_map[t] = 1
-        self._sorted_terms = None  # complete() must see the new terms
+            sizes.add_posting(r["term"], r["tf"])
+            df_map.setdefault(r["term"], 1)
         doc_id = prepared.select("doc_id").collect()[0]["doc_id"]
+        segments, _, _ = self._open_segments()
+        serve_meta, tombstoned, sizes.side_rows, _ = self._open_meta()
+        # the positional runs changed (if any); the dictionary's key
+        # set — all the fuzzy keys and complete()'s list read — only
+        # if the page brought a new term
+        learned = len(df_map.maps[0]) > len(g.df_map.maps[0])
+        self._gen = g.evolve(
+            () if learned else ("fuzzy", "terms"), segments=segments,
+            serve_meta=serve_meta, tombstoned=tombstoned, df_map=df_map,
+            read_sizes=sizes, next_run_id=run_id + 1)
         return {"result": True, "doc_id": int(doc_id), "run_id": run_id}
 
     def delete_page(self, url: str) -> dict:
@@ -1039,17 +1182,23 @@ class SearchService:
         from the deny-list the packed kernels take: the doc vanishes
         from hits AND match counts in the same call. Unknown urls
         no-op with result=False."""
+        g = self._gen
         doc_id = self._url_doc_id(url)
-        run_id = self._next_run_id()
+        run_id = g.next_run_id
         n = write_tombstones(self.spark, [doc_id], self.base, run_id)
         if not n:
             return {"result": False, "error": "url not in index"}
-        self._open_segments()  # refresh serve_meta + deny-list
+        serve_meta, tombstoned, side_rows, _ = self._open_meta()
+        # segments, positional runs and the dictionary are unchanged
+        self._gen = g.evolve(
+            ("possegs", "pos_stale", "fuzzy", "terms"), serve_meta=serve_meta,
+            tombstoned=tombstoned, next_run_id=run_id + 1,
+            read_sizes=dataclasses.replace(g.read_sizes, side_rows=side_rows))
         return {"result": True, "doc_id": doc_id, "run_id": run_id}
 
     # -- internals -----------------------------------------------------------
 
-    def _facets_uncached(self, query: str, top: int = 10,
+    def _facets_uncached(self, g: Generation, query: str, top: int = 10,
                          conjunctive: bool = True) -> dict:
         """Per-site facet counts of the match set ("N results from
         site X") → {result, facets: [{site, count}, ...]} ordered
@@ -1062,11 +1211,11 @@ class SearchService:
         from .index.wand import facet_counts_packed
 
         rows = facet_counts_packed(
-            self.spark, self.segments, self.term_stats, self.serve_meta,
+            self.spark, g.segments, self.term_stats, g.serve_meta,
             self.n_docs, query, conjunctive=conjunctive, top=top,
-            df_map=self.df_map, n_shards=self.n_shards,
-            excluded_doc_ids=self.tombstoned,
-            site_map=self._get_site_map(), site_dim=self._get_site_dim(),
+            df_map=g.df_map, n_shards=g.n_shards,
+            excluded_doc_ids=g.tombstoned,
+            site_map=self._site_map(g), site_dim=self._site_dim(g),
         ).collect()
         return {
             "result": True,
@@ -1075,113 +1224,77 @@ class SearchService:
             ],
         }
 
-    def _get_site_dim(self):
+    def _site_dim(self, g: Generation) -> DataFrame:
         """(site_id, site) dimension for facet responses — cached per
-        index generation alongside the site map."""
-        if self._site_dim_df is None:
-            self._site_dim_df = (
-                self.serve_meta.select(
-                    F.xxhash64("site").alias("site_id"), "site"
-                ).distinct().cache()
-            )
-            self._site_dim_df.count()
-        return self._site_dim_df
+        generation alongside the site map."""
+        return g.lazy("site_dim", lambda: g.serve_meta.select(
+            F.xxhash64("site").alias("site_id"), "site"
+        ).distinct())
 
-    def _get_site_map(self):
-        """doc→site_id map for collapse requests, keyed to the doc-space
-        shards, repartitioned by shard and cached — built ONCE per index
-        generation (invalidated by _open_segments), so a collapse query's
-        cogroup reuses the cached partitioning instead of re-shuffling
-        |corpus| rows per request."""
+    def _site_map(self, g: Generation) -> DataFrame:
+        """doc→site_id map for collapse and facet requests, keyed to the
+        doc-space shards, repartitioned by shard and cached once per
+        generation, so a collapse query's cogroup reuses the cached
+        partitioning instead of re-shuffling |corpus| rows per
+        request."""
         from .index.wand import site_map_frame
 
-        if self._site_map_df is None:
-            self._site_map_df = (
-                site_map_frame(self.serve_meta, self.n_shards)
-                .repartition(self.n_shards, "shard")
-                .cache()
-            )
-            self._site_map_df.count()
-        return self._site_map_df
+        return g.lazy("site_map", lambda: site_map_frame(
+            g.serve_meta, g.n_shards
+        ).repartition(g.n_shards, "shard"))
 
-    def _get_fuzzy_keys(self):
-        """SymSpell delete-1 key table over the open-time term_stats
-        snapshot, built ONCE per index generation and cached
-        (operators/fuzzy.py documents the trap this avoids: without
-        it every suggest/correct request re-explodes the whole
-        dictionary — a full dictionary pass per query at a 10^9-term
-        dictionary). Same lifecycle as the site map: lazily built,
-        invalidated by _open_segments. At web scale this table is
-        materialized key-partitioned next to term_stats offline; the
-        cache here is the local[N] stand-in."""
+    def _fuzzy_keys(self, g: Generation) -> DataFrame:
+        """SymSpell delete-1 key table over the served dictionary,
+        built once per generation and cached (operators/fuzzy.py
+        documents the trap this avoids: without it every
+        suggest/correct request re-explodes the whole dictionary — a
+        full dictionary pass per query at a 10^9-term dictionary). At
+        web scale this table is materialized key-partitioned next to
+        term_stats offline; the cache here is the local[N] stand-in."""
         from .operators.fuzzy import deletion_key_index
 
-        if self._fuzzy_keys_df is None:
-            dict_df = self.term_stats.select("term", "df")
-            if self._delta_terms:
-                # delta-learned terms (df=1 until compaction refreshes
-                # stats, mirroring df_map) — disjoint from the base
-                # dictionary by construction, plain union suffices
-                dict_df = dict_df.unionByName(
-                    self.spark.createDataFrame(
-                        [(t, self.df_map[t])
-                         for t in sorted(self._delta_terms)],
-                        "term string, df bigint",
-                    )
+        # the delta layer holds the delta-learned terms (df=1 until
+        # compaction refreshes stats) — disjoint from the base
+        # dictionary by construction, plain union suffices
+        return g.lazy("fuzzy", lambda: deletion_key_index(
+            self.term_stats.select("term", "df").unionByName(
+                self.spark.createDataFrame(
+                    sorted(g.df_map.maps[0].items()), "term string, df bigint"
                 )
-            self._fuzzy_keys_df = deletion_key_index(dict_df).cache()
-            self._fuzzy_keys_df.count()
-        return self._fuzzy_keys_df
+            )
+        ))
 
-    def _open_segments(self) -> None:
-        # every index mutation funnels through here — drop cached
-        # responses before swapping the serving state
-        self._response_cache.clear()
-        self._match_count_cache: dict = {}
-        self._drop_generation()
-        self.segments = self.spark.read.parquet(
-            f"{self.base}/segments"
-        ).cache()
-        self.segments.count()
+    def _open_segments(self) -> tuple[DataFrame, int, int | None]:
+        """The packed segments, pinned and cached, with their newest run
+        id and largest shard id (the one action also fills the cache)."""
+        segments = read_pinned(self.spark, f"{self.base}/segments").cache()
+        top_run, top_shard = segments.agg(
+            F.max("run_id"), F.max("shard")
+        ).collect()[0]
+        return segments, int(top_run or 0), top_shard
+
+    def _open_meta(self) -> tuple[DataFrame, list | None, int, int]:
+        """The serving meta (cached), the deny-list, the serving meta's
+        row count and the newest meta run, tombstones included."""
         # serving meta = doc-level last-wins across base doc_stats AND
         # delta meta runs (minus tombstones) — a delta-landed doc must
         # resolve its url/site before any compaction runs
         resolved = _doc_meta_resolved(self.spark, self.base)
-        self.serve_meta = (
+        serve_meta = (
             resolved.filter(~F.col("deleted"))
             .select("doc_id", "url", "site", "title")
             .cache()
         )
-        self.read_sizes.side_rows = self.serve_meta.count()
+        n = serve_meta.count()
         # deny-list: tombstoned docs whose postings are still packed
         # (deletes since the last compaction — bounded by compaction
         # cadence, not corpus size; compaction drops them from the
         # resolved meta entirely, emptying this list)
-        self.tombstoned = [
-            r["doc_id"]
-            for r in resolved.filter(F.col("deleted"))
-            .select("doc_id").collect()
-        ] or None
-        # shard mapping: the build manifest is authoritative (checked
-        # on resume — index/manifest.py); fall back to the observed
-        # max shard id for indexes built without one
-        from .index.manifest import read_manifest
-
-        rec = (
-            read_manifest(self.spark, self.base)
-            .filter(F.col("stage") == "pack_segments")
-            .select("n_shards").distinct().collect()
-        )
-        if len(rec) == 1:
-            self.n_shards = int(rec[0]["n_shards"])
-        else:
-            self.n_shards = int(
-                self.segments.agg(F.max("shard")).collect()[0][0]
-            ) + 1
-
-    def _next_run_id(self) -> int:
-        top = self.segments.agg(F.max("run_id")).collect()[0][0]
-        return int(top or 0) + 1
+        dead, top_mrun = resolved.agg(
+            F.collect_list(F.when(F.col("deleted"), F.col("doc_id"))),
+            F.max("mrun"),
+        ).collect()[0]
+        return serve_meta, list(dead) or None, n, int(top_mrun or 0)
 
     def _lookup(self, frame: DataFrame, ids: list, *cols) -> dict:
         """{doc_id: Row(doc_id, *cols)} for ≤k ids of a doc_id-keyed
@@ -1195,12 +1308,13 @@ class SearchService:
             .select("doc_id", *cols).collect()
         }
 
-    def _items(self, hits: list, value: str = "relevance") -> list[dict]:
+    def _items(self, g: Generation, hits: list,
+               value: str = "relevance") -> list[dict]:
         """Ranked (doc_id, value) hits → SearchItem dicts in hit order.
         url/title resolve through serve_meta (doc-level last-wins incl.
         delta runs); a hit it does not serve drops."""
         meta = self._lookup(
-            self.serve_meta, [d for d, _ in hits], "url", "title"
+            g.serve_meta, [d for d, _ in hits], "url", "title"
         )
         data = []
         for d, v in hits:
@@ -1230,21 +1344,9 @@ class SearchService:
             .collect()[0]["d"]
         )
 
-    # frames cached per index generation: _open_segments drops and
-    # rebuilds them on every write, close() drops them for good
-    _GENERATION = ("segments", "serve_meta", "_fuzzy_keys_df",
-                   "_site_map_df", "_site_dim_df")
-
-    def _drop_generation(self) -> None:
-        for name in self._GENERATION:
-            df = getattr(self, name, None)
-            if df is not None:
-                df.unpersist()
-            setattr(self, name, None)
-
     def close(self) -> None:
-        self._drop_generation()
-        for df in (self.doc_stats, self.term_stats, self.static_rank,
-                   self.pos_segments):
-            if df is not None:
-                df.unpersist()
+        self._gen.retire()
+        for df in (self.doc_stats, self.term_stats):
+            df.unpersist()
+        if self.static_rank is not None:
+            self.static_rank[0].unpersist()

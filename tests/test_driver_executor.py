@@ -72,7 +72,7 @@ def lifecycle(spark, tmp_path_factory):
                                             limit=4)["data"][1:3]]
     for url in victims:
         assert svc.delete_page(url)["result"]
-    assert svc.tombstoned and len(svc.tombstoned) == 2
+    assert svc._gen.tombstoned and len(svc._gen.tombstoned) == 2
     yield svc
     svc.close()
 
@@ -99,8 +99,8 @@ def _sweep(svc) -> list:
     out.append(svc.search("дельтастраница"))
     out.append(match_count_packed(
         svc.spark, svc.segments, svc.term_stats, svc.n_docs, q,
-        conjunctive=False, df_map=svc.df_map,
-        excluded_doc_ids=svc.tombstoned, sizes=svc.read_sizes,
+        conjunctive=False, df_map=svc._gen.df_map,
+        excluded_doc_ids=svc._gen.tombstoned, sizes=svc._gen.read_sizes,
     ))
     out.append(svc.boolean("быстрый AND NOT поиск"))
     out.append(svc.boolean("(быстрый OR индекс) AND поиск",
@@ -142,16 +142,18 @@ def test_input_bound_covers_collected_rows(lifecycle):
     delta runs included: the delta page's postings of known terms count
     although they leave the pruning df as it was."""
     svc = lifecycle
-    sizes = svc.read_sizes
-    assert sizes.postings["поиск"] > svc.df_map["поиск"]
-    assert sizes.side_rows == svc.serve_meta.count()
+    g = svc._gen
+    sizes = g.read_sizes
+    assert sizes.postings["поиск"] > g.df_map["поиск"]
+    assert sizes.side_rows == g.serve_meta.count()
     svc.phrase("быстрый поиск")  # opens the positional runs
     for terms in (["быстрый", "поиск"], ["индекс"], ["дельтастраница"]):
         got = term_pruned_segments(svc.segments, terms).toArrow().nbytes
         assert 0 < got <= sizes.input_bytes(terms)
-        got = term_pruned_segments(svc.pos_segments, terms).toArrow().nbytes
+        got = term_pruned_segments(
+            svc._positional(g)[0], terms).toArrow().nbytes
         assert 0 < got <= sizes.input_bytes(terms, positional=True)
-    site_map = site_map_frame(svc.serve_meta, svc.n_shards)
+    site_map = site_map_frame(g.serve_meta, g.n_shards)
     assert site_map.toArrow().nbytes <= sizes.input_bytes([], side=True)
 
 

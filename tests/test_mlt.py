@@ -68,7 +68,7 @@ def _brute_mlt(idx, n, avgdl, src_text, src_doc_id, max_terms, k,
 
 def test_mlt_matches_bruteforce_reference(spark, served):
     svc, idx, (n, avgdl), docs_text = served
-    src = svc.serve_meta.orderBy("doc_id").limit(1).collect()[0]
+    src = svc._gen.serve_meta.orderBy("doc_id").limit(1).collect()[0]
     text = docs_text.filter(
         F.col("doc_id") == src["doc_id"]
     ).collect()[0]["text"]
@@ -91,16 +91,16 @@ def test_mlt_term_selection_rule(served):
     svc, idx, (n, _), docs_text = served
     row = docs_text.limit(1).collect()[0]
     counts = Counter(textproc.tokenize_lemmatize(row["text"]))
-    sel = select_mlt_terms(dict(counts), svc.df_map, n, max_terms=5)
+    sel = select_mlt_terms(dict(counts), svc._gen.df_map, n, max_terms=5)
     assert 0 < len(sel) <= 5
     # executable spec: exactly the first 5 of the (-weight_e4, term)
     # total order over the doc's dictionary terms (the DuckDB oracle
     # in contract.q_more_like_this pins the same rule cross-engine)
     def w(t):
         return math.floor(
-            (counts[t] * math.log(n / svc.df_map[t])) * 10000.0 + 0.5
+            (counts[t] * math.log(n / svc._gen.df_map[t])) * 10000.0 + 0.5
         )
-    scored = sorted((-w(t), t) for t in counts if t in svc.df_map)
+    scored = sorted((-w(t), t) for t in counts if t in svc._gen.df_map)
     assert sel == [t for _, t in scored[:5]]
 
 

@@ -460,7 +460,7 @@ def test_repack_visible_to_new_service_while_old_stays_open(spark, tmp_path):
         resp = svc2.search(NEWTERM, limit=5)
         assert resp["count"] == 1
         assert resp["data"][0]["url"] == "https://site1.example/fresh-page"
-        assert NEWTERM in svc2.df_map  # term_stats read post-swap state
+        assert NEWTERM in svc2._gen.df_map  # term_stats read post-swap state
         # the raw path reads must see the folded generation too
         seg = spark.read.parquet(f"{inc}/segments")
         assert seg.filter(F.col("run_id") != 0).count() == 0
@@ -478,7 +478,7 @@ def test_recover_marks_discarded_possegs_stale(spark, tmp_path):
     state forward but the possegs repack temp is incomplete, the kept
     pre-compaction snapshot gets the _STALE marker
     (refresh._recover_pos) — a service over it must route phrase
-    counts through the exact serve_meta semi-join (_pos_stale) instead
+    counts through the exact serve_meta semi-join (pos_stale) instead
     of the fused kernel — and the next successful repack replaces the
     tree and clears the marker."""
     import os
@@ -491,8 +491,8 @@ def test_recover_marks_discarded_possegs_stale(spark, tmp_path):
     docs = corpus_df(spark, 60)
     docs_text = prepare_docs(docs, use_html=True).select("doc_id", "text")
     svc = SearchService(spark, b, docs_text=docs_text)
-    svc._ensure_positional()  # builds <b>/possegs from docs_text
-    assert svc._pos_stale is False
+    # builds <b>/possegs from docs_text
+    assert svc._positional(svc._gen)[1] is False
     base_phrase = svc.phrase("быстрый поиск", limit=10)
     svc.close()
 
@@ -505,8 +505,7 @@ def test_recover_marks_discarded_possegs_stale(spark, tmp_path):
 
     svc2 = SearchService(spark, b, docs_text=docs_text)
     try:
-        svc2._ensure_positional()
-        assert svc2._pos_stale is True
+        assert svc2._positional(svc2._gen)[1] is True
         # the stale snapshot still serves exact results through the
         # semi-join path (no removed docs in this scenario, so the
         # response matches the pre-crash one)
@@ -519,8 +518,7 @@ def test_recover_marks_discarded_possegs_stale(spark, tmp_path):
     assert not os.path.exists(f"{b}/possegs/_STALE")
     svc3 = SearchService(spark, b, docs_text=docs_text)
     try:
-        svc3._ensure_positional()
-        assert svc3._pos_stale is False
+        assert svc3._positional(svc3._gen)[1] is False
         assert svc3.phrase("быстрый поиск", limit=10) == base_phrase
     finally:
         svc3.close()
@@ -542,12 +540,12 @@ def test_refresh_positional_clears_stale_marker_on_uri_base(spark, tmp_path):
     )
     svc = SearchService(spark, uri, docs_text=docs_text)
     try:
-        svc._ensure_positional()
+        svc._positional(svc._gen)
         marker = f"{uri}/possegs/_STALE"
         fs_touch(spark, marker)
         assert fs_exists(spark, marker)
         svc.refresh_positional()
         assert not fs_exists(spark, marker)
-        assert svc._pos_stale is False
+        assert svc._positional(svc._gen)[1] is False
     finally:
         svc.close()

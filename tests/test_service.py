@@ -159,7 +159,7 @@ def test_phrase_endpoint_matches_scan(spark, served):
     want = {
         r["doc_id"]: r["phrase_tf"]
         for r in phrase_match(lemma_text, phrase).collect()
-        if not (svc.tombstoned and r["doc_id"] in svc.tombstoned)
+        if not (svc._gen.tombstoned and r["doc_id"] in svc._gen.tombstoned)
     }
     got = {d["doc_id"]: d["phrase_tf"] for d in resp["data"]}
     assert got == want and resp["count"] == len(want)
@@ -303,7 +303,8 @@ def test_prefix_endpoint(spark, served):
          for r in prefix_search(
              spark, idx, "по", constants=constants
          ).collect()
-         if not (svc.tombstoned and r["doc_id"] in svc.tombstoned)),
+         if not (svc._gen.tombstoned
+                 and r["doc_id"] in svc._gen.tombstoned)),
         key=lambda x: (-x[1], x[0]),
     )[:10]
     assert [d["doc_id"] for d in resp["data"]] == [d for d, _ in rel]
@@ -379,14 +380,14 @@ def test_search_collapse_per_site(spark, served):
                 break
     assert [d["doc_id"] for d in resp["data"]] == want
     # cached map reused across requests...
-    m1 = svc._get_site_map()
+    m1 = svc._site_map(svc._gen)
     svc.search(q, limit=5, collapse=2, conjunctive=False)
-    assert svc._get_site_map() is m1
+    assert svc._site_map(svc._gen) is m1
     # ...and invalidated by a write
     svc.index_page(
         "https://site0.example/collapsetest", text="быстрый поиск тест"
     )
-    assert svc._site_map_df is None
+    assert "site_map" not in svc._gen._slots
     resp2 = svc.search(q, limit=10, collapse=1, conjunctive=False)
     assert len({d["site"] for d in resp2["data"]}) == len(resp2["data"])
     with pytest.raises(ValueError, match="collapse and blend"):
@@ -443,15 +444,15 @@ def test_fuzzy_key_index_cached_and_invalidated(spark, served):
     the dictionary per request — and ANY write invalidates it so
     fresh-page terms become suggestable."""
     svc, _, _ = served
-    k1 = svc._get_fuzzy_keys()
-    assert svc._get_fuzzy_keys() is k1          # cached, not rebuilt
+    k1 = svc._fuzzy_keys(svc._gen)
+    assert svc._fuzzy_keys(svc._gen) is k1      # cached, not rebuilt
     svc.suggest("поис")
-    assert svc._get_fuzzy_keys() is k1          # a request didn't rebuild
+    assert svc._fuzzy_keys(svc._gen) is k1      # a request didn't rebuild
     svc.index_page(
         "https://site0.example/fuzzygen",
         text="свежайшийтермин появился в индексе",
     )
-    k2 = svc._get_fuzzy_keys()
+    k2 = svc._fuzzy_keys(svc._gen)
     assert k2 is not k1                          # write → new generation
     # the fresh page's OOV term is reachable through the NEW key table
     got = svc.suggest("свежайшийтермины", topn=3)
@@ -501,15 +502,15 @@ def test_phrase_fused_equals_semijoin_path(spark, served):
     exact two-action semi-join path it replaces (which stays wired for
     the stale-possegs recovery state), including under tombstones."""
     svc, idx, _ = served
-    svc._ensure_positional()
-    assert getattr(svc, "_pos_stale", True) is False
+    g = svc._gen
+    assert svc._positional(g)[1] is False
     for q in ("быстрый поиск", "поиск", "данные слова", "nosuchwordxyz"):
-        got = svc._phrase_uncached(q, limit=30)
-        svc._pos_stale = True
+        got = svc._phrase_uncached(g, q, limit=30)
+        g._slots["pos_stale"] = True
         try:
-            want = svc._phrase_uncached(q, limit=30)
+            want = svc._phrase_uncached(g, q, limit=30)
         finally:
-            svc._pos_stale = False
+            g._slots["pos_stale"] = False
         assert got == want, q
 
 
@@ -605,18 +606,18 @@ def test_phrase_count_only_counts_served_docs(spark, small_index):
     svc = SearchService(spark, base, docs_text=docs_text.unionByName(extra))
     try:
         resp = svc.phrase("запредельноредкое сочетаниеслов")
-        assert svc._pos_stale is False
+        assert svc._positional(svc._gen)[1] is False
         assert resp["count"] == len(resp["data"]) == 0
     finally:
         svc.close()
 
 
 def test_close_unpersists_generation_caches(spark, small_index):
-    """close() drops every per-generation frame _open_segments would,
-    the lazily built site map and site dim included."""
+    """close() drops every frame the served generation owns, the
+    lazily built site map and site dim included."""
     base, docs_text = small_index
     svc = SearchService(spark, base, docs_text=docs_text)
-    site_map, site_dim = svc._get_site_map(), svc._get_site_dim()
+    site_map, site_dim = svc._site_map(svc._gen), svc._site_dim(svc._gen)
     assert site_map.is_cached and site_dim.is_cached
     svc.close()
     assert not site_map.is_cached

@@ -45,13 +45,13 @@ def served_blend(spark, tmp_path_factory):
 
 def test_rank_table_aligns_with_index(spark, served_blend):
     svc, idx, _ = served_blend
-    rank_ids = {r["doc_id"] for r in svc.static_rank.collect()}
+    rank_ids = {r["doc_id"] for r in svc.static_rank[0].collect()}
     doc_ids = {r["doc_id"] for r in idx.doc_stats.collect()}
     # same canonicalization on both sides → same identity space
     assert rank_ids == doc_ids
     # the corpus actually links: somebody is above uniform mass
-    uniform = PR_SCALE // svc._rank_n
-    assert svc.static_rank.filter(F.col("rank") > uniform).count() > 0
+    uniform = PR_SCALE // svc.static_rank[1]
+    assert svc.static_rank[0].filter(F.col("rank") > uniform).count() > 0
 
 
 def test_blend_matches_exact_reference(spark, served_blend):
@@ -66,8 +66,8 @@ def test_blend_matches_exact_reference(spark, served_blend):
         (r["doc_id"], r["score"])
         for r in search(spark, idx, Q, k=count, constants=constants).collect()
     ]
-    ranks = {r["doc_id"]: r["rank"] for r in svc.static_rank.collect()}
-    unit = PR_SCALE / svc._rank_n
+    ranks = {r["doc_id"]: r["rank"] for r in svc.static_rank[0].collect()}
+    unit = PR_SCALE / svc.static_rank[1]
     want = sorted(
         (
             (d, s + ranks.get(d, 0) / unit, s, ranks.get(d, 0) / unit)
@@ -128,7 +128,7 @@ def test_delta_landed_page_has_zero_authority(spark, served_blend):
 def test_reload_static_rank_serves_new_table(spark, served_blend):
     svc, _, _ = served_blend
     before = svc.search(Q, limit=5, blend=1.0)
-    rows = [(r["doc_id"], r["rank"]) for r in svc.static_rank.collect()]
+    rows = [(r["doc_id"], r["rank"]) for r in svc.static_rank[0].collect()]
     try:
         doubled = spark.createDataFrame(
             [(d, r * 2) for d, r in rows], "doc_id long, rank long"
