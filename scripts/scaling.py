@@ -46,10 +46,12 @@ def worker(cores: int, docs_path: str, passes: int = 2) -> None:
     # cluster-faithful memory model: a 4N-executor cluster brings 4×
     # the memory of an N-executor one, so the JVM serving a level gets
     # a FIXED per-core executor share plus a fixed driver overhead.
-    # The session default (max(12, cores) GiB) hands the SMALL level
-    # 6 GiB/core and the large one 1-2 — under-provisioning exactly
-    # the level whose concurrent sort/Arrow tasks need it, which shows
-    # up as spill only at the high level and biases efficiency down.
+    # The session default (1 GiB/core) has no driver share. A fixed
+    # floor (the earlier default, max(12, cores) GiB; see BASELINE.md)
+    # handed the SMALL level 6 GiB/core and the large one 1-2 —
+    # under-provisioning exactly the level whose concurrent sort/Arrow
+    # tasks need it, which shows up as spill only at the high level and
+    # biases efficiency down.
     os.environ.setdefault(
         "SPARK_DRIVER_MEM", f"{min(6 + 4 * cores, 64)}g"
     )

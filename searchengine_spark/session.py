@@ -10,10 +10,36 @@ timestamps compare bit-stable against external oracles.
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+CLUSTER_HEAP_CORES = 32  # task slots assumed for a non-local master
+
+_LOCAL_MASTER = re.compile(r"local(?:\[\s*(\d+|\*)\s*(?:,\s*\d+\s*)?\])?")
+
+
+def master_cores(master: str) -> int:
+    """Concurrent task slots of a local master: ``local`` → 1,
+    ``local[*]`` → the cores this process may run on, ``local[N]`` and
+    ``local[N,F]`` → N. Any other master → ``CLUSTER_HEAP_CORES``."""
+    m = _LOCAL_MASTER.fullmatch(master.strip())
+    if m is None:
+        return CLUSTER_HEAP_CORES
+    if m.group(1) is None:
+        return 1
+    if m.group(1) == "*":
+        return len(os.sched_getaffinity(0))
+    return int(m.group(1))
+
+
+def driver_memory(master: str, env: Mapping[str, str] = os.environ) -> str:
+    """Driver heap: ``$SPARK_DRIVER_MEM`` when set, else ~1 GB per
+    concurrent task (local mode: driver == executor)."""
+    return env.get("SPARK_DRIVER_MEM") or f"{master_cores(master)}g"
 
 
 def get_spark(
@@ -31,11 +57,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     sp = shuffle_partitions if shuffle_partitions is not None else int(cpus)
-    try:
-        n_cores = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
-    except ValueError:
-        n_cores = 32
-    _driver_mem = os.environ.get("SPARK_DRIVER_MEM", f"{max(12, n_cores)}g")
+    _driver_mem = driver_memory(master)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))
@@ -48,11 +70,11 @@ def get_spark(
         # UDF-heavy scans want fine-grained splits: more waves → less
         # straggler loss, and each Python worker holds a smaller batch
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
-        # heap ∝ concurrent tasks (local mode: driver == executor) —
-        # ~1 GB/core. Undersized heaps GC-thrash once 32 tasks sort
-        # concurrently; oversized LAZILY-committed heaps stall mid-job
-        # under this hypervisor, so Xms=Xmx + AlwaysPreTouch moves the
-        # commit cost to (untimed) session startup
+        # heap ∝ concurrent tasks (driver_memory: ~1 GB/core).
+        # Undersized heaps GC-thrash once 32 tasks sort concurrently;
+        # oversized LAZILY-committed heaps stall mid-job under this
+        # hypervisor, so Xms=Xmx + AlwaysPreTouch moves the commit cost
+        # to (untimed) session startup
         .config("spark.driver.memory", _driver_mem)
         .config("spark.driver.extraJavaOptions",
                 f"-Xms{_driver_mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC")
