@@ -23,7 +23,9 @@ intersection shard-local. The build pre-aggregates positions per
 (doc, term) INSIDE a pandas UDF (one Arrow row per doc-term with a
 position array — the same "count where it's local" move as
 term_counts_udf), so the build shuffle carries doc-term rows, never
-one row per token occurrence.
+one row per token occurrence. Build, delta runs and compaction pack
+those rows through the TF layer's pack driver (segments._pack_walk),
+with _pack_pos_group as the per-group body.
 
 Query: rarest-first docID intersection (decode-cheap streams first),
 then lazy per-block position decode for survivors, then the classic
@@ -44,7 +46,7 @@ from pyspark.sql import types as T
 
 from ..functions import textproc
 from . import varbyte as vb
-from .segments import BLOCK, ReadSizes
+from .segments import BLOCK, ReadSizes, _pack_walk
 
 POSITIONAL_SEGMENTS_SCHEMA = T.StructType(
     [
@@ -84,58 +86,64 @@ def _positional_lists_udf(lemmas: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"terms": terms_out, "poss": poss_out})
 
 
-def _pack_pos_group(pdf: pd.DataFrame, block: int, run_id: int) -> pd.DataFrame:
-    """One (term, shard) group of (doc_id, positions) → one packed
-    positional run tagged with ``run_id`` (0 = base build / compacted;
-    delta runs carry the run id write_delta_run allocated — the same
+def _pack_pos_group(g: dict, block: int, run_id: int) -> dict:
+    """The positional per-group body of the pack driver: one
+    (term, shard) group of (doc_id, positions) → one packed positional
+    run row tagged with ``run_id`` (0 = base build / compacted; delta
+    runs carry the run id write_delta_run allocated — the same
     lifecycle contract as segments.py)."""
-    term = pdf["term"].iloc[0]
-    shard = int(pdf["shard"].iloc[0])
-    order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-    doc_ids = pdf["doc_id"].to_numpy()[order].astype(np.int64)
-    pos_lists = [
-        np.asarray(p, dtype=np.uint64) for p in pdf["positions"].iloc[order]
-    ]
+    order = np.argsort(g["doc_id"], kind="stable")
+    doc_ids = g["doc_id"][order].astype(np.int64)
+    pos_lists = g["positions"][order]
     n = len(doc_ids)
-    counts = np.array([len(p) for p in pos_lists], dtype=np.uint64)
-    # per-doc delta gaps (first position raw), concatenated in doc order
-    flat = np.concatenate(pos_lists) if n else np.empty(0, dtype=np.uint64)
+    counts = np.fromiter(map(len, pos_lists), dtype=np.int64, count=n)
+    flat = (
+        np.concatenate(pos_lists).astype(np.uint64) if n
+        else np.empty(0, dtype=np.uint64)
+    )
+    # per-doc delta gaps, each doc's first position raw, concatenated
+    # in doc order (the wrapped differences at doc starts are replaced)
+    starts = np.cumsum(counts) - counts
     gaps = flat.copy()
-    start = 0
-    for c in counts:
-        c = int(c)
-        if c > 1:
-            gaps[start + 1 : start + c] = (
-                flat[start + 1 : start + c] - flat[start : start + c - 1]
-            )
-        start += c
-    n_blocks = -(-n // block)
-    block_last = [
-        int(doc_ids[min((i + 1) * block, n) - 1]) for i in range(n_blocks)
-    ]
+    gaps[1:] -= flat[:-1]
+    first = starts[counts > 0]
+    gaps[first] = flat[first]
+    block_starts = np.arange(-(-n // block), dtype=np.int64) * block
     # byte offset of each block's first position value
-    # int64 for index math — concatenating a python 0 with a uint64
-    # cumsum silently promotes to float64 and breaks indexing
     lens = vb.varbyte_lengths(gaps).astype(np.int64)
     cum = np.concatenate((np.zeros(1, dtype=np.int64), np.cumsum(lens)))
-    val_starts = np.concatenate(
-        (np.zeros(1, dtype=np.int64), np.cumsum(counts.astype(np.int64)))
-    )[np.arange(n_blocks) * block]
-    block_off = [int(cum[v]) for v in val_starts]
-    return pd.DataFrame(
-        [
-            {
-                "term": term,
-                "shard": shard,
-                "run_id": int(run_id),
-                "n_docs": n,
-                "doc_ids": vb.delta_encode_ids(doc_ids),
-                "counts": vb.varbyte_encode(counts),
-                "positions": vb.varbyte_encode(gaps, nbytes=lens),
-                "block_last_doc": block_last,
-                "block_off_pos": block_off,
-            }
-        ]
+    return {
+        "term": g["term"][0],
+        "shard": int(g["shard"][0]),
+        "run_id": int(run_id),
+        "n_docs": n,
+        "doc_ids": vb.delta_encode_ids(doc_ids),
+        "counts": vb.varbyte_encode(counts.astype(np.uint64)),
+        "positions": vb.varbyte_encode(gaps, nbytes=lens),
+        "block_last_doc":
+            doc_ids[np.minimum(block_starts + block, n) - 1].tolist(),
+        "block_off_pos": cum[starts[block_starts]].tolist(),
+    }
+
+
+def positional_rows(prepared: DataFrame, n_shards: int) -> DataFrame:
+    """prepared docs (doc_id, lemmas) → (term, shard, doc_id,
+    positions) rows, one per doc-term: the positional pack's input."""
+    return (
+        prepared.select(
+            "doc_id", _positional_lists_udf("lemmas").alias("pc")
+        )
+        .select(
+            "doc_id",
+            F.explode(F.arrays_zip("pc.terms", "pc.poss")).alias("e"),
+        )
+        .select(
+            F.col("e.terms").alias("term"),
+            F.pmod(F.hash("doc_id"), F.lit(n_shards)).cast("int")
+            .alias("shard"),
+            "doc_id",
+            F.col("e.poss").alias("positions"),
+        )
     )
 
 
@@ -149,26 +157,23 @@ def build_positional_segments(
     ``run_id`` > 0 builds a DELTA run (single-page reindex — the same
     append/last-run-wins/compaction contract segments.py gives the TF
     layer; reference analog IndexingService.java:71-95)."""
-    flat = (
-        prepared.select(
-            "doc_id", _positional_lists_udf("lemmas").alias("pc")
-        )
-        .select(
-            "doc_id",
-            F.explode(F.arrays_zip("pc.terms", "pc.poss")).alias("e"),
-        )
-        .select(
-            "doc_id",
-            F.col("e.terms").alias("term"),
-            F.col("e.poss").alias("positions"),
-        )
-        .withColumn(
-            "shard", F.pmod(F.hash("doc_id"), F.lit(n_shards)).cast("int")
-        )
+    return repack_positional(
+        positional_rows(prepared, n_shards), block=block, run_id=run_id
     )
-    return flat.groupBy("term", "shard").applyInPandas(
-        lambda pdf: _pack_pos_group(pdf, block, run_id),
-        schema=POSITIONAL_SEGMENTS_SCHEMA,
+
+
+def repack_positional(
+    cur: DataFrame, block: int = BLOCK, run_id: int = 0
+) -> DataFrame:
+    """(term, shard, doc_id, positions) rows — positional_rows, or the
+    current view of packed runs (refresh.current_view over
+    unpack_positional) — → single-run packed segments, through the one
+    pack driver (segments._pack_walk) with _pack_pos_group as the
+    per-group body."""
+    return _pack_walk(
+        cur.select("term", "shard", "doc_id", "positions"), "doc_id",
+        lambda g: _pack_pos_group(g, block, run_id),
+        POSITIONAL_SEGMENTS_SCHEMA,
     )
 
 
@@ -195,7 +200,8 @@ UNPACKED_POS_SCHEMA = (
 def unpack_positional(segments: DataFrame) -> DataFrame:
     """Packed positional runs → relational (term, shard, doc_id,
     positions, run_id). Pure map over segment rows (no grouping, no
-    shuffle) — the compaction input, mirroring refresh.unpack_postings.
+    shuffle) — the compaction input (refresh.current_view), mirroring
+    refresh.unpack_postings.
     Pre-lifecycle snapshots without a run_id column read as run 0."""
 
     def run(batches):
@@ -235,37 +241,6 @@ def unpack_positional(segments: DataFrame) -> DataFrame:
         if c in segments.columns
     ]
     return segments.select(*cols).mapInPandas(run, schema=UNPACKED_POS_SCHEMA)
-
-
-def current_positional(pos_segments: DataFrame, live: DataFrame) -> DataFrame:
-    """Doc-level last-run-wins view of the positional runs, keyed on
-    the META-authoritative run (`live` = _doc_meta_resolved filtered to
-    living docs) — the exact mirror of refresh.current_postings, same
-    rationale (a re-landed doc's stale positions must drop even for
-    terms its new version lacks; orphaned runs stay inert). A doc
-    whose meta run has no positional delta (page landed while the
-    positional layer was inactive) drops from the PHRASE index only —
-    rebuild via service.refresh_positional() to recover it."""
-    unpacked = unpack_positional(pos_segments).dropDuplicates(
-        ["term", "shard", "doc_id", "run_id"]
-    )
-    keep = live.select("doc_id", F.col("mrun").alias("keep_run"))
-    return (
-        unpacked.join(keep, "doc_id")
-        .filter(F.col("run_id") == F.col("keep_run"))
-        .drop("keep_run")
-    )
-
-
-def repack_positional(
-    cur: DataFrame, block: int = BLOCK, run_id: int = 0
-) -> DataFrame:
-    """current_positional output → single-run packed segments (the
-    positional half of refresh_and_repack)."""
-    return cur.groupBy("term", "shard").applyInPandas(
-        lambda pdf: _pack_pos_group(pdf, block, run_id),
-        schema=POSITIONAL_SEGMENTS_SCHEMA,
-    )
 
 
 def _decode_positions_for(

@@ -28,12 +28,17 @@ streaming batch counter) can never collide with a compaction id
 single writer: pause ingestion for the swap (the reference likewise
 serializes reindex against maintenance).
 
+Both packed layouts fold the same way: one meta-keyed current view
+(current_view, over unpack_postings or positional.unpack_positional)
+feeds the layout's pack through the one pack driver
+(segments._pack_walk) the cold build uses.
+
 Scale notes (10^12 docs): every step is a bounded shuffle —
 unpack is a zero-shuffle mapInPandas over segment rows; the doc-level
 keep-run map is one groupBy(doc_id); the repack reuses the stored
-shard column (the global doc-space hash partitioning), so the
-applyInPandas groups stay ≤ docs_per_shard postings regardless of term
-skew, same as the cold build.
+shard column (the global doc-space hash partitioning), so the pack
+driver's (term, shard) groups stay ≤ docs_per_shard postings
+regardless of term skew, same as the cold build.
 """
 
 from __future__ import annotations
@@ -46,7 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.postings import IndexTables, write_index
-from ..schemas import INDEX_SEGMENTS_SCHEMA
 from .manifest import fs_touch
 from .segments import unpack_segment
 
@@ -141,10 +145,12 @@ def unpack_postings(segments: DataFrame) -> DataFrame:
     return segments.select(*cols).mapInPandas(run, schema=UNPACKED_SCHEMA)
 
 
-def current_postings(segments: DataFrame, live: DataFrame) -> DataFrame:
-    """Doc-level last-run-wins view of the stored runs: every posting
-    of a document's authoritative run per the META resolution (`live` =
-    _doc_meta_resolved output filtered to living docs), nothing else.
+def current_view(segments: DataFrame, live: DataFrame, unpack) -> DataFrame:
+    """Doc-level last-run-wins view of the stored runs of one packed
+    layout: every row `unpack(segments)` yields (unpack_postings, or
+    positional.unpack_positional) of a document's authoritative run per
+    the META resolution (`live` = _doc_meta_resolved output filtered to
+    living docs), nothing else.
 
     Keying the supersede on the meta run — not max(run_id) over the
     postings — matters twice: a doc re-landed with ZERO indexable terms
@@ -154,8 +160,10 @@ def current_postings(segments: DataFrame, live: DataFrame) -> DataFrame:
     data loss window). Exact duplicates of a (term, shard, doc, run)
     posting — at-least-once replay of a delta batch — collapse in the
     dropDuplicates (replayed rows are value-identical by construction,
-    the batch content is deterministic)."""
-    unpacked = unpack_postings(segments).dropDuplicates(
+    the batch content is deterministic). A doc whose meta run has no
+    positional run (a page landed while the positional layer did not
+    exist) drops from the positional view only."""
+    unpacked = unpack(segments).dropDuplicates(
         ["term", "shard", "doc_id", "run_id"]
     )
     keep = live.select("doc_id", F.col("mrun").alias("keep_run"))
@@ -200,8 +208,8 @@ def refresh_and_repack(
         _doc_meta_resolved(spark, base).filter(~F.col("deleted")).cache()
     )
     # tombstoned docs drop out here (absent from `live`); postings keep
-    # only each doc's meta-authoritative run (see current_postings)
-    cur = current_postings(segments, live).cache()
+    # only each doc's meta-authoritative run (see current_view)
+    cur = current_view(segments, live, unpack_postings).cache()
 
     # exact re-aggregation (A2 + doclen + corpus constants)
     dl = cur.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("doclen"))
@@ -273,15 +281,16 @@ def refresh_and_repack(
     has_pos = os.path.isdir(pos_path)
     if has_pos:
         from .positional import (
-            current_positional,
             repack_positional,
+            unpack_positional,
             write_positional_segments,
         )
 
         possegs = spark.read.parquet(pos_path)
         write_positional_segments(
             repack_positional(
-                current_positional(possegs, live), run_id=run_id
+                current_view(possegs, live, unpack_positional),
+                run_id=run_id,
             ),
             tmp_pos,
         )

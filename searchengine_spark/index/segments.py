@@ -166,12 +166,13 @@ def _pack_arrays(
     n_docs: int, avgdl: float, run_id: int, avgtl: float,
 ) -> dict:
     """One (term, shard) group as RAW numpy arrays → one packed segment
-    row as a plain dict — the pandas-free kernel both pack drivers
-    share. A per-group pandas round-trip costs ~1 ms regardless of
-    group size; at a web-corpus dictionary (10^7+ (term, shard) groups)
-    that fixed overhead IS the pack time, so the hot path
-    (pack_segments_frame) batches thousands of these dicts into each
-    Arrow frame instead."""
+    row as a plain dict — the pandas-free TF kernel every TF packer
+    shares (pack_segments_frame's and merge_runs' bodies, the reference
+    _pack_group). A per-group pandas round-trip costs ~1 ms regardless
+    of group size; at a web-corpus dictionary (10^7+ (term, shard)
+    groups) that fixed overhead IS the pack time, so the pack driver
+    (_pack_walk) batches thousands of these dicts into each Arrow
+    frame instead."""
     from ..operators.fielded import FIELD_B_BODY, FIELD_B_TITLE
 
     order = np.argsort(doc_ids, kind="stable")
@@ -241,10 +242,11 @@ def _pack_arrays(
 def _pack_group(pdf: pd.DataFrame, n_docs: int, avgdl: float, run_id: int,
                 avgtl: float = 0.0) -> pd.DataFrame:
     """One (term, shard) group of (doc_id, tf, doclen, df[, ttf, tlen])
-    → one packed segment row (applyInPandas shape — kept for the
-    multi-run merge and the kernel tests; the bulk pack path is
-    pack_segments_frame). ttf/tlen (title-field tf and title length,
-    absent → zeros) feed the per-field TF layer that serves BM25F."""
+    → one packed segment row as a one-row frame: the reference packer
+    the kernel tests build segments with and compare the bulk pack
+    (pack_segments_frame) against. ttf/tlen (title-field tf and title
+    length, absent → zeros) feed the per-field TF layer that serves
+    BM25F."""
     n = len(pdf)
     if "ttf" in pdf.columns:
         ttfs = pdf["ttf"].to_numpy()
@@ -261,15 +263,11 @@ def _pack_group(pdf: pd.DataFrame, n_docs: int, avgdl: float, run_id: int,
     return pd.DataFrame([row])
 
 
-def pack_segments_frame(
-    enriched: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    run_id: int,
-    avgtl: float,
-) -> DataFrame:
-    """Bulk pack: (term, shard, doc_id, tf, doclen, df, ttf, tlen) →
-    packed segment rows, ONE Arrow frame per ~thousands of groups.
+def _pack_walk(frame: DataFrame, order: str, body, schema) -> DataFrame:
+    """The one pack driver of both packed layouts: `frame`'s rows,
+    grouped by (term, shard) and ordered by `order` within a group →
+    one `body(group)` row dict per group, as a frame of `schema`.
+    `group` maps each column of `frame` to the group's numpy slice.
 
     groupBy(term, shard).applyInPandas pays a fixed ~1 ms pandas/Arrow
     round-trip PER GROUP — negligible for a small dictionary, but the
@@ -278,103 +276,111 @@ def pack_segments_frame(
     same co-location is achieved with ONE hash repartition on
     (term, shard) + an in-partition sort, and a mapInPandas pass walks
     each sorted partition, slicing group boundaries with numpy and
-    emitting plain dicts — the per-group cost drops to the numpy body.
+    emitting plain dicts — the per-group cost drops to the body.
 
     Correctness of the stitching: a (term, shard) group never spans
     partitions (hash partitioning on exactly that key), but CAN span
     consecutive Arrow batches of one partition — the walker carries
     the trailing (possibly incomplete) group of every batch forward
     as a LIST of chunks and concatenates once, when the group closes
-    (or at iterator end). Total row copies stay O(partition rows)
-    even when one group spans many Arrow batches — the previous
-    concat-carry-into-next-batch design recopied an open group once
-    per batch it spanned (quadratic in group size at the default 10k
-    Arrow batch rows), and its Python backward walk to find the
-    trailing boundary cost O(carried rows) of interpreter loop per
-    batch; boundaries now come from one vectorized change-point scan.
+    (or at iterator end), so row copies stay O(partition rows) however
+    many batches one group spans; boundaries come from one vectorized
+    change-point scan per batch."""
+
+    def run(batches):
+        # chunks of the currently-open trailing group (term/shard of
+        # every row in every chunk is identical); concatenated exactly
+        # once, when the group closes
+        carry: list[dict] = []
+
+        def flush_carry() -> dict:
+            nonlocal carry
+            whole = carry[0] if len(carry) == 1 else {
+                c: np.concatenate([ch[c] for ch in carry]) for c in carry[0]
+            }
+            carry = []
+            return body(whole)
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+            terms, shards = cols["term"], cols["shard"]
+            change = np.flatnonzero(
+                (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
+            ) + 1
+            rows = []
+            if carry and (
+                terms[0] != carry[0]["term"][0]
+                or shards[0] != carry[0]["shard"][0]
+            ):
+                # batch opens a NEW group — the carried one is complete
+                rows.append(flush_carry())
+            head = 0
+            if carry:
+                if change.size == 0:
+                    # whole batch continues the open group
+                    carry.append(cols)
+                    if rows:
+                        yield pd.DataFrame(rows)
+                    continue
+                # open group closes at the first boundary
+                head = int(change[0])
+                carry.append({c: v[:head] for c, v in cols.items()})
+                rows.append(flush_carry())
+            # complete groups fully inside this batch; the trailing
+            # (possibly incomplete) one becomes the new carry
+            starts = np.concatenate(([head], change[change > head]))
+            for a, b in zip(starts[:-1].tolist(), starts[1:].tolist()):
+                rows.append(body({c: v[a:b] for c, v in cols.items()}))
+            last = int(starts[-1])
+            carry.append({c: v[last:] for c, v in cols.items()})
+            if rows:
+                yield pd.DataFrame(rows)
+        if carry:
+            yield pd.DataFrame([flush_carry()])
+
+    # in-partition sort groups rows; the partitioner guarantees group
+    # locality. The sort is the same work applyInPandas' group shuffle
+    # did implicitly — no extra pass.
+    return (
+        frame.repartition("term", "shard")
+        .sortWithinPartitions("term", "shard", order)
+        .mapInPandas(run, schema=schema)
+    )
+
+
+def pack_segments_frame(
+    enriched: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    run_id: int,
+    avgtl: float,
+) -> DataFrame:
+    """Bulk pack: (term, shard, doc_id, tf, doclen, df, ttf, tlen) →
+    packed segment rows, through the one pack driver (_pack_walk) with
+    _pack_arrays as the per-group body.
+
+    doc_id is the in-group order, so the body's stable argsort sees
+    presorted input (its merge fast path: ~85 µs vs ~7 ms on 75k random
+    int64) — the Tungsten sort adds the key for near-free.
 
     Shuffle width: the two field-layer ints ride PACKED into the body
     ints (tfx = tf·2³¹ + ttf, dlx = doclen·2³¹ + tlen — exact while
     tf/doclen < 2³¹ and 0 ≤ ttf ≤ tf, 0 ≤ tlen ≤ doclen, which the
     extraction invariant guarantees: title text ⊆ body text), so the
     exchange and the Arrow hop into Python carry the SAME six columns
-    the field-free r4 layout did; the kernel splits with two shifts."""
-    _LIM = np.int64(1) << np.int64(31)
+    the field-free r4 layout did; the body splits with two shifts."""
+    low = (np.int64(1) << np.int64(31)) - 1
 
-    def run(batches):
-        # chunks of the currently-open trailing group (term/shard of
-        # every row in every chunk is identical); concatenated exactly
-        # once, when the group closes
-        carry: list[pd.DataFrame] = []
+    def body(g: dict) -> dict:
+        tfx, dlx = g["tfx"], g["dlx"]
+        return _pack_arrays(
+            g["term"][0], int(g["shard"][0]), g["doc_id"], tfx >> 31,
+            dlx >> 31, tfx & low, dlx & low, int(g["df"][0]), n_docs,
+            avgdl, run_id, avgtl,
+        )
 
-        def pack_one(pdf: pd.DataFrame, a: int, b: int) -> dict:
-            tfx = pdf["tfx"].to_numpy()[a:b]
-            dlx = pdf["dlx"].to_numpy()[a:b]
-            return _pack_arrays(
-                pdf["term"].iat[a], int(pdf["shard"].iat[a]),
-                pdf["doc_id"].to_numpy()[a:b], tfx >> 31,
-                dlx >> 31, tfx & (_LIM - 1), dlx & (_LIM - 1),
-                int(pdf["df"].iat[a]), n_docs, avgdl, run_id, avgtl,
-            )
-
-        def flush_carry() -> dict | None:
-            nonlocal carry
-            if not carry:
-                return None
-            whole = (
-                carry[0] if len(carry) == 1
-                else pd.concat(carry, ignore_index=True)
-            )
-            carry = []
-            return pack_one(whole, 0, len(whole))
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            terms = pdf["term"].to_numpy()
-            shards = pdf["shard"].to_numpy()
-            change = np.flatnonzero(
-                (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-            ) + 1
-            rows = []
-            if carry and (
-                terms[0] != carry[0]["term"].iat[0]
-                or shards[0] != carry[0]["shard"].iat[0]
-            ):
-                # batch opens a NEW group — the carried one is complete
-                rows.append(flush_carry())
-            if carry:
-                if change.size == 0:
-                    # whole batch continues the open group
-                    carry.append(pdf)
-                    if rows:
-                        yield pd.DataFrame(rows)
-                    continue
-                # open group closes at the first boundary
-                head = int(change[0])
-                carry.append(pdf.iloc[:head])
-                rows.append(flush_carry())
-            else:
-                head = 0
-            # complete groups fully inside this batch; the trailing
-            # (possibly incomplete) one becomes the new carry
-            starts = np.concatenate(([head], change[change > head]))
-            for a, b in zip(starts[:-1], starts[1:]):
-                rows.append(pack_one(pdf, int(a), int(b)))
-            carry.append(pdf.iloc[int(starts[-1]):])
-            if rows:
-                yield pd.DataFrame(rows)
-        tail = flush_carry()
-        if tail is not None:
-            yield pd.DataFrame([tail])
-
-    # in-partition sort groups rows; the partitioner guarantees group
-    # locality. The sort is the same work applyInPandas' group shuffle
-    # did implicitly — no extra pass. doc_id rides as a THIRD sort key
-    # so the kernel's stable argsort sees presorted input (its merge
-    # fast path: ~85 µs vs ~7 ms on 75k random int64) — the Tungsten
-    # sort adds the key for near-free, the Python side saves the
-    # single most expensive line of the group kernel.
     lim = F.lit(1 << 31).cast("long")
     has_field = "ttf" in enriched.columns
     ttf_col = (
@@ -390,11 +396,7 @@ def pack_segments_frame(
         (F.col("tf").cast("long") * lim + ttf_col).alias("tfx"),
         (F.col("doclen").cast("long") * lim + tlen_col).alias("dlx"),
     )
-    return (
-        packed_in.repartition("term", "shard")
-        .sortWithinPartitions("term", "shard", "doc_id")
-        .mapInPandas(run, schema=INDEX_SEGMENTS_SCHEMA)
-    )
+    return _pack_walk(packed_in, "doc_id", body, INDEX_SEGMENTS_SCHEMA)
 
 
 def title_field_side(doc_meta: DataFrame) -> DataFrame:
@@ -667,7 +669,7 @@ def write_delta_run(
     the meta append leaves orphan segment rows that are inert (the
     refresh supersede is keyed on the META run, not the postings), and
     an at-least-once replay re-appends value-identical rows that every
-    consumer dedups (index.refresh.current_postings /
+    consumer dedups (index.refresh.current_view /
     _doc_meta_resolved; the read-time merge)."""
     from ..operators.postings import doclen_from_counts
 
@@ -751,47 +753,45 @@ def write_tombstones(
     return n
 
 
+def _merge_group(g: dict, n_docs: int, avgdl: float, run_id: int) -> dict:
+    """merge_runs' per-group body: one (term, shard) group of packed
+    segment rows in run_id order → one packed row of `run_id`. Each
+    doc keeps its posting from the highest run that holds it (upsert,
+    I1); df and avgtl come from the highest run deterministically — an
+    arbitrary row could pick a delta run's fillna(1) df placeholder
+    over the base-exact df and change block-max scores run-to-run."""
+    parts = []
+    for i in range(len(g["run_id"])):
+        row = {c: v[i] for c, v in g.items()}
+        ids, tfs, dls = unpack_segment(row)
+        parts.append((ids, tfs, dls, *unpack_segment_titles(row, len(ids))))
+    ids, tfs, dls, ttfs, tls = (np.concatenate(c) for c in zip(*parts))
+    run_no = np.repeat(np.arange(len(parts)), [len(p[0]) for p in parts])
+    order = np.lexsort((run_no, ids))
+    # the last row of each doc_id in (doc_id, run) order wins
+    keep = order[np.append(ids[order][1:] != ids[order][:-1], True)]
+    a_tl = g["avgtl"][-1] if "avgtl" in g else None
+    return _pack_arrays(
+        g["term"][0], int(g["shard"][0]), ids[keep], tfs[keep], dls[keep],
+        ttfs[keep], tls[keep], int(g["df"][-1]), n_docs, avgdl, run_id,
+        float(a_tl) if a_tl is not None and a_tl == a_tl else 0.0,
+    )
+
+
 def merge_runs(segments: DataFrame, n_docs: int, avgdl: float, run_id: int = 0) -> DataFrame:
     """Multi-pass sorted posting merge (north rule): k-way merge all
-    runs of each (term, shard) into a single fresh run. Incremental
-    builds append runs with increasing run_id. NOTE: compaction no
-    longer calls this — scripts/compact.py runs
-    index.refresh.refresh_and_repack (DOC-level supersede + exact
-    stats); this kernel remains the (term, shard)-level read-time
-    merge semantics only.
-    Later runs win on duplicate doc_id (upsert semantics, I1)."""
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("run_id")
-        parts = []
-        for _, row in pdf.iterrows():
-            ids, tfs, dls = unpack_segment(row)
-            ttfs, tls = unpack_segment_titles(row, len(ids))
-            parts.append(
-                pd.DataFrame(
-                    {"doc_id": ids, "tf": tfs, "doclen": dls,
-                     "ttf": ttfs, "tlen": tls,
-                     "run_id": row["run_id"]}
-                )
-            )
-        allp = pd.concat(parts, ignore_index=True)
-        # last run wins per doc_id (MERGE/upsert)
-        allp = allp.sort_values(["doc_id", "run_id"]).drop_duplicates(
-            "doc_id", keep="last"
-        )
-        allp["term"] = pdf["term"].iloc[0]
-        allp["shard"] = pdf["shard"].iloc[0]
-        # df from the HIGHEST run deterministically (after sort) - an
-        # arbitrary row could pick a delta run's fillna(1) placeholder
-        # over the base-exact df and change block-max scores run-to-run
-        allp["df"] = pdf["df"].iloc[-1]
-        # avgtl likewise from the highest run (a corpus constant rider)
-        a_tl = pdf["avgtl"].iloc[-1] if "avgtl" in pdf.columns else None
-        return _pack_group(
-            allp, n_docs, avgdl, run_id,
-            avgtl=float(a_tl) if a_tl is not None and a_tl == a_tl else 0.0,
-        )
-
-    return segments.groupBy("term", "shard").applyInPandas(
-        _merge, schema=INDEX_SEGMENTS_SCHEMA
+    runs of each (term, shard) into a single fresh run, through the one
+    pack driver ordered by run_id (_merge_group: later runs win on a
+    duplicate doc_id — upsert semantics, I1). Incremental builds append
+    runs with increasing run_id. NOTE: compaction does not call this —
+    scripts/compact.py runs index.refresh.refresh_and_repack
+    (DOC-level supersede + exact stats); this is the (term, shard)-level
+    read-time merge semantics only."""
+    cols = [c for c in ("term", "shard", "run_id", "df", "doc_ids", "tfs",
+                        "doclens", "tfs_title", "title_lens", "avgtl")
+            if c in segments.columns]
+    return _pack_walk(
+        segments.select(*cols), "run_id",
+        lambda g: _merge_group(g, n_docs, avgdl, run_id),
+        INDEX_SEGMENTS_SCHEMA,
     )

@@ -226,11 +226,23 @@ class SearchService:
             .select("n_shards").distinct().collect()
         )
         cfs = {r["term"]: r["cf"] for r in terms}
+        # delta runs on disk: what index_page taught the service that
+        # landed them — their terms absent from term_stats at df=1 (its
+        # rule), and every term's delta postings in the size bound
+        learned, delta_postings = {}, {}
+        if top_run > 0:
+            for r in (segments.filter(F.col("run_id") > 0).groupBy("term")
+                      .agg(F.sum("n_docs").alias("n")).collect()):
+                t = r["term"]
+                delta_postings[t] = dfs.get(t, 0) + r["n"]
+                if t not in dfs:
+                    learned[t] = 1
         self._gen = Generation(
             segments, serve_meta, tombstoned,
             int(rec[0]["n_shards"]) if len(rec) == 1 else top_shard + 1,
-            ChainMap({}, dfs),
-            ReadSizes(ChainMap({}, dfs), ChainMap({}, cfs), side_rows),
+            ChainMap(learned, dfs),
+            ReadSizes(ChainMap(delta_postings, dfs), ChainMap({}, cfs),
+                      side_rows),
             # past every run on disk, tombstone runs included: a write
             # must never tie an earlier one (a re-index tied with its
             # delete resolves deleted-wins)
@@ -333,45 +345,18 @@ class SearchService:
         )
 
     def complete(self, prefix: str, topn: int = 10) -> dict:
-        """Query autocomplete: dictionary terms starting with `prefix`
-        ranked (df desc, term asc) — the same bounded-expansion rule as
-        prefix retrieval (operators/prefix.expand_prefix), served
-        driver-side from the hot term dictionary via one bisect over a
-        sorted key list built once per generation (no Spark job). At
-        cluster scale the dictionary is a term-sorted table and this is
-        a row-group-pruned range scan. → {result, completions:
-        [{term, df}, …]}."""
+        """Query autocomplete: the dictionary terms prefix retrieval
+        expands `prefix` to (`_expand`), capped at `topn`, driver-side
+        with no Spark job. → {result, completions: [{term, df}, …]}."""
         if not prefix:
             return {"result": True, "completions": []}
-
-        def _compute(g):
-            import bisect
-
-            terms = g.lazy("terms", lambda: sorted(g.df_map))
-            lo = bisect.bisect_left(terms, prefix)
-            # the prefix range ends where the prefix stops matching
-            if ord(prefix[-1]) < 0x10FFFF:
-                hi = bisect.bisect_left(
-                    terms, prefix[:-1] + chr(ord(prefix[-1]) + 1), lo
-                )
-            else:  # un-incrementable last codepoint: scan the tail
-                hi = next(
-                    (i for i in range(lo, len(terms))
-                     if not terms[i].startswith(prefix)),
-                    len(terms),
-                )
-            hits = sorted(
-                ((t, g.df_map[t]) for t in terms[lo:hi]),
-                key=lambda td: (-td[1], td[0]),
-            )[:topn]
-            return {
-                "result": True,
-                "completions": [
-                    {"term": t, "df": int(df)} for t, df in hits
-                ],
-            }
-
-        return self._cached(("complete", prefix, topn), _compute)
+        return self._cached(("complete", prefix, topn), lambda g: {
+            "result": True,
+            "completions": [
+                {"term": t, "df": int(df)}
+                for t, df in self._expand(g, prefix, topn)
+            ],
+        })
 
     def phrase(self, query: str, limit: int = 20) -> dict:
         return self._cached(
@@ -907,20 +892,51 @@ class SearchService:
 
     def _prefix_uncached(self, g: Generation, pfx: str, limit: int = 20,
                          max_expansions: int = 50) -> dict:
-        """Wildcard retrieval (``spar*``): bounded dictionary
-        expansion ranked (df desc, term) then disjunctive block-max
-        WAND over the expanded terms (operators/prefix.py). Deletes
+        """Wildcard retrieval (``spar*``): the bounded dictionary
+        expansion complete() serves (`_expand` — delta-learned terms
+        included), then one disjunctive block-max WAND read over the
+        expanded terms, unpruned by df (operators/prefix.py's
+        contract), with the lazy plan's kernel and ranking. Deletes
         honored via the tombstone deny-list."""
-        from .operators.prefix import prefix_search_packed
-
-        hits = prefix_search_packed(
+        if not pfx:
+            raise ValueError("prefix must be non-empty")
+        terms = [t for t, _ in self._expand(g, pfx, max_expansions)]
+        hits, _ = search_packed_fused(
             self.spark, g.segments, self.term_stats, self.n_docs,
-            self.avgdl, pfx, k=limit, max_expansions=max_expansions,
-            excluded_doc_ids=g.tombstoned,
-        ).collect()
-        return {"result": True, "data": self._items(
-            g, [(r["doc_id"], r["score"]) for r in hits]
-        )}
+            self.avgdl, query=pfx, lemmas=terms, k=limit,
+            conjunctive=False, max_rel_freq=1.0, df_map=g.df_map,
+            sizes=g.read_sizes, excluded_doc_ids=g.tombstoned,
+            _count=False,
+        )
+        return {"result": True, "data": self._items(g, hits)}
+
+    @staticmethod
+    def _expand(g: Generation, prefix: str, cap: int) -> list[tuple]:
+        """[(term, df)] of the served dictionary (base + delta-learned
+        terms) starting with `prefix`, ranked (df desc, term asc) and
+        capped at `cap` — operators/prefix.expand_prefix's rule, by one
+        bisect over the sorted key list built once per generation. At
+        cluster scale the dictionary is a term-sorted table and this
+        is a row-group-pruned range scan."""
+        import bisect
+
+        terms = g.lazy("terms", lambda: sorted(g.df_map))
+        lo = bisect.bisect_left(terms, prefix)
+        # the prefix range ends where the prefix stops matching
+        if ord(prefix[-1]) < 0x10FFFF:
+            hi = bisect.bisect_left(
+                terms, prefix[:-1] + chr(ord(prefix[-1]) + 1), lo
+            )
+        else:  # un-incrementable last codepoint: scan the tail
+            hi = next(
+                (i for i in range(lo, len(terms))
+                 if not terms[i].startswith(prefix)),
+                len(terms),
+            )
+        return sorted(
+            ((t, g.df_map[t]) for t in terms[lo:hi]),
+            key=lambda td: (-td[1], td[0]),
+        )[:cap]
 
     # -- /api/suggest (beyond-reference) ---------------------------------------
 
@@ -992,8 +1008,9 @@ class SearchService:
 
     def refresh_positional(self) -> None:
         """Rebuild the positional snapshot from the docs_text rows of
-        the docs the index serves now (e.g. after index_page calls) and
-        publish a generation that reads it.
+        the docs the index serves now, keeping the positional runs of
+        served pages docs_text lacks (index_page's), and publish a
+        generation that reads it.
 
         READER EXCLUSION: the rebuild overwrites <base>/possegs in
         place, and a pinned frame over replaced files reads no rows, so
@@ -1029,33 +1046,50 @@ class SearchService:
         )
 
     def _build_positional(self, g: Generation) -> None:
+        """(Re)build <base>/possegs as one run: the docs_text rows of
+        the docs `g` serves, plus the current positional rows of served
+        docs docs_text lacks (pages landed by index_page)."""
         from .functions.udfs import tokenize_lemmatize_udf
+        from .index.manifest import fs_delete, fs_exists
         from .index.positional import (
-            build_positional_segments,
+            positional_rows,
+            repack_positional,
+            unpack_positional,
             write_positional_segments,
         )
+        from .index.refresh import current_view
 
         if self.docs_text is None:
             raise ValueError(
                 "phrase search needs docs_text at open (to build the "
                 "positional runs) or a prebuilt <base>/possegs"
             )
+        path = f"{self.base}/possegs"
         # only docs the index serves get positional runs: a docs_text
         # row with no living doc would otherwise count in phrase()
         # without an item to serve
         prepared = self.docs_text.join(
             g.serve_meta.select("doc_id"), "doc_id", "left_semi"
         ).select("doc_id", tokenize_lemmatize_udf("text").alias("lemmas"))
-        write_positional_segments(
-            build_positional_segments(prepared, g.n_shards),
-            f"{self.base}/possegs",
-        )
+        rows = positional_rows(prepared, g.n_shards)
+        if fs_exists(self.spark, path):
+            live = _doc_meta_resolved(self.spark, self.base).filter(
+                ~F.col("deleted")
+            ).join(self.docs_text.select("doc_id"), "doc_id", "left_anti")
+            # collected off the possegs lineage: the overwrite below
+            # replaces the files a cached or lazy frame would re-read
+            kept = current_view(
+                read_pinned(self.spark, path), live, unpack_positional
+            ).select(*rows.columns).collect()
+            if kept:
+                rows = rows.unionByName(
+                    self.spark.createDataFrame(kept, rows.schema)
+                )
+        write_positional_segments(repack_positional(rows), path)
         # the rebuild is in sync with the served doc set by construction
         # — drop any crash-recovery staleness marker the overwrite may
         # have preserved (dynamic partitionOverwriteMode keeps root files)
-        from .index.manifest import fs_delete
-
-        fs_delete(self.spark, f"{self.base}/possegs/_STALE")
+        fs_delete(self.spark, f"{path}/_STALE")
 
     # -- /api/statistics -----------------------------------------------------
 

@@ -56,7 +56,7 @@ def start_incremental_indexer(
     run_id. Every consumer tolerates that: the read-time merge dedups
     equal doc_ids, and refresh_and_repack drops exact duplicate
     postings/meta rows before re-aggregating (see
-    index.refresh.current_postings / _doc_meta_resolved).
+    index.refresh.current_view / _doc_meta_resolved).
     """
     # shard mapping is part of the index identity: refuse to append
     # runs under a different modulus than the build recorded (a doc's
