@@ -165,9 +165,9 @@ def blocks_decoded(segments, term_stats, n_docs, avgdl, query, k,
     )
     if not terms:
         return 0, 0
-    rows = wand._wand_frame(
-        segments, terms, n_docs, avgdl, k, conjunctive
-    ).filter("is_trailer").collect()
+    rows = [r for r in wand._wand_rows(
+        segments, terms, None, n_docs, avgdl, k, conjunctive
+    )[0] if r["is_trailer"]]
     return (sum(r["n_blocks_decoded"] for r in rows),
             sum(r["n_blocks"] for r in rows))
 

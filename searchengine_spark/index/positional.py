@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 
 from ..functions import textproc
 from . import varbyte as vb
-from .segments import BLOCK, ReadSizes, _pack_walk
+from .segments import BLOCK, ReadSizes, _pack_walk, last_run_wins
 
 POSITIONAL_SEGMENTS_SCHEMA = T.StructType(
     [
@@ -277,8 +277,8 @@ def _decode_positions_for(
 
 class _PosList:
     """One term's positional runs within one shard — doc-level
-    last-run-wins across delta runs (upsert semantics, mirroring
-    wand._TermList's eager multi-run merge; rows without a run_id
+    last-run-wins across delta runs (upsert semantics:
+    segments.last_run_wins, as in wand._TermList; rows without a run_id
     column — pre-lifecycle snapshots — read as one run 0), position
     bytes decoded lazily per block and only from each doc's OWNING
     run."""
@@ -299,22 +299,11 @@ class _PosList:
             self._owner_run = None
             self._owner_idx = None
             return
-        all_ids = np.concatenate([r[1] for r in self._runs])
-        run_no = np.concatenate(
-            [np.full(len(r[1]), i, dtype=np.int64)
-             for i, r in enumerate(self._runs)]
-        )
-        idx_in_run = np.concatenate(
-            [np.arange(len(r[1]), dtype=np.int64) for r in self._runs]
-        )
-        order = np.lexsort((run_no, all_ids))
-        all_ids = all_ids[order]
-        run_no, idx_in_run = run_no[order], idx_in_run[order]
-        keep = np.ones(len(all_ids), dtype=bool)
-        keep[:-1] = all_ids[1:] != all_ids[:-1]  # keep last (highest run)
-        self.ids = all_ids[keep]
-        self._owner_run = run_no[keep]
-        self._owner_idx = idx_in_run[keep]
+        lens = [len(r[1]) for r in self._runs]
+        sel = last_run_wins([r[1] for r in self._runs])
+        self.ids = np.concatenate([r[1] for r in self._runs])[sel]
+        self._owner_run = np.repeat(np.arange(len(lens)), lens)[sel]
+        self._owner_idx = sel - np.cumsum([0] + lens[:-1])[self._owner_run]
 
     def positions_for(self, want: np.ndarray) -> dict[int, np.ndarray]:
         """want = indices into self.ids → {want index: positions}."""
@@ -338,10 +327,15 @@ class _PosList:
 
 
 def _phrase_kernel(
-    pdf: pd.DataFrame, phrase: list[str], block: int
+    pdf: pd.DataFrame, phrase: list[str], block: int,
+    allowed: np.ndarray | None = None, excluded: np.ndarray | None = None,
 ) -> pd.DataFrame:
     """One shard's runs for the phrase's distinct terms → matching
-    (doc_id, phrase_tf) rows."""
+    (doc_id, phrase_tf) rows. `allowed` / `excluded` (sorted int64, as
+    wand._filter takes them) drop candidates before any position
+    bytes are decoded."""
+    from .wand import _filter
+
     empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                           "phrase_tf": pd.Series([], dtype="int64")})
     lists = {
@@ -360,6 +354,9 @@ def _phrase_kernel(
         )
         if len(cand) == 0:
             return empty
+    cand = _filter(cand, allowed, excluded)
+    if len(cand) == 0:
+        return empty
     # lazy per-block position decode for survivors only
     pos: dict[str, dict[int, np.ndarray]] = {}
     idx_of: dict[str, np.ndarray] = {}
@@ -433,16 +430,19 @@ def proximity_search_packed_terms(
     block: int = BLOCK,
 ) -> DataFrame:
     """(doc_id, min_dist): docs where the two lemmas occur within
-    ``max_dist`` tokens, served from the positional runs (same scan
-    pruning + shard cogroup as phrase_search_packed_terms)."""
+    ``max_dist`` tokens, served from the positional runs. A full match
+    set, not bounded by k, so a lazy plan (index/wand._shard_frame),
+    like phrase_search_packed_terms."""
     if term_a == term_b:
         raise ValueError("proximity terms must differ")
     if max_dist < 1:
         raise ValueError("max_dist must be >= 1")
-    segs = pos_segments.filter(F.col("term").isin([term_a, term_b]))
-    return segs.groupBy("shard").applyInPandas(
-        lambda pdf: _proximity_kernel(pdf, term_a, term_b, max_dist, block),
-        schema="doc_id long, min_dist long",
+    from .wand import _shard_frame
+
+    return _shard_frame(
+        pos_segments, [term_a, term_b],
+        lambda pdf, _: _proximity_kernel(pdf, term_a, term_b, max_dist, block),
+        "doc_id long, min_dist long",
     )
 
 
@@ -452,14 +452,17 @@ def phrase_search_packed_terms(
     phrase: list[str],
     block: int = BLOCK,
 ) -> DataFrame:
-    """(doc_id, phrase_tf) for an already-analyzed lemma sequence."""
+    """(doc_id, phrase_tf) for an already-analyzed lemma sequence: the
+    full match set, not bounded by k, so a lazy plan
+    (index/wand._shard_frame)."""
     if not phrase:
         return spark.createDataFrame([], "doc_id long, phrase_tf long")
-    uniq = sorted(set(phrase))
-    segs = pos_segments.filter(F.col("term").isin(uniq))
-    return segs.groupBy("shard").applyInPandas(
-        lambda pdf: _phrase_kernel(pdf, list(phrase), block),
-        schema="doc_id long, phrase_tf long",
+    from .wand import _shard_frame
+
+    return _shard_frame(
+        pos_segments, sorted(set(phrase)),
+        lambda pdf, _: _phrase_kernel(pdf, list(phrase), block),
+        "doc_id long, phrase_tf long",
     )
 
 
@@ -470,22 +473,18 @@ PHRASE_KERNEL_SCHEMA = (
 
 def _phrase_topk_count_kernel(
     pdf: pd.DataFrame, phrase: list[str], block: int, k: int,
-    excluded: np.ndarray | None,
+    allowed: np.ndarray | None, excluded: np.ndarray | None,
 ) -> pd.DataFrame:
     """_phrase_kernel PLUS the shard's pre-pagination match count in
     the SAME pass: the shard's top-k rows by (phrase_tf desc, doc_id
     asc) followed by the trailer row of index/wand's kernel contract,
-    whose n_matched carries the shard match count. `excluded` (sorted
-    int64 tombstone deny-list) is applied before counting, replacing
-    the service's post-kernel isin filter."""
-    from .wand import _member_mask, with_trailer
+    whose n_matched carries the shard match count over the filtered
+    candidates (`allowed`, `excluded` as in _phrase_kernel)."""
+    from .wand import with_trailer
 
-    res = _phrase_kernel(pdf, phrase, block)
+    res = _phrase_kernel(pdf, phrase, block, allowed, excluded)
     ids = res["doc_id"].to_numpy(dtype=np.int64)
     tfs = res["phrase_tf"].to_numpy(dtype=np.int64)
-    if excluded is not None:
-        keep = ~_member_mask(ids, excluded)
-        ids, tfs = ids[keep], tfs[keep]
     sel = np.lexsort((ids, -tfs))[:k]
     return with_trailer(
         {"doc_id": ids[sel], "phrase_tf": tfs[sel]},
@@ -501,13 +500,16 @@ def phrase_search_packed_topk_count(
     excluded_doc_ids: list[int] | None = None,
     block: int = BLOCK,
     sizes: ReadSizes | None = None,
+    side: DataFrame | None = None,
 ) -> SimpleNamespace:
     """Fused phrase top-k + match count in ONE kernel pass per shard →
     a deferred read whose collect() returns ≤ shards·(k+1) rows of
     PHRASE_KERNEL_SCHEMA — each shard's top-k page candidates plus its
-    trailer row. The caller merges with merge_phrase_rows. Replaces
-    the two-action serve shape (count(), then orderBy().limit()) that
-    executed the phrase kernel twice per request.
+    trailer row. The caller merges with merge_phrase_rows.
+
+    `side`: an optional (shard, doc_id, …) frame keyed to the doc-space
+    shards — only its docs match (the `allowed` filter of wand_shard
+    and bool_shard), cogrouped into each shard's kernel.
 
     Plan shape: index/wand._shard_rows over the phrase's distinct
     terms, on the driver when the input bound from `sizes` (the warm
@@ -515,7 +517,7 @@ def phrase_search_packed_topk_count(
     segments.DRIVER_READ_BYTES_MAX, else — also without `sizes` — as
     one applyInPandas task per shard. `spark` is unused; it keeps the
     call shape perfbench/tracing.py wraps."""
-    from .wand import _deny_list, _shard_rows
+    from .wand import _allowed_of, _deny_list, _shard_rows
 
     if k < 0:
         raise ValueError(f"k must be >= 0 (got {k})")
@@ -524,14 +526,14 @@ def phrase_search_packed_topk_count(
     terms = sorted(set(phrase))
     exc = _deny_list(excluded_doc_ids)
     nbytes = None if sizes is None else sizes.input_bytes(
-        terms, positional=True
+        terms, positional=True, side=side is not None
     )
     return SimpleNamespace(collect=lambda: _shard_rows(
         pos_segments, terms,
-        lambda pdf, _: _phrase_topk_count_kernel(
-            pdf, list(phrase), block, k, exc
+        lambda pdf, side_pdf: _phrase_topk_count_kernel(
+            pdf, list(phrase), block, k, _allowed_of(side_pdf), exc
         ),
-        PHRASE_KERNEL_SCHEMA, nbytes=nbytes,
+        PHRASE_KERNEL_SCHEMA, side=side, nbytes=nbytes,
     )[0])
 
 

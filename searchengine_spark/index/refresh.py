@@ -356,9 +356,9 @@ def _recover_pos(base: str, action: str) -> str:
     forward when the main state is settled (`clean`/`forward` — the
     possegs swap runs LAST) and the temp tree is complete, otherwise
     discard it and keep serving the stale snapshot. A stale snapshot
-    is safe: tombstoned docs stay deny-listed and unknown docs drop in
-    the serve_meta join; the next compaction (or refresh_positional)
-    replaces it."""
+    is safe: tombstoned docs stay deny-listed and docs the index no
+    longer serves drop in the phrase kernel's served-docs filter; the
+    next compaction (or refresh_positional) replaces it."""
     pos_path = f"{base}/possegs"
     tmp = f"{pos_path}.refreshing"
     old = f"{pos_path}.old"
@@ -372,10 +372,10 @@ def _recover_pos(base: str, action: str) -> str:
                 # tombstoned docs from segments/serve_meta) but the
                 # possegs repack was lost — the kept snapshot may hold
                 # rows for docs that no longer exist. Mark it so the
-                # serving layer routes phrase counts through the exact
-                # serve_meta semi-join instead of the fused one-pass
-                # kernel until the next repack/rebuild replaces the
-                # tree (an underscore file — parquet readers skip it).
+                # serving layer's phrase kernel filters to the served
+                # docs (the doc→site map as its `allowed` side) until
+                # the next repack/rebuild replaces the tree (an
+                # underscore file — parquet readers skip it).
                 fs_touch(SparkSession.active(), f"{pos_path}/_STALE")
     elif os.path.exists(old):
         # crashed inside the possegs swap after tmp→path: new tree is

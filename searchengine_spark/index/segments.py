@@ -597,6 +597,34 @@ def unpack_segment_titles(row, n: int) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
+def last_run_wins(run_ids: list[np.ndarray]) -> np.ndarray:
+    """Doc-level last-run-wins (upsert, I1) over one term's runs given
+    in ascending run order, each a sorted doc-id array → indices into
+    their concatenation of each doc's posting from the highest run
+    holding it, in doc_id order."""
+    ids = np.concatenate(run_ids)
+    run_no = np.repeat(np.arange(len(run_ids)), [len(r) for r in run_ids])
+    order = np.lexsort((run_no, ids))
+    s = ids[order]
+    keep = np.ones(len(s), dtype=bool)
+    keep[:-1] = s[1:] != s[:-1]  # the last row of each doc_id wins
+    return order[keep]
+
+
+def unpack_runs(rows) -> tuple[np.ndarray, ...]:
+    """(doc_ids, tfs, doclens, title_tfs, title_lens) of one term's
+    packed segment rows (dict-like, ascending run order), merged
+    last-run-wins."""
+    parts = []
+    for row in rows:
+        ids, tfs, dls = unpack_segment(row)
+        parts.append((ids, tfs, dls, *unpack_segment_titles(row, len(ids))))
+    if len(parts) == 1:
+        return parts[0]
+    sel = last_run_wins([p[0] for p in parts])
+    return tuple(np.concatenate(c)[sel] for c in zip(*parts))
+
+
 def delta_segments(
     delta_prepared: DataFrame,
     term_stats: DataFrame,
@@ -760,20 +788,13 @@ def _merge_group(g: dict, n_docs: int, avgdl: float, run_id: int) -> dict:
     I1); df and avgtl come from the highest run deterministically — an
     arbitrary row could pick a delta run's fillna(1) df placeholder
     over the base-exact df and change block-max scores run-to-run."""
-    parts = []
-    for i in range(len(g["run_id"])):
-        row = {c: v[i] for c, v in g.items()}
-        ids, tfs, dls = unpack_segment(row)
-        parts.append((ids, tfs, dls, *unpack_segment_titles(row, len(ids))))
-    ids, tfs, dls, ttfs, tls = (np.concatenate(c) for c in zip(*parts))
-    run_no = np.repeat(np.arange(len(parts)), [len(p[0]) for p in parts])
-    order = np.lexsort((run_no, ids))
-    # the last row of each doc_id in (doc_id, run) order wins
-    keep = order[np.append(ids[order][1:] != ids[order][:-1], True)]
+    ids, tfs, dls, ttfs, tls = unpack_runs(
+        {c: v[i] for c, v in g.items()} for i in range(len(g["run_id"]))
+    )
     a_tl = g["avgtl"][-1] if "avgtl" in g else None
     return _pack_arrays(
-        g["term"][0], int(g["shard"][0]), ids[keep], tfs[keep], dls[keep],
-        ttfs[keep], tls[keep], int(g["df"][-1]), n_docs, avgdl, run_id,
+        g["term"][0], int(g["shard"][0]), ids, tfs, dls, ttfs, tls,
+        int(g["df"][-1]), n_docs, avgdl, run_id,
         float(a_tl) if a_tl is not None and a_tl == a_tl else 0.0,
     )
 

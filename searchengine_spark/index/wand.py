@@ -62,22 +62,29 @@ value of a hit column:
   theta             the θ lower bound used for block pruning (0.0 when
                     pruning is off)
 
-The driver merge ranks hit rows (score desc, doc_id asc) and sums the
-trailers' n_matched (_merge, or _ranked for lazy DataFrame results);
-service.explain sums the other counters. The phrase kernel
-(index/positional.py) fills n_matched only.
+The driver merge (_merge) ranks hit rows (score desc, doc_id asc)
+and sums the trailers' n_matched; service.explain sums the other
+counters. The phrase kernel (index/positional.py) fills n_matched
+only.
 
-Two executors run the same kernels. The lazy DataFrame APIs
-(search_packed, bool_search_packed, prefix_search_packed,
-facet_counts_packed, phrase_search_packed_terms) always build the
-distributed plan, _shard_frame: term-pruned scan → groupBy(shard)
-(or a cogroup with the side frame) → applyInPandas. The collected
-reads (search_packed_fused and everything on it — count, cursor,
-collapse, boosts, bm25f, more-like-this — bool_search_packed_fused,
-phrase_search_packed_topk_count and service.explain) go through
-_shard_rows, which runs the kernels on the DRIVER when an upper bound
-on their input bytes is ≤ segments.DRIVER_READ_BYTES_MAX, a cutoff
-measured against the applyInPandas plan. The bound comes from
+Every ranked packed read — output bounded by k — has ONE
+implementation: the kernels' rows collected through _shard_rows, then
+the driver merge. search_packed_fused (and everything on it — count,
+cursor, collapse, boosts, bm25f, prefix, more-like-this),
+bool_search_packed_fused, phrase_search_packed_topk_count and
+service.explain read this way; the DataFrame APIs search_packed,
+bool_search_packed and prefix_search_packed are views over the same
+reads (_page_frame). Only reads whose output is NOT bounded by k keep
+a lazy plan, _shard_frame (term-pruned scan → groupBy(shard), or a
+cogroup with the side frame, → applyInPandas): facet_counts_packed
+aggregates its per-shard facet partials distributed, and
+phrase_search_packed_terms / proximity_search_packed_terms return
+full match sets.
+
+Two executors run a collected read's kernels. _shard_rows runs them
+on the DRIVER when an upper bound on their input bytes is ≤
+segments.DRIVER_READ_BYTES_MAX, a cutoff measured against the
+applyInPandas plan (_shard_frame). The bound comes from
 statistics the caller already holds (a segments.ReadSizes: postings
 and positions per term over every run, and the rows a side frame is
 drawn from), with no Spark job. Above it, or for a caller without
@@ -110,8 +117,7 @@ from .segments import (
     ReadSizes,
     _field_norm_np,
     bm25_scores_np,
-    unpack_segment,
-    unpack_segment_titles,
+    unpack_runs,
 )
 
 # modes whose _TermList.block_max is a sound per-posting upper bound
@@ -297,30 +303,9 @@ class _TermList:
         self._oids = self._otfs = self._odls = np.empty(0, dtype=np.int64)
         self._bttf = self._btls = b""
         self._ottf = self._otls = np.empty(0, dtype=np.int64)
-        if len(rows) == 1:
-            ids, tfs, dls = unpack_segment(rows.iloc[0])
-            ttfs, tls = unpack_segment_titles(rows.iloc[0], len(ids))
-        else:
-            parts = []
-            for _, row in rows.sort_values("run_id").iterrows():
-                i, t, d = unpack_segment(row)
-                tt, tl = unpack_segment_titles(row, len(i))
-                parts.append((i, t, d, tt, tl, int(row["run_id"])))
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            ttfs = np.concatenate([p[3] for p in parts])
-            tls = np.concatenate([p[4] for p in parts])
-            runs = np.concatenate(
-                [np.full(len(p[0]), p[5], dtype=np.int64) for p in parts]
-            )
-            order = np.lexsort((runs, ids))
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-            ttfs, tls = ttfs[order], tls[order]
-            keep = np.ones(len(ids), dtype=bool)
-            keep[:-1] = ids[1:] != ids[:-1]  # keep last (highest run)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            ttfs, tls = ttfs[keep], tls[keep]
+        if len(rows) > 1:
+            rows = rows.sort_values("run_id")
+        ids, tfs, dls, ttfs, tls = unpack_runs(r for _, r in rows.iterrows())
         scores = self._score(tfs, dls, ttfs, tls)
         self._full = (ids, scores)
         self.n = len(ids)
@@ -1155,11 +1140,13 @@ def _shard_frame(
     segments: DataFrame, terms: list[str], kernel, schema: str,
     mode: str = "bm25", side: DataFrame | None = None,
 ) -> DataFrame:
-    """The one packed-read plan: term-pruned segment scan → optional
-    cogroup with a per-shard side frame (site members, or the doc→site
-    map) → ONE applyInPandas kernel call per shard. `kernel(seg_pdf,
-    side_pdf)` gets side_pdf=None without a side. The corpus never
-    moves; only the side frame's rows shuffle."""
+    """The distributed packed-read plan: term-pruned segment scan →
+    optional cogroup with a per-shard side frame (site members, the
+    doc→site map, or the served docs) → ONE applyInPandas kernel call
+    per shard. `kernel(seg_pdf, side_pdf)` gets side_pdf=None without
+    a side. The corpus never moves; only the side frame's rows
+    shuffle. _shard_rows' Spark executor, and the lazy plan of the
+    reads whose output is not bounded by k (module docstring)."""
     seg = term_pruned_segments(segments, terms, mode)
     if side is None:
         return seg.groupBy("shard").applyInPandas(
@@ -1268,8 +1255,7 @@ def _wand_kernel(
 ):
     """(kernel, side) of the per-shard wand_shard read for resolved
     `terms` — every WAND read (ranked page, count, cursor, collapse,
-    explain, prefix) runs this kernel, lazily (_wand_frame) or
-    collected (_wand_rows)."""
+    explain, prefix) runs this kernel through _wand_rows."""
     exc = _deny_list(excluded_doc_ids)
     n_terms = len(terms)
     if collapse_n is not None:
@@ -1291,18 +1277,6 @@ def _wand_kernel(
         )
 
     return kernel, side
-
-
-def _wand_frame(
-    segments: DataFrame, terms: list[str], n_docs: int, avgdl: float,
-    k: int, conjunctive: bool, mode: str = "bm25", **kw,
-) -> DataFrame:
-    """Per-shard wand_shard output (KERNEL_SCHEMA) as a lazy frame
-    (_wand_kernel's keywords)."""
-    kernel, side = _wand_kernel(
-        segments, terms, n_docs, avgdl, k, conjunctive, mode, **kw
-    )
-    return _shard_frame(segments, terms, kernel, KERNEL_SCHEMA, mode, side)
 
 
 def _wand_rows(
@@ -1355,32 +1329,6 @@ def _merge(
                     break
         hits = kept
     return hits[offset:offset + k], int(count)
-
-
-def _ranked(
-    spark, per_shard: DataFrame, k: int, offset: int = 0,
-    n_terms: int | None = None,
-) -> DataFrame:
-    """The lazy twin of _merge: hit rows → global
-    TakeOrderedAndProject of the top (offset+k), the offset rows
-    sliced driver-side (reference list-slice semantics, same bounded
-    behaviour as the relational path's MAX_OFFSET)."""
-    from ..operators.search import empty_df
-
-    out = per_shard.filter(~F.col("is_trailer"))
-    if n_terms is not None:
-        out = out.filter(F.col("n_hit") == n_terms)
-    out = (
-        out.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(offset + k)
-    )
-    if not offset:
-        return out
-    sliced = out.collect()[offset:]
-    if not sliced:
-        return empty_df(spark, "doc_id long, score double")
-    return spark.createDataFrame(sliced, out.schema)
 
 
 def _check_page_args(k: int, offset: int, mode: str, boosts) -> None:
@@ -1466,9 +1414,8 @@ def search_packed_fused(
     segments.DRIVER_READ_BYTES_MAX (one JVM-only Spark job per
     collected frame, no Python worker), else — also without `sizes` —
     as the applyInPandas plan (_shard_frame); then _merge of
-    ≤ n_shards·(offset+k+1) rows (·collapse_n under collapse), same
-    rank order (score desc, doc_id asc) as search_packed's
-    TakeOrderedAndProject."""
+    ≤ n_shards·(offset+k+1) rows (·collapse_n under collapse), ranked
+    (score desc, doc_id asc)."""
     _check_page_args(k, offset, mode, boosts)
     if collapse_n is not None:
         if collapse_n < 1:
@@ -1564,15 +1511,15 @@ def search_packed(
     Mutually exclusive with `offset` and `collapse_n`.
 
     `collapse_n` (+ `site_map`/`doc_stats`): per-site result
-    diversification — at most collapse_n results per site. Delegates
-    to search_packed_fused's collapse kernel + exact bounded global
-    merge (see there for semantics and the exactness argument) and
-    re-materializes the page as a DataFrame.
+    diversification — at most collapse_n results per site (see
+    search_packed_fused for semantics and the exactness argument).
 
-    Plan shape: parquet scan pruned to the query terms (term predicate
-    + shard partitioning) → one applyInPandas kernel per shard →
-    global TakeOrderedAndProject of ≤ n_shards·(offset+k) rows. Two
-    shuffles total, both tiny.
+    Plan shape: a DataFrame view over the one ranked packed read,
+    search_packed_fused(..., _count=False) — the term-pruned segment
+    scan and one wand_shard call per shard (the applyInPandas plan:
+    this entry takes no `sizes`), then the driver merge of
+    ≤ n_shards·(offset+k) rows; the ranked page comes back as a small
+    local frame, in rank order.
 
     `df_map` (term → df): pass a pre-collected dictionary to skip the
     per-query term_stats lookup job — a query server collects it once
@@ -1589,8 +1536,8 @@ def search_packed(
     inferred from the segment frame when omitted).
 
     `offset` (reference SearchResponse.java:42-50): pagination — each
-    shard returns its top (offset+k), the global heap keeps (offset+k),
-    and the offset rows are sliced driver-side, same bounded semantics
+    shard returns its top (offset+k), the driver merge keeps
+    (offset+k), and the offset rows are sliced driver-side, same bounded semantics
     as the relational path (operators.search.MAX_OFFSET).
 
     `excluded_doc_ids`: small deny-list of doc ids whose postings must
@@ -1601,40 +1548,30 @@ def search_packed(
     by corpus size — a corpus-sized filter belongs in `site`/members
     form instead).
     """
-    from ..operators.search import empty_df
-
-    _check_page_args(k, offset, mode, boosts)
     if after is not None and (offset or collapse_n is not None):
         raise ValueError(
             "search_after replaces offset and cannot combine with collapse"
         )
-    fweights = _resolve_fweights(mode, field_weights)
-    if collapse_n is not None:
-        hits, _ = search_packed_fused(
-            spark, segments, term_stats, n_docs, avgdl, query, k=k,
-            conjunctive=conjunctive, max_rel_freq=max_rel_freq,
-            df_map=df_map, mode=mode, offset=offset, doc_stats=doc_stats,
-            n_shards=n_shards, excluded_doc_ids=excluded_doc_ids,
-            collapse_n=collapse_n, site_map=site_map, boosts=boosts,
-            field_weights=field_weights,
-        )
-        if not hits:
-            return empty_df(spark, "doc_id long, score double")
-        return spark.createDataFrame(hits, "doc_id long, score double")
-    terms = _resolve_terms(
-        term_stats, n_docs, lemmatize_query(query), max_rel_freq, df_map
+    hits, _ = search_packed_fused(
+        spark, segments, term_stats, n_docs, avgdl, query, k=k,
+        conjunctive=conjunctive, max_rel_freq=max_rel_freq, df_map=df_map,
+        mode=mode, site=site, offset=offset, doc_stats=doc_stats,
+        n_shards=n_shards, excluded_doc_ids=excluded_doc_ids,
+        collapse_n=collapse_n, site_map=site_map, boosts=boosts,
+        field_weights=field_weights, after=after, _count=False,
     )
-    if not terms:
+    return _page_frame(spark, hits)
+
+
+def _page_frame(spark, hits: list[tuple[int, float]]) -> DataFrame:
+    """A merged, ranked [(doc_id, score)] page → DataFrame(doc_id,
+    score) in the same order: the result of the lazy ranked APIs
+    (search_packed, bool_search_packed, prefix_search_packed)."""
+    from ..operators.search import empty_df
+
+    if not hits:
         return empty_df(spark, "doc_id long, score double")
-    per_shard = _wand_frame(
-        segments, terms, n_docs, avgdl, offset + k, conjunctive, mode,
-        site=site, doc_stats=doc_stats, n_shards=n_shards,
-        excluded_doc_ids=excluded_doc_ids, boosts=boosts, after=after,
-        fweights=fweights,
-    )
-    return _ranked(
-        spark, per_shard, k, offset, len(terms) if conjunctive else None
-    )
+    return spark.createDataFrame(hits, "doc_id long, score double")
 
 
 def match_count_packed(

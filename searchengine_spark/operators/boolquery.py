@@ -465,38 +465,6 @@ def bool_shard(
     )
 
 
-def _bool_kernel(
-    segments: DataFrame, n_docs: int, avgdl: float, query: str | Node,
-    k: int, offset: int, lemmatize: bool, excluded_doc_ids, site,
-    doc_stats, n_shards, count: bool,
-):
-    """(leaf terms, kernel, side) of the per-shard bool_shard read (top
-    offset+k) for index/wand's shared drivers (_shard_frame,
-    _shard_rows); None when no leaf term survives analysis."""
-    from ..index.wand import _allowed_of, _deny_list, _site_side
-
-    if k < 0 or offset < 0:
-        raise ValueError(
-            f"k and offset must be >= 0 (got k={k}, offset={offset})"
-        )
-    ast = parse_bool_query(query) if isinstance(query, str) else query
-    if lemmatize:
-        ast = normalize(lemmatize_ast(ast))
-    leaves = leaf_terms(ast)
-    if not leaves:
-        return None
-    exc = _deny_list(excluded_doc_ids)
-    return (
-        leaves,
-        lambda seg_pdf, mem_pdf: bool_shard(
-            seg_pdf, ast, n_docs, avgdl, offset + k,
-            allowed=_allowed_of(mem_pdf),
-            excluded=exc, count=count,
-        ),
-        _site_side(segments, site, doc_stats, n_shards),
-    )
-
-
 def bool_search_packed(
     spark,
     segments: DataFrame,
@@ -511,29 +479,25 @@ def bool_search_packed(
     doc_stats: DataFrame | None = None,
     n_shards: int | None = None,
 ) -> DataFrame:
-    """Boolean top-k over packed segments -> (doc_id, score).
+    """Boolean top-k over packed segments -> (doc_id, score), ranked.
 
-    Plan: segment scan pruned to the leaf terms (pushed ``term IN``)
-    -> one applyInPandas kernel per doc-space shard -> global
-    TakeOrderedAndProject of <= n_shards*(offset+k) rows, offset
-    sliced driver-side. Same two-tiny-shuffle shape as
-    index/wand.search_packed. With ``site``, the site's member docs
-    are cogrouped into each shard's kernel (only the member list
-    moves — the corpus never shuffles); corpus statistics stay
-    global, same contract as every filtered-retrieval path."""
-    from ..index.wand import KERNEL_SCHEMA, _ranked, _shard_frame
+    A DataFrame view over bool_search_packed_fused without the count:
+    segment scan pruned to the leaf terms (pushed ``term IN``) -> one
+    bool_shard kernel call per doc-space shard (the applyInPandas
+    plan: this entry takes no ``sizes``) -> driver merge of
+    <= n_shards*(offset+k) rows, offset sliced driver-side. With
+    ``site``, the site's member docs are cogrouped into each shard's
+    kernel (only the member list moves — the corpus never shuffles);
+    corpus statistics stay global, same contract as every
+    filtered-retrieval path."""
+    from ..index.wand import _page_frame
 
-    plan = _bool_kernel(
-        segments, n_docs, avgdl, query, k, offset, lemmatize,
-        excluded_doc_ids, site, doc_stats, n_shards, count=False,
+    hits, _ = bool_search_packed_fused(
+        spark, segments, n_docs, avgdl, query, k=k, lemmatize=lemmatize,
+        excluded_doc_ids=excluded_doc_ids, site=site, offset=offset,
+        doc_stats=doc_stats, n_shards=n_shards, _count=False,
     )
-    if plan is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    leaves, kernel, side = plan
-    per_shard = _shard_frame(
-        segments, leaves, kernel, KERNEL_SCHEMA, side=side
-    )
-    return _ranked(spark, per_shard, k, offset)
+    return _page_frame(spark, hits)
 
 
 def bool_search_packed_fused(
@@ -550,31 +514,48 @@ def bool_search_packed_fused(
     doc_stats: DataFrame | None = None,
     n_shards: int | None = None,
     sizes: ReadSizes | None = None,
+    _count: bool = True,
 ) -> tuple[list[tuple[int, float]], int]:
     """ONE kernel pass per shard serving BOTH the ranked page and the
     pre-pagination match count -> ([(doc_id, score)] offset-sliced and
     globally ranked, n_matched) — the warm server's boolean hot path,
-    same contract as index/wand.search_packed_fused.
+    same contract as index/wand.search_packed_fused (``_count=False``
+    skips the count and returns None for it).
 
     Plan shape: index/wand._shard_rows over the leaf terms (plus the
     site members with ``site``), on the driver when the input bound
     from ``sizes`` (index/segments.ReadSizes, the warm server's) is ≤
     segments.DRIVER_READ_BYTES_MAX, else — also without ``sizes`` — as
     the applyInPandas plan; then index/wand._merge."""
-    from ..index.wand import KERNEL_SCHEMA, _merge, _shard_rows
-
-    plan = _bool_kernel(
-        segments, n_docs, avgdl, query, k, offset, lemmatize,
-        excluded_doc_ids, site, doc_stats, n_shards, count=True,
+    from ..index.wand import (
+        KERNEL_SCHEMA, _allowed_of, _deny_list, _merge, _shard_rows,
+        _site_side,
     )
-    if plan is None:
-        return [], 0
-    leaves, kernel, side = plan
+
+    if k < 0 or offset < 0:
+        raise ValueError(
+            f"k and offset must be >= 0 (got k={k}, offset={offset})"
+        )
+    ast = parse_bool_query(query) if isinstance(query, str) else query
+    if lemmatize:
+        ast = normalize(lemmatize_ast(ast))
+    leaves = leaf_terms(ast)
+    if not leaves:
+        return [], (0 if _count else None)
+    exc = _deny_list(excluded_doc_ids)
+    side = _site_side(segments, site, doc_stats, n_shards)
     nbytes = None if sizes is None else sizes.input_bytes(
         leaves, side=side is not None
     )
     rows, _ = _shard_rows(
-        segments, leaves, kernel, KERNEL_SCHEMA, side=side, nbytes=nbytes
+        segments, leaves,
+        lambda seg_pdf, mem_pdf: bool_shard(
+            seg_pdf, ast, n_docs, avgdl, offset + k,
+            allowed=_allowed_of(mem_pdf), excluded=exc, count=_count,
+        ),
+        KERNEL_SCHEMA, side=side, nbytes=nbytes,
     )
     hits, count = _merge(rows, k, offset)
-    return [(r["doc_id"], r["score"]) for r in hits], count
+    return [(r["doc_id"], r["score"]) for r in hits], (
+        count if _count else None
+    )

@@ -28,6 +28,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _expansion(
+    term_stats: DataFrame, prefix: str, max_expansions: int
+) -> dict[str, int]:
+    """{term: df} of expand_prefix's terms, in its order."""
+    if not prefix:
+        raise ValueError("prefix must be non-empty")
+    rows = (
+        term_stats.filter(F.col("term").startswith(prefix))
+        .orderBy(F.col("df").desc(), F.col("term"))
+        .limit(max_expansions)
+        .select("term", "df")
+        .collect()
+    )
+    return {r["term"]: r["df"] for r in rows}
+
+
 def expand_prefix(
     term_stats: DataFrame, prefix: str, max_expansions: int = 50
 ) -> list[str]:
@@ -35,15 +51,7 @@ def expand_prefix(
     term ASC), capped at ``max_expansions`` — a tiny driver-side list
     (reference analog: the query-word dictionary lookup J1, widened
     to a range)."""
-    if not prefix:
-        raise ValueError("prefix must be non-empty")
-    rows = (
-        term_stats.filter(F.col("term").startswith(prefix))
-        .orderBy(F.col("df").desc(), F.col("term"))
-        .limit(max_expansions)
-        .collect()
-    )
-    return [r["term"] for r in rows]
+    return list(_expansion(term_stats, prefix, max_expansions))
 
 
 def prefix_search_packed(
@@ -57,19 +65,20 @@ def prefix_search_packed(
     max_expansions: int = 50,
     excluded_doc_ids: list[int] | None = None,
 ) -> DataFrame:
-    """Prefix top-k over packed segments -> (doc_id, score): bounded
-    expansion, then the disjunctive block-max WAND kernel over the
-    expanded terms (one applyInPandas per doc-space shard, global
-    TakeOrderedAndProject — index/wand.search_packed's plan shape)."""
-    from ..index.wand import _ranked, _wand_frame
+    """Prefix top-k over packed segments -> (doc_id, score), ranked:
+    bounded expansion, then a DataFrame view over the disjunctive,
+    df-unpruned block-max WAND read over the expanded terms
+    (index/wand.search_packed_fused, without the count — the read
+    SearchService.prefix serves)."""
+    from ..index.wand import _page_frame, search_packed_fused
 
-    terms = expand_prefix(term_stats, prefix, max_expansions)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return _ranked(spark, _wand_frame(
-        segments, terms, n_docs, avgdl, k, conjunctive=False,
-        excluded_doc_ids=excluded_doc_ids,
-    ), k)
+    exp = _expansion(term_stats, prefix, max_expansions)
+    hits, _ = search_packed_fused(
+        spark, segments, term_stats, n_docs, avgdl, prefix,
+        lemmas=list(exp), df_map=exp, k=k, conjunctive=False,
+        max_rel_freq=1.0, excluded_doc_ids=excluded_doc_ids, _count=False,
+    )
+    return _page_frame(spark, hits)
 
 
 def prefix_search(

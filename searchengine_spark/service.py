@@ -228,21 +228,28 @@ class SearchService:
         cfs = {r["term"]: r["cf"] for r in terms}
         # delta runs on disk: what index_page taught the service that
         # landed them — their terms absent from term_stats at df=1 (its
-        # rule), and every term's delta postings in the size bound
-        learned, delta_postings = {}, {}
+        # rule), and every term's delta postings and positions (Σtf,
+        # decoded from the packed tfs) in the size bound
+        learned, delta_postings, delta_positions = {}, {}, {}
         if top_run > 0:
-            for r in (segments.filter(F.col("run_id") > 0).groupBy("term")
-                      .agg(F.sum("n_docs").alias("n")).collect()):
+            from .index.varbyte import decode_ints
+
+            for r in (segments.filter(F.col("run_id") > 0)
+                      .select("term", "n_docs", "tfs").collect()):
                 t = r["term"]
-                delta_postings[t] = dfs.get(t, 0) + r["n"]
+                delta_postings[t] = (
+                    delta_postings.get(t, dfs.get(t, 0)) + r["n_docs"])
+                delta_positions[t] = (
+                    delta_positions.get(t, cfs.get(t, 0))
+                    + int(decode_ints(bytes(r["tfs"])).sum()))
                 if t not in dfs:
                     learned[t] = 1
         self._gen = Generation(
             segments, serve_meta, tombstoned,
             int(rec[0]["n_shards"]) if len(rec) == 1 else top_shard + 1,
             ChainMap(learned, dfs),
-            ReadSizes(ChainMap(delta_postings, dfs), ChainMap({}, cfs),
-                      side_rows),
+            ReadSizes(ChainMap(delta_postings, dfs),
+                      ChainMap(delta_positions, cfs), side_rows),
             # past every run on disk, tombstone runs included: a write
             # must never tie an earlier one (a re-index tied with its
             # delete resolves deleted-wins)
@@ -515,17 +522,6 @@ class SearchService:
                 "the query verbatim — a rewritten term set would "
                 "silently change the ranking under the cursor)"
             )
-        if after is not None and collapse is not None and (
-            after_sites is None
-        ):
-            raise ValueError(
-                "search_after with collapse needs after_sites — the "
-                "per-site served counts the previous page returned as "
-                "response['site_counts'] (an exact collapsed cursor "
-                "is stateful)"
-            )
-        if after_sites is not None and (after is None or collapse is None):
-            raise ValueError("after_sites needs after AND collapse")
         from .operators.search import lemmatize_query, parse_boosted_query
 
         boosts = None
@@ -812,7 +808,6 @@ class SearchService:
         from .functions.textproc import tokenize_lemmatize
         from .index.positional import (
             merge_phrase_rows,
-            phrase_search_packed_terms,
             phrase_search_packed_topk_count,
         )
 
@@ -820,41 +815,23 @@ class SearchService:
         if not phr:
             return {"result": True, "count": 0, "data": []}
         pos_segments, stale = self._positional(g)
-        if not stale:
-            # hot path: ONE kernel pass per shard returns the shard's
-            # top-k rows AND its match count (the trailer row of the
-            # shared kernel contract). Exact because an in-sync possegs
-            # references only servable-or-tombstoned docs, and
-            # tombstones are deny-listed inside the kernel; the stale
-            # snapshot a crash-recovery discard can leave (_STALE
-            # marker) routes through the exact semi-join path below
-            # instead.
-            page, count = merge_phrase_rows(
-                phrase_search_packed_topk_count(
-                    self.spark, pos_segments, phr, limit,
-                    excluded_doc_ids=g.tombstoned or None,
-                    sizes=g.read_sizes,
-                ).collect(),
-                limit,
-            )
-        else:
-            hits = phrase_search_packed_terms(
-                self.spark, pos_segments, phr
-            )
-            if g.tombstoned:
-                hits = hits.filter(~F.col("doc_id").isin(g.tombstoned))
-            # count only SERVABLE docs (semi-join the living meta): a
-            # stale possegs snapshot — possible after a crash-recovery
-            # discard — may still hold rows for docs compaction removed
-            hits = hits.join(
-                g.serve_meta.select("doc_id"), "doc_id", "left_semi"
-            )
-            count = hits.count()
-            page = [
-                (r["doc_id"], r["phrase_tf"])
-                for r in hits.orderBy(F.desc("phrase_tf"), F.asc("doc_id"))
-                .limit(limit).collect()
-            ]
+        # ONE kernel pass per shard returns the shard's top-k rows AND
+        # its match count (the trailer row of the shared kernel
+        # contract), tombstones deny-listed inside the kernel. An
+        # in-sync possegs references only servable-or-tombstoned docs;
+        # a stale snapshot (_STALE marker, left by a crash-recovery
+        # discard) may still hold docs compaction removed, so it also
+        # cogroups the served docs (the cached doc→site map) as the
+        # kernel's `allowed` filter.
+        page, count = merge_phrase_rows(
+            phrase_search_packed_topk_count(
+                self.spark, pos_segments, phr, limit,
+                excluded_doc_ids=g.tombstoned or None,
+                sizes=g.read_sizes,
+                side=self._site_map(g) if stale else None,
+            ).collect(),
+            limit,
+        )
         return {"result": True, "count": count,
                 "data": self._items(g, page, "phrase_tf")}
 
@@ -1037,10 +1014,9 @@ class SearchService:
         return g.lazy("possegs", read), g.lazy(
             # a crash-recovery discard (refresh._recover_pos) marks a
             # kept pre-compaction snapshot: its rows may reference docs
-            # the main index no longer serves, so phrase counts must go
-            # through the exact serve_meta semi-join instead of the
-            # fused kernel until a repack/rebuild replaces the tree
-            # (which drops the marker)
+            # the main index no longer serves, so phrase reads filter
+            # to the served docs until a repack/rebuild replaces the
+            # tree (which drops the marker)
             "pos_stale",
             lambda: fs_exists(self.spark, f"{self.base}/possegs/_STALE"),
         )

@@ -93,3 +93,26 @@ def test_refresh_positional_keeps_index_page_pages(landed):
     assert [d["doc_id"] for d in after["data"]] == [doc_id]
     # the docs_text rows are rebuilt as before
     assert svc.phrase("быстрый поиск") == corpus
+
+
+def test_reopen_restores_delta_positions(spark, landed):
+    """A reopen restores each delta term's positions (Σtf) in
+    read_sizes, not only its postings: the positional input bound of a
+    phrase read over delta terms matches the landing service's."""
+    from searchengine_spark.operators.search import lemmatize_query
+
+    base, svc, _ = landed
+    twice = "повторноеслово"
+    svc.index_page("https://site1.example/delta-twice",
+                   text=f"{twice} поиск {twice}")
+    (lemma,) = lemmatize_query(twice)
+    live = svc._gen.read_sizes
+    assert live.positions[lemma] == 2
+    again = _open(spark, base)
+    try:
+        got = again._gen.read_sizes
+        for t in (lemma, WORD, NEXT, "поиск", "быстрый"):
+            assert got.positions.get(t) == live.positions[t], t
+            assert got.postings.get(t) == live.postings[t], t
+    finally:
+        again.close()

@@ -7,8 +7,8 @@ Locked properties:
     term-sorted);
   * the query side joins are broadcast (no shuffle of postings for the
     join itself);
-  * the final top-k is TakeOrderedAndProject (distributed heap), not a
-    global sort;
+  * the relational final top-k is TakeOrderedAndProject (distributed
+    heap), not a global sort;
   * packed-segment scan for WAND is pruned by the term predicate.
 """
 
@@ -169,14 +169,23 @@ def test_kmv_plan_has_no_window(spark):
     )
 
 
+def _wand_plan(segments, n, avgdl, terms, mode="bm25", **kw):
+    """The Spark executor's plan of a ranked WAND read (_shard_frame
+    over _wand_kernel — what index/wand._shard_rows collects)."""
+    from searchengine_spark.index.wand import (
+        KERNEL_SCHEMA,
+        _shard_frame,
+        _wand_kernel,
+    )
+
+    kernel, side = _wand_kernel(segments, terms, n, avgdl, 20, True, mode, **kw)
+    return _shard_frame(segments, terms, kernel, KERNEL_SCHEMA, mode, side)
+
+
 def test_wand_plan_term_pruned(spark, built):
     idx, segments, n, avgdl = built
-    out = search_packed(
-        spark, segments, idx.term_stats, n, avgdl, "быстрый поиск", k=20
-    )
-    plan = _plan(out)
+    plan = _plan(_wand_plan(segments, n, avgdl, ["быстрый", "поиск"]))
     assert "In(term," in plan, "segment scan not pruned by query terms"
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_wand_drops_field_layer_unless_bm25f(spark, built):
@@ -199,9 +208,7 @@ def test_wand_drops_field_layer_unless_bm25f(spark, built):
     assert set(FIELD_LAYER_COLS) <= set(seg_f.columns)
     # and the projection reaches the actual search plan (a call site
     # bypassing the shared helper would reintroduce the streams)
-    plain = search_packed(
-        spark, segments, idx.term_stats, n, avgdl, "быстрый поиск", k=20
-    )
+    plain = _wand_plan(segments, n, avgdl, ["быстрый", "поиск"])
     assert "tfs_title" not in _plan(plain)
     fielded = search_packed(
         spark, segments, idx.term_stats, n, avgdl, "быстрый поиск",

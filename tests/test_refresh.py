@@ -549,3 +549,61 @@ def test_refresh_positional_clears_stale_marker_on_uri_base(spark, tmp_path):
         assert svc._positional(svc._gen)[1] is False
     finally:
         svc.close()
+
+
+def test_stale_possegs_drop_compacted_away_docs(spark, tmp_path):
+    """A stale positional snapshot still holds a doc that compaction
+    removed: a phrase-matching doc tombstoned, then compacted away,
+    with the possegs repack temp lost. phrase() must exclude it from
+    count and page — the kernel's `allowed` filter over the served
+    docs — in the one kernel pass an in-sync read takes, plus the one
+    collect of the served docs."""
+    import os
+
+    from searchengine_spark.index.refresh import recover
+    from searchengine_spark.service import SearchService
+
+    b = str(tmp_path / "b")
+    _mini_index(spark, b, delta=False)
+    docs_text = prepare_docs(corpus_df(spark, 60), use_html=True).select(
+        "doc_id", "text"
+    )
+    q = "быстрый поиск"
+    svc = SearchService(spark, b, docs_text=docs_text)
+    try:
+        before = svc.phrase(q, limit=5)
+        victim = before["data"][0]
+        assert svc.delete_page(victim["url"])["result"]
+        want = svc.phrase(q, limit=5)
+    finally:
+        svc.close()
+    assert want["count"] == before["count"] - 1
+    assert victim["doc_id"] not in [d["doc_id"] for d in want["data"]]
+
+    with pytest.raises(RuntimeError, match="injected crash before swap"):
+        refresh_and_repack(spark, b, fail_before_swap=True)
+    os.remove(f"{b}/possegs.refreshing/_SUCCESS")
+    assert recover(b) == "forward"
+    svc2 = SearchService(spark, b, docs_text=docs_text)
+    try:
+        g = svc2._gen
+        assert svc2._positional(g)[1] is True
+        assert not g.tombstoned  # compaction dropped the doc entirely
+        assert svc2.phrase(q, limit=5) == want
+
+        def jobs(stale: bool) -> int:
+            group = f"stale-phrase-{stale}"
+            spark.sparkContext.setJobGroup(group, group)
+            g._slots["pos_stale"] = stale
+            try:
+                svc2._phrase_uncached(g, q, limit=5)
+            finally:
+                g._slots["pos_stale"] = True
+                spark.sparkContext.setLocalProperty(
+                    "spark.jobGroup.id", None)
+            tracker = spark.sparkContext.statusTracker()
+            return len(tracker.getJobIdsForGroup(group))
+
+        assert jobs(True) == jobs(False) + 1
+    finally:
+        svc2.close()

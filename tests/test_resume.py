@@ -154,8 +154,9 @@ def test_resumable_equals_build_segments_materialized(spark, tmp_path):
 def test_cli_build_query_compact_query(tmp_path):
     """The documented spark-submit chain, each step in its own
     process: build_index.py --synthetic (materialized index, resumable
-    pack) → query.py → compact.py → query.py, the two queries
-    answering identically."""
+    pack) → query.py → compact.py → query.py, the queries before and
+    after compaction answering identically, in the packed, boolean and
+    prefix modes."""
     import os
     import subprocess
     import sys
@@ -175,10 +176,18 @@ def test_cli_build_query_compact_query(tmp_path):
 
     run("build_index.py", "--synthetic", "200", "--output", out,
         "--n-groups", "2", "--n-shards", "2")
-    query = ("query.py", "--index", out, "--query", "быстрый поиск",
-             "--disjunctive", "--k", "5")
-    before = run(*query).splitlines()
+    queries = [
+        ("query.py", "--index", out, "--query", "быстрый поиск",
+         "--disjunctive", "--k", "5"),
+        ("query.py", "--index", out, "--mode", "boolean", "--query",
+         "(быстрый OR индекс) AND NOT данные", "--k", "5"),
+        ("query.py", "--index", out, "--mode", "prefix", "--query", "по",
+         "--k", "5"),
+    ]
+    before = [run(*q).splitlines() for q in queries]
     run("compact.py", "--index", out)
-    after = run(*query).splitlines()
-    assert before[-1].startswith("-- 5 results")
-    assert before[:-1] == after[:-1]
+    after = [run(*q).splitlines() for q in queries]
+    assert before[0][-1].startswith("-- 5 results")
+    for b, a in zip(before, after):
+        assert b[-1].startswith("-- ") and len(b) > 1, b
+        assert b[:-1] == a[:-1]

@@ -496,11 +496,12 @@ def test_search_bm25f_mode(spark, served):
 
 
 def test_phrase_fused_equals_semijoin_path(spark, served):
-    """The fused one-pass phrase serve path (per-shard top-k + count
+    """The one-pass phrase serve path (per-shard top-k + count
     trailer, index/positional.py:phrase_search_packed_topk_count)
-    must produce the identical response — count AND page — to the
-    exact two-action semi-join path it replaces (which stays wired for
-    the stale-possegs recovery state), including under tombstones."""
+    must produce the identical response — count AND page — whether the
+    generation reads possegs as in sync or as a stale-possegs
+    recovery snapshot (the same kernel, with the served docs as its
+    `allowed` side), including under tombstones."""
     svc, idx, _ = served
     g = svc._gen
     assert svc._positional(g)[1] is False
