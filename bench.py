@@ -185,7 +185,11 @@ def main() -> None:
 
     from searchengine_spark import contract
     from searchengine_spark.index import wand
-    from searchengine_spark.index.segments import build_segments, write_segments
+    from searchengine_spark.index.segments import (
+        build_segments,
+        read_packed,
+        write_segments,
+    )
     from searchengine_spark.operators import search as rsearch
     from searchengine_spark.operators.postings import materialize_index
     from searchengine_spark.session import get_spark
@@ -272,15 +276,15 @@ def main() -> None:
     t_pack = timed_converging(_pack)
     queries["pack_segments"] = t_pack
 
-    segments = spark.read.parquet(f"{tmp}/segments").cache()
-    segments.count()
+    segments = read_packed(spark, f"{tmp}/segments").cache()
+    segments.rows.count()
     term_stats = index.term_stats.cache()
     term_stats.count()
     doc_stats = index.doc_stats.cache()
     doc_stats.count()
     # a query server keeps term stats hot; collect once, serve all queries
     df_map = {r["term"]: r["df"] for r in term_stats.collect()}
-    n_shards = int(segments.agg(F.max("shard")).collect()[0][0]) + 1
+    n_shards = int(segments.rows.agg(F.max("shard")).collect()[0][0]) + 1
 
     # ---- positional layer: build + one packed phrase query ----------------
     from searchengine_spark.index.positional import (
@@ -299,8 +303,8 @@ def main() -> None:
         )
 
     queries["pack_positional"] = timed_converging(_pack_pos)
-    pos_segments = spark.read.parquet(f"{tmp}/possegs").cache()
-    pos_segments.count()
+    pos_segments = read_packed(spark, f"{tmp}/possegs").cache()
+    pos_segments.rows.count()
     queries["phrase_packed"] = timed(
         lambda: phrase_search_packed(
             spark, pos_segments, "быстрый поиск"
@@ -481,8 +485,8 @@ def main() -> None:
     write_segments(build_segments(zidx, zn, zavgdl, n_shards=4),
                    f"{tmp}/zipfseg")
     queries["zipf_pack"] = time.monotonic() - t0  # single-pass (setup)
-    zseg = spark.read.parquet(f"{tmp}/zipfseg").cache()
-    zseg.count()
+    zseg = read_packed(spark, f"{tmp}/zipfseg").cache()
+    zseg.rows.count()
     zdfm = {r["term"]: r["df"] for r in zidx.term_stats.collect()}
     zcand = sorted(zdfm.items(), key=lambda kv: (-kv[1], kv[0]))
 
@@ -517,7 +521,7 @@ def main() -> None:
     zipf_blocks_decoded_pct = (
         round(100.0 * zdec / ztot, 2) if ztot else 0.0
     )
-    zseg.unpersist()
+    zseg.rows.unpersist()
     zdocs.unpersist()
     for t_ in (zidx.postings, zidx.doc_stats, zidx.term_stats):
         t_.unpersist()

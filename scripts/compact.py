@@ -34,13 +34,14 @@ def main() -> None:
     args = ap.parse_args()
 
     from searchengine_spark.index.refresh import recover, refresh_and_repack
+    from searchengine_spark.index.segments import read_packed
     from searchengine_spark.session import get_spark
 
     spark = get_spark("compact")
     action = recover(args.index)
     if action != "clean":
         print(f"recovered interrupted refresh: {action}")
-    segments = spark.read.parquet(f"{args.index}/segments")
+    segments = read_packed(spark, f"{args.index}/segments").rows
     n_runs = segments.select("run_id").distinct().count()
     if n_runs <= 1 and not os.path.isdir(f"{args.index}/idx/doc_meta_runs"):
         # single run and no pending delta meta: the index is already
@@ -51,7 +52,7 @@ def main() -> None:
 
     t0 = time.time()
     tables, compacted = refresh_and_repack(spark, args.index)
-    n_seg = compacted.count()
+    n_seg = compacted.rows.count()
     n_docs = tables.doc_stats.count()
     print(
         f"refreshed stats + compacted {n_runs} runs -> 1 "

@@ -66,7 +66,11 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     from searchengine_spark.index import wand
-    from searchengine_spark.index.segments import ReadSizes
+    from searchengine_spark.index.segments import (
+        Packed,
+        ReadSizes,
+        read_packed,
+    )
     from searchengine_spark.operators.search import corpus_constants
     from searchengine_spark.session import get_spark
 
@@ -75,12 +79,15 @@ def main(argv=None) -> int:
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
+    cutoff = wand.DRIVER_READ_BYTES_MAX
     for n in (int(x) for x in args.docs.split(",")):
         base = os.path.join(args.work, f"webtext{n}")
         if not os.path.exists(f"{base}/segments"):
             build(spark, base, n)
-        segs = spark.read.parquet(f"{base}/segments").cache()
-        segs.count()
+        segs = read_packed(spark, f"{base}/segments").cache()
+        segs.rows.count()
+        segs = Packed(segs.rows, segs.docs, segs.docs.count(),
+                      collect=lambda t=segs.tables(): t)
         stats = spark.read.parquet(f"{base}/idx/term_stats").toPandas()
         sizes = ReadSizes(postings=dict(zip(stats.term, stats.df)),
                           positions=dict(zip(stats.term, stats.cf)))
@@ -92,20 +99,25 @@ def main(argv=None) -> int:
             kernel, side = wand._wand_kernel(
                 segs, terms, n_docs, avgdl, 20, False, count=True)
 
-            def read(nbytes):
-                return lambda: wand._shard_rows(
-                    segs, terms, kernel, wand.KERNEL_SCHEMA, "bm25", side,
-                    nbytes)
+            def read(cutoff):
+                def run():
+                    wand.DRIVER_READ_BYTES_MAX = cutoff
+                    return wand._shard_rows(
+                        segs, terms, kernel, wand.KERNEL_SCHEMA, "bm25",
+                        side, sizes)
+                return run
 
             row = {"n_docs": n, "k": k,
                    "sum_df": int(top.df[:k].sum()),
-                   "bound_mb": round(sizes.input_bytes(terms) / 2**20, 1),
-                   # 0 fits any positive limit; None has no bound
-                   "driver_ms": round(timed(read(0))),
-                   "spark_ms": round(timed(read(None)))}
+                   "bound_mb": round(sizes.input_bytes(
+                    terms, table_rows=segs.table_rows) / 2**20, 1),
+                   # every bound fits 2^62; none fits -1
+                   "driver_ms": round(timed(read(1 << 62))),
+                   "spark_ms": round(timed(read(-1)))}
             print(json.dumps(row), flush=True)
             rows.append(row)
-        segs.unpersist()
+        segs.rows.unpersist()
+    wand.DRIVER_READ_BYTES_MAX = cutoff
     spark.stop()
     if args.out:
         with open(args.out, "w") as f:

@@ -59,6 +59,7 @@ def main() -> None:
                          "instead of ranked results")
     args = ap.parse_args()
 
+    from searchengine_spark.index.segments import read_packed
     from searchengine_spark.index.wand import search_packed
     from searchengine_spark.operators.postings import read_index
     from searchengine_spark.operators.search import corpus_constants, search
@@ -90,7 +91,7 @@ def main() -> None:
             phrase_search_packed,
         )
 
-        pos_segments = spark.read.parquet(f"{args.index}/possegs")
+        pos_segments = read_packed(spark, f"{args.index}/possegs")
         out = (
             phrase_search_packed(spark, pos_segments, args.query)
             .orderBy(F.desc("phrase_tf"), F.asc("doc_id"))
@@ -101,7 +102,7 @@ def main() -> None:
             bool_search_packed,
         )
 
-        segments = spark.read.parquet(f"{args.index}/segments")
+        segments = read_packed(spark, f"{args.index}/segments")
         out = bool_search_packed(
             spark, segments, n_docs, avgdl, args.query, k=args.k
         )
@@ -114,7 +115,7 @@ def main() -> None:
             prefix_search_packed,
         )
 
-        segments = spark.read.parquet(f"{args.index}/segments")
+        segments = read_packed(spark, f"{args.index}/segments")
         out = prefix_search_packed(
             spark, segments, idx.term_stats, n_docs, avgdl, args.query,
             k=args.k,
@@ -122,7 +123,7 @@ def main() -> None:
     elif args.facets:
         from searchengine_spark.index.wand import facet_counts_packed
 
-        segments = spark.read.parquet(f"{args.index}/segments")
+        segments = read_packed(spark, f"{args.index}/segments")
         out = facet_counts_packed(
             spark, segments, idx.term_stats, idx.doc_stats, n_docs,
             args.query, conjunctive=not args.disjunctive, top=args.k,
@@ -134,7 +135,7 @@ def main() -> None:
         if "^" in args.query:
             args.query, parsed = parse_boosted_query(args.query)
             boosts = parsed or None
-        segments = spark.read.parquet(f"{args.index}/segments")
+        segments = read_packed(spark, f"{args.index}/segments")
         fw = (
             {"body": 1.0, "title": args.title_weight}
             if args.scoring == "bm25f" else None

@@ -36,7 +36,11 @@ N_SHARDS_PINNED = 32  # data layout — identical at every cluster size
 def worker(cores: int, docs_path: str, passes: int = 2) -> None:
     """Runs in a fresh process: measured build + query at local[cores]."""
     sys.path.insert(0, REPO)
-    from searchengine_spark.index.segments import build_segments, write_segments
+    from searchengine_spark.index.segments import (
+        build_segments,
+        read_packed,
+        write_segments,
+    )
     from searchengine_spark.index.wand import search_packed
     from searchengine_spark.operators.postings import materialize_index
     from searchengine_spark.operators.search import corpus_constants
@@ -117,8 +121,8 @@ def worker(cores: int, docs_path: str, passes: int = 2) -> None:
         stages["passes"] = [round(p[0], 3) for p in per_pass]
         stages["probes"] = probes
 
-        segments = spark.read.parquet(f"{tmp}/segments").cache()
-        segments.count()
+        segments = read_packed(spark, f"{tmp}/segments").cache()
+        segments.rows.count()
         df_map = {r["term"]: r["df"] for r in idx.term_stats.collect()}
         lat = []
         t0 = time.monotonic()

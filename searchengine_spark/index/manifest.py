@@ -11,6 +11,7 @@ Layout under a build root:
 
     <base>/idx/{postings,term_stats,doc_stats}   relational index
     <base>/segments/shard=K/...                  packed runs
+    <base>/segments/_docs/shard=K/...            their doc tables
     <base>/build_manifest/...                    append-only parquet
 
 The unit of work (and of restart skip) is the *shard group*: shards
@@ -38,7 +39,17 @@ from pyspark.sql import functions as F
 
 from ..operators.postings import IndexTables
 from ..schemas import BUILD_MANIFEST_SCHEMA as MANIFEST_SCHEMA
-from .segments import enrich_postings, n_shards_for, pack_segments_frame
+from .segments import (
+    TF_DOCS_SCHEMA,
+    Packed,
+    collect_docs,
+    enrich_postings,
+    n_shards_for,
+    pack_segments_frame,
+    read_packed,
+    run_tables,
+    write_packed,
+)
 
 
 def manifest_path(base: str) -> str:
@@ -126,10 +137,10 @@ def build_packed_resumable(
     n_groups: int | None = None,
     run_id: int = 0,
     fail_after_group: int | None = None,
-) -> DataFrame:
+) -> Packed:
     """Build <base>/segments in `n_groups` checkpointed passes; skip
-    groups already marked done in the manifest. Returns the segments
-    DataFrame. `fail_after_group` injects a crash after that group's
+    groups already marked done in the manifest. Returns the tree
+    (segments.read_packed). `fail_after_group` injects a crash after that group's
     write for the kill/resume test."""
     # Resume safety: shard/group mapping is part of the build identity.
     # If the manifest already has rows for this stage, the recorded
@@ -194,7 +205,7 @@ def build_packed_resumable(
             "spark.sql.sources.partitionOverwriteMode", prev_mode
         )
 
-    return spark.read.parquet(f"{base}/segments")
+    return read_packed(spark, f"{base}/segments")
 
 
 def _run_groups(
@@ -203,22 +214,27 @@ def _run_groups(
 ) -> None:
     """Each pending group is build_segments' own enrich + bulk pack,
     filtered to the group's shards (shard derives from doc_id alone, so
-    the filter prunes the postings scan to a 1/n_groups slice)."""
-    enriched, avgtl = enrich_postings(index, n_docs, n_shards)
+    the filter prunes the postings scan to a 1/n_groups slice), and
+    writes its shards' rows and doc tables (write_packed; the dynamic
+    partition overwrite replaces exactly the group's partitions). The
+    doc tables are collected once, for avgtl and every group."""
+    enriched, docs = enrich_postings(index, n_shards)
+    docs_pdf = collect_docs(docs, run_id)
+    avgtl = float(docs_pdf["tlen"].sum()) / n_docs if n_docs else 0.0
+    tables = run_tables(docs_pdf)
+    spark_docs = spark.createDataFrame(docs_pdf, TF_DOCS_SCHEMA)
     for g in range(n_groups):
         if g in done:
             continue
         t0 = time.time()
-        segs = pack_segments_frame(
-            enriched.filter(F.pmod(F.col("shard"), F.lit(n_groups)) == g),
-            n_docs, avgdl, run_id, avgtl,
-        )
-        (
-            segs.repartition("shard")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(f"{base}/segments")
+        in_group = F.pmod(F.col("shard"), F.lit(n_groups)) == g
+        write_packed(
+            Packed(
+                pack_segments_frame(enriched.filter(in_group), tables,
+                                    n_docs, avgdl, run_id, avgtl),
+                spark_docs.filter(in_group),
+            ),
+            f"{base}/segments",
         )
         # per-group metrics from the freshly written partitions
         # (partition pruning keeps this a metadata-sized read)
@@ -230,11 +246,12 @@ def _run_groups(
             F.sum("n_docs").alias("n_postings"),
             F.count_distinct("term").alias("n_terms"),
             F.sum(
-                F.octet_length("doc_ids")
-                + F.octet_length("tfs")
-                + F.octet_length("doclens")
+                F.octet_length("doc_ids") + F.octet_length("tfs")
             ).alias("bytes_written"),
         ).collect()[0]
+        # the group's doc tables: 24 bytes of id, length and title
+        # length per doc
+        table_bytes = 24 * int((docs_pdf["shard"] % n_groups == g).sum())
         _append_row(
             spark,
             base,
@@ -250,7 +267,8 @@ def _run_groups(
                 "n_segments": int(stats["n_segments"] or 0),
                 "n_postings": int(stats["n_postings"] or 0),
                 "n_terms": int(stats["n_terms"] or 0),
-                "bytes_written": int(stats["bytes_written"] or 0),
+                "bytes_written": int(stats["bytes_written"] or 0)
+                + table_bytes,
             },
         )
         if fail_after_group is not None and g == fail_after_group:

@@ -8,13 +8,18 @@ adds the positional layer real fulltext indexes carry (the reference
 stores bag-of-words TF only, LemmaMapper.java:15-43, so this is
 beyond-reference capability): per (term, shard) runs of
 
-    doc_ids    delta-gap + varbyte        (same layout as segments.py)
+    doc_ids    rank gaps, varbyte         (same layout as segments.py:
+                                           ranks in the (run, shard)'s
+                                           doc table)
     counts     varbyte, one per doc       (positions per doc)
     positions  per-doc delta-gap varbyte, concatenated in doc order
 
 with per-block (BLOCK docs) skip metadata: last docID and the byte
 offset of the block's first position value — so the query kernel
-decodes position bytes ONLY for blocks containing candidate docs.
+decodes position bytes ONLY for blocks containing candidate docs. Each
+(run, shard) has one doc table of ids only (<tree>/_docs, as in
+segments.py); the pack takes it from its own input's distinct doc ids
+per shard.
 
 Scale shape (same argument as segments.py): shard = pmod(hash(doc_id),
 n_shards) bounds every build group and every query kernel group to
@@ -46,7 +51,22 @@ from pyspark.sql import types as T
 
 from ..functions import textproc
 from . import varbyte as vb
-from .segments import BLOCK, ReadSizes, _pack_walk, last_run_wins
+from .segments import (
+    BLOCK,
+    POS_DOCS_SCHEMA,
+    DocTable,
+    Packed,
+    ReadSizes,
+    _built,
+    _pack_walk,
+    collect_docs,
+    decode_ranks,
+    encode_ranks,
+    last_run_wins,
+    run_tables,
+    shard_of,
+    write_packed,
+)
 
 POSITIONAL_SEGMENTS_SCHEMA = T.StructType(
     [
@@ -86,12 +106,14 @@ def _positional_lists_udf(lemmas: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"terms": terms_out, "poss": poss_out})
 
 
-def _pack_pos_group(g: dict, block: int, run_id: int) -> dict:
+def _pack_pos_group(g: dict, tables: dict[int, DocTable], block: int,
+                    run_id: int) -> dict:
     """The positional per-group body of the pack driver: one
     (term, shard) group of (doc_id, positions) → one packed positional
     run row tagged with ``run_id`` (0 = base build / compacted; delta
     runs carry the run id write_delta_run allocated — the same
-    lifecycle contract as segments.py)."""
+    lifecycle contract as segments.py), its ids coded as ranks in the
+    run's doc table of its shard (`tables`: shard → DocTable)."""
     order = np.argsort(g["doc_id"], kind="stable")
     doc_ids = g["doc_id"][order].astype(np.int64)
     pos_lists = g["positions"][order]
@@ -112,12 +134,13 @@ def _pack_pos_group(g: dict, block: int, run_id: int) -> dict:
     # byte offset of each block's first position value
     lens = vb.varbyte_lengths(gaps).astype(np.int64)
     cum = np.concatenate((np.zeros(1, dtype=np.int64), np.cumsum(lens)))
+    _, rank_gaps = encode_ranks(doc_ids, tables[int(g["shard"][0])])
     return {
         "term": g["term"][0],
         "shard": int(g["shard"][0]),
         "run_id": int(run_id),
         "n_docs": n,
-        "doc_ids": vb.delta_encode_ids(doc_ids),
+        "doc_ids": vb.varbyte_encode(rank_gaps),
         "counts": vb.varbyte_encode(counts.astype(np.uint64)),
         "positions": vb.varbyte_encode(gaps, nbytes=lens),
         "block_last_doc":
@@ -139,8 +162,7 @@ def positional_rows(prepared: DataFrame, n_shards: int) -> DataFrame:
         )
         .select(
             F.col("e.terms").alias("term"),
-            F.pmod(F.hash("doc_id"), F.lit(n_shards)).cast("int")
-            .alias("shard"),
+            shard_of(n_shards).alias("shard"),
             "doc_id",
             F.col("e.poss").alias("positions"),
         )
@@ -152,44 +174,47 @@ def build_positional_segments(
     n_shards: int,
     block: int = BLOCK,
     run_id: int = 0,
-) -> DataFrame:
-    """prepared docs (doc_id, lemmas) → positional segment runs.
-    ``run_id`` > 0 builds a DELTA run (single-page reindex — the same
-    append/last-run-wins/compaction contract segments.py gives the TF
-    layer; reference analog IndexingService.java:71-95)."""
+) -> Packed:
+    """prepared docs (doc_id, lemmas) → the positional tree of one run
+    (rows and doc tables; the tables hold every input doc, and their
+    ids need no analysis pass). ``run_id`` > 0 builds a DELTA run
+    (single-page reindex — the same append/last-run-wins/compaction
+    contract segments.py gives the TF layer; reference analog
+    IndexingService.java:71-95)."""
     return repack_positional(
-        positional_rows(prepared, n_shards), block=block, run_id=run_id
+        positional_rows(prepared, n_shards), block=block, run_id=run_id,
+        docs=prepared.select(shard_of(n_shards).alias("shard"), "doc_id"),
     )
 
 
 def repack_positional(
-    cur: DataFrame, block: int = BLOCK, run_id: int = 0
-) -> DataFrame:
+    cur: DataFrame, block: int = BLOCK, run_id: int = 0,
+    docs: DataFrame | None = None,
+) -> Packed:
     """(term, shard, doc_id, positions) rows — positional_rows, or the
     current view of packed runs (refresh.current_view over
-    unpack_positional) — → single-run packed segments, through the one
-    pack driver (segments._pack_walk) with _pack_pos_group as the
-    per-group body."""
-    return _pack_walk(
+    unpack_positional) — → the positional tree of one run, through the
+    one pack driver (segments._pack_walk) with _pack_pos_group as the
+    per-group body. The run's doc tables are `docs` (shard, doc_id,
+    one row per doc) when given, else the distinct docs of `cur`,
+    collected once."""
+    if docs is None:
+        docs = cur.select("shard", "doc_id").distinct()
+    docs_pdf = collect_docs(docs, run_id)
+    tables = run_tables(docs_pdf)
+    rows = _pack_walk(
         cur.select("term", "shard", "doc_id", "positions"), "doc_id",
-        lambda g: _pack_pos_group(g, block, run_id),
+        lambda g: _pack_pos_group(g, tables, block, run_id),
         POSITIONAL_SEGMENTS_SCHEMA,
     )
+    return _built(cur.sparkSession, rows, docs_pdf, POS_DOCS_SCHEMA)
 
 
 def write_positional_segments(
-    segments: DataFrame, path: str, mode: str = "overwrite"
+    segments: Packed, path: str, mode: str = "overwrite"
 ) -> None:
-    """Same layout discipline as write_segments: partition by shard,
-    term-sorted within files so parquet min/max stats prune the
-    phrase-term scan."""
-    (
-        segments.repartition("shard")
-        .sortWithinPartitions("term")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path)
-    )
+    """Write a positional tree — segments.write_packed's layout."""
+    write_packed(segments, path, mode)
 
 
 UNPACKED_POS_SCHEMA = (
@@ -197,19 +222,19 @@ UNPACKED_POS_SCHEMA = (
 )
 
 
-def unpack_positional(segments: DataFrame) -> DataFrame:
-    """Packed positional runs → relational (term, shard, doc_id,
-    positions, run_id). Pure map over segment rows (no grouping, no
-    shuffle) — the compaction input (refresh.current_view), mirroring
-    refresh.unpack_postings.
-    Pre-lifecycle snapshots without a run_id column read as run 0."""
+def unpack_positional(segments: Packed) -> DataFrame:
+    """A positional tree → relational (term, shard, doc_id, positions,
+    run_id). Pure map over segment rows (no grouping, no shuffle; the
+    collected doc tables ride the closure) — the compaction input
+    (refresh.current_view), mirroring refresh.unpack_postings."""
+    tables = segments.tables()
 
     def run(batches):
         for pdf in batches:
             out = []
-            has_rid = "run_id" in pdf.columns
             for _, row in pdf.iterrows():
-                ids = vb.delta_decode_ids(bytes(row["doc_ids"]))
+                t = tables[int(row["shard"])][int(row["run_id"])]
+                ids = t.ids[decode_ranks(bytes(row["doc_ids"]), t)]
                 counts = vb.varbyte_decode(
                     bytes(row["counts"])
                 ).astype(np.int64)
@@ -228,19 +253,16 @@ def unpack_positional(segments: DataFrame) -> DataFrame:
                             "shard": int(row["shard"]),
                             "doc_id": ids,
                             "positions": plists,
-                            "run_id": int(row["run_id"]) if has_rid else 0,
+                            "run_id": int(row["run_id"]),
                         }
                     )
                 )
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    cols = [
-        c
-        for c in ("term", "shard", "run_id", "doc_ids", "counts", "positions")
-        if c in segments.columns
-    ]
-    return segments.select(*cols).mapInPandas(run, schema=UNPACKED_POS_SCHEMA)
+    return segments.rows.select(
+        "term", "shard", "run_id", "doc_ids", "counts", "positions"
+    ).mapInPandas(run, schema=UNPACKED_POS_SCHEMA)
 
 
 def _decode_positions_for(
@@ -278,20 +300,21 @@ def _decode_positions_for(
 class _PosList:
     """One term's positional runs within one shard — doc-level
     last-run-wins across delta runs (upsert semantics:
-    segments.last_run_wins, as in wand._TermList; rows without a run_id
-    column — pre-lifecycle snapshots — read as one run 0), position
+    segments.last_run_wins, as in wand._TermList), each run's ids
+    decoded through its doc table (`tables`: run → DocTable), position
     bytes decoded lazily per block and only from each doc's OWNING
     run."""
 
     __slots__ = ("ids", "_runs", "_owner_run", "_owner_idx", "_block")
 
-    def __init__(self, rows: pd.DataFrame, block: int):
+    def __init__(self, rows: pd.DataFrame, tables: dict[int, DocTable],
+                 block: int):
         self._block = block
-        if "run_id" in rows.columns:
-            rows = rows.sort_values("run_id")
+        rows = rows.sort_values("run_id")
         self._runs = []
         for _, row in rows.iterrows():
-            ids = vb.delta_decode_ids(bytes(row["doc_ids"]))
+            t = tables[int(row["run_id"])]
+            ids = t.ids[decode_ranks(bytes(row["doc_ids"]), t)]
             counts = vb.varbyte_decode(bytes(row["counts"]))
             self._runs.append((row, ids, counts))
         if len(self._runs) == 1:
@@ -327,11 +350,12 @@ class _PosList:
 
 
 def _phrase_kernel(
-    pdf: pd.DataFrame, phrase: list[str], block: int,
-    allowed: np.ndarray | None = None, excluded: np.ndarray | None = None,
+    pdf: pd.DataFrame, tables: dict[int, DocTable], phrase: list[str],
+    block: int, allowed: np.ndarray | None = None,
+    excluded: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """One shard's runs for the phrase's distinct terms → matching
-    (doc_id, phrase_tf) rows. `allowed` / `excluded` (sorted int64, as
+    """One shard's runs for the phrase's distinct terms, with its doc
+    tables by run → matching (doc_id, phrase_tf) rows. `allowed` / `excluded` (sorted int64, as
     wand._filter takes them) drop candidates before any position
     bytes are decoded."""
     from .wand import _filter
@@ -339,7 +363,7 @@ def _phrase_kernel(
     empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                           "phrase_tf": pd.Series([], dtype="int64")})
     lists = {
-        t: _PosList(rows, block)
+        t: _PosList(rows, tables, block)
         for t, rows in pdf.groupby("term", sort=False)
     }
     uniq = sorted(set(phrase))
@@ -382,7 +406,8 @@ def _phrase_kernel(
 
 
 def _proximity_kernel(
-    pdf: pd.DataFrame, term_a: str, term_b: str, max_dist: int, block: int
+    pdf: pd.DataFrame, tables: dict[int, DocTable], term_a: str,
+    term_b: str, max_dist: int, block: int,
 ) -> pd.DataFrame:
     """One shard's two runs → (doc_id, min_dist ≤ max_dist) rows.
     Min distance per doc is a sorted-merge (searchsorted against the
@@ -390,7 +415,7 @@ def _proximity_kernel(
     empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                           "min_dist": pd.Series([], dtype="int64")})
     lists = {
-        t: _PosList(rows, block)
+        t: _PosList(rows, tables, block)
         for t, rows in pdf.groupby("term", sort=False)
     }
     if term_a not in lists or term_b not in lists:
@@ -423,7 +448,7 @@ def _proximity_kernel(
 
 def proximity_search_packed_terms(
     spark: SparkSession,
-    pos_segments: DataFrame,
+    pos_segments: Packed,
     term_a: str,
     term_b: str,
     max_dist: int,
@@ -441,14 +466,15 @@ def proximity_search_packed_terms(
 
     return _shard_frame(
         pos_segments, [term_a, term_b],
-        lambda pdf, _: _proximity_kernel(pdf, term_a, term_b, max_dist, block),
+        lambda pdf, tables, _: _proximity_kernel(
+            pdf, tables, term_a, term_b, max_dist, block),
         "doc_id long, min_dist long",
     )
 
 
 def phrase_search_packed_terms(
     spark: SparkSession,
-    pos_segments: DataFrame,
+    pos_segments: Packed,
     phrase: list[str],
     block: int = BLOCK,
 ) -> DataFrame:
@@ -461,7 +487,7 @@ def phrase_search_packed_terms(
 
     return _shard_frame(
         pos_segments, sorted(set(phrase)),
-        lambda pdf, _: _phrase_kernel(pdf, list(phrase), block),
+        lambda pdf, tables, _: _phrase_kernel(pdf, tables, list(phrase), block),
         "doc_id long, phrase_tf long",
     )
 
@@ -472,8 +498,9 @@ PHRASE_KERNEL_SCHEMA = (
 
 
 def _phrase_topk_count_kernel(
-    pdf: pd.DataFrame, phrase: list[str], block: int, k: int,
-    allowed: np.ndarray | None, excluded: np.ndarray | None,
+    pdf: pd.DataFrame, tables: dict[int, DocTable], phrase: list[str],
+    block: int, k: int, allowed: np.ndarray | None,
+    excluded: np.ndarray | None,
 ) -> pd.DataFrame:
     """_phrase_kernel PLUS the shard's pre-pagination match count in
     the SAME pass: the shard's top-k rows by (phrase_tf desc, doc_id
@@ -482,7 +509,7 @@ def _phrase_topk_count_kernel(
     candidates (`allowed`, `excluded` as in _phrase_kernel)."""
     from .wand import with_trailer
 
-    res = _phrase_kernel(pdf, phrase, block, allowed, excluded)
+    res = _phrase_kernel(pdf, tables, phrase, block, allowed, excluded)
     ids = res["doc_id"].to_numpy(dtype=np.int64)
     tfs = res["phrase_tf"].to_numpy(dtype=np.int64)
     sel = np.lexsort((ids, -tfs))[:k]
@@ -494,7 +521,7 @@ def _phrase_topk_count_kernel(
 
 def phrase_search_packed_topk_count(
     spark: SparkSession,
-    pos_segments: DataFrame,
+    pos_segments: Packed,
     phrase: list[str],
     k: int,
     excluded_doc_ids: list[int] | None = None,
@@ -523,17 +550,13 @@ def phrase_search_packed_topk_count(
         raise ValueError(f"k must be >= 0 (got {k})")
     if not phrase:
         return SimpleNamespace(collect=list)
-    terms = sorted(set(phrase))
     exc = _deny_list(excluded_doc_ids)
-    nbytes = None if sizes is None else sizes.input_bytes(
-        terms, positional=True, side=side is not None
-    )
     return SimpleNamespace(collect=lambda: _shard_rows(
-        pos_segments, terms,
-        lambda pdf, side_pdf: _phrase_topk_count_kernel(
-            pdf, list(phrase), block, k, _allowed_of(side_pdf), exc
+        pos_segments, sorted(set(phrase)),
+        lambda pdf, tables, side_pdf: _phrase_topk_count_kernel(
+            pdf, tables, list(phrase), block, k, _allowed_of(side_pdf), exc
         ),
-        PHRASE_KERNEL_SCHEMA, side=side, nbytes=nbytes,
+        PHRASE_KERNEL_SCHEMA, side=side, sizes=sizes, positional=True,
     )[0])
 
 
@@ -550,7 +573,7 @@ def merge_phrase_rows(rows, k: int) -> tuple[list[tuple[int, int]], int]:
 
 def phrase_search_packed(
     spark: SparkSession,
-    pos_segments: DataFrame,
+    pos_segments: Packed,
     query: str,
     block: int = BLOCK,
 ) -> DataFrame:

@@ -52,11 +52,16 @@ from pyspark.sql import functions as F
 
 from ..operators.postings import IndexTables, write_index
 from .manifest import fs_touch
-from .segments import unpack_segment
-
-UNPACKED_SCHEMA = (
-    "term string, shard int, doc_id long, tf long, doclen long, run_id int"
+from .segments import (
+    _FORMAT_MARKER,
+    DOCS_DIR,
+    Packed,
+    read_packed,
+    read_pinned,
+    unpack_segment,
 )
+
+UNPACKED_SCHEMA = "term string, shard int, doc_id long, tf long, run_id int"
 
 
 def _opt_title(df: DataFrame):
@@ -65,20 +70,6 @@ def _opt_title(df: DataFrame):
     stay readable."""
     col = F.col("title") if "title" in df.columns else F.lit(None)
     return col.cast("string").alias("title")
-
-
-def read_pinned(spark: SparkSession, path: str) -> DataFrame:
-    """The parquet tree at `path` as the files listed now: a later
-    append under `path` does not change what this frame (or a cache of
-    it) reads, and its cache entry is its own (service.Generation)."""
-    # the listing read carries basePath so that no cached plain read of
-    # `path` substitutes for it: inputFiles() reads the cache-substituted
-    # plan, which lists no files
-    first = spark.read.option("basePath", path).parquet(path)
-    return (
-        spark.read.schema(first.schema).option("basePath", path)
-        .parquet(*first.inputFiles())
-    )
 
 
 def _doc_meta_resolved(spark: SparkSession, base: str) -> DataFrame:
@@ -117,35 +108,37 @@ def _doc_meta_resolved(spark: SparkSession, base: str) -> DataFrame:
     )
 
 
-def unpack_postings(segments: DataFrame) -> DataFrame:
-    """Packed runs → relational (term, shard, doc_id, tf, doclen,
-    run_id). Pure map over segment rows (no grouping, no shuffle)."""
+def unpack_postings(segments: Packed) -> DataFrame:
+    """A TF tree → relational (term, shard, doc_id, tf, run_id). Pure
+    map over segment rows (no grouping, no shuffle; the collected doc
+    tables ride the closure)."""
+    tables = segments.tables()
 
     def run(batches):
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                ids, tfs, dls = unpack_segment(row)
+                shard, run_id = int(row["shard"]), int(row["run_id"])
+                ids, tfs = unpack_segment(row, tables[shard][run_id])[:2]
                 out.append(
                     pd.DataFrame(
                         {
                             "term": row["term"],
-                            "shard": int(row["shard"]),
+                            "shard": shard,
                             "doc_id": ids,
                             "tf": tfs,
-                            "doclen": dls,
-                            "run_id": int(row["run_id"]),
+                            "run_id": run_id,
                         }
                     )
                 )
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    cols = ["term", "shard", "run_id", "doc_ids", "tfs", "doclens"]
-    return segments.select(*cols).mapInPandas(run, schema=UNPACKED_SCHEMA)
+    cols = ["term", "shard", "run_id", "doc_ids", "tfs"]
+    return segments.rows.select(*cols).mapInPandas(run, schema=UNPACKED_SCHEMA)
 
 
-def current_view(segments: DataFrame, live: DataFrame, unpack) -> DataFrame:
+def current_view(segments: Packed, live: DataFrame, unpack) -> DataFrame:
     """Doc-level last-run-wins view of the stored runs of one packed
     layout: every row `unpack(segments)` yields (unpack_postings, or
     positional.unpack_positional) of a document's authoritative run per
@@ -178,11 +171,12 @@ def refresh_and_repack(
     run_id: int = 0,
     fail_before_swap: bool = False,
     fail_mid_swap: bool = False,
-) -> tuple[IndexTables, DataFrame]:
+) -> tuple[IndexTables, Packed]:
     """Re-aggregate exact stats from all runs and repack <base> in
     place: idx/{postings,term_stats,doc_stats} overwritten with the
     true current state, segments/ rewritten as a single run scored
-    with the fresh (n_docs, avgdl, df). Returns (tables, segments).
+    with the fresh (n_docs, avgdl, df). Returns (tables, segments — a
+    segments.Packed).
 
     Crash safety: both output trees are FULLY written to `.refreshing`
     temp dirs before any rename happens, so every crash state is
@@ -203,7 +197,7 @@ def refresh_and_repack(
     stand-in for that pointer flip."""
     recover(base)  # settle any crashed previous refresh first
     seg_path = f"{base}/segments"
-    segments = spark.read.parquet(seg_path)
+    segments = read_packed(spark, seg_path)
     live = (
         _doc_meta_resolved(spark, base).filter(~F.col("deleted")).cache()
     )
@@ -227,33 +221,33 @@ def refresh_and_repack(
     n_docs = int(totals["n"])
     avgdl = (float(totals["s"]) / n_docs) if n_docs else 0.0
 
-    # repack with fresh stats; shard column is reused verbatim (the
-    # global doc-space hash partitioning never changes on refresh).
-    # The BM25F field layer is re-derived from the RESOLVED titles
-    # (delta-landed titles included) with a fresh exact avgtl — the
-    # delta runs' base-constant approximation closes here, same as
-    # df/avgdl
-    from .segments import _avgtl_of, _with_title_cols, title_field_side
+    # repack with fresh stats; the shard column is reused verbatim (the
+    # global doc-space hash partitioning never changes on refresh) —
+    # for a doc's table row, from the doc tables. The BM25F field
+    # layer is re-derived from the RESOLVED titles (delta-landed titles
+    # included) with a fresh exact avgtl — the delta runs'
+    # base-constant approximation closes here, same as df/avgdl
+    from .segments import (
+        _pack_tf,
+        _table_rows,
+        _with_title_cols,
+        title_field_side,
+        write_packed,
+    )
 
     title_side = title_field_side(live.select("doc_id", "title")).cache()
-    avgtl = _avgtl_of(title_side, n_docs)
-    from .segments import pack_segments_frame
-
     enriched = _with_title_cols(
         cur.select("term", "shard", "doc_id", "tf")
-        .join(dl, "doc_id")
         .join(term_stats.select("term", "df"), "term"),
         title_side,
     )
-    repacked = pack_segments_frame(enriched, n_docs, avgdl, run_id, avgtl)
-    tmp = f"{seg_path}.refreshing"
-    (
-        repacked.repartition("shard")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
+    shards = segments.docs.select("doc_id", "shard").distinct()
+    docs = _table_rows(
+        doc_stats.select("doc_id", "doclen").join(shards, "doc_id"),
+        F.col("shard"), title_side,
     )
+    tmp = f"{seg_path}.refreshing"
+    write_packed(_pack_tf(enriched, docs, n_docs, avgdl, run_id, None), tmp)
     title_side.unpersist()
 
     # the new idx tables still READ from the old idx/segments paths
@@ -286,7 +280,7 @@ def refresh_and_repack(
             write_positional_segments,
         )
 
-        possegs = spark.read.parquet(pos_path)
+        possegs = read_packed(spark, pos_path)
         write_positional_segments(
             repack_positional(
                 current_view(possegs, live, unpack_positional),
@@ -326,7 +320,7 @@ def refresh_and_repack(
 
     from ..operators.postings import read_index
 
-    return read_index(spark, idx_path), spark.read.parquet(seg_path)
+    return read_index(spark, idx_path), read_packed(spark, seg_path)
 
 
 def _swap_in(path: str, fresh: str) -> None:
@@ -342,11 +336,18 @@ def _swap_in(path: str, fresh: str) -> None:
 
 
 def _tree_complete(path: str, subdirs: tuple[str, ...] = ()) -> bool:
-    """A parquet write is complete iff its _SUCCESS marker landed."""
+    """A parquet write is complete iff its _SUCCESS marker landed (in
+    each of `subdirs`); a packed tree (no `subdirs`) needs its rows',
+    its doc tables' and its format marker, which
+    segments.write_packed writes last."""
     if not os.path.isdir(path):
         return False
-    roots = [os.path.join(path, s) for s in subdirs] if subdirs else [path]
-    return all(os.path.exists(os.path.join(r, "_SUCCESS")) for r in roots)
+    if not subdirs:
+        subdirs = ("", DOCS_DIR)
+        if not os.path.exists(os.path.join(path, _FORMAT_MARKER)):
+            return False
+    return all(os.path.exists(os.path.join(path, s, "_SUCCESS"))
+               for s in subdirs)
 
 
 def _recover_pos(base: str, action: str) -> str:

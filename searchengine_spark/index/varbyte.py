@@ -1,15 +1,15 @@
-"""Delta-gap + variable-byte codec for posting runs (numpy-vectorized).
+"""Variable-byte codec for posting streams (numpy-vectorized).
 
 North-rule requirement: "delta-gap + variable-byte compressed ...
 docID runs". No reference analog (the reference stored one relational
 row per posting — entity/Index.java); this is the packed
 representation that makes 10^12-doc posting lists storable and
-block-skippable.
+block-skippable. The docID runs are delta gaps of RANKS in a per-(run,
+shard) doc table (index/segments.encode_ranks / decode_ranks own that
+format); this module is the byte codec under every stream.
 
 Encoding: little-endian base-128; the high bit of each byte means
-"more bytes follow". Values are uint64. docIDs (signed int64 from
-xxhash64) are mapped order-preservingly to uint64 via +2^63 so deltas
-of the sorted sequence are non-negative.
+"more bytes follow". Values are uint64.
 
 All encode/decode paths are numpy array ops (no per-value Python
 loops): encode loops over ≤10 byte positions, decode reconstructs via
@@ -21,18 +21,6 @@ inside applyInPandas.
 from __future__ import annotations
 
 import numpy as np
-
-_SIGN_OFFSET = np.uint64(1 << 63)
-
-
-def to_u64(signed_ids: np.ndarray) -> np.ndarray:
-    """Order-preserving int64 → uint64 (x + 2^63)."""
-    return signed_ids.astype(np.int64).view(np.uint64) + _SIGN_OFFSET
-
-
-def from_u64(u: np.ndarray) -> np.ndarray:
-    return (u - _SIGN_OFFSET).view(np.int64)
-
 
 def varbyte_lengths(values: np.ndarray) -> np.ndarray:
     """Encoded byte count per value (little-endian base-128).
@@ -71,7 +59,7 @@ def varbyte_encode(values: np.ndarray, nbytes: np.ndarray | None = None) -> byte
     # (n, kmax) candidate-byte matrix, then a boolean row-major ravel
     # keeps exactly each value's first nbytes[i] bytes in little-endian
     # order — one vectorized pass instead of kmax masked scatter
-    # rounds (~8× on the 7-byte docID-gap stream, the fattest one)
+    # rounds (~8× on a 7-byte stream)
     ks = np.arange(kmax, dtype=np.int64)
     shifts = (np.uint64(7) * ks.astype(np.uint64))[None, :]
     m = ((v[:, None] >> shifts) & np.uint64(0x7F)).astype(np.uint8)
@@ -107,25 +95,6 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     )
     np.add.at(vals, group, contrib)
     return vals
-
-
-def delta_encode_ids(sorted_ids: np.ndarray) -> bytes:
-    """Sorted signed int64 docIDs → delta-gap varbyte bytes."""
-    u = to_u64(np.asarray(sorted_ids, dtype=np.int64))
-    if u.size == 0:
-        return b""
-    gaps = np.empty_like(u)
-    gaps[0] = u[0]
-    gaps[1:] = u[1:] - u[:-1]
-    return varbyte_encode(gaps)
-
-
-def delta_decode_ids(buf: bytes) -> np.ndarray:
-    """delta-gap varbyte bytes → sorted signed int64 docIDs."""
-    gaps = varbyte_decode(buf)
-    if gaps.size == 0:
-        return np.empty(0, dtype=np.int64)
-    return from_u64(np.cumsum(gaps, dtype=np.uint64))
 
 
 def encode_ints(values: np.ndarray) -> bytes:

@@ -14,8 +14,13 @@ it touches — the rarest list fully (it drives the intersection), and
 for every other list just the blocks its candidates fall in. A
 stopword-heavy list is never decoded wholesale; at 10^12 docs that is
 the difference between O(candidate-blocks) and O(list) work per query.
-Multi-run (un-compacted incremental) segments and legacy scoring fall
-back to eager full decode.
+A block decodes to RANKS in its (run, shard)'s doc table (about one
+varbyte byte per posting, segments.decode_ranks) plus its tfs; one
+gather by rank from the table gives the block's doc ids, doclens and
+title lengths, and everything after it works on doc ids. Every kernel
+gets its shard's tables with its rows (_shard_rows). Multi-run
+(un-compacted incremental) segments and legacy scoring fall back to
+eager full decode, each run through its own table.
 
 Soundness (rank-identity contract): pruning only ever SKIPS a doc when
 a provable upper bound on its total BM25 score is below the current
@@ -75,8 +80,8 @@ bool_search_packed_fused, phrase_search_packed_topk_count and
 service.explain read this way; the DataFrame APIs search_packed,
 bool_search_packed and prefix_search_packed are views over the same
 reads (_page_frame). Only reads whose output is NOT bounded by k keep
-a lazy plan, _shard_frame (term-pruned scan → groupBy(shard), or a
-cogroup with the side frame, → applyInPandas): facet_counts_packed
+a lazy plan, _shard_frame (term-pruned scan → cogroup with the doc
+tables and any side frame → applyInPandas): facet_counts_packed
 aggregates its per-shard facet partials distributed, and
 phrase_search_packed_terms / proximity_search_packed_terms return
 full match sets.
@@ -114,9 +119,14 @@ from . import varbyte as vb
 from .segments import (
     BLOCK,
     DRIVER_READ_BYTES_MAX,
+    DocTable,
+    Packed,
     ReadSizes,
     _field_norm_np,
     bm25_scores_np,
+    decode_ranks,
+    side_frame,
+    split_side,
     unpack_runs,
 )
 
@@ -166,16 +176,16 @@ KERNEL_SCHEMA = (
 
 # Per-field TF layer columns (packed BM25F). Only the mode="bm25f"
 # kernel ever reads these; every other packed query projects them out
-# BEFORE the applyInPandas, so the extra varbyte streams (~2 bytes per
-# posting — comparable to the base tf+doclen streams) never leave the
-# parquet scan or cross the Arrow boundary into Python. Measured at
-# sf0.1 (100k docs): the posting-heavy reference disjunctive queries
+# BEFORE the applyInPandas, so the title-tf stream (~1 byte per
+# posting — as large as the tf stream; title lengths sit in the doc
+# table) never leaves the parquet scan or crosses the Arrow boundary
+# into Python. Measured at sf0.1 (100k docs) with the earlier, wider
+# field streams: the posting-heavy reference disjunctive queries
 # ran ~55% slower when the field streams rode along with every query.
 # `avgtl` (one double) is deliberately NOT listed — dropping an 8-byte
 # rider buys nothing and _TermList guards on its presence anyway.
 FIELD_LAYER_COLS = (
-    "tfs_title", "title_lens", "block_off_ttf", "block_off_tls",
-    "block_max_bnorm", "block_max_tnorm",
+    "tfs_title", "block_off_ttf", "block_max_bnorm", "block_max_tnorm",
 )
 
 
@@ -195,17 +205,18 @@ def term_pruned_segments(segments, terms, mode: str = "bm25"):
 
 class _TermList:
     """Postings of one term within one shard — lazily block-decoded
-    when a single run with block offsets is present, eager otherwise."""
+    when a single run with block offsets is present, eager otherwise.
+    `tables` are the shard's doc tables by run (segments.DocTable)."""
 
     __slots__ = (
         "n", "df", "block_last", "block_max", "gmax", "n_decoded",
-        "_n_docs", "_avgdl", "_mode", "_boost",
-        "_bids", "_btfs", "_bdls", "_oids", "_otfs", "_odls",
-        "_bttf", "_btls", "_ottf", "_otls", "_avgtl", "_fw",
-        "_cache", "_full",
+        "_n_docs", "_avgdl", "_mode", "_boost", "_table",
+        "_bids", "_btfs", "_oids", "_otfs", "_bttf", "_ottf",
+        "_avgtl", "_fw", "_cache", "_full",
     )
 
-    def __init__(self, rows: pd.DataFrame, n_docs: int, avgdl: float,
+    def __init__(self, rows: pd.DataFrame, tables: dict[int, DocTable],
+                 n_docs: int, avgdl: float,
                  mode: str = "bm25", boost: float = 1.0,
                  fweights: tuple[float, float] | None = None):
         # per-term query boost (Lucene term^w): scores AND the packed
@@ -239,7 +250,7 @@ class _TermList:
                 raise ValueError(
                     "mode='bm25f' needs the per-field TF layer — repack "
                     "the index (index.segments.build_segments writes "
-                    "tfs_title/title_lens since the field layer landed)"
+                    "tfs_title since the field layer landed)"
                 )
         self._fw = tuple(float(w) for w in fweights) if fweights else None
         self._boost = boost
@@ -265,18 +276,15 @@ class _TermList:
         if lazy:
             row = rows.iloc[0]
             self.n = int(row["n_docs"])
+            self._table = tables[int(row["run_id"])]
             self._bids = bytes(row["doc_ids"])
             self._btfs = bytes(row["tfs"])
-            self._bdls = bytes(row["doclens"])
             self._oids = np.asarray(row["block_off_ids"], dtype=np.int64)
             self._otfs = np.asarray(row["block_off_tfs"], dtype=np.int64)
-            self._odls = np.asarray(row["block_off_dls"], dtype=np.int64)
             self.block_last = np.asarray(row["block_last_doc"], dtype=np.int64)
             if mode == "bm25f":
                 self._bttf = bytes(row["tfs_title"])
-                self._btls = bytes(row["title_lens"])
                 self._ottf = np.asarray(row["block_off_ttf"], dtype=np.int64)
-                self._otls = np.asarray(row["block_off_tls"], dtype=np.int64)
                 # field-weighted block bound: x̄ = w_b·max(bnorm) +
                 # w_t·max(tnorm) dominates every posting's x in the
                 # block (per-field max + positive-scalar monotonicity);
@@ -289,8 +297,8 @@ class _TermList:
                 )
                 self.block_max = self._saturate(xbar)
             else:
-                self._bttf = self._btls = b""
-                self._ottf = self._otls = np.empty(0, dtype=np.int64)
+                self._bttf = b""
+                self._ottf = np.empty(0, dtype=np.int64)
                 self.block_max = np.asarray(
                     row["block_max_score"], dtype=np.float64
                 )
@@ -299,13 +307,14 @@ class _TermList:
             self.gmax = float(self.block_max.max()) if self.n else 0.0
             return
         # eager: merge runs (last run wins per doc_id — upsert)
-        self._bids = self._btfs = self._bdls = b""
-        self._oids = self._otfs = self._odls = np.empty(0, dtype=np.int64)
-        self._bttf = self._btls = b""
-        self._ottf = self._otls = np.empty(0, dtype=np.int64)
+        self._table = None
+        self._bids = self._btfs = self._bttf = b""
+        self._oids = self._otfs = self._ottf = np.empty(0, dtype=np.int64)
         if len(rows) > 1:
             rows = rows.sort_values("run_id")
-        ids, tfs, dls, ttfs, tls = unpack_runs(r for _, r in rows.iterrows())
+        ids, tfs, dls, ttfs, tls = unpack_runs(
+            (r for _, r in rows.iterrows()), tables
+        )
         scores = self._score(tfs, dls, ttfs, tls)
         self._full = (ids, scores)
         self.n = len(ids)
@@ -381,26 +390,21 @@ class _TermList:
         hit = self._cache.get(b)
         if hit is not None:
             return hit
-        gaps = vb.varbyte_decode(self._slice(self._bids, self._oids, b))
-        base = (
-            vb.to_u64(self.block_last[b - 1 : b])[0]
-            if b > 0
-            else np.uint64(0)
+        t = self._table
+        ranks = decode_ranks(
+            self._slice(self._bids, self._oids, b), t,
+            after=self.block_last[b - 1] if b > 0 else None,
         )
-        ids = vb.from_u64(np.cumsum(gaps, dtype=np.uint64) + base)
+        ids = t.ids[ranks]
         tfs = vb.varbyte_decode(
             self._slice(self._btfs, self._otfs, b)
         ).astype(np.int64)
-        dls = vb.varbyte_decode(
-            self._slice(self._bdls, self._odls, b)
-        ).astype(np.int64)
+        dls = t.doclens[ranks]
         if self._mode == "bm25f":
             ttfs = vb.varbyte_decode(
                 self._slice(self._bttf, self._ottf, b)
             ).astype(np.int64)
-            tls = vb.varbyte_decode(
-                self._slice(self._btls, self._otls, b)
-            ).astype(np.int64)
+            tls = t.tlens[ranks]
         else:
             ttfs = tls = None
         out = (ids, self._score(tfs, dls, ttfs, tls))
@@ -939,7 +943,8 @@ def _trailer(
 
 
 def wand_shard(
-    pdf: pd.DataFrame, n_docs: int, avgdl: float, k: int, conjunctive: bool,
+    pdf: pd.DataFrame, tables: dict[int, DocTable], n_docs: int,
+    avgdl: float, k: int, conjunctive: bool,
     n_terms: int, mode: str = "bm25", allowed: np.ndarray | None = None,
     excluded: np.ndarray | None = None,
     collapse: tuple[int, np.ndarray, np.ndarray] | None = None,
@@ -949,8 +954,9 @@ def wand_shard(
     consumed: tuple[np.ndarray, np.ndarray] | None = None,
     count: bool = False,
 ) -> pd.DataFrame:
-    """THE shard kernel: one shard's segments (all query terms) → its
-    top-k hit rows plus one trailer row (KERNEL_SCHEMA).
+    """THE shard kernel: one shard's segments (all query terms) and its
+    doc tables by run → its top-k hit rows plus one trailer row
+    (KERNEL_SCHEMA).
 
     `count`: the driver needs the shard's pre-top-k match count in the
     trailer (the reference response carries the ranked page AND the
@@ -1005,7 +1011,7 @@ def wand_shard(
             "collapsed cursor is stateful)"
         )
     lists = [] if allowed is not None and len(allowed) == 0 else [
-        _TermList(rows, n_docs, avgdl, mode,
+        _TermList(rows, tables, n_docs, avgdl, mode,
                   boost=boosts.get(t, 1.0) if boosts else 1.0,
                   fweights=fweights)
         for t, rows in pdf.groupby("term", sort=False)
@@ -1137,79 +1143,97 @@ def site_map_frame(doc_stats, n_shards: int):
 
 
 def _shard_frame(
-    segments: DataFrame, terms: list[str], kernel, schema: str,
+    segments: Packed, terms: list[str], kernel, schema: str,
     mode: str = "bm25", side: DataFrame | None = None,
 ) -> DataFrame:
     """The distributed packed-read plan: term-pruned segment scan →
-    optional cogroup with a per-shard side frame (site members, the
+    cogroup with ONE per-shard side frame (segments.side_frame: the
+    tree's doc tables, plus the read's own side — site members, the
     doc→site map, or the served docs) → ONE applyInPandas kernel call
-    per shard. `kernel(seg_pdf, side_pdf)` gets side_pdf=None without
-    a side. The corpus never moves; only the side frame's rows
-    shuffle. _shard_rows' Spark executor, and the lazy plan of the
-    reads whose output is not bounded by k (module docstring)."""
-    seg = term_pruned_segments(segments, terms, mode)
-    if side is None:
-        return seg.groupBy("shard").applyInPandas(
-            lambda pdf: kernel(pdf, None), schema=schema
-        )
+    per shard, `kernel(seg_pdf, tables, side_pdf)` with side_pdf=None
+    without a side. A shard with doc tables only (no segment rows, no
+    side rows) makes no call, as on the driver. The corpus never
+    moves; only the side frame's rows shuffle. _shard_rows' Spark
+    executor, and the lazy plan of the reads whose output is not
+    bounded by k (module docstring)."""
+    seg = term_pruned_segments(segments.rows, terms, mode)
+    has_side = side is not None
+
+    def run(seg_pdf: pd.DataFrame, side_pdf: pd.DataFrame) -> pd.DataFrame:
+        tables, own = split_side(side_pdf, has_side)
+        if not len(seg_pdf) and (own is None or not len(own)):
+            return pd.DataFrame()
+        return kernel(seg_pdf, tables, own)
+
     return (
-        seg.groupby("shard").cogroup(side.groupby("shard"))
-        .applyInPandas(kernel, schema=schema)
+        seg.groupby("shard")
+        .cogroup(side_frame(segments.docs_frame(), side).groupby("shard"))
+        .applyInPandas(run, schema=schema)
     )
 
 
 def _shard_rows(
-    segments: DataFrame, terms: list[str], kernel, schema: str,
+    segments: Packed, terms: list[str], kernel, schema: str,
     mode: str = "bm25", side: DataFrame | None = None,
-    nbytes: int | None = None,
-) -> tuple[list, str]:
+    sizes: ReadSizes | None = None, positional: bool = False,
+) -> tuple[list, str, int | None]:
     """_shard_frame for a caller that collects its kernel rows →
-    (rows, executor). Both executors run the same scan and the same
-    kernel with the same cogroup semantics:
+    (rows, executor, the input bound the rule compared — None without
+    one). Both executors run the same scan and the same kernel with the
+    same cogroup semantics:
 
       "spark"   _shard_frame(...).collect() — one applyInPandas task
                 per shard in the Python workers.
       "driver"  the term-pruned scan and the side frame each collected
                 with one Arrow toPandas() (a JVM-only job, no Python
-                worker), then `kernel` called in-process per shard:
-                every shard with segment rows or side rows, as the
-                cogroup does; a shard without side rows gets an EMPTY
-                side frame (None means "no side").
+                worker), the doc tables from segments.tables() (a
+                server collects them once per index state), then
+                `kernel` called in-process per shard: every shard with
+                segment rows or side rows, as the cogroup does; a shard
+                without side rows gets an EMPTY side frame (None means
+                "no side").
 
-    The driver runs the read when `nbytes`, an upper bound on the bytes
-    the kernels would receive (segments.ReadSizes.input_bytes), is ≤
-    segments.DRIVER_READ_BYTES_MAX; without a bound, or above it, Spark
-    does. A Python worker task's fixed cost (125-200 ms per 1-row task
-    with a reused worker, against 2-5 ms for the same JVM collect, on a
-    4-core host at local[2]) dwarfs a small read's decode and score; a
-    large read keeps its rows off the driver and its shards' decode in
-    parallel tasks."""
+    The driver runs the read when the bound on the bytes the kernels
+    would receive — `sizes`' (segments.ReadSizes.input_bytes) over
+    `terms`, the `positional` layout, the tree's table rows and the
+    side — is ≤ segments.DRIVER_READ_BYTES_MAX; without `sizes` or a
+    known table size, or above it, Spark does. A Python worker task's
+    fixed cost (125-200 ms per 1-row task with a reused worker, against
+    2-5 ms for the same JVM collect, on a 4-core host at local[2])
+    dwarfs a small read's decode and score; a large read keeps its
+    rows off the driver and its shards' decode in parallel tasks."""
+    nbytes = None if sizes is None or segments.table_rows is None else (
+        sizes.input_bytes(terms, positional, side is not None,
+                          segments.table_rows)
+    )
     if nbytes is None or nbytes > DRIVER_READ_BYTES_MAX:
         plan = _shard_frame(segments, terms, kernel, schema, mode, side)
-        return plan.collect(), "spark"
-    seg = term_pruned_segments(segments, terms, mode).toPandas()
+        return plan.collect(), "spark", nbytes
+    seg = term_pruned_segments(segments.rows, terms, mode).toPandas()
+    tables = segments.tables()
     segs = {s: g.reset_index(drop=True) for s, g in seg.groupby("shard")}
     if side is None:
-        outs = [kernel(g, None) for g in segs.values()]
+        outs = [kernel(g, tables.get(s, {}), None) for s, g in segs.items()]
     else:
         side_pdf = side.toPandas()
         sides = {
             s: g.reset_index(drop=True) for s, g in side_pdf.groupby("shard")
         }
         outs = [
-            kernel(segs.get(s, seg.iloc[:0]), sides.get(s, side_pdf.iloc[:0]))
+            kernel(segs.get(s, seg.iloc[:0]), tables.get(s, {}),
+                   sides.get(s, side_pdf.iloc[:0]))
             for s in sorted(segs.keys() | sides.keys())
         ]
-    return [r for out in outs for r in out.to_dict("records")], "driver"
+    return [r for out in outs for r in out.to_dict("records")], "driver", nbytes
 
 
-def _n_shards(segments: DataFrame, n_shards: int | None) -> int:
+def _n_shards(segments: Packed, n_shards: int | None) -> int:
     """The manifest's n_shards when given, else inferred from the
-    UNFILTERED segment frame (max shard id + 1 — exact whenever every
+    UNFILTERED segment rows (max shard id + 1 — exact whenever every
     shard holds ≥1 segment, i.e. any non-toy corpus)."""
     if n_shards is not None:
         return n_shards
-    return int(segments.agg(F.max("shard")).collect()[0][0]) + 1
+    return int(segments.rows.agg(F.max("shard")).collect()[0][0]) + 1
 
 
 def _site_side(segments, site, doc_stats, n_shards):
@@ -1243,7 +1267,7 @@ def _site_map_of(side_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _wand_kernel(
-    segments: DataFrame, terms: list[str], n_docs: int, avgdl: float,
+    segments: Packed, terms: list[str], n_docs: int, avgdl: float,
     k: int, conjunctive: bool, mode: str = "bm25",
     site: str | None = None, doc_stats: DataFrame | None = None,
     n_shards: int | None = None, excluded_doc_ids=None,
@@ -1265,13 +1289,14 @@ def _wand_kernel(
     else:
         side = _site_side(segments, site, doc_stats, n_shards)
 
-    def kernel(seg_pdf: pd.DataFrame, side_pdf: pd.DataFrame | None):
+    def kernel(seg_pdf: pd.DataFrame, tables: dict,
+               side_pdf: pd.DataFrame | None):
         filters = (
             {"allowed": _allowed_of(side_pdf)} if collapse_n is None
             else {"collapse": (collapse_n, *_site_map_of(side_pdf))}
         )
         return wand_shard(
-            seg_pdf, n_docs, avgdl, k, conjunctive, n_terms, mode,
+            seg_pdf, tables, n_docs, avgdl, k, conjunctive, n_terms, mode,
             excluded=exc, boosts=boosts, after=after, fweights=fweights,
             consumed=consumed, count=count, **filters,
         )
@@ -1280,7 +1305,7 @@ def _wand_kernel(
 
 
 def _wand_rows(
-    segments: DataFrame, terms: list[str], sizes: ReadSizes | None,
+    segments: Packed, terms: list[str], sizes: ReadSizes | None,
     n_docs: int, avgdl: float, k: int, conjunctive: bool,
     mode: str = "bm25", **kw,
 ) -> tuple[list, str, int | None]:
@@ -1290,13 +1315,9 @@ def _wand_rows(
     kernel, side = _wand_kernel(
         segments, terms, n_docs, avgdl, k, conjunctive, mode, **kw
     )
-    nbytes = None if sizes is None else sizes.input_bytes(
-        terms, side=side is not None
+    return _shard_rows(
+        segments, terms, kernel, KERNEL_SCHEMA, mode, side, sizes
     )
-    rows, executor = _shard_rows(
-        segments, terms, kernel, KERNEL_SCHEMA, mode, side, nbytes
-    )
-    return rows, executor, nbytes
 
 
 def _merge(
@@ -1352,7 +1373,7 @@ def _check_page_args(k: int, offset: int, mode: str, boosts) -> None:
 
 def search_packed_fused(
     spark,
-    segments: DataFrame,
+    segments: Packed,
     term_stats: DataFrame,
     n_docs: int,
     avgdl: float,
@@ -1474,7 +1495,7 @@ def search_packed_fused(
 
 def search_packed(
     spark,
-    segments: DataFrame,
+    segments: Packed,
     term_stats: DataFrame,
     n_docs: int,
     avgdl: float,
@@ -1576,7 +1597,7 @@ def _page_frame(spark, hits: list[tuple[int, float]]) -> DataFrame:
 
 def match_count_packed(
     spark,
-    segments: DataFrame,
+    segments: Packed,
     term_stats: DataFrame,
     n_docs: int,
     query: str,
@@ -1605,7 +1626,7 @@ def match_count_packed(
 
 def facet_counts_packed(
     spark,
-    segments: DataFrame,
+    segments: Packed,
     term_stats: DataFrame,
     doc_stats: DataFrame,
     n_docs: int,
@@ -1654,9 +1675,10 @@ def facet_counts_packed(
         ).distinct()
     exc = _deny_list(excluded_doc_ids)
 
-    def kernel(pdf: pd.DataFrame, map_pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(pdf: pd.DataFrame, tables: dict,
+               map_pdf: pd.DataFrame) -> pd.DataFrame:
         lists = [
-            _TermList(rows, n_docs, 1.0)
+            _TermList(rows, tables, n_docs, 1.0)
             for _, rows in pdf.groupby("term", sort=False)
         ]
         if not lists or (conjunctive and len(lists) < n_terms):

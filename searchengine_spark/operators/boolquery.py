@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from .search import bm25_term_score, lemmatize_query
 
 if TYPE_CHECKING:
-    from ..index.segments import ReadSizes
+    from ..index.segments import Packed, ReadSizes
 
 # AST: ("term", str | None) | ("and", [node]) | ("or", [node])
 #    | ("not", node). A None term matches nothing (a leaf whose
@@ -415,6 +415,7 @@ def _bool_eval(
 
 def bool_shard(
     pdf: pd.DataFrame,
+    tables: dict,
     ast: Node,
     n_docs: int,
     avgdl: float,
@@ -423,7 +424,8 @@ def bool_shard(
     excluded: np.ndarray | None = None,
     count: bool = False,
 ) -> pd.DataFrame:
-    """One shard's segments (all leaf terms) -> the shard-local top-k
+    """One shard's segments (all leaf terms) and its doc tables by run
+    (index/segments.DocTable) -> the shard-local top-k
     of docs matching the AST, scored over the positive terms, plus the
     trailer row of index/wand's kernel contract (n_matched filled when
     ``count``: the boolean evaluation materializes the full match set
@@ -441,11 +443,11 @@ def bool_shard(
     if _is_pure_disjunction(ast):
         n_terms = 1 if ast[0] == "term" else len(ast[1])
         return wand_shard(
-            pdf, n_docs, avgdl, k, conjunctive=False, n_terms=n_terms,
+            pdf, tables, n_docs, avgdl, k, conjunctive=False, n_terms=n_terms,
             allowed=allowed, excluded=excluded, count=count,
         )
     lists = {} if allowed is not None and len(allowed) == 0 else {
-        term: _TermList(rows, n_docs, avgdl)
+        term: _TermList(rows, tables, n_docs, avgdl)
         for term, rows in pdf.groupby("term", sort=False)
     }
     cand = _bool_eval(lists, ast, allowed, excluded)
@@ -467,7 +469,7 @@ def bool_shard(
 
 def bool_search_packed(
     spark,
-    segments: DataFrame,
+    segments: Packed,
     n_docs: int,
     avgdl: float,
     query: str | Node,
@@ -502,7 +504,7 @@ def bool_search_packed(
 
 def bool_search_packed_fused(
     spark,
-    segments: DataFrame,
+    segments: Packed,
     n_docs: int,
     avgdl: float,
     query: str | Node,
@@ -543,17 +545,14 @@ def bool_search_packed_fused(
     if not leaves:
         return [], (0 if _count else None)
     exc = _deny_list(excluded_doc_ids)
-    side = _site_side(segments, site, doc_stats, n_shards)
-    nbytes = None if sizes is None else sizes.input_bytes(
-        leaves, side=side is not None
-    )
-    rows, _ = _shard_rows(
+    rows, _, _ = _shard_rows(
         segments, leaves,
-        lambda seg_pdf, mem_pdf: bool_shard(
-            seg_pdf, ast, n_docs, avgdl, offset + k,
+        lambda seg_pdf, tables, mem_pdf: bool_shard(
+            seg_pdf, tables, ast, n_docs, avgdl, offset + k,
             allowed=_allowed_of(mem_pdf), excluded=exc, count=_count,
         ),
-        KERNEL_SCHEMA, side=side, nbytes=nbytes,
+        KERNEL_SCHEMA, side=_site_side(segments, site, doc_stats, n_shards),
+        sizes=sizes,
     )
     hits, count = _merge(rows, k, offset)
     return [(r["doc_id"], r["score"]) for r in hits], (

@@ -56,7 +56,7 @@ def expand_prefix(
 
 def prefix_search_packed(
     spark,
-    segments: DataFrame,
+    segments,
     term_stats: DataFrame,
     n_docs: int,
     avgdl: float,
@@ -65,7 +65,8 @@ def prefix_search_packed(
     max_expansions: int = 50,
     excluded_doc_ids: list[int] | None = None,
 ) -> DataFrame:
-    """Prefix top-k over packed segments -> (doc_id, score), ranked:
+    """Prefix top-k over a packed TF tree (index/segments.Packed) ->
+    (doc_id, score), ranked:
     bounded expansion, then a DataFrame view over the disjunctive,
     df-unpruned block-max WAND read over the expanded terms
     (index/wand.search_packed_fused, without the count — the read

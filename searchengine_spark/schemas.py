@@ -52,15 +52,19 @@ DOC_STATS_SCHEMA = T.StructType(
     ]
 )
 
-# Packed posting segments: delta-gap + varbyte docID runs with
+# Packed posting segments: rank-gap + varbyte docID runs with
 # block-max BM25 annotations (north_rule). One row per
 # (term, shard, run). Shard = pmod(hash(doc_id), n_shards) — a single
 # GLOBAL doc-space partitioning shared by all terms, so query-time
 # conjunctive intersection is shard-local (no cross-shard doc).
-# doclens are packed alongside tfs so query-time BM25 recomputes in
-# float64 from exact integers (rank-identity with the relational path
-# and the oracle); block_max_score is the exact per-block max of those
-# float64 scores (sound upper bound for WAND by construction).
+# `doc_ids` holds each posting's RANK in its (run, shard)'s doc table
+# (index/segments.py: the run's doc ids sorted ascending, with each
+# doc's length and title length beside them — segments.TF_DOCS_SCHEMA,
+# stored under <tree>/_docs), as gaps; query-time BM25 gathers the
+# exact integer doclens from the table by rank and recomputes in
+# float64 (rank-identity with the relational path and the oracle);
+# block_max_score is the exact per-block max of those float64 scores
+# (sound upper bound for WAND by construction).
 INDEX_SEGMENTS_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -68,9 +72,8 @@ INDEX_SEGMENTS_SCHEMA = T.StructType(
         T.StructField("run_id", T.IntegerType(), False),
         T.StructField("n_docs", T.IntegerType(), False),
         T.StructField("df", T.LongType(), False),  # term DF (global)
-        T.StructField("doc_ids", T.BinaryType(), False),  # delta+varbyte
+        T.StructField("doc_ids", T.BinaryType(), False),  # rank gaps, varbyte
         T.StructField("tfs", T.BinaryType(), False),  # varbyte
-        T.StructField("doclens", T.BinaryType(), False),  # varbyte
         T.StructField("block_last_doc", T.ArrayType(T.LongType()), False),
         T.StructField("block_max_score", T.ArrayType(T.DoubleType()), False),
         # byte offset of each block's first value in the corresponding
@@ -80,23 +83,20 @@ INDEX_SEGMENTS_SCHEMA = T.StructType(
         # the blocks its candidates live in, never the whole list
         T.StructField("block_off_ids", T.ArrayType(T.IntegerType()), False),
         T.StructField("block_off_tfs", T.ArrayType(T.IntegerType()), False),
-        T.StructField("block_off_dls", T.ArrayType(T.IntegerType()), False),
         # --- per-field TF layer (BM25F serving, index/wand mode="bm25f")
-        # Parallel varbyte streams aligned 1:1 with the postings: the
-        # doc's TITLE-field tf for this term (mostly 0 — varbyte spends
-        # 1 byte per zero) and the doc's title length. Per-block maxima
-        # of the FIELD-NORMALIZED tf (tf_f / (1-b_f+b_f·len_f/avg_f),
-        # slopes fixed at pack time — operators/fielded.FIELD_B_*) let
-        # the kernel build a sound BM25F block bound for ANY query-time
-        # field weights: x̄ = w_b·max_bnorm + w_t·max_tnorm dominates
-        # every posting's x, and the saturation is monotone. `avgtl`
-        # rides per row (like df) so serving needs no side lookup.
-        # Nullable: segments packed before this layer existed read as
-        # null and mode="bm25f" fails with a clear error.
+        # A varbyte stream aligned 1:1 with the postings: the doc's
+        # TITLE-field tf for this term (mostly 0 — varbyte spends 1
+        # byte per zero); the title length sits in the doc table.
+        # Per-block maxima of the FIELD-NORMALIZED tf (tf_f /
+        # (1-b_f+b_f·len_f/avg_f), slopes fixed at pack time —
+        # operators/fielded.FIELD_B_*) let the kernel build a sound
+        # BM25F block bound for ANY query-time field weights: x̄ =
+        # w_b·max_bnorm + w_t·max_tnorm dominates every posting's x, and
+        # the saturation is monotone. `avgtl` rides per row (like df)
+        # so serving needs no side lookup. Nullable: a row without the
+        # layer makes mode="bm25f" fail with a clear error.
         T.StructField("tfs_title", T.BinaryType(), True),
-        T.StructField("title_lens", T.BinaryType(), True),
         T.StructField("block_off_ttf", T.ArrayType(T.IntegerType()), True),
-        T.StructField("block_off_tls", T.ArrayType(T.IntegerType()), True),
         T.StructField("block_max_bnorm", T.ArrayType(T.DoubleType()), True),
         T.StructField("block_max_tnorm", T.ArrayType(T.DoubleType()), True),
         T.StructField("avgtl", T.DoubleType(), True),

@@ -56,8 +56,16 @@ from collections import ChainMap, OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .index.refresh import _doc_meta_resolved, read_pinned, recover
-from .index.segments import ReadSizes, write_delta_run, write_tombstones
+from .index.refresh import _doc_meta_resolved, recover
+from .index.segments import (
+    Packed,
+    ReadSizes,
+    doc_tables,
+    read_packed,
+    read_pinned,
+    write_delta_run,
+    write_tombstones,
+)
 from .index.wand import search_packed_fused
 from .operators.postings import prepare_docs_counts, read_index
 from .operators.search import corpus_constants
@@ -93,10 +101,10 @@ class Generation:
     are SINGLE (index_page / delete_page / refresh_positional must not
     overlap each other — the same rule as refresh_and_repack).
 
-    File pinning: `segments`, the delta meta runs under `serve_meta`
-    and the positional frame — every tree a write appends to — read
-    the files listed when the generation opened
-    (index/refresh.read_pinned). A plain read of a directory is
+    File pinning: `segments` and its doc tables `seg_docs`, the delta
+    meta runs under `serve_meta` and the positional tree — every tree a
+    write appends to — read the files listed when the generation opened
+    (index/segments.read_pinned). A plain read of a directory is
     refreshed by Spark on every append under it (`recacheByPath`), so
     an in-flight reader of the old generation would see the new rows,
     and two generations' caches of one path would share one cache
@@ -110,10 +118,14 @@ class Generation:
 
     `df_map` and the `read_sizes` maps are ChainMap(delta, base): a
     write copies only the delta layer. Lazily built values (site map,
-    site dim, fuzzy keys, positional frame, sorted terms) live in
+    site dim, fuzzy keys, positional frame, sorted terms, the doc
+    tables as the two executors take them — see `packed`) live in
     `lazy` slots, each built at most once per generation."""
 
     segments: DataFrame
+    # the TF tree's doc tables (uncached) and their row count
+    seg_docs: DataFrame
+    seg_table_rows: int
     serve_meta: DataFrame
     # tombstoned docs whose postings are still packed (None: none)
     tombstoned: list | None
@@ -150,6 +162,26 @@ class Generation:
                         v.count()
                     self._slots[name] = v
         return self._slots[name]
+
+    def packed(self, name: str, rows: DataFrame, docs: DataFrame,
+               table_rows: int) -> Packed:
+        """A packed tree of this generation (index/segments.Packed)
+        whose doc tables are collected with one Arrow toPandas() — the
+        driver executor's — and shard-partitioned and persisted — the
+        Spark executor's side — each at most once, on first use."""
+        return Packed(
+            rows, docs, table_rows,
+            collect=lambda: self.lazy(
+                f"{name}_tables", lambda: doc_tables(docs.toPandas())),
+            frame=lambda: self.lazy(
+                f"{name}_side",
+                lambda: docs.repartition(self.n_shards, "shard")),
+        )
+
+    def tf(self) -> Packed:
+        """The served TF tree."""
+        return self.packed("seg", self.segments, self.seg_docs,
+                           self.seg_table_rows)
 
     def evolve(self, keep: tuple = (), **changes) -> Generation:
         """The next generation: this one with `changes`, empty response
@@ -213,7 +245,8 @@ class SearchService:
         # cache_responses=False serves every request uncached (bench
         # uses it so min-of-N latency measures the kernels, not hits)
         self._cache_responses = cache_responses
-        segments, top_run, top_shard = self._open_segments()
+        segments, seg_docs, seg_rows, top_run, top_shard = (
+            self._open_segments())
         serve_meta, tombstoned, side_rows, top_mrun = self._open_meta()
         # shard mapping: the build manifest is authoritative (checked
         # on resume — index/manifest.py); fall back to the observed
@@ -245,7 +278,7 @@ class SearchService:
                 if t not in dfs:
                     learned[t] = 1
         self._gen = Generation(
-            segments, serve_meta, tombstoned,
+            segments, seg_docs, seg_rows, serve_meta, tombstoned,
             int(rec[0]["n_shards"]) if len(rec) == 1 else top_shard + 1,
             ChainMap(learned, dfs),
             ReadSizes(ChainMap(delta_postings, dfs),
@@ -265,7 +298,7 @@ class SearchService:
 
     @property
     def segments(self) -> DataFrame:
-        """The served generation's packed segments."""
+        """The served generation's packed segment rows."""
         return self._gen.segments
 
     @property
@@ -569,7 +602,7 @@ class SearchService:
             if after is not None and collapse is None else None
         )
         hits, fused_count = search_packed_fused(
-            self.spark, g.segments, self.term_stats, self.n_docs,
+            self.spark, g.tf(), self.term_stats, self.n_docs,
             self.avgdl, query, lemmas=q_lemmas, k=k_fetch,
             offset=offset if blend is None else 0, site=site,
             mode=mode, conjunctive=conjunctive, df_map=g.df_map,
@@ -771,7 +804,7 @@ class SearchService:
         if not terms:
             return out
         rows, out["executor"], out["input_bytes_bound"] = _wand_rows(
-            g.segments, terms, g.read_sizes, self.n_docs, self.avgdl,
+            g.tf(), terms, g.read_sizes, self.n_docs, self.avgdl,
             limit, conjunctive, mode, site=site, doc_stats=g.serve_meta,
             n_shards=g.n_shards, excluded_doc_ids=g.tombstoned,
             boosts=boosts, fweights=fweights,
@@ -858,7 +891,7 @@ class SearchService:
         from .operators.boolquery import bool_search_packed_fused
 
         hits, count = bool_search_packed_fused(
-            self.spark, g.segments, self.n_docs, self.avgdl, query,
+            self.spark, g.tf(), self.n_docs, self.avgdl, query,
             k=limit, excluded_doc_ids=g.tombstoned, site=site,
             offset=offset, doc_stats=g.serve_meta,
             n_shards=g.n_shards, sizes=g.read_sizes,
@@ -879,7 +912,7 @@ class SearchService:
             raise ValueError("prefix must be non-empty")
         terms = [t for t, _ in self._expand(g, pfx, max_expansions)]
         hits, _ = search_packed_fused(
-            self.spark, g.segments, self.term_stats, self.n_docs,
+            self.spark, g.tf(), self.term_stats, self.n_docs,
             self.avgdl, query=pfx, lemmas=terms, k=limit,
             conjunctive=False, max_rel_freq=1.0, df_map=g.df_map,
             sizes=g.read_sizes, excluded_doc_ids=g.tombstoned,
@@ -973,7 +1006,7 @@ class SearchService:
             return {"result": True, "count": 0, "terms": [], "data": []}
         excluded = list(g.tombstoned or []) + [doc_id]
         hits, count = search_packed_fused(
-            self.spark, g.segments, self.term_stats, self.n_docs,
+            self.spark, g.tf(), self.term_stats, self.n_docs,
             self.avgdl, query=" ".join(terms), lemmas=terms, k=limit,
             conjunctive=False, df_map=g.df_map,
             sizes=g.read_sizes,
@@ -996,22 +1029,32 @@ class SearchService:
         The publish itself is still one assignment."""
         g = self._gen
         self._build_positional(g)
-        nxt = g.evolve(keep=("site_map", "site_dim", "fuzzy", "terms"))
+        nxt = g.evolve(keep=("site_map", "site_dim", "fuzzy", "terms",
+                             "seg_tables", "seg_side"))
         self._positional(nxt)
         self._gen = nxt
 
-    def _positional(self, g: Generation) -> tuple[DataFrame, bool]:
-        """(positional runs, stale) of `g`: <base>/possegs, read — or
+    def _positional(self, g: Generation) -> tuple[Packed, bool]:
+        """(positional tree, stale) of `g`: <base>/possegs, read — or
         built from docs_text if absent — on the generation's first
-        phrase request."""
+        phrase request. Its doc tables are pinned after its rows: an
+        append lands tables first, so every pinned row has its table."""
         from .index.manifest import fs_exists
 
-        def read():
-            if not fs_exists(self.spark, f"{self.base}/possegs"):
-                self._build_positional(g)
-            return read_pinned(self.spark, f"{self.base}/possegs")
+        path = f"{self.base}/possegs"
 
-        return g.lazy("possegs", read), g.lazy(
+        def read():
+            if not fs_exists(self.spark, path):
+                self._build_positional(g)
+            return read_packed(self.spark, path, pinned=True).rows
+
+        def read_docs():
+            # a tuple, which `lazy` stores as is: the tables stay uncached
+            docs = read_pinned(self.spark, f"{path}/_docs")
+            return docs, docs.count()
+
+        rows = g.lazy("possegs", read)
+        return g.packed("pos", rows, *g.lazy("pos_docs", read_docs)), g.lazy(
             # a crash-recovery discard (refresh._recover_pos) marks a
             # kept pre-compaction snapshot: its rows may reference docs
             # the main index no longer serves, so phrase reads filter
@@ -1023,8 +1066,10 @@ class SearchService:
 
     def _build_positional(self, g: Generation) -> None:
         """(Re)build <base>/possegs as one run: the docs_text rows of
-        the docs `g` serves, plus the current positional rows of served
-        docs docs_text lacks (pages landed by index_page)."""
+        the served docs the base build last landed (meta run 0), plus
+        the current positional rows of every other served doc — pages
+        index_page landed, whose docs_text row (if any) holds their
+        OLD text, and served docs docs_text lacks."""
         from .functions.udfs import tokenize_lemmatize_udf
         from .index.manifest import fs_delete, fs_exists
         from .index.positional import (
@@ -1034,6 +1079,7 @@ class SearchService:
             write_positional_segments,
         )
         from .index.refresh import current_view
+        from .index.segments import shard_of
 
         if self.docs_text is None:
             raise ValueError(
@@ -1044,24 +1090,30 @@ class SearchService:
         # only docs the index serves get positional runs: a docs_text
         # row with no living doc would otherwise count in phrase()
         # without an item to serve
+        live = _doc_meta_resolved(self.spark, self.base).filter(
+            ~F.col("deleted"))
+        from_text = live.filter(F.col("mrun") == 0).join(
+            self.docs_text.select("doc_id"), "doc_id", "left_semi"
+        ).select("doc_id")
         prepared = self.docs_text.join(
-            g.serve_meta.select("doc_id"), "doc_id", "left_semi"
+            from_text, "doc_id", "left_semi"
         ).select("doc_id", tokenize_lemmatize_udf("text").alias("lemmas"))
         rows = positional_rows(prepared, g.n_shards)
+        docs = prepared.select(shard_of(g.n_shards).alias("shard"), "doc_id")
         if fs_exists(self.spark, path):
-            live = _doc_meta_resolved(self.spark, self.base).filter(
-                ~F.col("deleted")
-            ).join(self.docs_text.select("doc_id"), "doc_id", "left_anti")
             # collected off the possegs lineage: the overwrite below
             # replaces the files a cached or lazy frame would re-read
             kept = current_view(
-                read_pinned(self.spark, path), live, unpack_positional
+                read_packed(self.spark, path, pinned=True),
+                live.join(from_text, "doc_id", "left_anti"),
+                unpack_positional,
             ).select(*rows.columns).collect()
             if kept:
-                rows = rows.unionByName(
-                    self.spark.createDataFrame(kept, rows.schema)
-                )
-        write_positional_segments(repack_positional(rows), path)
+                kept = self.spark.createDataFrame(kept, rows.schema)
+                rows = rows.unionByName(kept)
+                docs = docs.unionByName(
+                    kept.select("shard", "doc_id").distinct())
+        write_positional_segments(repack_positional(rows, docs=docs), path)
         # the rebuild is in sync with the served doc set by construction
         # — drop any crash-recovery staleness marker the overwrite may
         # have preserved (dynamic partitionOverwriteMode keeps root files)
@@ -1170,7 +1222,7 @@ class SearchService:
             sizes.add_posting(r["term"], r["tf"])
             df_map.setdefault(r["term"], 1)
         doc_id = prepared.select("doc_id").collect()[0]["doc_id"]
-        segments, _, _ = self._open_segments()
+        segments, seg_docs, seg_rows, _, _ = self._open_segments()
         serve_meta, tombstoned, sizes.side_rows, _ = self._open_meta()
         # the positional runs changed (if any); the dictionary's key
         # set — all the fuzzy keys and complete()'s list read — only
@@ -1178,6 +1230,7 @@ class SearchService:
         learned = len(df_map.maps[0]) > len(g.df_map.maps[0])
         self._gen = g.evolve(
             () if learned else ("fuzzy", "terms"), segments=segments,
+            seg_docs=seg_docs, seg_table_rows=seg_rows,
             serve_meta=serve_meta, tombstoned=tombstoned, df_map=df_map,
             read_sizes=sizes, next_run_id=run_id + 1)
         return {"result": True, "doc_id": int(doc_id), "run_id": run_id}
@@ -1201,7 +1254,9 @@ class SearchService:
         serve_meta, tombstoned, side_rows, _ = self._open_meta()
         # segments, positional runs and the dictionary are unchanged
         self._gen = g.evolve(
-            ("possegs", "pos_stale", "fuzzy", "terms"), serve_meta=serve_meta,
+            ("possegs", "pos_docs", "pos_stale", "pos_tables", "pos_side",
+             "seg_tables", "seg_side", "fuzzy", "terms"),
+            serve_meta=serve_meta,
             tombstoned=tombstoned, next_run_id=run_id + 1,
             read_sizes=dataclasses.replace(g.read_sizes, side_rows=side_rows))
         return {"result": True, "doc_id": doc_id, "run_id": run_id}
@@ -1221,7 +1276,7 @@ class SearchService:
         from .index.wand import facet_counts_packed
 
         rows = facet_counts_packed(
-            self.spark, g.segments, self.term_stats, g.serve_meta,
+            self.spark, g.tf(), self.term_stats, g.serve_meta,
             self.n_docs, query, conjunctive=conjunctive, top=top,
             df_map=g.df_map, n_shards=g.n_shards,
             excluded_doc_ids=g.tombstoned,
@@ -1274,14 +1329,19 @@ class SearchService:
             )
         ))
 
-    def _open_segments(self) -> tuple[DataFrame, int, int | None]:
-        """The packed segments, pinned and cached, with their newest run
-        id and largest shard id (the one action also fills the cache)."""
-        segments = read_pinned(self.spark, f"{self.base}/segments").cache()
+    def _open_segments(
+        self,
+    ) -> tuple[DataFrame, DataFrame, int, int, int | None]:
+        """The packed TF tree, pinned: its rows cached, its doc tables
+        (uncached) and their row count, and the rows' newest run id and
+        largest shard id (that action also fills the cache)."""
+        tree = read_packed(self.spark, f"{self.base}/segments", pinned=True)
+        segments = tree.rows.cache()
         top_run, top_shard = segments.agg(
             F.max("run_id"), F.max("shard")
         ).collect()[0]
-        return segments, int(top_run or 0), top_shard
+        return (segments, tree.docs, tree.docs.count(), int(top_run or 0),
+                top_shard)
 
     def _open_meta(self) -> tuple[DataFrame, list | None, int, int]:
         """The serving meta (cached), the deny-list, the serving meta's

@@ -96,12 +96,12 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from searchengine_spark.index.segments import _pack_group, build_segments
+from searchengine_spark.index.segments import Packed, build_segments, read_packed
 from searchengine_spark.index.wand import _TermList, search_packed
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
 
-from .kernels import wand_shard_topk
+from .kernels import pack_groups, wand_shard_topk
 from searchengine_spark.operators.fielded import FIELD_B_BODY, FIELD_B_TITLE
 
 
@@ -132,14 +132,14 @@ def _mk_fgroup(rng, term, n_postings, n_docs):
             "shard": 0,
             "doc_id": ids,
             "tf": tfs,
-            "doclen": rng.randint(20, 200, n_postings).astype(np.int64),
+            "doclen": 20 + ids * 7919 % 180,  # one length per doc
             "df": n_postings,
             # title tf: mostly 0 (the realistic shape), sometimes > 0
             "ttf": np.where(
                 rng.rand(n_postings) < 0.3,
                 rng.randint(1, 4, n_postings), 0
             ).astype(np.int64),
-            "tlen": rng.randint(0, 8, n_postings).astype(np.int64),
+            "tlen": ids * 31 % 8,  # one title length per doc
         }
     )
 
@@ -162,10 +162,7 @@ def test_bm25f_kernel_equals_exhaustive(seed, conjunctive, nt, k, zero_avgtl):
         _mk_fgroup(rng, f"t{i}", int(rng.randint(5, 150)), n_docs)
         for i in range(nt)
     ]
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0, avgtl=avgtl) for g in groups],
-        ignore_index=True,
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl, 0, avgtl=avgtl)
     # exhaustive reference over the RAW relational groups. Sum order
     # must match the kernel's accumulation order for bit-identity:
     # conjunctive sorts lists rarest-first (R1) before accumulating,
@@ -188,7 +185,7 @@ def test_bm25f_kernel_equals_exhaustive(seed, conjunctive, nt, k, zero_avgtl):
             if not conjunctive or len(sc) == nt
         ),
     )[:k]
-    out = wand_shard_topk(pdf, n_docs, avgdl, k, conjunctive, nt,
+    out = wand_shard_topk(pdf, tables, n_docs, avgdl, k, conjunctive, nt,
                           mode="bm25f", fweights=(wb, wt))
     if conjunctive:
         out = out[out["n_hit"] == nt]
@@ -205,20 +202,17 @@ def test_bm25f_block_bound_sound_and_lazy():
     rng = np.random.RandomState(7)
     n_docs, avgdl, avgtl = 5000, 80.0, 3.0
     g = _mk_fgroup(rng, "common", 4000, n_docs)
-    pdf = _pack_group(g, n_docs, avgdl, 0, avgtl=avgtl)
+    pdf, tables = pack_groups([g], n_docs, avgdl, 0, avgtl=avgtl)
     for fw in ((1.0, 2.0), (1.0, 0.25), (3.0, 1.0)):
-        tl = _TermList(pdf, n_docs, avgdl, mode="bm25f", fweights=fw)
+        tl = _TermList(pdf, tables, n_docs, avgdl, mode="bm25f", fweights=fw)
         for b in range(len(tl.block_last)):
             ids, scores = tl.block_scores(b)
             assert scores.max() <= tl.block_max[b] + 0.0  # sound, no eps
     # lazy: a tiny driving list + huge companion → companion mostly
     # undecoded under bm25f pruning
     rare = _mk_fgroup(rng, "rare", 8, n_docs)
-    pdf2 = pd.concat(
-        [_pack_group(x, n_docs, avgdl, 0, avgtl=avgtl) for x in (rare, g)],
-        ignore_index=True,
-    )
-    out = wand_shard_topk(pdf2, n_docs, avgdl, 5, False, 2,
+    pdf2, tables = pack_groups([rare, g], n_docs, avgdl, 0, avgtl=avgtl)
+    out = wand_shard_topk(pdf2, tables, n_docs, avgdl, 5, False, 2,
                           mode="bm25f", fweights=(1.0, 2.0))
     assert len(out) > 0
 
@@ -230,7 +224,7 @@ def packed(spark, corpus_small):
         t.cache().count()
     n, avgdl = S.corpus_constants(idx.doc_stats)
     seg = build_segments(idx, n, avgdl, n_shards=4).cache()
-    seg.count()
+    seg.rows.count()
     return idx, seg, (n, avgdl)
 
 
@@ -303,10 +297,10 @@ def test_bm25f_requires_field_layer(spark, packed):
     """Segments packed WITHOUT the field layer refuse mode='bm25f'
     with a clear error instead of serving wrong scores."""
     idx, seg, (n, avgdl) = packed
-    stripped = seg.drop(
-        "tfs_title", "title_lens", "block_off_ttf", "block_off_tls",
-        "block_max_bnorm", "block_max_tnorm", "avgtl",
-    )
+    stripped = Packed(seg.rows.drop(
+        "tfs_title", "block_off_ttf", "block_max_bnorm", "block_max_tnorm",
+        "avgtl",
+    ), seg.docs)
     with pytest.raises(Exception, match="field"):
         search_packed(spark, stripped, idx.term_stats, n, avgdl,
                       "поиск", k=5, conjunctive=False,
@@ -352,7 +346,7 @@ def test_bm25f_lifecycle_delta_and_compaction(spark, tmp_path_factory):
     prepared = prepare_docs_counts(row, use_html=True)
     write_delta_run(spark, prepared, base, idx.term_stats, n_docs=n,
                     avgdl=avgdl, n_shards=4, run_id=1, avgtl=avgtl)
-    live = spark.read.parquet(f"{base}/segments")
+    live = read_packed(spark, f"{base}/segments")
     # the delta term is absent from the BASE dictionary — queries see
     # it through the learned df_map (service.index_page contract)
     dfm = {r["term"]: r["df"] for r in idx.term_stats.collect()}
@@ -374,7 +368,7 @@ def test_bm25f_lifecycle_delta_and_compaction(spark, tmp_path_factory):
 
     # compact, then compare against a cold rebuild over the SAME docs
     refresh_and_repack(spark, base, run_id=2)
-    seg2 = spark.read.parquet(f"{base}/segments")
+    seg2 = read_packed(spark, f"{base}/segments")
     ts2 = spark.read.parquet(f"{base}/idx/term_stats")
     ds2 = spark.read.parquet(f"{base}/idx/doc_stats")
     n2 = ds2.count()

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from searchengine_spark.index.segments import read_packed
 from searchengine_spark.operators import boolquery as B
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
@@ -92,8 +93,8 @@ def segments(spark, index, constants, tmp_path_factory):
     seg = build_segments(index, n, avgdl, n_shards=4)
     path = str(tmp_path_factory.mktemp("boolseg") / "index_segments")
     write_segments(seg, path)
-    df = spark.read.parquet(path).cache()
-    df.count()
+    df = read_packed(spark, path).cache()
+    df.rows.count()
     return df
 
 

@@ -8,15 +8,15 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from searchengine_spark.index.segments import read_packed
 from searchengine_spark.index.segments import (
-    _pack_group,
     bm25_scores_np,
     build_segments,
     write_segments,
 )
 from searchengine_spark.index.wand import search_packed
 
-from .kernels import wand_shard_topk
+from .kernels import pack_groups, wand_shard_topk
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
 
@@ -35,7 +35,7 @@ def _mk_group(rng, term, n_postings, n_docs):
             "shard": 0,
             "doc_id": ids,
             "tf": rng.randint(1, 20, n_postings).astype(np.int64),
-            "doclen": rng.randint(20, 200, n_postings).astype(np.int64),
+            "doclen": 20 + ids * 7919 % 180,  # one length per doc
             "df": n_postings,
         }
     )
@@ -72,10 +72,7 @@ def test_wand_boosted_equals_boosted_exhaustive(seed, conjunctive, nt):
         _mk_group(rng, f"t{i}", int(rng.randint(5, 200)), n_docs)
         for i in range(nt)
     ]
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups],
-        ignore_index=True,
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl, 0)
     k = int(rng.randint(1, 30))
     # random positive weights, incl. extreme up/down boosts
     boosts = {
@@ -83,7 +80,7 @@ def test_wand_boosted_equals_boosted_exhaustive(seed, conjunctive, nt):
         for i in range(nt)
     }
     got = wand_shard_topk(
-        pdf, n_docs, avgdl, k, conjunctive, nt, boosts=boosts
+        pdf, tables, n_docs, avgdl, k, conjunctive, nt, boosts=boosts
     )
     if conjunctive:
         got = got[got["n_hit"] == nt]
@@ -100,12 +97,12 @@ def test_wand_boosted_equals_boosted_exhaustive(seed, conjunctive, nt):
 def test_boost_validation():
     rng = np.random.RandomState(3)
     g = _mk_group(rng, "t0", 50, 400)
-    pdf = _pack_group(g, 400, 80.0, 0)
+    pdf, tables = pack_groups([g], 400, 80.0, 0)
     with pytest.raises(ValueError, match="boost"):
-        wand_shard_topk(pdf, 400, 80.0, 5, False, 1, mode="legacy",
+        wand_shard_topk(pdf, tables, 400, 80.0, 5, False, 1, mode="legacy",
                         boosts={"t0": 2.0})
     with pytest.raises(ValueError, match="boost"):
-        wand_shard_topk(pdf, 400, 80.0, 5, False, 1, boosts={"t0": -1.0})
+        wand_shard_topk(pdf, tables, 400, 80.0, 5, False, 1, boosts={"t0": -1.0})
 
 
 def test_parse_boosted_query():
@@ -151,8 +148,8 @@ def segments(spark, index, constants, tmp_path_factory):
     seg = build_segments(index, n, avgdl, n_shards=4)
     path = str(tmp_path_factory.mktemp("bseg") / "index_segments")
     write_segments(seg, path)
-    df = spark.read.parquet(path).cache()
-    df.count()
+    df = read_packed(spark, path).cache()
+    df.rows.count()
     return df
 
 
@@ -197,9 +194,9 @@ def test_metrics_kernel_boost_scales_theta():
 
     rng = np.random.RandomState(9)
     g = _mk_group(rng, "t0", 400, 400)
-    pdf = _pack_group(g, 400, 80.0, 0)
-    base = wand_shard(pdf, 400, 80.0, 5, False, 1)
-    boosted = wand_shard(pdf, 400, 80.0, 5, False, 1, boosts={"t0": 3.0})
+    pdf, tables = pack_groups([g], 400, 80.0, 0)
+    base = wand_shard(pdf, tables, 400, 80.0, 5, False, 1)
+    boosted = wand_shard(pdf, tables, 400, 80.0, 5, False, 1, boosts={"t0": 3.0})
     base, boosted = base[base["is_trailer"]], boosted[boosted["is_trailer"]]
     t0, t1 = float(base["theta"].iloc[0]), float(boosted["theta"].iloc[0])
     assert t0 > 0

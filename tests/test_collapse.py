@@ -16,7 +16,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.segments import _pack_group, bm25_scores_np
+from searchengine_spark.index.segments import read_packed
+from searchengine_spark.index.segments import bm25_scores_np
 from searchengine_spark.index.wand import (
     _site_cap_mask,
     _site_of,
@@ -29,7 +30,7 @@ from searchengine_spark.index.segments import build_segments, write_segments
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
 
-from .kernels import wand_shard_topk
+from .kernels import pack_groups, wand_shard_topk
 
 # ---------------------------------------------------------------------------
 # kernel-level (no Spark session — fast)
@@ -71,7 +72,7 @@ def _mk_group(rng, term, n_postings, n_docs):
             "shard": 0,
             "doc_id": ids,
             "tf": rng.randint(1, 20, n_postings).astype(np.int64),
-            "doclen": rng.randint(20, 200, n_postings).astype(np.int64),
+            "doclen": 20 + ids * 7919 % 180,  # one length per doc
             "df": n_postings,
         }
     )
@@ -123,10 +124,7 @@ def test_wand_collapse_equals_collapsed_exhaustive(
         _mk_group(rng, f"t{i}", int(rng.randint(5, 200)), n_docs)
         for i in range(nt)
     ]
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups],
-        ignore_index=True,
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl, 0)
     k = int(rng.randint(1, 15))
     # deterministic doc→site map over the whole id universe
     universe = np.unique(
@@ -135,7 +133,7 @@ def test_wand_collapse_equals_collapsed_exhaustive(
     map_ids = universe
     map_sites = (universe % n_sites) + 10_000  # site ids disjoint from docs
     got = wand_shard_topk(
-        pdf, n_docs, avgdl, k, conjunctive, nt,
+        pdf, tables, n_docs, avgdl, k, conjunctive, nt,
         collapse=(n_cap, map_ids, map_sites),
     )
     if conjunctive:
@@ -183,8 +181,8 @@ def segments(spark, index, constants, tmp_path_factory):
     seg = build_segments(index, n, avgdl, n_shards=4)
     path = str(tmp_path_factory.mktemp("cseg") / "index_segments")
     write_segments(seg, path)
-    df = spark.read.parquet(path).cache()
-    df.count()
+    df = read_packed(spark, path).cache()
+    df.rows.count()
     return df
 
 

@@ -1,6 +1,7 @@
 """A page landed by index_page stays served through the service's other
 doors: a reopen of the index, prefix retrieval, and a rebuild of the
-positional runs from docs_text (which never holds such a page)."""
+positional runs from docs_text (which never holds such a page's
+current text)."""
 
 from __future__ import annotations
 
@@ -116,3 +117,20 @@ def test_reopen_restores_delta_positions(spark, landed):
             assert got.postings.get(t) == live.postings[t], t
     finally:
         again.close()
+
+
+def test_refresh_positional_keeps_relanded_text(landed):
+    """A docs_text page that index_page RE-lands with new text keeps
+    the new text through refresh_positional: docs_text still holds its
+    old text, so its positional rows come from its delta run."""
+    _, svc, _ = landed
+    url = next(d["url"] for d in svc.search(
+        "быстрый поиск", conjunctive=False, limit=10)["data"]
+        if "delta" not in d["url"])
+    fresh = "свежийтекст обновленнойстраницы"
+    doc_id = svc.index_page(url, text=f"{fresh} поиск")["doc_id"]
+    assert svc.phrase(fresh)["count"] == 1
+    svc.refresh_positional()
+    after = svc.phrase(fresh)
+    assert after["count"] == 1
+    assert [d["doc_id"] for d in after["data"]] == [doc_id]

@@ -22,7 +22,10 @@ from searchengine_spark.index.positional import (
 from searchengine_spark.index import wand
 from searchengine_spark.index.segments import (
     DRIVER_READ_BYTES_MAX,
+    Packed,
+    ReadSizes,
     build_segments,
+    side_frame,
     write_segments,
 )
 from searchengine_spark.index.wand import (
@@ -98,7 +101,7 @@ def _sweep(svc) -> list:
                           after_sites=col["site_counts"]))
     out.append(svc.search("дельтастраница"))
     out.append(match_count_packed(
-        svc.spark, svc.segments, svc.term_stats, svc.n_docs, q,
+        svc.spark, svc._gen.tf(), svc.term_stats, svc.n_docs, q,
         conjunctive=False, df_map=svc._gen.df_map,
         excluded_doc_ids=svc._gen.tombstoned, sizes=svc._gen.read_sizes,
     ))
@@ -138,23 +141,34 @@ def test_driver_and_spark_executors_agree(lifecycle, monkeypatch):
 
 
 def test_input_bound_covers_collected_rows(lifecycle):
-    """The bound is an upper bound on the Arrow bytes a read collects,
-    delta runs included: the delta page's postings of known terms count
-    although they leave the pruning df as it was."""
+    """The bound is an upper bound on the Arrow bytes a read's kernels
+    receive — its segment rows and its side frame (the tree's doc
+    tables, plus a site side) — for TF and positional reads, delta
+    runs included: the delta page's postings of known terms count
+    although they leave the pruning df as it was, and its own doc
+    tables count in the table rows."""
     svc = lifecycle
     g = svc._gen
     sizes = g.read_sizes
     assert sizes.postings["поиск"] > g.df_map["поиск"]
     assert sizes.side_rows == g.serve_meta.count()
     svc.phrase("быстрый поиск")  # opens the positional runs
+    tf, pos = g.tf(), svc._positional(g)[0]
+    for tree in (tf, pos):
+        # every run's table is counted, the delta page's included
+        assert tree.table_rows == tree.docs.count()
+        assert tree.docs.filter("run_id > 0").count() >= 1
     for terms in (["быстрый", "поиск"], ["индекс"], ["дельтастраница"]):
-        got = term_pruned_segments(svc.segments, terms).toArrow().nbytes
-        assert 0 < got <= sizes.input_bytes(terms)
-        got = term_pruned_segments(
-            svc._positional(g)[0], terms).toArrow().nbytes
-        assert 0 < got <= sizes.input_bytes(terms, positional=True)
+        got = (term_pruned_segments(tf.rows, terms).toArrow().nbytes
+               + side_frame(tf.docs, None).toArrow().nbytes)
+        assert 0 < got <= sizes.input_bytes(terms, table_rows=tf.table_rows)
+        got = (term_pruned_segments(pos.rows, terms).toArrow().nbytes
+               + side_frame(pos.docs, None).toArrow().nbytes)
+        assert 0 < got <= sizes.input_bytes(
+            terms, positional=True, table_rows=pos.table_rows)
     site_map = site_map_frame(g.serve_meta, g.n_shards)
-    assert site_map.toArrow().nbytes <= sizes.input_bytes([], side=True)
+    assert side_frame(tf.docs, site_map).toArrow().nbytes <= (
+        sizes.input_bytes([], side=True, table_rows=tf.table_rows))
 
 
 def test_explain_executor_without_terms(lifecycle):
@@ -257,38 +271,49 @@ def test_shared_empty_ids_read_only():
 
 def test_driver_rows_keep_cogroup_semantics(spark):
     """_shard_rows on the driver calls the kernel exactly as the cogroup
-    does: once per shard with segment rows or side rows; a shard with
-    segment rows but no side rows gets an EMPTY side frame (None would
-    mean "no filter"), and a shard with only side rows an empty segment
-    frame. Both executors return the same rows."""
-    segments = spark.createDataFrame(
+    does: once per shard with segment rows or side rows, with the
+    shard's doc tables; a shard with segment rows but no side rows gets
+    an EMPTY side frame (None would mean "no filter"), a shard with
+    only side rows an empty segment frame, and a shard with doc tables
+    only no call. Both executors return the same rows."""
+    rows = spark.createDataFrame(
         [("a", 0, 1), ("b", 0, 2), ("a", 1, 3), ("c", 1, 9)],
         "term string, shard int, df long",
     )
+    docs = spark.createDataFrame(
+        [(0, 0, 5, 1, 0), (0, 1, 6, 1, 0), (1, 0, 7, 1, 0), (3, 0, 8, 1, 0)],
+        "shard int, run_id int, doc_id long, doclen long, tlen long",
+    )
+    segments = Packed(rows, docs, docs.count())
     side = spark.createDataFrame(
         [(0, 10), (2, 30), (2, 31)], "shard int, doc_id long"
     )
-    schema = "seg_rows long, side_rows long, df_sum long"
+    schema = "seg_rows long, side_rows long, df_sum long, runs long"
 
-    def kernel(seg_pdf: pd.DataFrame, side_pdf: pd.DataFrame | None):
+    def kernel(seg_pdf: pd.DataFrame, tables: dict,
+               side_pdf: pd.DataFrame | None):
         assert side_pdf is not None
         return pd.DataFrame({"seg_rows": [len(seg_pdf)],
                              "side_rows": [len(side_pdf)],
-                             "df_sum": [int(seg_pdf["df"].sum())]})
+                             "df_sum": [int(seg_pdf["df"].sum())],
+                             "runs": [len(tables)]})
 
     def calls(rows):
-        return sorted(tuple(r[c] for c in ("seg_rows", "side_rows", "df_sum"))
+        return sorted(tuple(r[c] for c in ("seg_rows", "side_rows", "df_sum",
+                                           "runs"))
                       for r in rows)
 
-    local, where = _shard_rows(segments, ["a", "b"], kernel, schema,
-                               side=side, nbytes=1)
+    local, where, _ = _shard_rows(segments, ["a", "b"], kernel, schema,
+                                  side=side, sizes=ReadSizes({}, {}))
     assert where == "driver"
-    remote, where = _shard_rows(segments, ["a", "b"], kernel, schema,
-                                side=side, nbytes=None)
+    remote, where, _ = _shard_rows(segments, ["a", "b"], kernel, schema,
+                                   side=side, sizes=None)
     assert where == "spark"
-    # shard 0: 2 segment rows + 1 side row; shard 1: 1 segment row (the
-    # term filter drops "c") + an empty side; shard 2: side rows only
-    assert calls(local) == calls(remote) == [(0, 2, 0), (1, 0, 3), (2, 1, 3)]
+    # shard 0: 2 segment rows + 1 side row, 2 runs' tables; shard 1: 1
+    # segment row (the term filter drops "c") + an empty side; shard
+    # 2: side rows only; shard 3: a doc table only — no call
+    assert calls(local) == calls(remote) == [
+        (0, 2, 0, 0), (1, 0, 3, 1), (2, 1, 3, 2)]
 
 
 def test_side_only_shard_yields_zero_trailer():
@@ -296,7 +321,7 @@ def test_side_only_shard_yields_zero_trailer():
     emits just one all-zero trailer."""
     empty = pd.DataFrame({"term": pd.Series([], dtype=object),
                           "shard": pd.Series([], dtype="int32")})
-    out = wand_shard(empty, 10, 1.0, 5, conjunctive=True, n_terms=1,
+    out = wand_shard(empty, {}, 10, 1.0, 5, conjunctive=True, n_terms=1,
                      allowed=np.array([3, 4], dtype=np.int64))
     assert len(out) == 1 and bool(out["is_trailer"].iloc[0])
     assert not out.drop(columns="is_trailer").to_numpy().any()

@@ -5,6 +5,7 @@ respected; deterministic (n desc, site asc) order."""
 import pytest
 from pyspark.sql import functions as F
 
+from searchengine_spark.index.segments import read_packed
 from searchengine_spark.index.segments import build_segments, write_segments
 from searchengine_spark.index.wand import facet_counts_packed
 from searchengine_spark.operators import postings as P
@@ -30,8 +31,8 @@ def segments(spark, index, constants, tmp_path_factory):
     seg = build_segments(index, n, avgdl, n_shards=4)
     path = str(tmp_path_factory.mktemp("fseg") / "index_segments")
     write_segments(seg, path)
-    df = spark.read.parquet(path).cache()
-    df.count()
+    df = read_packed(spark, path).cache()
+    df.rows.count()
     return df
 
 

@@ -176,7 +176,8 @@ def test_writes_release_retired_generations(spark, small):
     jsc = spark.sparkContext._jsc
 
     def warm(svc) -> int:
-        # builds the positional frame, site map, site dim and fuzzy keys
+        # builds the positional frame, site map, site dim and fuzzy keys,
+        # and the facets' Spark plan persists the TF doc-table side
         svc.phrase("быстрый поиск")
         svc.facets("быстрый поиск")
         svc.suggest("поис")
@@ -186,7 +187,7 @@ def test_writes_release_retired_generations(spark, small):
     try:
         opened = jsc.getPersistentRDDs().size()
         warmed = warm(svc)
-        assert warmed == opened + 4
+        assert warmed == opened + 5
         url = "https://site2.example/leakcheck"
         svc.index_page(url, text="быстрый поиск утечкапроверка")
         assert jsc.getPersistentRDDs().size() == opened

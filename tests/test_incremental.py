@@ -30,7 +30,7 @@ def base(spark):
     idx = build_index(docs, use_html=True)
     n, avgdl = corpus_constants(idx.doc_stats)
     segs = build_segments(idx, n, avgdl, n_shards=N_SHARDS).cache()
-    segs.count()
+    segs.rows.count()
     return docs, idx, segs, n, avgdl
 
 
@@ -61,7 +61,7 @@ def test_delta_run_updates_results(spark, base):
     delta = delta_segments(
         prepared, idx.term_stats, n, avgdl, n_shards=N_SHARDS, run_id=1
     )
-    merged_view = segs.unionByName(delta)
+    merged_view = segs.union(delta)
 
     after = search_packed(
         spark, merged_view, idx.term_stats, n, avgdl, QUERY, k=5,
@@ -74,7 +74,7 @@ def test_delta_run_updates_results(spark, base):
     # compaction: merge runs → same results, single run per (term, shard)
     compacted = merge_runs(merged_view, n, avgdl, run_id=2).cache()
     assert (
-        compacted.groupBy("term", "shard")
+        compacted.rows.groupBy("term", "shard")
         .count().filter(F.col("count") > 1).count() == 0
     )
     after2 = search_packed(

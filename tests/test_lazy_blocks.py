@@ -7,8 +7,10 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from searchengine_spark.index.segments import BLOCK, _pack_group, unpack_segment
+from searchengine_spark.index.segments import BLOCK, unpack_segment
 from searchengine_spark.index.wand import _TermList
+
+from .kernels import _pack_group, tables_of
 
 
 def _group(rng, n):
@@ -33,10 +35,11 @@ def _group(rng, n):
 def test_lazy_block_decode_equals_full(seed, n):
     rng = np.random.RandomState(seed)
     g = _group(rng, n)
-    seg = _pack_group(g, n_docs=5000, avgdl=100.0, run_id=0)
-    tl = _TermList(seg, 5000, 100.0)
+    seg, docs = _pack_group(g, n_docs=5000, avgdl=100.0, run_id=0)
+    tables = tables_of(docs)
+    tl = _TermList(seg, tables, 5000, 100.0)
     assert tl._full is None  # really lazy
-    full_ids, full_tfs, full_dls = unpack_segment(seg.iloc[0])
+    full_ids, full_tfs, full_dls = unpack_segment(seg.iloc[0], tables[0])[:3]
     # every individual block decodes to the right slice
     for b in range(len(tl.block_last)):
         ids_b, _ = tl._decode_block(b)
@@ -52,8 +55,9 @@ def test_lazy_lookup_touches_only_needed_blocks(seed):
     rng = np.random.RandomState(seed)
     n = 600  # ≥ 4 blocks
     g = _group(rng, n)
-    seg = _pack_group(g, n_docs=5000, avgdl=100.0, run_id=0)
-    tl = _TermList(seg, 5000, 100.0)
+    seg, docs = _pack_group(g, n_docs=5000, avgdl=100.0, run_id=0)
+    tables = tables_of(docs)
+    tl = _TermList(seg, tables, 5000, 100.0)
     # candidates from one known block + some misses
     probe = np.sort(
         np.concatenate(
@@ -70,7 +74,7 @@ def test_lazy_lookup_touches_only_needed_blocks(seed):
     assert 1 in tl._cache
     assert len(tl._cache) <= 3
     # scores correct vs eager reference
-    full_ids, full_tfs, full_dls = unpack_segment(seg.iloc[0])
+    full_ids, full_tfs, full_dls = unpack_segment(seg.iloc[0], tables[0])[:3]
     from searchengine_spark.index.segments import bm25_scores_np
 
     ref = bm25_scores_np(full_tfs, full_dls, n, 5000, 100.0)

@@ -79,29 +79,37 @@ POS_COLS = [f.name for f in POS.POSITIONAL_SEGMENTS_SCHEMA.fields]
 SEG_COLS = [f.name for f in SG.INDEX_SEGMENTS_SCHEMA.fields]
 
 
+def _run(packed, run_id: int) -> dict:
+    """A packed tree's doc tables of run `run_id`: shard → DocTable."""
+    return {s: runs[run_id] for s, runs in packed.tables().items()}
+
+
 @pytest.mark.parametrize("run_id", [0, 3])
 def test_positional_build_spanning_batches(spark, pos_rows, run_id):
+    packed = POS.repack_positional(pos_rows, block=2, run_id=run_id)
+    tables = _run(packed, run_id)
     want = _by_group(
-        pos_rows, "doc_id", lambda g: POS._pack_pos_group(g, 2, run_id)
+        pos_rows, "doc_id",
+        lambda g: POS._pack_pos_group(g, tables, 2, run_id),
     )
-    got = _collect_spanning(
-        spark, POS.repack_positional(pos_rows, block=2, run_id=run_id)
-    )
+    got = _collect_spanning(spark, packed.rows)
     assert _rows(got, POS_COLS) == _rows(want, POS_COLS)
     # groups of many docs really are multi-block
     assert max(r["n_docs"] for r in got) > 2 * 7
 
 
 def test_repack_positional_spanning_batches(spark, pos_rows):
-    packed = POS.repack_positional(pos_rows, block=2).localCheckpoint()
+    packed = POS.repack_positional(pos_rows, block=2)
     unpacked = POS.unpack_positional(packed).localCheckpoint()
+    repacked = POS.repack_positional(unpacked, block=2)
+    tables = _run(repacked, 0)
     want = _by_group(
-        unpacked, "doc_id", lambda g: POS._pack_pos_group(g, 2, 0)
+        unpacked, "doc_id", lambda g: POS._pack_pos_group(g, tables, 2, 0)
     )
-    got = _collect_spanning(spark, POS.repack_positional(unpacked, block=2))
+    got = _collect_spanning(spark, repacked.rows)
     assert _rows(got, POS_COLS) == _rows(want, POS_COLS)
     # the unpack → repack round trip is lossless
-    assert _rows(got, POS_COLS) == _rows(packed.collect(), POS_COLS)
+    assert _rows(got, POS_COLS) == _rows(packed.rows.collect(), POS_COLS)
 
 
 def test_merge_runs_spanning_batches(spark, docs):
@@ -121,17 +129,21 @@ def test_merge_runs_spanning_batches(spark, docs):
         ))
     segments = runs[0]
     for r in runs[1:]:
-        segments = segments.unionByName(r)
-    segments = segments.localCheckpoint()
+        segments = segments.union(r)
+    segments = SG.Packed(segments.rows.localCheckpoint(), segments.docs)
+    tables = segments.tables()
+    merged = {s: SG.merge_tables(t) for s, t in tables.items()}
     want = _by_group(
-        segments, "run_id", lambda g: SG._merge_group(g, n, avgdl, 5)
+        segments.rows, "run_id",
+        lambda g: SG._merge_group(g, n, avgdl, 5, tables, merged),
     )
-    got = _collect_spanning(spark, SG.merge_runs(segments, n, avgdl, 5))
+    got = _collect_spanning(spark, SG.merge_runs(segments, n, avgdl, 5).rows)
     assert _rows(got, SEG_COLS) == _rows(want, SEG_COLS)
-    multi = segments.groupBy("term", "shard").count()
+    multi = segments.rows.groupBy("term", "shard").count()
     assert multi.filter(F.col("count") > 1).count() > 7
     # one run merges to itself
-    base_rows = _rows(base.collect(), SEG_COLS)
+    base_rows = _rows(base.rows.collect(), SEG_COLS)
     assert _rows(
-        _collect_spanning(spark, SG.merge_runs(base, n, avgdl, 0)), SEG_COLS
+        _collect_spanning(spark, SG.merge_runs(base, n, avgdl, 0).rows),
+        SEG_COLS,
     ) == base_rows

@@ -17,7 +17,7 @@ def built(spark):
     idx = build_index(corpus_df(spark, N), use_html=True)
     n, avgdl = corpus_constants(idx.doc_stats)
     segs = build_segments(idx, n, avgdl, n_shards=4).cache()
-    segs.count()
+    segs.rows.count()
     return idx, segs, n, avgdl
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from searchengine_spark.index.segments import (
     build_segments,
     merge_runs,
+    read_packed,
     unpack_segment,
     write_segments,
 )
@@ -36,32 +37,35 @@ def segments(spark, index, constants, tmp_path_factory):
     seg = build_segments(index, n, avgdl, n_shards=4)
     path = str(tmp_path_factory.mktemp("seg") / "index_segments")
     write_segments(seg, path)
-    df = spark.read.parquet(path).cache()
-    df.count()
-    return df
+    tree = read_packed(spark, path).cache()
+    tree.rows.count()
+    return tree
 
 
 def test_segments_cover_all_postings(spark, index, segments):
-    total = segments.agg(F.sum("n_docs")).collect()[0][0]
+    total = segments.rows.agg(F.sum("n_docs")).collect()[0][0]
     assert total == index.postings.count()
     # per-term totals match df
     per_term = {
         r["term"]: r["s"]
-        for r in segments.groupBy("term").agg(F.sum("n_docs").alias("s")).collect()
+        for r in segments.rows.groupBy("term").agg(
+            F.sum("n_docs").alias("s")).collect()
     }
     for r in index.term_stats.collect():
         assert per_term[r["term"]] == r["df"]
 
 
 def test_segment_unpack_matches_postings(spark, index, segments):
-    rows = segments.filter(F.col("term") == "индекс").collect()
+    rows = segments.rows.filter(F.col("term") == "индекс").collect()
+    tables = segments.tables()
     want = {
         r["doc_id"]: r["tf"]
         for r in index.postings.filter(F.col("term") == "индекс").collect()
     }
     got = {}
     for row in rows:
-        ids, tfs, dls = unpack_segment(row)
+        ids, tfs, dls = unpack_segment(
+            row.asDict(), tables[row["shard"]][row["run_id"]])[:3]
         assert np.all(np.diff(ids) > 0)  # sorted, unique within segment
         for d, t in zip(ids, tfs):
             got[int(d)] = int(t)
@@ -142,8 +146,9 @@ def test_packed_offset_slices_the_same_ranking(spark, index, segments, constants
 def test_merge_runs_spark(spark, index, segments, constants):
     n, avgdl = constants
     merged = merge_runs(segments, n, avgdl, run_id=1)
-    assert merged.agg(F.sum("n_docs")).collect()[0][0] == index.postings.count()
-    assert merged.select("run_id").distinct().collect()[0][0] == 1
+    assert merged.rows.agg(F.sum("n_docs")).collect()[0][0] == (
+        index.postings.count())
+    assert merged.rows.select("run_id").distinct().collect()[0][0] == 1
 
 
 def test_packed_full_response_and_match_count(

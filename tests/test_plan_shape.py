@@ -17,7 +17,11 @@ import io
 
 import pytest
 
-from searchengine_spark.index.segments import build_segments, write_segments
+from searchengine_spark.index.segments import (
+    build_segments,
+    read_packed,
+    write_segments,
+)
 from searchengine_spark.index.wand import search_packed
 from searchengine_spark.operators.postings import (
     build_index,
@@ -46,7 +50,7 @@ def built(spark, tmp_path_factory):
     n, avgdl = corpus_constants(idx.doc_stats)
     segs = build_segments(idx, n, avgdl)
     write_segments(segs, f"{tmp}/segments")
-    segments = spark.read.parquet(f"{tmp}/segments")
+    segments = read_packed(spark, f"{tmp}/segments")
     return idx, segments, n, avgdl
 
 
@@ -189,8 +193,8 @@ def test_wand_plan_term_pruned(spark, built):
 
 
 def test_wand_drops_field_layer_unless_bm25f(spark, built):
-    """The per-field TF layer (packed BM25F: tfs_title/title_lens
-    varbyte streams, ~2 extra bytes per posting) rides in every
+    """The per-field TF layer (packed BM25F: the tfs_title varbyte
+    stream, ~1 extra byte per posting, and its block maxima) rides in every
     segment row; only the mode='bm25f' kernel reads it. Every other
     packed query must project it out BEFORE the applyInPandas, so the
     title streams never leave the parquet scan or cross the Arrow
@@ -201,10 +205,10 @@ def test_wand_drops_field_layer_unless_bm25f(spark, built):
     )
 
     idx, segments, n, avgdl = built
-    assert set(FIELD_LAYER_COLS) <= set(segments.columns)
-    seg = term_pruned_segments(segments, ["быстрый"], "bm25")
+    assert set(FIELD_LAYER_COLS) <= set(segments.rows.columns)
+    seg = term_pruned_segments(segments.rows, ["быстрый"], "bm25")
     assert not set(FIELD_LAYER_COLS) & set(seg.columns)
-    seg_f = term_pruned_segments(segments, ["быстрый"], "bm25f")
+    seg_f = term_pruned_segments(segments.rows, ["быстрый"], "bm25f")
     assert set(FIELD_LAYER_COLS) <= set(seg_f.columns)
     # and the projection reaches the actual search plan (a call site
     # bypassing the shared helper would reintroduce the streams)

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from searchengine_spark.index.segments import read_packed
 from searchengine_spark.index.positional import (
     build_positional_segments,
     phrase_search_packed,
@@ -33,7 +34,7 @@ def pos_segments(spark, prepared, tmp_path_factory):
     write_positional_segments(
         build_positional_segments(prepared, N_SHARDS), tmp
     )
-    return spark.read.parquet(tmp)
+    return read_packed(spark, tmp)
 
 
 def _lemma_text(prepared):
@@ -247,7 +248,7 @@ def test_positional_delta_last_run_wins(spark):
     v2 = spark.createDataFrame(  # doc 1 re-landed: "gamma alpha"
         [(1, ["gamma", "alpha"])], "doc_id long, lemmas array<string>"
     )
-    segs = build_positional_segments(v1, n_shards=2, run_id=0).unionByName(
+    segs = build_positional_segments(v1, n_shards=2, run_id=0).union(
         build_positional_segments(v2, n_shards=2, run_id=1)
     )
     # matches only the NEW version's order...
@@ -270,8 +271,8 @@ def test_unpack_repack_positional_roundtrip(spark, prepared, pos_segments):
     )
 
     repacked = repack_positional(unpack_positional(pos_segments))
-    a = {(r["term"], r["shard"]): r for r in pos_segments.collect()}
-    b = {(r["term"], r["shard"]): r for r in repacked.collect()}
+    a = {(r["term"], r["shard"]): r for r in pos_segments.rows.collect()}
+    b = {(r["term"], r["shard"]): r for r in repacked.rows.collect()}
     assert a.keys() == b.keys()
     for k, ra in a.items():
         rb = b[k]
@@ -340,7 +341,7 @@ def test_fused_count_rides_trailer_not_doc_id(spark, tmp_path):
     )
     path = str(tmp_path / "possegs")
     write_positional_segments(build_positional_segments(prepared, 2), path)
-    segs = spark.read.parquet(path)
+    segs = read_packed(spark, path)
     rows = phrase_search_packed_topk_count(spark, segs, ["a", "b"], 10)
     assert merge_phrase_rows(rows.collect(), 10) == (
         [(7, 2), (-1, 1), (5, 1)], 3

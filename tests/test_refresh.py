@@ -17,7 +17,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.index.refresh import refresh_and_repack
-from searchengine_spark.index.segments import build_segments, write_delta_run, write_segments
+from searchengine_spark.index.segments import (
+    build_segments,
+    read_packed,
+    write_delta_run,
+    write_segments,
+)
 from searchengine_spark.index.wand import search_packed
 from searchengine_spark.operators.postings import (
     build_index,
@@ -100,7 +105,7 @@ def built(spark, tmp_path_factory):
         f"{inc}/possegs", mode="append",
     )
     r_idx, r_segs = refresh_and_repack(spark, inc)
-    r_pos = spark.read.parquet(f"{inc}/possegs")
+    r_pos = read_packed(spark, f"{inc}/possegs")
 
     # --- cold path: the same corpus state built from scratch ---
     cold_docs = base_docs.join(
@@ -120,8 +125,8 @@ def built(spark, tmp_path_factory):
         ),
         f"{cold}/possegs",
     )
-    c_segs = spark.read.parquet(f"{cold}/segments")
-    c_pos = spark.read.parquet(f"{cold}/possegs")
+    c_segs = read_packed(spark, f"{cold}/segments")
+    c_pos = read_packed(spark, f"{cold}/possegs")
     return r_idx, r_segs, cidx, c_segs, (cn, cavgdl), r_pos, c_pos
 
 
@@ -129,20 +134,27 @@ def _seg_key(r):
     return (r["term"], r["shard"])
 
 
+def _doc_rows(tree):
+    """A packed tree's doc-table rows, sorted."""
+    return sorted(tuple(r) for r in tree.docs.select(
+        *sorted(tree.docs.columns)).collect())
+
+
 def test_segments_byte_identical_to_cold_rebuild(built):
     _, r_segs, _, c_segs, _, _, _ = built
-    rows_r = {_seg_key(r): r for r in r_segs.collect()}
-    rows_c = {_seg_key(r): r for r in c_segs.collect()}
+    rows_r = {_seg_key(r): r for r in r_segs.rows.collect()}
+    rows_c = {_seg_key(r): r for r in c_segs.rows.collect()}
     assert rows_r.keys() == rows_c.keys()
     for k, rr in rows_r.items():
         rc = rows_c[k]
         assert rr["run_id"] == rc["run_id"] == 0, k
         for col in (
-            "n_docs", "df", "doc_ids", "tfs", "doclens",
+            "n_docs", "df", "doc_ids", "tfs",
             "block_last_doc", "block_max_score",
-            "block_off_ids", "block_off_tfs", "block_off_dls",
+            "block_off_ids", "block_off_tfs",
         ):
             assert rr[col] == rc[col], (k, col)
+    assert _doc_rows(r_segs) == _doc_rows(c_segs)
 
 
 def test_idx_tables_identical_to_cold_rebuild(built):
@@ -221,16 +233,16 @@ def test_tombstone_delete_equals_cold_rebuild(spark, tmp_path):
     cn, cavgdl = corpus_constants(cidx.doc_stats)
     write_segments(build_segments(cidx, cn, cavgdl, n_shards=N_SHARDS),
                    f"{cold}/segments")
-    c_segs = spark.read.parquet(f"{cold}/segments")
+    c_segs = read_packed(spark, f"{cold}/segments")
 
-    rows_r = {_seg_key(r): r for r in r_segs.collect()}
-    rows_c = {_seg_key(r): r for r in c_segs.collect()}
+    rows_r = {_seg_key(r): r for r in r_segs.rows.collect()}
+    rows_c = {_seg_key(r): r for r in c_segs.rows.collect()}
     assert rows_r.keys() == rows_c.keys()
     for k, rr in rows_r.items():
         rc = rows_c[k]
-        for col in ("n_docs", "df", "doc_ids", "tfs", "doclens",
-                    "block_max_score"):
+        for col in ("n_docs", "df", "doc_ids", "tfs", "block_max_score"):
             assert rr[col] == rc[col], (k, col)
+    assert _doc_rows(r_segs) == _doc_rows(c_segs)
     assert corpus_constants(r_idx.doc_stats) == (cn, cavgdl)
 
 
@@ -372,7 +384,7 @@ def test_zero_postings_reland_drops_old_postings(spark, tmp_path):
     write_segments(build_segments(cidx, cn, cavgdl, n_shards=N_SHARDS),
                    f"{cold}/segments")
     rows_r = {_seg_key(r): (bytes(r["doc_ids"]), bytes(r["tfs"]), r["df"])
-              for r in r_segs.collect()}
+              for r in r_segs.rows.collect()}
     rows_c = {_seg_key(r): (bytes(r["doc_ids"]), bytes(r["tfs"]), r["df"])
               for r in spark.read.parquet(f"{cold}/segments").collect()}
     assert rows_r == rows_c
@@ -412,8 +424,8 @@ def test_positional_segments_byte_identical_to_cold_rebuild(built):
     what a cold positional build of the current corpus state produces
     — the same byte-identity contract the TF segments have."""
     *_, r_pos, c_pos = built
-    rows_r = {(r["term"], r["shard"]): r for r in r_pos.collect()}
-    rows_c = {(r["term"], r["shard"]): r for r in c_pos.collect()}
+    rows_r = {(r["term"], r["shard"]): r for r in r_pos.rows.collect()}
+    rows_c = {(r["term"], r["shard"]): r for r in c_pos.rows.collect()}
     assert rows_r.keys() == rows_c.keys()
     for k, rr in rows_r.items():
         rc = rows_c[k]
@@ -421,6 +433,7 @@ def test_positional_segments_byte_identical_to_cold_rebuild(built):
         for col in ("n_docs", "doc_ids", "counts", "positions",
                     "block_last_doc", "block_off_pos"):
             assert rr[col] == rc[col], (k, col)
+    assert _doc_rows(r_pos) == _doc_rows(c_pos)
 
 
 def test_repack_visible_to_new_service_while_old_stays_open(spark, tmp_path):

@@ -31,16 +31,17 @@ def index(spark):
     return idx
 
 
-def _canon_segments(df):
-    rows = df.select(
-        "term", "shard", "n_docs", "df", "doc_ids", "tfs", "doclens"
+def _canon_segments(tree):
+    rows = tree.rows.select(
+        "term", "shard", "n_docs", "df", "doc_ids", "tfs", "tfs_title"
     ).collect()
     return sorted(
         (r["term"], r["shard"], r["n_docs"], r["df"],
          bytes(r["doc_ids"]).hex(), bytes(r["tfs"]).hex(),
-         bytes(r["doclens"]).hex())
+         bytes(r["tfs_title"]).hex())
         for r in rows
-    )
+    ), sorted(tuple(r) for r in tree.docs.select(
+        "shard", "run_id", "doc_id", "doclen", "tlen").collect())
 
 
 def test_kill_resume_identical_index(spark, tmp_path):
@@ -130,8 +131,8 @@ def test_resumable_equals_build_segments_materialized(spark, tmp_path):
     """Production layout: a materialize_index index carries doclen and
     the title field in-row. The resumable build must pack it with the
     same enrich step and bulk pack as build_segments — the same
-    segment rows, byte for byte, including the BM25F field layer and
-    a non-zero avgtl."""
+    segment rows and doc tables, byte for byte, including the BM25F
+    field layer and a non-zero avgtl."""
     from searchengine_spark.operators.postings import materialize_index
 
     idx = materialize_index(
@@ -145,9 +146,12 @@ def test_resumable_equals_build_segments_materialized(spark, tmp_path):
         n_shards=N_SHARDS, n_groups=N_GROUPS,
     )
     oneshot = build_segments(idx, n, avgdl, n_shards=N_SHARDS)
-    assert sorted(segs.columns) == sorted(oneshot.columns)
-    assert _all_columns(segs) == _all_columns(oneshot.select(*segs.columns))
-    avgtl = {r["avgtl"] for r in segs.select("avgtl").distinct().collect()}
+    for part in ("rows", "docs"):
+        got, want = getattr(segs, part), getattr(oneshot, part)
+        assert sorted(got.columns) == sorted(want.columns)
+        assert _all_columns(got) == _all_columns(want.select(*got.columns))
+    avgtl = {r["avgtl"]
+             for r in segs.rows.select("avgtl").distinct().collect()}
     assert len(avgtl) == 1 and avgtl.pop() > 0.0
 
 

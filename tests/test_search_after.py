@@ -9,10 +9,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from searchengine_spark.index.segments import _pack_group, build_segments, write_segments
+from searchengine_spark.index.segments import read_packed
+from searchengine_spark.index.segments import build_segments, write_segments
 from searchengine_spark.index.wand import search_packed
 
-from .kernels import wand_shard_topk
+from .kernels import pack_groups, wand_shard_topk
 from searchengine_spark.operators import postings as P
 from searchengine_spark.operators import search as S
 
@@ -31,7 +32,7 @@ def _mk_group(rng, term, n_postings, n_docs):
             "shard": 0,
             "doc_id": ids,
             "tf": rng.randint(1, 20, n_postings).astype(np.int64),
-            "doclen": rng.randint(20, 200, n_postings).astype(np.int64),
+            "doclen": 20 + ids * 7919 % 180,  # one length per doc
             "df": n_postings,
         }
     )
@@ -60,18 +61,15 @@ def test_wand_cursor_walk_equals_full_ranking(seed, conjunctive, nt, k):
         _mk_group(rng, f"t{i}", int(rng.randint(5, 150)), n_docs)
         for i in range(nt)
     ]
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups],
-        ignore_index=True,
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl, 0)
     full = _rows(
-        wand_shard_topk(pdf, n_docs, avgdl, 10_000, conjunctive, nt),
+        wand_shard_topk(pdf, tables, n_docs, avgdl, 10_000, conjunctive, nt),
         conjunctive, nt,
     )
     walked, cursor = [], None
     for _ in range(1000):
         page = _rows(
-            wand_shard_topk(pdf, n_docs, avgdl, k, conjunctive, nt,
+            wand_shard_topk(pdf, tables, n_docs, avgdl, k, conjunctive, nt,
                             after=cursor),
             conjunctive, nt,
         )[:k]
@@ -88,19 +86,16 @@ def test_wand_cursor_with_deny_list():
     rng = np.random.RandomState(5)
     n_docs, avgdl = 300, 80.0
     groups = [_mk_group(rng, f"t{i}", 120, n_docs) for i in range(2)]
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups],
-        ignore_index=True,
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl, 0)
     full = _rows(
-        wand_shard_topk(pdf, n_docs, avgdl, 10_000, False, 2), False, 2
+        wand_shard_topk(pdf, tables, n_docs, avgdl, 10_000, False, 2), False, 2
     )
     excluded = np.sort(np.array([d for _, d in full[::3]], dtype=np.int64))
     expect = [(s, d) for s, d in full if d not in set(excluded.tolist())]
     walked, cursor = [], None
     while True:
         page = _rows(
-            wand_shard_topk(pdf, n_docs, avgdl, 7, False, 2,
+            wand_shard_topk(pdf, tables, n_docs, avgdl, 7, False, 2,
                             excluded=excluded, after=cursor),
             False, 2,
         )[:7]
@@ -114,10 +109,10 @@ def test_wand_cursor_with_deny_list():
 def test_cursor_collapse_mutually_exclusive():
     rng = np.random.RandomState(1)
     g = _mk_group(rng, "t0", 30, 300)
-    pdf = _pack_group(g, 300, 80.0, 0)
+    pdf, tables = pack_groups([g], 300, 80.0, 0)
     with pytest.raises(ValueError, match="collapse"):
         wand_shard_topk(
-            pdf, 300, 80.0, 5, False, 1, after=(1.0, 0),
+            pdf, tables, 300, 80.0, 5, False, 1, after=(1.0, 0),
             collapse=(2, np.array([], np.int64), np.array([], np.int64)),
         )
 
@@ -146,8 +141,8 @@ def segments(spark, index, constants, tmp_path_factory):
     seg = build_segments(index, n, avgdl, n_shards=4)
     path = str(tmp_path_factory.mktemp("aseg") / "index_segments")
     write_segments(seg, path)
-    df = spark.read.parquet(path).cache()
-    df.count()
+    df = read_packed(spark, path).cache()
+    df.rows.count()
     return df
 
 
@@ -325,13 +320,10 @@ def test_wand_collapsed_cursor_walk_equals_full_ranking(
         _mk_group(rng, f"t{i}", int(rng.randint(5, 150)), n_docs)
         for i in range(nt)
     ]
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups],
-        ignore_index=True,
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl, 0)
     # single-shot reference: uncollapsed exhaustive ranking, then the
     # stateful collapse walk in python
-    full_frame = wand_shard_topk(pdf, n_docs, avgdl, 10_000, conjunctive,
+    full_frame = wand_shard_topk(pdf, tables, n_docs, avgdl, 10_000, conjunctive,
                                  nt)
     want = _collapsed_full(full_frame, conjunctive, nt, n_cap,
                            map_ids, map_sites)
@@ -339,7 +331,7 @@ def test_wand_collapsed_cursor_walk_equals_full_ranking(
     walked, cursor, state = [], None, {}
     for _ in range(1000):
         frame = wand_shard_topk(
-            pdf, n_docs, avgdl, k, conjunctive, nt,
+            pdf, tables, n_docs, avgdl, k, conjunctive, nt,
             collapse=collapse, after=cursor,
             consumed=(
                 np.array(sorted(state), dtype=np.int64),
@@ -380,9 +372,10 @@ def test_wand_collapsed_cursor_requires_consumed():
     rng = np.random.RandomState(1)
     n_docs = 100
     map_ids, map_sites = _site_map_for(n_docs)
-    pdf = _pack_group(_mk_group(rng, "t0", 50, n_docs), n_docs, 80.0, 0)
+    pdf, tables = pack_groups([_mk_group(rng, "t0", 50, n_docs)], n_docs,
+                              80.0, 0)
     with pytest.raises(ValueError, match="consumed"):
-        wand_shard_topk(pdf, n_docs, 80.0, 5, False, 1,
+        wand_shard_topk(pdf, tables, n_docs, 80.0, 5, False, 1,
                         collapse=(2, map_ids, map_sites),
                         after=(1.0, 0))
 

@@ -7,15 +7,13 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from searchengine_spark.index import varbyte as vb
 from searchengine_spark.index.segments import (
     BLOCK,
-    _pack_group,
     bm25_scores_np,
     unpack_segment,
 )
 
-from .kernels import wand_shard_topk
+from .kernels import _pack_group, pack_groups, tables_of, wand_shard_topk
 
 # ---------------------------------------------------------------------------
 # kernel-level property tests (no Spark session needed — fast)
@@ -30,7 +28,8 @@ def _mk_group(rng, term, n_postings, n_docs, df=None):
             "shard": 0,
             "doc_id": ids,
             "tf": rng.randint(1, 20, n_postings).astype(np.int64),
-            "doclen": rng.randint(20, 200, n_postings).astype(np.int64),
+            # a doc's length is the doc's, the same in every group
+            "doclen": 20 + ids * 7919 % 180,
             "df": df if df is not None else n_postings,
         }
     )
@@ -39,8 +38,9 @@ def _mk_group(rng, term, n_postings, n_docs, df=None):
 def test_pack_roundtrip_and_blockmax():
     rng = np.random.RandomState(7)
     g = _mk_group(rng, "t", 1000, 500)
-    seg = _pack_group(g, n_docs=5000, avgdl=100.0, run_id=0).iloc[0]
-    ids, tfs, dls = unpack_segment(seg)
+    seg, docs = _pack_group(g, n_docs=5000, avgdl=100.0, run_id=0)
+    seg = seg.iloc[0]
+    ids, tfs, dls = unpack_segment(seg, tables_of(docs)[0])[:3]
     want = g.sort_values("doc_id")
     assert np.array_equal(ids, want["doc_id"].to_numpy())
     assert np.array_equal(tfs, want["tf"].to_numpy())
@@ -84,11 +84,9 @@ def test_wand_equals_exhaustive(seed, conjunctive, nt):
         _mk_group(rng, f"t{i}", int(rng.randint(5, 200)), n_docs)
         for i in range(nt)
     ]
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups], ignore_index=True
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl)
     k = int(rng.randint(1, 30))
-    got = wand_shard_topk(pdf, n_docs, avgdl, k, conjunctive, nt)
+    got = wand_shard_topk(pdf, tables, n_docs, avgdl, k, conjunctive, nt)
     if conjunctive:
         got = got[got["n_hit"] == nt]
     got = sorted(
@@ -107,14 +105,15 @@ def test_merge_runs_last_wins_kernel():
     g0 = _mk_group(rng, "t", 50, 100)
     g1 = g0.iloc[:10].copy()
     g1["tf"] = g1["tf"] + 100  # updated postings
-    seg0 = _pack_group(g0, 1000, 50.0, run_id=0)
-    seg1 = _pack_group(g1, 1000, 50.0, run_id=1)
+    seg0, docs0 = _pack_group(g0, 1000, 50.0, run_id=0)
+    seg1, docs1 = _pack_group(g1, 1000, 50.0, run_id=1)
     pdf = pd.concat([seg0, seg1], ignore_index=True)
-    out = wand_shard_topk(pdf, 1000, 50.0, 5, False, 1)
+    tables = tables_of(docs0, docs1)
+    out = wand_shard_topk(pdf, tables, 1000, 50.0, 5, False, 1)
     # top docs must be the updated (tf+100) ones
     from searchengine_spark.index.wand import _TermList
 
-    tl = _TermList(pdf, 1000, 50.0)
+    tl = _TermList(pdf, tables, 1000, 50.0)
     assert len(tl.ids) == 50  # no duplicate doc_ids after merge
     upd = set(g1["doc_id"].tolist())
     top = set(out.sort_values("score", ascending=False)["doc_id"].tolist()[:5])
@@ -148,11 +147,9 @@ def test_wand_with_doc_filter_equals_filtered_exhaustive(
     # allowed = pct% of the doc space (incl. the empty set)
     mask = rng.rand(len(all_ids)) * 100 < pct
     allowed = np.sort(all_ids[mask]).astype(np.int64)
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups], ignore_index=True
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl)
     k = int(rng.randint(1, 30))
-    got = wand_shard_topk(pdf, n_docs, avgdl, k, conjunctive, nt,
+    got = wand_shard_topk(pdf, tables, n_docs, avgdl, k, conjunctive, nt,
                           allowed=allowed)
     if conjunctive:
         got = got[got["n_hit"] == nt]
@@ -191,11 +188,9 @@ def test_wand_with_deny_list_equals_filtered_exhaustive(
     )
     mask = rng.rand(len(all_ids)) * 100 < pct
     excluded = np.sort(all_ids[mask]).astype(np.int64)
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups], ignore_index=True
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl)
     k = int(rng.randint(1, 30))
-    got = wand_shard_topk(pdf, n_docs, avgdl, k, conjunctive, nt,
+    got = wand_shard_topk(pdf, tables, n_docs, avgdl, k, conjunctive, nt,
                           excluded=excluded)
     if conjunctive:
         got = got[got["n_hit"] == nt]
@@ -235,11 +230,9 @@ def test_wand_allow_and_deny_compose(seed, conjunctive, pct_a, pct_e):
     excluded = np.sort(
         all_ids[rng.rand(len(all_ids)) * 100 < pct_e]
     ).astype(np.int64)
-    pdf = pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups], ignore_index=True
-    )
+    pdf, tables = pack_groups(groups, n_docs, avgdl)
     k = int(rng.randint(1, 30))
-    got = wand_shard_topk(pdf, n_docs, avgdl, k, conjunctive, nt,
+    got = wand_shard_topk(pdf, tables, n_docs, avgdl, k, conjunctive, nt,
                           allowed=allowed, excluded=excluded)
     if conjunctive:
         got = got[got["n_hit"] == nt]
@@ -265,8 +258,6 @@ def test_bulk_pack_equals_group_pack_with_tiny_arrow_batches(
     including when (term, shard) groups span Arrow batch boundaries —
     forced here with maxRecordsPerBatch=7 so nearly every group is
     carry-stitched across batches."""
-    from pyspark.sql import functions as F
-
     from searchengine_spark.index import segments as SG
     from searchengine_spark.operators import postings as P
     from searchengine_spark.operators import search as S
@@ -274,44 +265,42 @@ def test_bulk_pack_equals_group_pack_with_tiny_arrow_batches(
 
     idx = P.build_index(corpus_small.limit(120), use_html=True)
     n, avgdl = S.corpus_constants(idx.doc_stats)
-    tside = SG.title_field_side(idx.doc_stats.select("doc_id", "title"))
-    avgtl = SG._avgtl_of(tside, n)
-    enriched = SG._with_title_cols(
-        idx.postings
-        .join(idx.doc_stats.select("doc_id", "doclen"), "doc_id")
-        .join(idx.term_stats.select("term", "df"), "term"),
-        tside,
-    ).withColumn("shard", F.pmod(F.hash("doc_id"), F.lit(3)).cast("int"))
+    enriched, docs = SG.enrich_postings(idx, 3)
+    docs_pdf = SG.collect_docs(docs, 0)
+    avgtl = float(docs_pdf["tlen"].sum()) / n
+    tables = SG.run_tables(docs_pdf)
+
+    def ref(pdf):
+        s = int(pdf["shard"].iloc[0])
+        t = tables[s]
+        return pd.DataFrame([SG._pack_arrays(
+            pdf["term"].iloc[0], s, pdf["doc_id"].to_numpy(),
+            pdf["tf"].to_numpy(), pdf["ttf"].to_numpy(), t,
+            int(pdf["df"].iloc[0]), n, avgdl, 0, avgtl,
+        )])
+
+    def key(r):
+        return (r["term"], r["shard"], bytes(r["doc_ids"]), bytes(r["tfs"]),
+                bytes(r["tfs_title"]),
+                tuple(r["block_last_doc"]), tuple(r["block_max_score"]),
+                tuple(r["block_max_bnorm"]), tuple(r["block_max_tnorm"]),
+                tuple(r["block_off_ids"]), tuple(r["block_off_tfs"]),
+                tuple(r["block_off_ttf"]), r["avgtl"], r["df"], r["n_docs"])
+
     want = sorted(
-        (r["term"], r["shard"], bytes(r["doc_ids"]), bytes(r["tfs"]),
-         bytes(r["doclens"]), bytes(r["tfs_title"]), bytes(r["title_lens"]),
-         tuple(r["block_last_doc"]), tuple(r["block_max_score"]),
-         tuple(r["block_max_bnorm"]), tuple(r["block_max_tnorm"]),
-         tuple(r["block_off_ids"]), tuple(r["block_off_tfs"]),
-         tuple(r["block_off_dls"]), tuple(r["block_off_ttf"]),
-         tuple(r["block_off_tls"]), r["avgtl"], r["df"], r["n_docs"])
-        for r in enriched.groupBy("term", "shard").applyInPandas(
-            lambda pdf: SG._pack_group(pdf, n, avgdl, 0, avgtl=avgtl),
-            schema=INDEX_SEGMENTS_SCHEMA,
+        key(r) for r in enriched.groupBy("term", "shard").applyInPandas(
+            ref, schema=INDEX_SEGMENTS_SCHEMA,
         ).collect()
     )
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, "10000")
-    spark.conf.set(key, "7")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf, "10000")
+    spark.conf.set(conf, "7")
     try:
         got = sorted(
-            (r["term"], r["shard"], bytes(r["doc_ids"]), bytes(r["tfs"]),
-             bytes(r["doclens"]), bytes(r["tfs_title"]),
-             bytes(r["title_lens"]),
-             tuple(r["block_last_doc"]), tuple(r["block_max_score"]),
-             tuple(r["block_max_bnorm"]), tuple(r["block_max_tnorm"]),
-             tuple(r["block_off_ids"]), tuple(r["block_off_tfs"]),
-             tuple(r["block_off_dls"]), tuple(r["block_off_ttf"]),
-             tuple(r["block_off_tls"]), r["avgtl"], r["df"], r["n_docs"])
-            for r in SG.pack_segments_frame(
-                enriched, n, avgdl, 0, avgtl
+            key(r) for r in SG.pack_segments_frame(
+                enriched, tables, n, avgdl, 0, avgtl
             ).collect()
         )
     finally:
-        spark.conf.set(key, prev)
+        spark.conf.set(conf, prev)
     assert len(got) == len(want) and got == want

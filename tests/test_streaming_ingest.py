@@ -4,7 +4,7 @@ updated docs via last-run-wins merge."""
 
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.segments import build_segments
+from searchengine_spark.index.segments import build_segments, read_packed, write_segments
 from searchengine_spark.index.wand import search_packed
 from searchengine_spark.operators.postings import build_index, materialize_index
 from searchengine_spark.operators.search import corpus_constants
@@ -31,11 +31,8 @@ def test_streaming_delta_ingest(spark, tmp_path):
     docs = corpus_df(spark, N)
     idx = materialize_index(spark, docs, f"{base}/idx", use_html=True)
     n, avgdl = corpus_constants(idx.doc_stats)
-    segs = build_segments(idx, n, avgdl, n_shards=N_SHARDS)
-    (
-        segs.repartition("shard").write.mode("overwrite")
-        .partitionBy("shard").parquet(f"{base}/segments")
-    )
+    write_segments(build_segments(idx, n, avgdl, n_shards=N_SHARDS),
+                   f"{base}/segments")
     # positional layer present → each micro-batch must also land a
     # positional delta run (phrase-searchable streamed pages)
     write_positional_segments(
@@ -65,22 +62,22 @@ def test_streaming_delta_ingest(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    segments = spark.read.parquet(f"{base}/segments")
+    segments = read_packed(spark, f"{base}/segments")
     hits = search_packed(
         spark, segments, idx.term_stats, n, avgdl, QUERY, k=5,
         df_map={QUERY: 2},
     ).collect()
     assert len(hits) == 2
 
-    n_runs_1 = segments.select("run_id").distinct().count()
+    n_runs_1 = segments.rows.select("run_id").distinct().count()
     assert n_runs_1 >= 2  # base run + at least one delta run
 
     # the streamed docs are phrase-searchable: their positional delta
     # landed under the same run_id ("...текст QUERY" tail makes the
     # 2-gram "<last-original-lemma> QUERY" unique to the re-crawl);
     # simpler check: the OOV term itself is positionally present
-    possegs = spark.read.parquet(f"{base}/possegs")
-    assert possegs.select("run_id").distinct().count() >= 2
+    possegs = read_packed(spark, f"{base}/possegs")
+    assert possegs.rows.select("run_id").distinct().count() >= 2
     ph = phrase_search_packed(spark, possegs, QUERY).collect()
     assert len(ph) == 2
 

@@ -4,6 +4,7 @@ service endpoint behaviour."""
 
 import pytest
 
+from searchengine_spark.index.segments import read_packed
 from searchengine_spark.index.segments import build_segments, write_segments
 from searchengine_spark.index.wand import search_packed_fused
 from searchengine_spark.operators import postings as P
@@ -46,8 +47,8 @@ def segments(spark, index, constants, tmp_path_factory):
     seg = build_segments(index, n, avgdl, n_shards=4)
     path = str(tmp_path_factory.mktemp("syseg") / "index_segments")
     write_segments(seg, path)
-    df = spark.read.parquet(path).cache()
-    df.count()
+    df = read_packed(spark, path).cache()
+    df.rows.count()
     return df
 
 

@@ -14,10 +14,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from searchengine_spark.index.segments import BLOCK, _pack_group
+from searchengine_spark.index.segments import BLOCK
 from searchengine_spark.index.wand import wand_shard
 
-from .kernels import wand_shard_topk
+from .kernels import pack_groups, wand_shard_topk
 
 # ---------------------------------------------------------------------------
 # kernel-level (no Spark session — fast)
@@ -32,16 +32,15 @@ def _mk_group(rng, term, n_postings, id_space, lo_tf=1, hi_tf=20):
             "shard": 0,
             "doc_id": ids,
             "tf": rng.randint(lo_tf, hi_tf, n_postings).astype(np.int64),
-            "doclen": rng.randint(20, 200, n_postings).astype(np.int64),
+            "doclen": 20 + ids * 7919 % 180,  # one length per doc
             "df": n_postings,
         }
     )
 
 
 def _packed(groups, n_docs=5000, avgdl=100.0):
-    return pd.concat(
-        [_pack_group(g, n_docs, avgdl, 0) for g in groups], ignore_index=True
-    )
+    """(packed rows, doc tables by run) of one shard's groups."""
+    return pack_groups(groups, n_docs, avgdl)
 
 
 @pytest.fixture(scope="module")
@@ -59,7 +58,7 @@ def _metrics_row(pdf, k, conjunctive, n_terms=3, **kw):
     """The trailer row of one shard kernel call (top-k route unless
     count=True is passed)."""
     out = wand_shard(
-        pdf, n_docs=5000, avgdl=100.0, k=k, conjunctive=conjunctive,
+        *pdf, n_docs=5000, avgdl=100.0, k=k, conjunctive=conjunctive,
         n_terms=n_terms, **kw,
     )
     trailer = out[out["is_trailer"]]
@@ -112,6 +111,7 @@ def test_pruning_actually_skips_blocks():
     long_low["doclen"] = 5000  # crushes BM25 length normalization
     short_hi = _mk_group(rng, "short", 40, 20000, lo_tf=15, hi_tf=20)
     short_hi["doclen"] = 25
+    short_hi["doc_id"] += 20000  # its own docs: one length per doc
     pdf = _packed([long_low, short_hi], n_docs=50000, avgdl=100.0)
 
     m = _metrics_row(pdf, k=5, conjunctive=False, n_terms=2)
@@ -119,10 +119,10 @@ def test_pruning_actually_skips_blocks():
     assert m["n_blocks_decoded"] < m["n_blocks"]
     # pruning must not change the answer: top-k == exhaustive top-k
     pruned = wand_shard_topk(
-        pdf, n_docs=50000, avgdl=100.0, k=5, conjunctive=False, n_terms=2
+        *pdf, n_docs=50000, avgdl=100.0, k=5, conjunctive=False, n_terms=2
     )
     exhaust = wand_shard_topk(
-        pdf, n_docs=50000, avgdl=100.0, k=3000, conjunctive=False, n_terms=2
+        *pdf, n_docs=50000, avgdl=100.0, k=3000, conjunctive=False, n_terms=2
     ).head(5)
     assert list(pruned["doc_id"]) == list(exhaust["doc_id"])
     np.testing.assert_allclose(pruned["score"], exhaust["score"])
